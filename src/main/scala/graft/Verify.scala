@@ -57,7 +57,7 @@ object Verify {
         } catch { case _: Throwable => () }
       }
     }
-    // the streaming twins are independent queries on memoized staged
+    // the streaming twins are independent queries on per-call staged
     // sources whose cost is ~80% fixed Structured-Streaming lifecycle
     // (per-trigger planning, state-store commits — latency, not CPU);
     // running K of them concurrently overlaps that fixed cost

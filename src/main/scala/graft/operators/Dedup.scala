@@ -1069,8 +1069,10 @@ object Dedup {
       .as[(Long, Array[Long])]
     val nNodes = adjacency.count()
     // survivor-set broadcasts are |V| longs; gate on nodes (~16 B per
-    // id incl. structure), same posture as the triangles pack
-    val est = BigInt(nNodes) * 16
+    // id incl. structure), same posture as the triangles pack. The
+    // returned plan holds every round's survivor set at once, so the
+    // footprint is `rounds` sets, not one
+    val est = BigInt(nNodes) * 16 * math.max(1, rounds)
     val maxKeep =
       JoinGate.packGateBytes(spark, "spark.graft.graph.maxKeepBroadcastBytes")
     val packed = est <= maxKeep

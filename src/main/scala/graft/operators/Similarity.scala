@@ -1314,15 +1314,17 @@ object Similarity {
             scala.concurrent.Future.sequence((0 until tables).map(t =>
               scala.concurrent.Future(packOneTable(t)))),
             scala.concurrent.duration.Duration.Inf)
-          finally pool.shutdown()
+          finally {
+            pool.shutdown()
+            // hand the per-table packs to the CALLER thread's transient
+            // registry (pack-pool threads die with the pool): the
+            // consumer's next drain destroys them blocking (see
+            // trackTransientBroadcast). In the finally, so the packs
+            // built before a failing table are reclaimed too
+            var b = packedBcs.poll()
+            while (b != null) { Dedup.trackTransientBroadcast(b); b = packedBcs.poll() }
+          }
         }
-      // hand the per-table packs to the CALLER thread's transient
-      // registry (pack-pool threads die with the pool): the consumer's
-      // next drain destroys them blocking (see trackTransientBroadcast)
-      locally {
-        var b = packedBcs.poll()
-        while (b != null) { Dedup.trackTransientBroadcast(b); b = packedBcs.poll() }
-      }
       heapTopK(perTable.reduce(_ unionByName _), k)
     } finally idx.unpersist(blocking = false)
   }

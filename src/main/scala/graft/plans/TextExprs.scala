@@ -120,6 +120,9 @@ object TextExprs {
     * gram STRINGS and ran an interpreted fold — measured 5.6 s for
     * text_repetition at sf0.1 under the noop action. */
   def repGramStats(v: UTF8String, n: Int): ArrayData = {
+    // the BMP fast path packs exactly 4 code points per long: any
+    // other n would silently collide grams or read past the window
+    require(n == 4, s"repGramStats packs 4-code-point grams, got n=$n")
     val cps = v.toString.codePoints().toArray
     val g = cps.length - n + 1
     if (g <= 0) return new GenericArrayData(Array[Any](1L, 1L))

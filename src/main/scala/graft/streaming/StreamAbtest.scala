@@ -64,7 +64,7 @@ object StreamAbtest {
       .select($"user_id", unix_micros($"ts").as("tsUs"),
         (pmod($"user_id", lit(2L)) === 0L).as("in_a"),
         (graft.operators.dec($"value") * 100).cast("long").as("cents"))
-    val bounds = StreamDedup.cachedHead(p.agg(min($"tsUs"), max($"tsUs")))
+    val bounds = p.agg(min($"tsUs"), max($"tsUs")).head()
     if (bounds.isNullAt(0)) return spark.emptyDataFrame
     val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
     val sentinels = Seq(true, false).toDF("in_a")

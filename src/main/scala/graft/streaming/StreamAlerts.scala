@@ -67,7 +67,7 @@ object StreamAlerts {
       .filter($"value" > thr.cast(DoubleType))
       .select($"user_id", $"event_id", $"event_type", $"value",
         thr.as("threshold"), unix_micros($"ts").as("t_us"))
-    val bounds = StreamDedup.cachedHead(alerts.agg(min($"t_us"), max($"t_us")))
+    val bounds = alerts.agg(min($"t_us"), max($"t_us")).head()
     if (bounds.isNullAt(0)) return spark.emptyDataFrame
     val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
     StreamDedup.runStagedStream(spark,

@@ -74,7 +74,7 @@ object StreamAnnIngest {
     val emb = graft.sources.Tables.embeddings(spark, dir)
       .select($"vec_id", $"embedding",
         VecFns.norm($"embedding").as("nrm"))
-    val bounds = StreamDedup.cachedHead(emb.agg(min($"vec_id"), max($"vec_id")))
+    val bounds = emb.agg(min($"vec_id"), max($"vec_id")).head()
     if (bounds.isNullAt(0)) return spark.emptyDataFrame
     val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
     // the codebook: dimension-sized driver reduction (16 × 64 floats)

@@ -79,7 +79,7 @@ object StreamAnomaly {
       .filter($"user_id".isNotNull)
       .select($"event_id", $"user_id", unix_micros($"ts").as("ts_us"),
         (dec($"value") * 100).cast(LongType).as("cents"))
-    val bounds = StreamDedup.cachedHead(ev.agg(min($"ts_us"), max($"ts_us")))
+    val bounds = ev.agg(min($"ts_us"), max($"ts_us")).head()
     if (bounds.isNullAt(0)) return spark.emptyDataFrame
     val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
     val staged = ev.select($"user_id", $"cents", lit(false).as("sentinel"),

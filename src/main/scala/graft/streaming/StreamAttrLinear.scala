@@ -81,7 +81,7 @@ object StreamAttrLinear {
           .otherwise(3).as("kind"),
         when($"event_type" === "purchase",
           (graft.operators.dec($"value") * 100).cast("long")).as("cents"))
-    val bounds = StreamDedup.cachedHead(ev.agg(min($"tsUs"), max($"tsUs")))
+    val bounds = ev.agg(min($"tsUs"), max($"tsUs")).head()
     if (bounds.isNullAt(0)) return spark.emptyDataFrame
     val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
     val log = StreamDedup.runStagedStream(spark,

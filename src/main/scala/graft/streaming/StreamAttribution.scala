@@ -74,7 +74,7 @@ object StreamAttribution {
       .filter($"ts".isNotNull)
       .select($"user_id", unix_micros($"ts").as("eus"), $"event_id",
         $"event_type", $"value")
-    val bounds = StreamDedup.cachedHead(ev.agg(min($"eus"), max($"eus")))
+    val bounds = ev.agg(min($"eus"), max($"eus")).head()
     if (bounds.isNullAt(0)) return spark.emptyDataFrame
     val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
     val log = StreamDedup.runStagedStream(spark,

@@ -55,7 +55,7 @@ object StreamBasket {
     val ev = graft.sources.Tables.events(spark, dir)
       .select($"user_id", $"event_type",
         unix_micros($"ts").as("tsUs"))
-    val bounds = StreamDedup.cachedHead(ev.agg(min($"tsUs"), max($"tsUs")))
+    val bounds = ev.agg(min($"tsUs"), max($"tsUs")).head()
     if (bounds.isNullAt(0)) return spark.emptyDataFrame
     val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
     // null-ts rows carry no order key; route them into batch 1 (the

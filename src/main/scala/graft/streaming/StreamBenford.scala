@@ -51,7 +51,7 @@ object StreamBenford {
     if (digits.isEmpty) return spark.emptyDataFrame
     // the order feed staged at the median order key — a digit's
     // count must accumulate across the cut
-    val bounds = StreamDedup.cachedHead(digits.agg(min($"l_orderkey"), max($"l_orderkey")))
+    val bounds = digits.agg(min($"l_orderkey"), max($"l_orderkey")).head()
     val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
     val sentinels = Seq.range(1, 10).toDF("digit")
       .select($"digit", lit(true).as("sentinel"))

@@ -82,7 +82,7 @@ object StreamCdc {
       .select($"user_id", unix_micros($"ts").as("ts_us"), $"value",
         when($"event_type" === "error", lit("D")).otherwise(lit("U")).as("op"),
         lit(false).as("sentinel"))
-    val bounds = StreamDedup.cachedHead(log.agg(min($"ts_us"), max($"ts_us")))
+    val bounds = log.agg(min($"ts_us"), max($"ts_us")).head()
     if (bounds.isNullAt(0)) return spark.emptyDataFrame
     val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
     val sentinels = log.select($"user_id").distinct()

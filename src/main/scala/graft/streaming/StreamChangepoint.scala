@@ -85,7 +85,7 @@ object StreamChangepoint {
         when($"value".isNotNull,
           (expr("CAST(value AS DECIMAL(18,2))") * 100).cast("long"))
           .as("cents"))
-    val bounds = StreamDedup.cachedHead(ev.agg(min($"tsUs"), max($"tsUs")))
+    val bounds = ev.agg(min($"tsUs"), max($"tsUs")).head()
     if (bounds.isNullAt(0)) return spark.emptyDataFrame
     val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
     val log = StreamDedup.runStagedStream(spark, Seq(

@@ -65,7 +65,7 @@ object StreamCompleteness {
         f($"event_type").as("nTyp"), b($"event_type").as("bTyp"),
         f($"value").as("nVal"), f($"props").as("nPr"), b($"props").as("bPr"),
         lit(false).as("sentinel"), xxhash64($"event_id", $"ts").as("ord"))
-    val bounds = StreamDedup.cachedHead(ev.agg(min($"ord"), max($"ord")))
+    val bounds = ev.agg(min($"ord"), max($"ord")).head()
     if (bounds.isNullAt(0)) return spark.emptyDataFrame
     val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
     val sentinels = spark.range(NShards.toLong)

@@ -153,14 +153,13 @@ object StreamDedup {
     * split `docs` at the median doc_id into two parquet files, stream
     * them through `transform` one file per micro-batch into a durable
     * parquet sink, and return the sink contents lazily (None on an
-    * empty corpus). The staged input is memoized in RAM scratch for
-    * the JVM's lifetime (see runStagedStream). */
+    * empty corpus). */
   private def runTwoBatchStream(spark: SparkSession, docs: DataFrame)
       (transform: DataFrame => DataFrame): Option[DataFrame] = {
     import spark.implicits._
     // empty corpus: min/max aggregate to null — signal the caller
     // instead of NPEing on getLong
-    val bounds = cachedHead(docs.agg(min($"doc_id"), max($"doc_id")))
+    val bounds = docs.agg(min($"doc_id"), max($"doc_id")).head()
     if (bounds.isNullAt(0)) return None
     val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
     runStagedStream(spark,
@@ -182,7 +181,9 @@ object StreamDedup {
     * mtime with path as the tiebreak, and on coarse-granularity
     * filesystems the writes can land in the same tick with no
     * guaranteed path order — so mtimes are pinned strictly
-    * increasing, batch i always forms micro-batch i+1. */
+    * increasing, batch i always forms micro-batch i+1. The staged
+    * input and the checkpoint live only for this call; the returned
+    * frame reads the sink alone. */
   private[streaming] def runStagedStream(spark: SparkSession, batches: Seq[DataFrame])
       (transform: DataFrame => DataFrame): Option[DataFrame] = {
     import java.nio.file.Files
@@ -193,19 +194,11 @@ object StreamDedup {
       val t1 = System.nanoTime()
       println(f"STREAMPROF $phase: ${(t1 - t0) / 1e9}%.2f s"); t0 = t1
     }
-    // Staged layout memo, keyed by the CANONICALIZED logical plans of
-    // the batch sequence. Plan equality is structural and includes
-    // LocalRelation data, so equal keys mean byte-identical staged
-    // files — the write, mtime pinning, and schema read are paid once
-    // per (twin, corpus) per JVM, not per bench rep. The staging is
-    // gate scaffolding (it simulates an unbounded source), so reusing
-    // it does NOT cache any part of the measured operator: every call
-    // still runs the full streaming query against fresh state. Staged
-    // dirs live in RAM scratch until JVM exit (deleteOnExit).
-    val key = batches.map(_.queryExecution.analyzed.canonicalized)
-    val staged = stagedCache.computeIfAbsent(key, { _ =>
-      val tmp = graft.sources.Scratch.tempDir("graft_sdedup_")
-      StreamRelay.deleteOnExit(tmp)
+    val tmp = graft.sources.Scratch.tempDir("graft_sdedup_")
+    // fresh checkpoint per RUN (a reused checkpoint would resume the
+    // previous query instead of replaying the staged batches)
+    val ckpt = graft.sources.Scratch.tempDir("graft_ckpt_")
+    try {
       // ONE write job stages every batch: union with a literal gbatch
       // column (no leading underscore: `_`-prefixed paths are hidden to
       // Spark file listing), partitionBy into per-batch dirs. N separate writes
@@ -214,15 +207,14 @@ object StreamDedup {
       // EMPTY batch writes no dir and simply contributes no
       // micro-batch, which is behavior-identical (an empty
       // micro-batch is a no-op for every twin's state).
-      import org.apache.spark.sql.functions.lit
       batches.zipWithIndex
         .map { case (b, i) => b.withColumn("gbatch", lit(f"b_$i%03d")) }
         .reduce(_ unionByName _)
-        .repartition(batches.length, org.apache.spark.sql.functions.col("gbatch"))
+        .repartition(batches.length, col("gbatch"))
         .write.partitionBy("gbatch").parquet(s"$tmp/in")
       mark("stage-writes")
       val batchDirs = batches.indices
-        .map(i => java.nio.file.Paths.get(f"$tmp/in/gbatch=b_$i%03d"))
+        .map(i => tmp.resolve(f"in/gbatch=b_$i%03d"))
         .filter(Files.isDirectory(_))
       // Batch ORDER is load-bearing (keeper = first arrival):
       // FileStreamSource orders files by mtime with path tiebreak, so
@@ -239,30 +231,27 @@ object StreamDedup {
           t += 60000L
         }
       }
-      // All-empty input (a fully degenerate corpus): no partition dir
-      // was written, so there is nothing to read a schema from — and
-      // nothing to trigger on. Point the source at the (existing,
-      // empty) staging root with the INPUT DataFrame's own schema; the
-      // query starts, zero micro-batches run, and the sink read-back
-      // still carries the TRANSFORMED schema, so callers get
-      // an empty but correctly-shaped frame instead of a crash (the
-      // batch twins return exactly that on the same corpus).
-      val schema =
-        if (batchDirs.isEmpty) batches.head.schema
-        else spark.read.parquet(batchDirs.head.toString).schema
-      mark("mtime+schema")
-      Staged(tmp, schema, glob = if (batchDirs.isEmpty) "in" else "in/*")
-    })
-    // fresh checkpoint per RUN (a reused checkpoint would resume the
-    // previous query instead of replaying the staged batches)
-    val ckpt = graft.sources.Scratch.tempDir("graft_ckpt_")
-    try {
-      // cloned session (shared context, independent SQLConf): each
-      // state store pays checkpoint sync per micro-batch, so 8 stores
-      // beat 32 for a small-increment stateful op — same rationale as
-      // windowedRelay, without mutating the caller's conf
+      // Row counts and schema come from the staged files' parquet
+      // footers, read on the driver — no Spark job. All-empty input
+      // (a fully degenerate corpus): no partition dir was written, so
+      // there is nothing to read a schema from — and nothing to
+      // trigger on. Point the source at the (existing, empty) staging
+      // root with the INPUT DataFrame's own schema; the query starts,
+      // zero micro-batches run, and the sink read-back still carries
+      // the TRANSFORMED schema, so callers get an empty but
+      // correctly-shaped frame instead of a crash (the batch twins
+      // return exactly that on the same corpus).
+      val footers = batchDirs.map(d => parquetFooter(spark, d))
+      val schema = footers.headOption.flatMap(_.schema).getOrElse(batches.head.schema)
+      val width = stateWidth(footers.map(_.rows).maxOption.getOrElse(0L),
+        spark.sparkContext.defaultParallelism)
+      mark("mtime+footers")
+      // cloned session (shared context, independent SQLConf): the
+      // stateful width is set per run without touching the caller's
+      // conf. The width is fixed when the query's fresh checkpoint is
+      // created, so a restart from that checkpoint never sees a change.
       val ss = spark.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", StreamDedup.gateShufflePartitions)
+      ss.conf.set("spark.sql.shuffle.partitions", width.toString)
       // No trailing no-data micro-batches in the GATE session: every
       // twin's final emission is driven by data (sentinel rows riding
       // the last batch, or per-arrival append) — measured r10: all 61
@@ -270,7 +259,7 @@ object StreamDedup {
       // empty batch was ~13% of the heavy twins' wall time. Gate
       // scaffolding only: a real deployment keeps the Spark default
       // (true) so watermark-closed windows emit without waiting for
-      // the next arrival. Env override for experiments.
+      // the next arrival.
       //
       // CONTRACT for twins staged through THIS path: the final
       // emission must be data-driven (a sentinel/barrier row IN the
@@ -282,19 +271,13 @@ object StreamDedup {
       // session (which keeps no-data batches) instead. The oracle gate
       // is the enforcement: a watermark-emission twin added through
       // runStagedStream fails its batch oracle on row count.
-      ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
-        StreamDedup.gateNoDataBatches)
-      val stream = ss.readStream.schema(staged.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"${staged.dir}/${staged.glob}")
-      // sink-side single-partition exchange: the twins' per-batch
-      // emissions are dimension-sized, but the sink inherited the
-      // stateful width (8 partitions) and paid up to 8 parquet writer
-      // inits + an 8-entry manifest PER MICRO-BATCH — measured ~30% of
-      // addBatch on the cheap twins. The repartition sits ABOVE the
-      // stateful operators (their width/state layout is untouched) and
-      // moves only the emitted rows. Gate scaffolding: a real
-      // deployment sizes sink files to volume, not to the state width.
-      val transformed = transform(stream).repartition(1)
+      ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+      val stream = ss.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(s"$tmp/${if (batchDirs.isEmpty) "in" else "in/*"}")
+      // the sink writes at the stateful width: one file per state
+      // partition per micro-batch, and the width follows input volume
+      val transformed = transform(stream)
       // durable sink dir in RAM scratch, one per RUN: the sink's
       // _spark_metadata log lists exactly the committed files, so the
       // read-back is exactly-once even though q.stop() can race a
@@ -325,66 +308,79 @@ object StreamDedup {
       // schema inference over an empty sink would throw — the memory
       // sink returned a correctly-shaped empty frame, so this does too
       Some(ss.read.schema(transformed.schema).parquet(outDir.toString))
-    } finally {
-      import scala.jdk.CollectionConverters._
-      val walk = Files.walk(ckpt)
-      try walk.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-      finally walk.close()
-    }
+    } finally StreamRelay.deleteTree(ckpt, tmp)
   }
 
-  /** Shuffle width for the gate-cloned streaming sessions. Each
-    * stateful operator materializes one state store PER shuffle
-    * partition PER micro-batch commit, and the staged twins' state is
-    * dimension-sized (per-user / per-window-key at test SF), so the
-    * width buys only per-batch commit overhead — not throughput. Env
-    * knob for measurement; a real deployment sizes this to state
-    * volume, not the gate. */
-  private[streaming] val gateShufflePartitions: String =
-    sys.env.getOrElse("GRAFT_STREAM_SHUFFLE", "8")
+  /** Staged rows per state partition: the gate's stateful shuffle
+    * width is `ceil(rows of the largest staged batch / R)`, clamped to
+    * [1, defaultParallelism]. Each stateful operator loads and commits
+    * one state store per shuffle partition per micro-batch, so width
+    * beyond what the input volume fills buys only commit overhead.
+    * Calibration (sf0.1, 4 cores, TimeOne medians in seconds; rows =
+    * the largest staged batch):
+    * {{{
+    *   twin                 rows   w=8        w=4   w=2   w=1
+    *   stream_orphans       425k   4.79-4.95  4.53  4.82  5.47-6.27
+    *   stream_join           99k   4.17-4.72  3.98  3.27  4.30-4.72
+    *   stream_anomaly        50k   3.53       -     -     2.86
+    *   dedup_stream          2.5k  3.17       -     -     2.47
+    *   dedup_exact_stream    2.5k  2.63       -     -     2.13
+    *   stream_novelty       441k   3.93       -     -     3.97
+    * }}}
+    * 64k rows per partition picks the fastest measured width at every
+    * point (novelty is flat between 8 and 1): 425k → 4 at 4 cores,
+    * 99k → 2, ≤ 64k → 1. At sf0.01 every twin's largest staged batch
+    * is at most 45k rows, so the whole wave runs at width 1 (perfbench
+    * stream_twins on 4 cores: cpu_s_per_lap 10.1 → 6.0 s against the
+    * old fixed 8). */
+  private[streaming] val RowsPerStatePartition = 65536L
 
-  /** See the comment at the cloned-session setup in runStagedStream. */
-  private[streaming] val gateNoDataBatches: String =
-    sys.env.getOrElse("GRAFT_STREAM_NODATA", "false")
+  /** The width rule of [[RowsPerStatePartition]]: pure, so its edges
+    * are unit-tested. */
+  private[streaming] def stateWidth(rows: Long, cap: Int): Int =
+    math.min(math.max((rows + RowsPerStatePartition - 1) / RowsPerStatePartition, 1L),
+      cap.toLong).toInt
 
-  private case class Staged(dir: java.nio.file.Path,
-      schema: org.apache.spark.sql.types.StructType, glob: String)
-  private val stagedCache =
-    new java.util.concurrent.ConcurrentHashMap[Seq[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan], Staged]()
+  /** What a parquet footer says about a file (or every part file of a
+    * directory): total rows, and the Spark schema Spark wrote into the
+    * key-value metadata (None for files from another writer). */
+  private[streaming] case class Footer(rows: Long,
+      schema: Option[org.apache.spark.sql.types.StructType])
 
-  /** Memoized `.head()` of a tiny pre-staging aggregate (the staging
-    * CUT election — min/max bounds, usually): every twin was paying a
-    * full corpus scan per call just to pick its cut, on a corpus dir
-    * that is immutable for the session (the labelCache assumption).
-    * Keyed by the canonicalized plan, so a different projection or a
-    * different dir can never serve a stale row. Like the staged
-    * layout, this is gate scaffolding, not operator cost. */
-  private val headCache = new java.util.concurrent.ConcurrentHashMap[
-    org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, org.apache.spark.sql.Row]()
-  private[streaming] def cachedHead(df: DataFrame): org.apache.spark.sql.Row =
-    headCache.computeIfAbsent(df.queryExecution.analyzed.canonicalized, _ => df.head())
-
-  /** [[cachedHead]] for possibly-EMPTY pre-staging elections (the
-    * straddling-cut queries filter to multi-event cells, which a
-    * degenerate corpus may not have): memoizes the Option so the
-    * corpus-sized election scan — a full groupBy + top-1 per call —
-    * is paid once per (query, corpus) per JVM, not per bench rep.
-    * Same gate-scaffolding justification and same canonicalized-plan
-    * key as the bounds memo above. */
-  private val headOptCache = new java.util.concurrent.ConcurrentHashMap[
-    org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Option[org.apache.spark.sql.Row]]()
-  private[streaming] def cachedHeadOption(df: DataFrame): Option[org.apache.spark.sql.Row] =
-    headOptCache.computeIfAbsent(df.queryExecution.analyzed.canonicalized,
-      _ => df.collect().headOption)
-
-  /** Drop the staged-layout + bounds memos (test hook: a corpus dir
-    * rewritten in place between calls would otherwise serve stale
-    * staging). */
-  private[graft] def clearStagedCache(): Unit = {
-    stagedCache.clear()
-    headCache.clear()
-    headOptCache.clear()
-    profileCache.clear()
+  /** Read the parquet footers under `path` on the driver — no Spark
+    * job. The schema is made nullable, as Spark's own file read does. */
+  private[streaming] def parquetFooter(spark: SparkSession, path: java.nio.file.Path): Footer = {
+    import java.nio.file.Files
+    import scala.jdk.CollectionConverters._
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
+    def nullable(t: DataType): DataType = t match {
+      case s: StructType => StructType(s.fields.map(f =>
+        f.copy(dataType = nullable(f.dataType), nullable = true)))
+      case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+      case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+      case o => o
+    }
+    val files =
+      if (!Files.isDirectory(path)) Seq(path)
+      else {
+        val ls = Files.list(path)
+        try ls.iterator().asScala.toSeq.filter { p =>
+          val n = p.getFileName.toString
+          n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
+        }.sortBy(_.toString) finally ls.close()
+      }
+    val conf = spark.sparkContext.hadoopConfiguration
+    val facts = files.map { f =>
+      val r = ParquetFileReader.open(
+        HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f.toUri), conf))
+      try (r.getRecordCount, Option(r.getFooter.getFileMetaData.getKeyValueMetaData
+          .get("org.apache.spark.sql.parquet.row.metadata")))
+      finally r.close()
+    }
+    Footer(facts.map(_._1).sum, facts.flatMap(_._2).headOption
+      .map(j => nullable(DataType.fromJson(j)).asInstanceOf[StructType]))
   }
 
   /** Streaming EXACT dedup — the other half of the daily pipeline

@@ -71,7 +71,7 @@ object StreamDistinct {
       .select($"event_type",
         HashFns.polyHash($"user_id".cast("string")).as("h"),
         unix_micros($"ts").as("tsUs"))
-    val bounds = StreamDedup.cachedHead(ev.agg(min($"tsUs"), max($"tsUs")))
+    val bounds = ev.agg(min($"tsUs"), max($"tsUs")).head()
     if (bounds.isNullAt(0)) return spark.emptyDataFrame
     val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
     val staged = ev.select($"event_type", $"h", lit(false).as("sentinel"), $"tsUs")

@@ -73,7 +73,7 @@ object StreamDownsample {
     import spark.implicits._
     val ev = graft.sources.Tables.events(spark, dir)
       .select($"user_id", unix_micros($"ts").as("tsUs"), $"event_id", $"value")
-    val bounds = StreamDedup.cachedHead(ev.agg(min($"tsUs"), max($"tsUs")))
+    val bounds = ev.agg(min($"tsUs"), max($"tsUs")).head()
     if (bounds.isNullAt(0)) return spark.emptyDataFrame
     val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
     val log = StreamDedup.runStagedStream(spark,

@@ -37,7 +37,7 @@ object StreamEnrich {
     val ev = graft.sources.Tables.events(spark, dir)
       .filter($"ts".isNotNull)
       .select($"event_id", $"user_id", $"ts", $"event_type")
-    val bounds = StreamDedup.cachedHead(ev.agg(min(unix_micros($"ts")), max(unix_micros($"ts"))))
+    val bounds = ev.agg(min(unix_micros($"ts")), max(unix_micros($"ts"))).head()
     if (bounds.isNullAt(0)) return spark.emptyDataset[EnrichOut].toDF()
     val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
     val log = StreamDedup.runStagedStream(spark,

@@ -66,7 +66,7 @@ object StreamEwma {
       .filter($"ts".isNotNull && $"value".isNotNull)
       .select($"user_id", unix_micros($"ts").as("tsUs"), $"event_id",
         round($"value" * 100).cast("long").as("cents"))
-    val bounds = StreamDedup.cachedHead(ev.agg(min($"tsUs"), max($"tsUs")))
+    val bounds = ev.agg(min($"tsUs"), max($"tsUs")).head()
     if (bounds.isNullAt(0)) return spark.emptyDataFrame
     val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
     val log = StreamDedup.runStagedStream(spark,

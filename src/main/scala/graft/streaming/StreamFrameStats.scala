@@ -60,7 +60,7 @@ object StreamFrameStats {
     // the wire), sentinel rows carry the device key and a null frame.
     val frames = graft.operators.Frames.parsedFrames(spark, dir)
       .select($"frame", unix_micros($"ts").as("tsUs"))
-    val bounds = StreamDedup.cachedHead(frames.agg(min($"tsUs"), max($"tsUs")))
+    val bounds = frames.agg(min($"tsUs"), max($"tsUs")).head()
     if (bounds.isNullAt(0)) return spark.emptyDataFrame
     val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
     def staged(df: DataFrame): DataFrame = df

@@ -113,7 +113,7 @@ object StreamFunnel3 {
       .filter($"event_type".isin("signup", "view", "purchase"))
       .select($"user_id", unix_micros($"ts").as("ts_us"),
         $"event_type".as("typ"), lit(false).as("sentinel"))
-    val bounds = StreamDedup.cachedHead(log.agg(min($"ts_us"), max($"ts_us")))
+    val bounds = log.agg(min($"ts_us"), max($"ts_us")).head()
     if (bounds.isNullAt(0)) return spark.emptyDataFrame
     val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
     val sentinels = log.select($"user_id").distinct()

@@ -99,7 +99,7 @@ object StreamGapfill {
       .filter($"ts".isNotNull)
       .select($"user_id", unix_micros($"ts").as("tsUs"), $"event_id",
         (graft.operators.dec($"value") * 100).cast("long").as("cents"))
-    val bounds = StreamDedup.cachedHead(ev.agg(min($"tsUs"), max($"tsUs")))
+    val bounds = ev.agg(min($"tsUs"), max($"tsUs")).head()
     if (bounds.isNullAt(0)) return spark.emptyDataFrame
     val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
     val sentinels = ev.select($"user_id").distinct()

@@ -64,7 +64,7 @@ object StreamHeatmap {
         expr("(unix_micros(ts) % 86400000000) div 3600000000").as("hour"),
         (dec($"value") * 100).cast(LongType).as("cents"),
         unix_micros($"ts").as("tsUs"))
-    val bounds = StreamDedup.cachedHead(ev.agg(min($"tsUs"), max($"tsUs")))
+    val bounds = ev.agg(min($"tsUs"), max($"tsUs")).head()
     if (bounds.isNullAt(0)) return spark.emptyDataFrame
     val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
     val staged = ev.select($"dow", $"hour", $"cents",

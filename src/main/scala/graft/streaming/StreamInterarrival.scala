@@ -49,7 +49,7 @@ object StreamInterarrival {
     val ev = graft.sources.Tables.events(spark, dir)
       .filter($"ts".isNotNull && $"event_type".isNotNull)
       .select($"event_type", unix_micros($"ts").as("tsUs"), $"event_id")
-    val bounds = StreamDedup.cachedHead(ev.agg(min($"tsUs"), max($"tsUs")))
+    val bounds = ev.agg(min($"tsUs"), max($"tsUs")).head()
     if (bounds.isNullAt(0)) return spark.emptyDataFrame
     val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
     val log = StreamDedup.runStagedStream(spark,

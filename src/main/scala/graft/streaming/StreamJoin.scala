@@ -40,7 +40,7 @@ object StreamJoin {
     val ev = graft.sources.Tables.events(spark, dir)
       .filter($"ts".isNotNull)
       .select($"event_id", $"user_id", $"ts", $"event_type")
-    val bounds = StreamDedup.cachedHead(ev.agg(min(unix_micros($"ts")), max(unix_micros($"ts"))))
+    val bounds = ev.agg(min(unix_micros($"ts")), max(unix_micros($"ts"))).head()
     if (bounds.isNullAt(0)) return spark.emptyDataset[JoinOut].toDF()
     // cut so that at least one matched pair straddles the batches:
     // the strict pair (ctl before data) with the earliest data side,
@@ -51,10 +51,10 @@ object StreamJoin {
       .select($"user_id".as("cu"), unix_micros($"ts").as("cus"))
     val data0 = ev.filter(!$"event_type".isin(ctlTypes: _*))
       .select($"user_id".as("du"), unix_micros($"ts").as("dus"))
-    val strictCut = StreamDedup.cachedHead(
+    val strictCut =
       data0.join(ctl0, $"du" === $"cu" &&
         $"cus" < $"dus" && $"cus" >= $"dus" - windowSecs * 1000000L)
-      .agg(min(struct($"dus", $"cus"))))
+      .agg(min(struct($"dus", $"cus"))).head()
     val cut =
       if (strictCut.isNullAt(0)) (bounds.getLong(0) + bounds.getLong(1)) / 2
       else strictCut.getStruct(0).getLong(1)

@@ -46,7 +46,7 @@ object StreamKeySkew {
     import spark.implicits._
     val ev = graft.sources.Tables.events(spark, dir)
       .select($"user_id", unix_micros($"ts").as("tsUs"))
-    val bounds = StreamDedup.cachedHead(ev.agg(min($"tsUs"), max($"tsUs")))
+    val bounds = ev.agg(min($"tsUs"), max($"tsUs")).head()
     if (bounds.isNullAt(0)) return spark.emptyDataFrame
     val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
     val sentinels = ev.select($"user_id").distinct()

@@ -89,7 +89,7 @@ object StreamLtv {
         when($"event_type" === "purchase",
           (graft.operators.dec($"value") * 100).cast("long")).as("cents"),
         lit(false).as("sentinel"))
-    val bounds = StreamDedup.cachedHead(ev.agg(min($"tsUs"), max($"tsUs")))
+    val bounds = ev.agg(min($"tsUs"), max($"tsUs")).head()
     if (bounds.isNullAt(0)) return spark.emptyDataFrame
     val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
     val sentinels = ev.select($"user_id").distinct()

@@ -37,13 +37,13 @@ object StreamM4 {
     * StreamOhlc straddling-cut election at M4's bucket width. */
   private def straddlingCut(ev: DataFrame): Option[Long] = {
     import ev.sparkSession.implicits._
-    StreamDedup.cachedHeadOption(ev.groupBy($"user_id",
+    ev.groupBy($"user_id",
         window($"ts", "6 hours").getField("start").as("bucket"))
       .agg(min(unix_micros($"ts")).as("lo"), max(unix_micros($"ts")).as("hi"),
         count(lit(1)).as("n"))
       .filter($"lo" < $"hi")
       .orderBy($"n".desc, $"user_id".asc_nulls_first, $"bucket".asc)
-      .limit(1))
+      .limit(1).collect().headOption
       .map(r => (r.getAs[Long]("lo") + r.getAs[Long]("hi")) / 2)
   }
 
@@ -53,7 +53,7 @@ object StreamM4 {
     val ev = graft.sources.Tables.events(spark, dir)
       .filter($"value".isNotNull && $"ts".isNotNull)
       .select($"user_id", $"ts", $"value")
-    val bounds = StreamDedup.cachedHead(ev.agg(min(unix_micros($"ts")), max(unix_micros($"ts"))))
+    val bounds = ev.agg(min(unix_micros($"ts")), max(unix_micros($"ts"))).head()
     if (bounds.isNullAt(0)) return spark.emptyDataFrame
     val hiUs = bounds.getLong(1)
     val cutUs = straddlingCut(ev).getOrElse((bounds.getLong(0) + hiUs) / 2)

@@ -65,7 +65,7 @@ object StreamMovingAvg {
       .select($"user_id", unix_micros($"ts").as("tsUs"), $"event_id",
         (graft.operators.dec($"value") * 100).cast("long").as("cents"),
         $"value")
-    val bounds = StreamDedup.cachedHead(ev.agg(min($"tsUs"), max($"tsUs")))
+    val bounds = ev.agg(min($"tsUs"), max($"tsUs")).head()
     if (bounds.isNullAt(0)) return spark.emptyDataFrame
     val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
     val log = StreamDedup.runStagedStream(spark,

@@ -183,7 +183,7 @@ object StreamMvMinMax {
     // stage at the median doc-id cut so every language's delta
     // straddles it (the cross-batch fold is the gated property)
     val uid = when($"id" < 0, -$"id" - 1L).otherwise($"id")
-    val bounds = StreamDedup.cachedHead(docs.agg(min($"doc_id"), max($"doc_id")))
+    val bounds = docs.agg(min($"doc_id"), max($"doc_id")).head()
     if (bounds.isNullAt(0)) return spark.emptyDataset[Out].toDF()
     val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
     val sentinels = docs.select($"lang").distinct()

@@ -97,7 +97,7 @@ object StreamMvRefresh {
     // stage at the median delta doc_id so every language's
     // contributions straddle the cut (the cross-batch fold is the
     // gated property); NULL doc_id routes to batch 1
-    val bounds = StreamDedup.cachedHead(delta.agg(min($"doc_id"), max($"doc_id")))
+    val bounds = delta.agg(min($"doc_id"), max($"doc_id")).head()
     val cut = if (bounds.isNullAt(0)) 0L
       else (bounds.getLong(0) + bounds.getLong(1)) / 2
     val sentinels = delta.select($"lang").distinct()

@@ -51,7 +51,7 @@ object StreamNovelty {
     val index = graft.sources.Tables.documents(spark, dir)
       .select($"doc_id",
         explode(graft.functions.TextFns.charNGrams($"text", 4)).as("gram"))
-    val bounds = StreamDedup.cachedHead(index.agg(min($"doc_id"), max($"doc_id")))
+    val bounds = index.agg(min($"doc_id"), max($"doc_id")).head()
     if (bounds.isNullAt(0)) return spark.emptyDataFrame
     val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
     val log = StreamDedup.runStagedStream(spark,

@@ -47,13 +47,13 @@ object StreamOhlc {
     * election: event count desc, then (type, day) asc. */
   private[graft] def straddlingCut(spark: SparkSession, dir: String): Option[Long] = {
     import spark.implicits._
-    StreamDedup.cachedHeadOption(graft.sources.Tables.events(spark, dir)
+    graft.sources.Tables.events(spark, dir)
       .groupBy($"event_type", date_trunc("day", $"ts").as("day"))
       .agg(min(unix_micros($"ts")).as("lo"), max(unix_micros($"ts")).as("hi"),
         count(lit(1)).as("n"))
       .filter($"lo" < $"hi")
       .orderBy($"n".desc, $"event_type".asc, $"day".asc)
-      .limit(1))
+      .limit(1).collect().headOption
       // lo < hi ⇒ lo ≤ midpoint < hi, so the first event lands in
       // batch 1 (≤ cut) and the last in batch 2 (> cut)
       .map(r => (r.getAs[Long]("lo") + r.getAs[Long]("hi")) / 2)
@@ -64,7 +64,7 @@ object StreamOhlc {
     val ev = graft.sources.Tables.events(spark, dir)
       .filter($"value".isNotNull)   // the batch ohlc null contract
       .select($"event_id", $"ts", $"event_type", $"value")
-    val bounds = StreamDedup.cachedHead(ev.agg(min(unix_micros($"ts")), max(unix_micros($"ts"))))
+    val bounds = ev.agg(min(unix_micros($"ts")), max(unix_micros($"ts"))).head()
     if (bounds.isNullAt(0)) return spark.emptyDataFrame
     val hiUs = bounds.getLong(1)
     val cutUs = straddlingCut(spark, dir).getOrElse((bounds.getLong(0) + hiUs) / 2)

@@ -68,7 +68,7 @@ object StreamOrphans {
         .unionByName(t.customer(spark, dir).select(lit("events->customer").as("fk"),
           $"c_custkey".as("pk")))
         .distinct()
-    val bounds = StreamDedup.cachedHead(children.agg(min($"ord"), max($"ord")))
+    val bounds = children.agg(min($"ord"), max($"ord")).head()
     if (bounds.isNullAt(0)) return spark.emptyDataFrame
     val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
     // shard assigns at staging time (deterministic content hash) so

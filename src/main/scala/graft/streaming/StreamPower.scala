@@ -59,7 +59,7 @@ object StreamPower {
     val ev = graft.sources.Tables.events(spark, dir)
       .select($"user_id", unix_micros($"ts").as("tsUs"),
         (graft.operators.dec($"value") * 100).cast("long").as("cents"))
-    val bounds = StreamDedup.cachedHead(ev.agg(min($"tsUs"), max($"tsUs")))
+    val bounds = ev.agg(min($"tsUs"), max($"tsUs")).head()
     // all-null ts: every row routes to batch 1 (the batch shape has no
     // ts filter); truly empty corpus flows through the zero-trigger
     // staging fallback into an empty but correctly-shaped rollup

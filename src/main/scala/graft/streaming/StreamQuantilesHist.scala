@@ -61,7 +61,7 @@ object StreamQuantilesHist {
       .select($"l_returnflag".as("flag"),
         floor($"l_extendedprice" / lit(width)).cast("long").as("bucket"),
         $"l_orderkey")
-    val bounds = StreamDedup.cachedHead(li.agg(min($"l_orderkey"), max($"l_orderkey")))
+    val bounds = li.agg(min($"l_orderkey"), max($"l_orderkey")).head()
     if (bounds.isNullAt(0)) return spark.emptyDataFrame
     val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
     val sentinels = li.select($"flag").distinct()

@@ -80,8 +80,8 @@ object StreamQuarantine {
     // cut from REAL timestamps only: a NULL-ts row's MinValue key
     // would drag the midpoint so far left the staged cut split
     // nothing on exactly the adversarial corpus that matters
-    val bounds = StreamDedup.cachedHead(ev.filter($"tsUs" =!= Long.MinValue)
-      .agg(min($"tsUs"), max($"tsUs")))
+    val bounds = ev.filter($"tsUs" =!= Long.MinValue)
+      .agg(min($"tsUs"), max($"tsUs")).head()
     if (bounds.isNullAt(0)) return spark.emptyDataFrame
     val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
     val staged = ev.select($"shard", $"f1", $"f2", $"f3", $"f4", $"fa",

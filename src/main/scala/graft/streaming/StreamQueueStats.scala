@@ -78,7 +78,7 @@ object StreamQueueStats {
           .as("lost"),
         (graft.operators.dec($"value") * 100).cast("long").as("cents"),
         lit(false).as("sentinel"))
-    val bounds = StreamDedup.cachedHead(ev.agg(min($"tsUs"), max($"tsUs")))
+    val bounds = ev.agg(min($"tsUs"), max($"tsUs")).head()
     if (bounds.isNullAt(0)) return spark.emptyDataFrame
     val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
     val sentinels = ev.select($"event_type").distinct()

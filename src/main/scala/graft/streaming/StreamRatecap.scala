@@ -69,7 +69,7 @@ object StreamRatecap {
     val ev = graft.sources.Tables.events(spark, dir)
       .select($"user_id", unix_micros(date_trunc("day", $"ts")).as("dayUs"),
         unix_micros($"ts").as("tsUs"), $"event_id")
-    val bounds = StreamDedup.cachedHead(ev.agg(min($"tsUs"), max($"tsUs")))
+    val bounds = ev.agg(min($"tsUs"), max($"tsUs")).head()
     if (bounds.isNullAt(0)) return spark.emptyDataFrame
     val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
     val staged = ev.select($"user_id", $"dayUs", $"tsUs", $"event_id",

@@ -81,17 +81,20 @@ object StreamRelay {
     val q =
       try {
         Files.createDirectories(inDir)
-        Files.copy(Paths.get(s"$dir/events.parquet"), inDir.resolve("batch0.parquet"),
+        val staged = inDir.resolve("batch0.parquet")
+        Files.copy(Paths.get(s"$dir/events.parquet"), staged,
           StandardCopyOption.REPLACE_EXISTING)
         // run the streaming query in a cloned session (shared
         // SparkContext, independent SQLConf): the stateful aggregation
-        // gets shuffle partitions sized to its state, not the batch
-        // engine's width — each state store carries checkpoint sync cost
-        // per micro-batch, so 8 stores beat 32 for a per-window-key
-        // aggregate, without mutating the caller's session conf
+        // gets one state store per RowsPerStatePartition rows of the
+        // copy's footer count (see StreamDedup.stateWidth), not the
+        // batch engine's width, without mutating the caller's conf.
+        // The checkpoint is fresh, so the width never changes under a
+        // restart.
         val ss = spark.newSession()
         ss.conf.set("spark.sql.shuffle.partitions",
-          StreamDedup.gateShufflePartitions)
+          StreamDedup.stateWidth(StreamDedup.parquetFooter(spark, staged).rows,
+            spark.sparkContext.defaultParallelism).toString)
         // no-data micro-batches stay ON here (unlike runStagedStream's
         // sentinel-flushed twins): the barrier row advances the
         // watermark in batch N, but the windows that watermark closes
@@ -429,7 +432,7 @@ object StreamRelay {
     val ev = graft.sources.Tables.events(spark, dir)
       .select($"event_id", $"user_id", unix_micros($"ts").as("ts_us"),
         round($"value" * 100).cast(LongType).as("cents"))
-    val bounds = StreamDedup.cachedHead(ev.agg(min($"ts_us"), max($"ts_us")))
+    val bounds = ev.agg(min($"ts_us"), max($"ts_us")).head()
     if (bounds.isNullAt(0)) return spark.emptyDataset[BudgetOut].toDF()
     val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
     val log = StreamDedup.runStagedStream(spark,

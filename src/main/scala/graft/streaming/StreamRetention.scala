@@ -67,7 +67,7 @@ object StreamRetention {
         // bare comparison NPEs the non-nullable encoder field
         coalesce($"event_type" === "signup", lit(false)).as("isSignup"),
         unix_micros($"ts").as("tsUs"))
-    val bounds = StreamDedup.cachedHead(ev.agg(min($"tsUs"), max($"tsUs")))
+    val bounds = ev.agg(min($"tsUs"), max($"tsUs")).head()
     if (bounds.isNullAt(0)) return spark.emptyDataFrame
     val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
     val staged = ev.select($"user_id", $"weekUs", $"isSignup",

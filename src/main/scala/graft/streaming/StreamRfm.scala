@@ -61,7 +61,7 @@ object StreamRfm {
       .select($"user_id", unix_micros($"ts").as("tsUs"), $"event_id",
         when($"event_type" === "purchase",
           (graft.operators.dec($"value") * 100).cast("long")).as("purchase_cents"))
-    val bounds = StreamDedup.cachedHead(ev.agg(min($"tsUs"), max($"tsUs")))
+    val bounds = ev.agg(min($"tsUs"), max($"tsUs")).head()
     if (bounds.isNullAt(0)) return spark.emptyDataFrame
     val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
     val sentinels = ev.select($"user_id").distinct()

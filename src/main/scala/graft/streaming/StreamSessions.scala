@@ -81,7 +81,7 @@ object StreamSessions {
     val ev = graft.sources.Tables.events(spark, dir)
       .filter($"ts".isNotNull)
       .select($"user_id", unix_micros($"ts").as("eus"), $"event_id")
-    val bounds = StreamDedup.cachedHead(ev.agg(min($"eus"), max($"eus")))
+    val bounds = ev.agg(min($"eus"), max($"eus")).head()
     if (bounds.isNullAt(0)) return spark.emptyDataset[SessOut].toDF()
     val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
     val sentinelUs = bounds.getLong(1) + 3L * gapUs

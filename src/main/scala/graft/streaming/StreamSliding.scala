@@ -41,7 +41,7 @@ object StreamSliding {
     val ev = graft.sources.Tables.events(spark, dir)
       .filter($"ts".isNotNull)
       .select($"ts", $"user_id", $"value")
-    val bounds = StreamDedup.cachedHead(ev.agg(min(unix_micros($"ts")), max(unix_micros($"ts"))))
+    val bounds = ev.agg(min(unix_micros($"ts")), max(unix_micros($"ts"))).head()
     if (bounds.isNullAt(0)) return spark.emptyDataFrame
     val (loUs, hiUs) = (bounds.getLong(0), bounds.getLong(1))
     val cutUs = (loUs + hiUs) / 2

@@ -77,7 +77,7 @@ object StreamStreak {
     val ev = graft.sources.Tables.events(spark, dir)
       .filter($"ts".isNotNull)
       .select($"user_id", unix_micros($"ts").as("tsUs"), $"event_id")
-    val bounds = StreamDedup.cachedHead(ev.agg(min($"tsUs"), max($"tsUs")))
+    val bounds = ev.agg(min($"tsUs"), max($"tsUs")).head()
     if (bounds.isNullAt(0)) return spark.emptyDataFrame
     val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
     val sentinels = ev.select($"user_id").distinct()

@@ -60,7 +60,7 @@ object StreamTopTerms {
       k: Int = 20, w: Int = 1024): DataFrame = {
     import spark.implicits._
     val docs = graft.sources.Tables.documents(spark, dir)
-    val bounds = StreamDedup.cachedHead(docs.agg(min($"doc_id"), max($"doc_id")))
+    val bounds = docs.agg(min($"doc_id"), max($"doc_id")).head()
     if (bounds.isNullAt(0)) return spark.emptyDataFrame
     val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
     val terms = docs.select($"doc_id",

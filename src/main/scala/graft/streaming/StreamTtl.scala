@@ -76,7 +76,7 @@ object StreamTtl {
       .select($"event_type", $"event_id", unix_micros($"ts").as("t_us"),
         round($"value" * 100).cast(LongType).as("cents"),
         coalesce($"k" <= 50, lit(false)).as("sent"))
-    val bounds = StreamDedup.cachedHead(ev.agg(min($"t_us"), max($"t_us")))
+    val bounds = ev.agg(min($"t_us"), max($"t_us")).head()
     if (bounds.isNullAt(0)) return spark.emptyDataFrame
     val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
     val flush = ev.select($"event_type").distinct()

@@ -66,7 +66,7 @@ object StreamUniqueness {
     val ev = graft.sources.Tables.events(spark, dir)
       .select($"event_id", $"user_id", $"event_type",
         unix_micros($"ts").as("tsUs"))
-    val bounds = StreamDedup.cachedHead(ev.agg(min($"tsUs"), max($"tsUs")))
+    val bounds = ev.agg(min($"tsUs"), max($"tsUs")).head()
     // all-null ts (rows exist): every row routes to batch 1 below, so
     // the cut value is irrelevant — the audit must still run (the
     // batch twin has no ts filter; bailing to a zero-column frame

@@ -74,7 +74,7 @@ object StreamUrlDedup {
     import spark.implicits._
     val cu = graft.operators.Dedup.canonicalUrls(spark, dir)
       .select($"canonical_url", $"doc_id", $"url", lit(false).as("sentinel"))
-    val bounds = StreamDedup.cachedHead(cu.agg(min($"doc_id"), max($"doc_id")))
+    val bounds = cu.agg(min($"doc_id"), max($"doc_id")).head()
     if (bounds.isNullAt(0)) return spark.emptyDataset[Out].toDF()
       .select($"canonical_url", $"keeper_id", $"n_docs", $"n_raw_variants")
     val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2

@@ -39,14 +39,14 @@ object StreamXcorr {
     * straddle. Deterministic election: count desc, (type, h) asc. */
   private[streaming] def straddlingCut(spark: SparkSession, dir: String): Option[Long] = {
     import spark.implicits._
-    StreamDedup.cachedHeadOption(graft.sources.Tables.events(spark, dir)
+    graft.sources.Tables.events(spark, dir)
       .groupBy($"event_type",
         expr("(unix_micros(ts) - pmod(unix_micros(ts), 3600000000)) DIV 3600000000").as("h"))
       .agg(min(unix_micros($"ts")).as("lo"), max(unix_micros($"ts")).as("hi"),
         count(lit(1)).as("n"))
       .filter($"lo" < $"hi")
       .orderBy($"n".desc, $"event_type".asc, $"h".asc)
-      .limit(1))
+      .limit(1).collect().headOption
       .map(r => (r.getAs[Long]("lo") + r.getAs[Long]("hi")) / 2)
   }
 
@@ -61,7 +61,7 @@ object StreamXcorr {
     import spark.implicits._
     val ev = graft.sources.Tables.events(spark, dir)
       .select($"ts", $"event_type")
-    val bounds = StreamDedup.cachedHead(ev.agg(min(unix_micros($"ts")), max(unix_micros($"ts"))))
+    val bounds = ev.agg(min(unix_micros($"ts")), max(unix_micros($"ts"))).head()
     if (bounds.isNullAt(0)) return None
     val hiUs = bounds.getLong(1)
     val cutUs = straddlingCut(spark, dir).getOrElse((bounds.getLong(0) + hiUs) / 2)

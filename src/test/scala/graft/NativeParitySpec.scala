@@ -195,4 +195,14 @@ class NativeParitySpec extends SparkSpec {
       assert(bad.isEmpty)
     }
   }
+
+  test("RepGramStats rejects a gram width other than 4") {
+    // the BMP fast path packs exactly 4 code points per long
+    val v = org.apache.spark.unsafe.types.UTF8String.fromString("abcdefgh")
+    for (n <- Seq(1, 3, 5)) {
+      val e = intercept[IllegalArgumentException](graft.plans.TextExprs.repGramStats(v, n))
+      assert(e.getMessage.contains(s"n=$n"))
+    }
+    assert(graft.plans.TextExprs.repGramStats(v, 4).toLongArray().toSeq == Seq(5L, 1L))
+  }
 }

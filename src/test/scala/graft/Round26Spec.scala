@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Round 9 (r26 spec file): staged-stream memoization, degenerate
+/** Round 9 (r26 spec file): staged-stream repeat calls, degenerate
   * corpora through the streaming twins, and transient-checkpoint
   * hygiene. */
 class Round26Spec extends SparkSpec {
@@ -41,17 +41,27 @@ class Round26Spec extends SparkSpec {
     assert(rows.forall(_.getLong(1) == 0L))
   }
 
-  test("staged-stream memo: identical batch plans reuse one staged dir, distinct plans do not collide") {
+  test("staged stream: repeat calls agree and free their staged input") {
     import spark.implicits._
-    graft.streaming.StreamDedup.clearStagedCache()
+    def stagedDirs(): Set[String] = {
+      val ls = java.nio.file.Files.list(graft.sources.Scratch.root)
+      try {
+        import scala.jdk.CollectionConverters._
+        ls.iterator().asScala.map(_.getFileName.toString)
+          .filter(_.startsWith("graft_sdedup_")).toSet
+      } finally ls.close()
+    }
+    val before = stagedDirs()
     val dir = eventsDir("memo", (1L to 20L).map(i => (i, i % 3, "t", Some(i * 1000000L))))
-    // same twin twice → second call must return identical results off
-    // the memoized staging (and not, e.g., stale or doubled data)
+    // same twin twice → each call stages afresh and both agree (no
+    // stale or doubled data)
     val a = graft.streaming.StreamUniqueness.streamedUniqueness(spark, dir).collect()
     val b = graft.streaming.StreamUniqueness.streamedUniqueness(spark, dir).collect()
     assert(a.toSet == b.toSet)
-    // a DIFFERENT corpus must miss the cache (different canonicalized
-    // source plan), not serve the first corpus's staging
+    // each run deletes its staged input once the query stops: the
+    // returned frame reads only the sink
+    assert((stagedDirs() -- before).isEmpty, "staged input outlived its run")
+    // a DIFFERENT corpus must not see the first corpus's staging
     val dir2 = eventsDir("memo2", (1L to 5L).map(i => (i, i, "t", Some(i * 1000000L))))
     val c = graft.streaming.StreamUniqueness.streamedUniqueness(spark, dir2)
       .agg(sum($"n_rows")).head().getLong(0)

@@ -2,8 +2,10 @@
 # Run a graft main straight from compiled classes (no sbt lock):
 #   tools/jrun.sh [-Xmx16g] graft.tools.RecallOne ann_recall /tmp/scale10j
 # Mirrors build.sbt's jdk17AddOpens + UTC defaults. Compile first
-# (sbt compile) — this runs whatever is in target/scala-2.13/classes.
+# (sbt compile) — this runs whatever is in the checkout's
+# target/scala-2.13/classes, found relative to this script.
 set -euo pipefail
+REPO="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
 XMX="${SPARK_DRIVER_MEM:-8g}"
 if [[ "${1:-}" == -Xmx* ]]; then XMX="${1#-Xmx}"; shift; fi
 OPENS=""
@@ -16,4 +18,4 @@ for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
 done
 exec java $OPENS -Xmx"$XMX" \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" "$@"
+  -cp "$REPO/target/scala-2.13/classes:/opt/spark/jars/*" "$@"
