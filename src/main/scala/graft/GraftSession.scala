@@ -6,8 +6,9 @@ import org.apache.spark.sql.SparkSession
   *
   * Local-mode settings mirror what a cluster deployment would tune:
   * shuffle partitions sized to parallelism (not the 200 default), AQE
-  * with skew-join handling on, UTC session time, and a broadcast
-  * threshold that lets the small dimension tables broadcast.
+  * with skew-join handling on, UTC session time, a broadcast
+  * threshold that lets the small dimension tables broadcast, and a
+  * codegen cache that every session's tasks share.
   */
 object GraftSession {
   def builder(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
@@ -54,7 +55,37 @@ object GraftSession {
       // inside an executor heap; re-audit this list whenever a new
       // collect_list consumer lands (grep collect_list/collect_set).
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("GRAFT_OHA_FALLBACK", (256 * 1024).toString))
+        (256 * 1024).toString)
+      // Codegen reuse. CodeGenerator.compile caches each compiled class
+      // keyed on (thread context class loader, source) in an LRU of
+      // spark.sql.codegen.cache.maxEntries (default 100). The driver
+      // compiles under the app class loader and tasks under the
+      // executor's, so each source takes two entries: a telemetry_olap
+      // lap of the benchmark compiles 81 distinct sources, ~160
+      // entries, and the default LRU evicted them before the next lap
+      // could reuse them (541 compiles of 81 sources in one run, 322 of
+      // them task-side repeats).
+      //
+      // With artifact isolation on (the Spark default) every session
+      // tags its jobs with its own JobArtifactState(sessionUUID), and
+      // the executor builds a new IsolatedSessionState, class loader
+      // included, per new UUID. Every staged stream makes two sessions
+      // per call (runStagedStream's newSession and StreamExecution's
+      // cloneSession), so each task-side compile inside a twin missed
+      // however large the cache (stream_twins: 535 compiles of 79
+      // sources, 360 task-side repeats). graft adds no jar or artifact
+      // to any session, so isolation guarded nothing; off, every
+      // session's tasks share the executor's default loader.
+      //
+      // 1000 entries hold both benchmark workloads (~80 sources × 2
+      // loaders each) with room for the other plan shapes of a mixed
+      // session. Measured on the benchmark at seed 711, per traced lap
+      // after warm-up: 58 compiles (794 ms) on telemetry_olap and 78.5
+      // (1091 ms) on stream_twins drop to 0. The larger cache alone
+      // left 41 compiles per stream_twins lap, isolation off alone left
+      // 79; both are needed.
+      .config("spark.sql.artifact.isolation.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
       // spark.driver.maxResultSize stays at the 1g default: it is the
       // driver-side tripwire that turns a corpus-sized collect into a
       // loud error instead of an OOM. The one path that used to need

@@ -188,12 +188,6 @@ object StreamDedup {
       (transform: DataFrame => DataFrame): Option[DataFrame] = {
     import java.nio.file.Files
     require(batches.nonEmpty, "staged stream needs at least one batch")
-    val prof = sys.env.contains("GRAFT_STREAM_PROF")
-    var t0 = System.nanoTime()
-    def mark(phase: String): Unit = if (prof) {
-      val t1 = System.nanoTime()
-      println(f"STREAMPROF $phase: ${(t1 - t0) / 1e9}%.2f s"); t0 = t1
-    }
     val tmp = graft.sources.Scratch.tempDir("graft_sdedup_")
     // fresh checkpoint per RUN (a reused checkpoint would resume the
     // previous query instead of replaying the staged batches)
@@ -212,7 +206,6 @@ object StreamDedup {
         .reduce(_ unionByName _)
         .repartition(batches.length, col("gbatch"))
         .write.partitionBy("gbatch").parquet(s"$tmp/in")
-      mark("stage-writes")
       val batchDirs = batches.indices
         .map(i => tmp.resolve(f"in/gbatch=b_$i%03d"))
         .filter(Files.isDirectory(_))
@@ -245,7 +238,6 @@ object StreamDedup {
       val schema = footers.headOption.flatMap(_.schema).getOrElse(batches.head.schema)
       val width = stateWidth(footers.map(_.rows).maxOption.getOrElse(0L),
         spark.sparkContext.defaultParallelism)
-      mark("mtime+footers")
       // cloned session (shared context, independent SQLConf): the
       // stateful width is set per run without touching the caller's
       // conf. The width is fixed when the query's fresh checkpoint is
@@ -293,17 +285,7 @@ object StreamDedup {
         .writeStream.outputMode("append").format("parquet")
         .option("path", outDir.toString)
         .option("checkpointLocation", ckpt.toString).start()
-      try {
-        q.processAllAvailable(); mark("stream-run")
-        if (prof) {
-          import scala.jdk.CollectionConverters._
-          q.recentProgress.foreach { p =>
-            println(s"STREAMPROF batch ${p.batchId}: " +
-              s"${p.durationMs.asScala.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }.mkString(" ")}")
-          }
-        }
-      } finally q.stop()
-      mark("stream-stop")
+      try q.processAllAvailable() finally q.stop()
       // explicit schema: an all-pruned run commits zero data files and
       // schema inference over an empty sink would throw — the memory
       // sink returned a correctly-shaped empty frame, so this does too

@@ -85,8 +85,11 @@ object StreamQueueStats {
       .select($"event_type", lit(bounds.getLong(1) + 1L).as("tsUs"),
         lit(null).cast("boolean").as("lost"), lit(null).cast("long").as("cents"),
         lit(true).as("sentinel"))
+    // the sentinels ride the second data batch: the fold is order-free
+    // and a stream emits only after its whole group is folded, so the
+    // flushed row counts every event of the stream
     val flushed = StreamDedup.runStagedStream(spark,
-        Seq(ev.filter($"tsUs" <= cut), ev.filter($"tsUs" > cut), sentinels)) { stream =>
+        Seq(ev.filter($"tsUs" <= cut), ev.filter($"tsUs" > cut).unionByName(sentinels))) { stream =>
       census(stream.as[Ev]).toDF()
     }.getOrElse(return spark.emptyDataFrame)
     def decCents(c: org.apache.spark.sql.Column) =
