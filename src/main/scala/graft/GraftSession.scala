@@ -70,7 +70,7 @@ object GraftSession {
       // tags its jobs with its own JobArtifactState(sessionUUID), and
       // the executor builds a new IsolatedSessionState, class loader
       // included, per new UUID. Every staged stream makes two sessions
-      // per call (runStagedStream's newSession and StreamExecution's
+      // per call (Staged.run's newSession and StreamExecution's
       // cloneSession), so each task-side compile inside a twin missed
       // however large the cache (stream_twins: 535 compiles of 79
       // sources, 360 task-side repeats). graft adds no jar or artifact
@@ -90,7 +90,7 @@ object GraftSession {
       // driver-side tripwire that turns a corpus-sized collect into a
       // loud error instead of an OOM. The one path that used to need
       // 8g (the streaming gate's memory sink, r11) now writes a
-      // durable parquet sink (StreamDedup.runStagedStream) — no
+      // durable parquet sink (streaming.Staged.run) — no
       // operator or gate path ships corpus-sized results driver-side.
       .config("spark.ui.enabled", "false")
 

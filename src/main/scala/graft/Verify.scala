@@ -15,6 +15,9 @@ import java.nio.file.{Files, Paths}
   *     assert nothing was dropped.
   */
 object Verify {
+  /** Streaming twins dumped at once. */
+  private val StreamConcurrency = 4
+
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg: comma-separated key subset for targeted
@@ -69,19 +72,14 @@ object Verify {
     val (streamKeys, batchKeys) = selected(SparkEntry.queries).toSeq.sortBy(_._1)
       .partition { case (k, _) => k.startsWith("stream_") || k.endsWith("_stream") }
     batchKeys.foreach { case (name, fn) => dumpOne(name, fn) }
-    val conc = math.max(1, sys.env.getOrElse("GRAFT_GATE_STREAM_CONCURRENCY", "4").toInt)
-    if (conc <= 1 || streamKeys.size <= 1) {
-      streamKeys.foreach { case (name, fn) => dumpOne(name, fn) }
-    } else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(conc)
-      try {
-        import scala.jdk.CollectionConverters._
-        val tasks = streamKeys.map { case (name, fn) =>
-          new java.util.concurrent.Callable[Unit] { def call(): Unit = dumpOne(name, fn) }
-        }
-        pool.invokeAll(tasks.asJava).asScala.foreach(_.get())
-      } finally pool.shutdown()
-    }
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(StreamConcurrency)
+    try {
+      import scala.jdk.CollectionConverters._
+      val tasks = streamKeys.map { case (name, fn) =>
+        new java.util.concurrent.Callable[Unit] { def call(): Unit = dumpOne(name, fn) }
+      }
+      pool.invokeAll(tasks.asJava).asScala.foreach(_.get())
+    } finally pool.shutdown()
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -276,7 +276,7 @@ object Frames {
         Frame.binJoin(transform($"fs", f => f.getField("frame")), 0x3a).as("wire"),
         $"min_ts_secs", $"max_ts_secs")
     val tmp = graft.sources.Scratch.tempDir("graft_fidx_")
-    graft.streaming.StreamRelay.deleteOnExit(tmp)
+    graft.sources.Scratch.deleteOnExit(tmp)
     rolled.write.mode("overwrite").parquet(s"$tmp/blobs")
     spark.read.parquet(s"$tmp/blobs")
       .select($"device_id", $"blob_seq", $"min_ts_secs", $"max_ts_secs")

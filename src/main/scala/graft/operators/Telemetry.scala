@@ -1870,9 +1870,8 @@ object Telemetry {
     val spark = cells.sparkSession
     import spark.implicits._
     val b = cells.agg(min($"h"), max($"h")).head()
-    if (b.isNullAt(0)) return spark.emptyDataFrame
-    val h0 = b.getLong(0)
-    val hN = b.getLong(1) - h0 + 1L
+    // an empty census spans no hour: a correctly shaped empty result
+    val (h0, hN) = if (b.isNullAt(0)) (0L, 0L) else (b.getLong(0), b.getLong(1) - b.getLong(0) + 1L)
     val st = hN * (hN - 1L) / 2L
     val st2 = (hN - 1L) * hN * (2L * hN - 1L) / 6L
     cells

@@ -54,7 +54,7 @@ object Bucketed {
       created.getOrElseUpdate((spark, dir, nBuckets), {
         val suffix = f"${dir.hashCode & 0x7fffffff}%x_$nBuckets"
         val root = Scratch.tempDir("graft_bkt_")
-        graft.streaming.StreamRelay.deleteOnExit(root)
+        Scratch.deleteOnExit(root)
         val ct = s"graft_bkt_customer_$suffix"
         val ot = s"graft_bkt_orders_$suffix"
         writeBucketed(Tables.customer(spark, dir).select("c_custkey", "c_mktsegment"),

@@ -54,4 +54,34 @@ object Scratch {
       } catch { case _: java.io.IOException => disk }
     Files.createTempDirectory(base, prefix)
   }
+
+  /** Delete each root's whole tree (missing roots are skipped). */
+  private[graft] def deleteTree(roots: Path*): Unit = {
+    import scala.jdk.CollectionConverters._
+    roots.filter(Files.exists(_)).foreach { d =>
+      val walk = Files.walk(d)
+      try walk.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
+      finally walk.close()
+    }
+  }
+
+  /** Roots awaiting deletion at JVM exit; ONE hook drains them all (a
+    * hook per call would leave a thread per call in a long-lived
+    * application). */
+  private val exitCleanup = java.util.concurrent.ConcurrentHashMap.newKeySet[Path]()
+  private lazy val exitHookInstalled: Boolean = {
+    Runtime.getRuntime.addShutdownHook(new Thread(() => {
+      import scala.jdk.CollectionConverters._
+      exitCleanup.asScala.toSeq.foreach(d =>
+        try deleteTree(d) catch { case _: Throwable => () })
+    }))
+    true
+  }
+
+  /** Delete `p` at JVM exit: for directories a returned lazy scan
+    * still reads after the call that made them returns. */
+  private[graft] def deleteOnExit(p: Path): Unit = {
+    exitHookInstalled
+    exitCleanup.add(p)
+  }
 }

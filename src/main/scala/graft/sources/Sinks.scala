@@ -28,7 +28,7 @@ object Sinks {
     stagedEvents.computeIfAbsent(dir, { d =>
       import spark.implicits._
       val tmp = Scratch.tempDir("graft_ppart_")
-      graft.streaming.StreamRelay.deleteOnExit(tmp)
+      Scratch.deleteOnExit(tmp)
       writePartitioned(
         Tables.events(spark, d)
           .select($"event_id", $"user_id", $"value", $"event_type"),

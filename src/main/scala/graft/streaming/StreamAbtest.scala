@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of [[graft.operators.Telemetry.abtest]] — the
   * Welch t experiment monitor fed LIVE: state is TWO rows total
@@ -34,27 +33,13 @@ object StreamAbtest {
   /** The stateful core: order-free integer power-sum folds per arm;
     * n counts every purchase row (the batch when().otherwise(0)
     * counts NULL-value rows too), cents fold only when present. */
-  def arms(ev: Dataset[Ev]): Dataset[Arm] = {
-    val spark = ev.sparkSession
-    import spark.implicits._
-    ev.groupByKey(_.in_a)
-      .flatMapGroupsWithState[St, Arm](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (inA, it, state: GroupState[St]) =>
-          var st = state.getOption.getOrElse(St(0L, 0L, 0L, 0L))
-          var flush = false
-          it.foreach { e =>
-            if (e.sentinel) flush = true
-            else st = St(st.n + 1L, st.nv + e.cents.size,
-              Math.addExact(st.s1, e.cents.getOrElse(0L)),
-              Math.addExact(st.s2,
-                e.cents.map(c => Math.multiplyExact(c, c)).getOrElse(0L)))
-          }
-          state.update(st)
-          if (flush) Iterator.single(Arm(inA, st.n, st.nv, st.s1, st.s2))
-          else Iterator.empty
-      }
-  }
+  def arms(ev: Dataset[Ev]): Dataset[Arm] =
+    Staged.atBarrier(ev)(_.in_a, _.sentinel)(St(0L, 0L, 0L, 0L)) { (st, e) =>
+      St(st.n + 1L, st.nv + e.cents.size,
+        Math.addExact(st.s1, e.cents.getOrElse(0L)),
+        Math.addExact(st.s2,
+          e.cents.map(c => Math.multiplyExact(c, c)).getOrElse(0L)))
+    } { (inA, st) => Some(Arm(inA, st.n, st.nv, st.s1, st.s2)) }
 
   def streamedAbtest(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -64,18 +49,10 @@ object StreamAbtest {
       .select($"user_id", unix_micros($"ts").as("tsUs"),
         (pmod($"user_id", lit(2L)) === 0L).as("in_a"),
         (graft.operators.dec($"value") * 100).cast("long").as("cents"))
-    val bounds = p.agg(min($"tsUs"), max($"tsUs")).head()
-    if (bounds.isNullAt(0)) return spark.emptyDataFrame
-    val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
-    val sentinels = Seq(true, false).toDF("in_a")
-      .select($"in_a", lit(null).cast("long").as("cents"),
-        lit(true).as("sentinel"))
-    val armRows = StreamDedup.runStagedStream(spark, Seq(
-        p.filter($"tsUs" <= cut).select($"in_a", $"cents", lit(false).as("sentinel")),
-        p.filter($"tsUs" > cut).select($"in_a", $"cents", lit(false).as("sentinel"))
-          .unionByName(sentinels))) { stream =>
+    val armRows = Staged.run(spark, Staged.withBarrier[Ev](Staged.timeCut(p, $"tsUs"),
+        Seq(true, false).toDF("in_a"))) { stream =>
       arms(stream.as[Ev]).toDF()
-    }.getOrElse(return spark.emptyDataFrame)
+    }
     // pivot the two arm rows into the batch aggregation's one-row
     // shape, reconstructing the DECIMAL sums exactly (s1 at scale 2,
     // s2 at scale 4) before the shared double assembly

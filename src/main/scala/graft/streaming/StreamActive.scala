@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of [[graft.operators.Telemetry.runningDistinct]] —
   * the DAU / new-user / cumulative-distinct dashboard fed LIVE:
@@ -23,46 +22,27 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 object StreamActive {
 
   case class Ev(user_id: Option[Long], tsUs: Long)
-  case class Seen(days: Seq[Long])
   case class Hit(user_id: Option[Long], day: Long, is_first: Boolean)
 
   private val usPerDay = 86400000000L
 
   /** The stateful core: emit each user-day once, flagging the
     * user's first-ever day. */
-  def hits(ev: Dataset[Ev]): Dataset[Hit] = {
-    val spark = ev.sparkSession
-    import spark.implicits._
-    ev.groupByKey(_.user_id)
-      .flatMapGroupsWithState[Seen, Hit](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (uid, it, state: GroupState[Seen]) =>
-          var seen = state.getOption.map(_.days.toSet).getOrElse(Set.empty[Long])
-          val out = scala.collection.mutable.ArrayBuffer.empty[Hit]
-          it.toSeq.sortBy(_.tsUs).foreach { e =>
-            val day = e.tsUs / usPerDay // post-1970 corpus: exact floor
-            if (!seen.contains(day)) {
-              out += Hit(uid, day, seen.isEmpty)
-              seen += day
-            }
-          }
-          state.update(Seen(seen.toSeq))
-          out.iterator
-      }
-  }
+  def hits(ev: Dataset[Ev]): Dataset[Hit] =
+    Staged.onArrival(ev)(_.user_id, _.tsUs)(Set.empty[Long]) { (seen, e) =>
+      val day = e.tsUs / usPerDay // post-1970 corpus: exact floor
+      if (seen.contains(day)) (seen, None)
+      else (seen + day, Some(Hit(e.user_id, day, seen.isEmpty)))
+    }
 
   def streamedActive(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val ev = graft.sources.Tables.events(spark, dir)
       .filter($"ts".isNotNull)
       .select($"user_id", unix_micros($"ts").as("tsUs"))
-    val bounds = ev.agg(min($"tsUs"), max($"tsUs")).head()
-    if (bounds.isNullAt(0)) return spark.emptyDataFrame
-    val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
-    val log = StreamDedup.runStagedStream(spark,
-        Seq(ev.filter($"tsUs" <= cut), ev.filter($"tsUs" > cut))) { stream =>
+    val log = Staged.run(spark, Staged.timeCut(ev, $"tsUs")) { stream =>
       hits(stream.as[Ev]).toDF()
-    }.getOrElse(return spark.emptyDataFrame)
+    }
     // the batch operator's own day-dimension assembly
     val byDay = org.apache.spark.sql.expressions.Window.orderBy($"day".asc)
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,

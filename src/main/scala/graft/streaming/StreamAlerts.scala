@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of [[graft.operators.Telemetry.alerts]] — debounced
   * threshold alerting as the ONLINE operator it really is: the batch
@@ -20,11 +19,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * window's exact sort key — so equal-µs readings resolve
   * identically in both forms.
   *
-  * Batch-gated run: two micro-batches split at the median event
-  * time; an alert early in batch 2 whose predecessor landed late in
-  * batch 1 MUST see the cross-batch state to suppress correctly.
-  * Emission is append-mode at arrival (no sentinel — the decision
-  * never revises). Shares `events_alerts`' oracle.
+  * Gated property: an alert early in batch 2 whose predecessor
+  * landed late in batch 1 MUST see the cross-batch state to suppress
+  * correctly. Emission is append-mode at arrival (no sentinel — the
+  * decision never revises). Shares `events_alerts`' oracle.
   */
 object StreamAlerts {
 
@@ -35,25 +33,12 @@ object StreamAlerts {
 
   /** The stateful core: each over-threshold reading emits iff the
     * previous one on its timeline is farther back than the cooldown. */
-  def debounce(alerts: Dataset[Alert], coolUs: Long): Dataset[AlertOut] = {
-    val spark = alerts.sparkSession
-    import spark.implicits._
-    alerts.groupByKey(a => (a.event_type, a.user_id))
-      .flatMapGroupsWithState[Long, AlertOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case ((etype, uid), it, state: GroupState[Long]) =>
-          var prev = state.getOption
-          val out = scala.collection.mutable.ArrayBuffer.empty[AlertOut]
-          it.toSeq.sortBy(a => (a.t_us, a.event_id)).foreach { a =>
-            val emitted = prev.forall(p => a.t_us - p > coolUs)
-            out += AlertOut(a.event_id, uid, etype, a.value, a.threshold,
-              a.t_us, emitted)
-            prev = Some(a.t_us)
-          }
-          prev.foreach(state.update)
-          out.iterator
-      }
-  }
+  def debounce(alerts: Dataset[Alert], coolUs: Long): Dataset[AlertOut] =
+    Staged.onArrival(alerts)(a => (a.event_type, a.user_id), a => (a.t_us, a.event_id))(
+        Option.empty[Long]) { (prev, a) =>
+      (Some(a.t_us), Some(AlertOut(a.event_id, a.user_id, a.event_type, a.value,
+        a.threshold, a.t_us, emitted = prev.forall(p => a.t_us - p > coolUs))))
+    }
 
   /** The batch-gated run: shares events_alerts' oracle. */
   def streamedAlerts(spark: SparkSession, dir: String,
@@ -64,17 +49,12 @@ object StreamAlerts {
     val thr = (length($"event_type").cast(LongType) * 7L) % 40L + 30L
     // scan-local threshold BEFORE the stateful shuffle
     val alerts = graft.sources.Tables.events(spark, dir)
-      .filter($"value" > thr.cast(DoubleType))
+      .filter($"value" > thr.cast(DoubleType) && $"ts".isNotNull)
       .select($"user_id", $"event_id", $"event_type", $"value",
         thr.as("threshold"), unix_micros($"ts").as("t_us"))
-    val bounds = alerts.agg(min($"t_us"), max($"t_us")).head()
-    if (bounds.isNullAt(0)) return spark.emptyDataFrame
-    val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
-    StreamDedup.runStagedStream(spark,
-        Seq(alerts.filter($"t_us" <= cut), alerts.filter($"t_us" > cut))) {
+    Staged.run(spark, Staged.timeCut(alerts, $"t_us")) {
       stream => debounce(stream.as[Alert], coolUs).toDF()
-    }.getOrElse(spark.emptyDataFrame)
-      .select($"event_id", $"user_id", $"event_type", $"value",
+    }.select($"event_id", $"user_id", $"event_type", $"value",
         $"threshold", $"t_us", $"emitted")
   }
 }

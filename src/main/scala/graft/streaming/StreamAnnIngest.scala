@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.functions.VecFns
 
@@ -34,39 +33,14 @@ object StreamAnnIngest {
     min_cos_micro: Option[Long], max_cos_micro: Option[Long])
 
   /** The stateful core: O(1) per-list moment fold; sentinel flushes. */
-  def census(rows: Dataset[In]): Dataset[Out] = {
-    val spark = rows.sparkSession
-    import spark.implicits._
-    rows.groupByKey(_.cid)
-      .flatMapGroupsWithState[St, Out](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (cid, it, state: GroupState[St]) =>
-          var st = state.getOption.getOrElse(St(0L, None, None, None))
-          var flush = false
-          it.foreach { r =>
-            if (r.sentinel) flush = true
-            else {
-              val sum2 = r.cosMicro match {
-                case Some(c) => Some(st.sum.getOrElse(0L) + c)
-                case None => st.sum
-              }
-              val mn2 = (st.mn, r.cosMicro) match {
-                case (Some(a), Some(b)) => Some(math.min(a, b))
-                case (a, b) => a.orElse(b)
-              }
-              val mx2 = (st.mx, r.cosMicro) match {
-                case (Some(a), Some(b)) => Some(math.max(a, b))
-                case (a, b) => a.orElse(b)
-              }
-              st = St(st.n + 1L, sum2, mn2, mx2)
-            }
-          }
-          state.update(st)
-          if (flush && st.n > 0L)
-            Iterator.single(Out(cid, st.n, st.sum, st.mn, st.mx))
-          else Iterator.empty
-      }
-  }
+  def census(rows: Dataset[In]): Dataset[Out] =
+    Staged.atBarrier(rows)(_.cid, _.sentinel)(St(0L, None, None, None)) { (st, r) =>
+      def pick(a: Option[Long], f: (Long, Long) => Long) =
+        (for (x <- a; y <- r.cosMicro) yield f(x, y)).orElse(a).orElse(r.cosMicro)
+      St(st.n + 1L, pick(st.sum, _ + _), pick(st.mn, math.min), pick(st.mx, math.max))
+    } { (cid, st) =>
+      if (st.n > 0L) Some(Out(cid, st.n, st.sum, st.mn, st.mx)) else None
+    }
 
   def streamedAnnIngest(spark: SparkSession, dir: String,
       nCentroids: Int = 16): DataFrame = {
@@ -74,39 +48,33 @@ object StreamAnnIngest {
     val emb = graft.sources.Tables.embeddings(spark, dir)
       .select($"vec_id", $"embedding",
         VecFns.norm($"embedding").as("nrm"))
-    val bounds = emb.agg(min($"vec_id"), max($"vec_id")).head()
-    if (bounds.isNullAt(0)) return spark.emptyDataFrame
-    val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
     // the codebook: dimension-sized driver reduction (16 × 64 floats)
     val cents = emb.filter($"vec_id" < nCentroids)
       .select($"vec_id", $"embedding", $"nrm").collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray, r.getDouble(2)))
       .sortBy(_._1)
-    require(cents.nonEmpty, "empty codebook")
     // scan-local argmax over (ccos, -cid) structs: max ccos, ties to
     // the smaller cid — exactly the batch window's (desc, asc) order.
     // Each ccos is the SAME expression tree as batch (fold-exact dot
-    // / (nrm * cnrm-literal)), so the doubles are bit-identical.
-    val candidates = array(cents.map { case (cid, vec, cnrm) =>
-      struct(
-        (VecFns.dot($"embedding", typedLit(vec)) / ($"nrm" * lit(cnrm))).as("ccos"),
-        lit(-cid).as("negcid"))
-    }: _*)
-    val assigned = emb
-      .withColumn("best", array_max(candidates))
-      .select($"vec_id", (-$"best.negcid").as("cid"),
+    // / (nrm * cnrm-literal)), so the doubles are bit-identical. An
+    // empty codebook assigns no vector, as the batch cross join.
+    val best =
+      if (cents.isEmpty) lit(null).cast("struct<ccos:double,negcid:bigint>")
+      else array_max(array(cents.map { case (cid, vec, cnrm) =>
+        struct(
+          (VecFns.dot($"embedding", typedLit(vec)) / ($"nrm" * lit(cnrm))).as("ccos"),
+          lit(-cid).as("negcid"))
+      }: _*))
+    def assign(df: DataFrame): DataFrame = df
+      .withColumn("best", best)
+      .filter($"best".isNotNull)
+      .select((-$"best.negcid").as("cid"),
         floor($"best.ccos" * lit(1000000.0d)).cast("long").as("cosMicro"))
-    val sentinels = spark.range(nCentroids).select(
-      $"id".as("cid"), lit(null).cast("long").as("cosMicro"),
-      lit(true).as("sentinel"))
-    val flushed = StreamDedup.runStagedStream(spark, Seq(
-        assigned.filter($"vec_id" <= cut)
-          .select($"cid", $"cosMicro", lit(false).as("sentinel")),
-        assigned.filter($"vec_id" > cut)
-          .select($"cid", $"cosMicro", lit(false).as("sentinel"))
-          .unionByName(sentinels))) { stream =>
+    val flushed = Staged.run(spark, Staged.withBarrier[In](
+        Staged.timeCut(emb, $"vec_id").map(assign),
+        spark.range(nCentroids).select($"id".as("cid")))) { stream =>
       census(stream.as[In]).toDF()
-    }.getOrElse(return spark.emptyDataFrame)
+    }
     graft.operators.Similarity.annIndexStatsAssembly(
       flushed.select($"cid", $"n_vectors", $"sum_cos_micro",
         $"min_cos_micro", $"max_cos_micro"),

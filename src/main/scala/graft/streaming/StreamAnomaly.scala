@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 
 /** Streaming moment accumulation for the outlier gate — the
@@ -29,8 +28,8 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
   * would flip the 2σ comparison.
   *
   * Scale posture: state is 3 Longs per user sharded on the same
-  * user_id key the batch groupBy shuffles on; the sentinel batch is
-  * one row per user; the scoring join is a plain equi-join on
+  * user_id key the batch groupBy shuffles on; the barrier is one row
+  * per user; the scoring join is a plain equi-join on
   * user_id (AQE broadcasts the stats side when small).
   */
 object StreamAnomaly {
@@ -46,27 +45,12 @@ object StreamAnomaly {
 
   /** The stateful core: fold cents into per-user moments; emit the
     * totals exactly once, when the sentinel arrives. */
-  def accumulate(ev: Dataset[CEv]): Dataset[MomOut] = {
-    val spark = ev.sparkSession
-    import spark.implicits._
-    ev.groupByKey(_.user_id)
-      .flatMapGroupsWithState[Mom, MomOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (uid, it, state: GroupState[Mom]) =>
-          var m = state.getOption.getOrElse(Mom(0L, 0L, 0L))
-          var flush = false
-          it.foreach { e =>
-            if (e.sentinel) flush = true
-            else m = Mom(
-              Math.addExact(m.n, 1L),
-              Math.addExact(m.s1c, e.cents.getOrElse(0L)),
-              Math.addExact(m.s2cc, e.cents.map(c => Math.multiplyExact(c, c)).getOrElse(0L)))
-          }
-          state.update(m)
-          if (flush) Iterator.single(MomOut(uid, m.n, m.s1c, m.s2cc))
-          else Iterator.empty
-      }
-  }
+  def accumulate(ev: Dataset[CEv]): Dataset[MomOut] =
+    Staged.atBarrier(ev)(_.user_id, _.sentinel)(Mom(0L, 0L, 0L)) { (m, e) =>
+      Mom(Math.addExact(m.n, 1L),
+        Math.addExact(m.s1c, e.cents.getOrElse(0L)),
+        Math.addExact(m.s2cc, e.cents.map(c => Math.multiplyExact(c, c)).getOrElse(0L)))
+    } { (uid, m) => Some(MomOut(uid, m.n, m.s1c, m.s2cc)) }
 
   /** The batch-gated run: shares events_anomaly's oracle — the flags
     * match the batch operator only if batch-2 arrivals folded into
@@ -77,22 +61,12 @@ object StreamAnomaly {
     import graft.operators.dec
     val ev = graft.sources.Tables.events(spark, dir)
       .filter($"user_id".isNotNull)
-      .select($"event_id", $"user_id", unix_micros($"ts").as("ts_us"),
+      .select($"user_id", unix_micros($"ts").as("ts_us"),
         (dec($"value") * 100).cast(LongType).as("cents"))
-    val bounds = ev.agg(min($"ts_us"), max($"ts_us")).head()
-    if (bounds.isNullAt(0)) return spark.emptyDataFrame
-    val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
-    val staged = ev.select($"user_id", $"cents", lit(false).as("sentinel"),
-      $"ts_us")
-    val sentinels = ev.select($"user_id").distinct()
-      .select($"user_id", lit(null).cast("long").as("cents"),
-        lit(true).as("sentinel"))
-    val stats = StreamDedup.runStagedStream(spark,
-        Seq(staged.filter($"ts_us" <= cut).drop("ts_us"),
-          staged.filter($"ts_us" > cut).drop("ts_us"),
-          sentinels)) { stream =>
+    val stats = Staged.run(spark, Staged.withBarrier[CEv](Staged.timeCut(ev, $"ts_us"),
+        ev.select($"user_id").distinct())) { stream =>
       accumulate(stream.as[CEv]).toDF()
-    }.getOrElse(return spark.emptyDataFrame)
+    }
     // every user must emit exactly once (the barrier flushed each
     // user's full history) — a duplicate or missing row means state
     // was replayed or dropped

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of [[graft.operators.Telemetry.attribution]] —
   * last-touch attribution run as an INCREMENTAL stateful operator:
@@ -18,12 +17,12 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * same µs resolve identically (touch with the smaller event_id
   * counts, one with a larger does not).
   *
-  * Batch-gated run: two micro-batches split at the median event time,
-  * so purchases in batch 2 whose last touch landed in batch 1 MUST
-  * attribute from cross-batch state (the spec asserts such pairs
-  * exist — a cut that splits no (touch, purchase) pair would make the
-  * gate vacuous). No sentinel needed: attribution is stateless on
-  * the output side, rows emit in the batch their purchase arrives.
+  * Gated property: purchases in batch 2 whose last touch landed in
+  * batch 1 MUST attribute from cross-batch state (the spec asserts
+  * such pairs exist — a cut that splits no (touch, purchase) pair
+  * would make the gate vacuous). No sentinel needed: attribution is
+  * stateless on the output side, rows emit in the batch their
+  * purchase arrives.
   * The per-purchase emission then aggregates through the SAME
   * decimal-exact rollup as the batch operator and shares its oracle.
   */
@@ -39,32 +38,15 @@ object StreamAttribution {
       value: Option[Double])
 
   /** The stateful core: touches update state, purchases read it. */
-  def attribute(ev: Dataset[Ev], lookUs: Long): Dataset[AttrOut] = {
-    val spark = ev.sparkSession
-    import spark.implicits._
-    ev.groupByKey(_.user_id)
-      .flatMapGroupsWithState[Touch, AttrOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (uid, it, state: GroupState[Touch]) =>
-          var touch = state.getOption
-          val out = scala.collection.mutable.ArrayBuffer.empty[AttrOut]
-          it.toSeq.sortBy(e => (e.eus, e.event_id)).foreach { e =>
-            e.event_type match {
-              case "click" | "view" =>
-                touch = Some(Touch(e.event_type, e.eus))
-              case "purchase" =>
-                val attributed = touch match {
-                  case Some(t) if e.eus - t.tUs <= lookUs => t.tType
-                  case _ => "direct"
-                }
-                out += AttrOut(uid, e.event_id, attributed, e.value)
-              case _ => ()
-            }
-          }
-          touch.foreach(state.update)
-          out.iterator
+  def attribute(ev: Dataset[Ev], lookUs: Long): Dataset[AttrOut] =
+    Staged.onArrival(ev)(_.user_id, e => (e.eus, e.event_id))(Option.empty[Touch]) {
+      (touch, e) => e.event_type match {
+        case "click" | "view" => (Some(Touch(e.event_type, e.eus)), None)
+        case "purchase" => (touch, Some(AttrOut(e.user_id, e.event_id,
+          touch.filter(t => e.eus - t.tUs <= lookUs).fold("direct")(_.tType), e.value)))
+        case _ => (touch, None)
       }
-  }
+    }
 
   def streamedAttribution(spark: SparkSession, dir: String,
       lookbackSecs: Long = 7L * 86400L): DataFrame = {
@@ -74,13 +56,9 @@ object StreamAttribution {
       .filter($"ts".isNotNull)
       .select($"user_id", unix_micros($"ts").as("eus"), $"event_id",
         $"event_type", $"value")
-    val bounds = ev.agg(min($"eus"), max($"eus")).head()
-    if (bounds.isNullAt(0)) return spark.emptyDataFrame
-    val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
-    val log = StreamDedup.runStagedStream(spark,
-        Seq(ev.filter($"eus" <= cut), ev.filter($"eus" > cut))) { stream =>
+    val log = Staged.run(spark, Staged.timeCut(ev, $"eus")) { stream =>
       attribute(stream.as[Ev], lookUs).toDF()
-    }.getOrElse(return spark.emptyDataFrame)
+    }
     // same decimal-exact rollup as the batch operator (shared oracle)
     log.groupBy($"attributed")
       .agg(count(lit(1)).as("n_purchases"),

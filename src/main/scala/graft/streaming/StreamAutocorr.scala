@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of [[graft.operators.Telemetry.autocorr]] — the
   * lag-1 serial-correlation monitor run INCREMENTALLY: per stream the
@@ -29,32 +28,17 @@ object StreamAutocorr {
   case class Ev(event_type: Option[String], tsUs: Long, event_id: Long,
     cents: Option[Long])
   case class Last(cents: Option[Long])
-  case class St(last: Option[Last])
   case class Pair(event_type: Option[String], x_cents: Long,
     y_cents: Option[Long])
 
   /** The stateful core: O(1) delay line per stream; emit the (prev,
     * cur) pair at each arrival whose predecessor reading is
     * non-null. */
-  def pairs(ev: Dataset[Ev]): Dataset[Pair] = {
-    val spark = ev.sparkSession
-    import spark.implicits._
-    ev.groupByKey(_.event_type)
-      .flatMapGroupsWithState[St, Pair](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (typ, it, state: GroupState[St]) =>
-          var st = state.getOption.getOrElse(St(None))
-          val out = scala.collection.mutable.ArrayBuffer.empty[Pair]
-          it.toSeq.sortBy(e => (e.tsUs, e.event_id)).foreach { e =>
-            st.last.foreach { l =>
-              l.cents.foreach(x => out += Pair(typ, x, e.cents))
-            }
-            st = St(Some(Last(e.cents)))
-          }
-          state.update(st)
-          out.iterator
-      }
-  }
+  def pairs(ev: Dataset[Ev]): Dataset[Pair] =
+    Staged.onArrival(ev)(_.event_type, e => (e.tsUs, e.event_id))(Option.empty[Last]) {
+      (last, e) => (Some(Last(e.cents)),
+        for (l <- last; x <- l.cents) yield Pair(e.event_type, x, e.cents))
+    }
 
   def streamedAutocorr(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -64,13 +48,9 @@ object StreamAutocorr {
         when($"value".isNotNull,
           (expr("CAST(value AS DECIMAL(18,2))") * 100).cast("long"))
           .as("cents"))
-    val bounds = ev.agg(min($"tsUs"), max($"tsUs")).head()
-    if (bounds.isNullAt(0)) return spark.emptyDataFrame
-    val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
-    val log = StreamDedup.runStagedStream(spark, Seq(
-        ev.filter($"tsUs" <= cut), ev.filter($"tsUs" > cut))) { stream =>
+    val log = Staged.run(spark, Staged.timeCut(ev, $"tsUs")) { stream =>
       pairs(stream.as[Ev]).toDF()
-    }.getOrElse(return spark.emptyDataFrame)
+    }
     graft.operators.Telemetry.autocorrAssembly(log.select($"event_type",
       ($"x_cents".cast("decimal(18,2)") / 100).cast("decimal(18,2)").as("x"),
       ($"y_cents".cast("decimal(18,2)") / 100).cast("decimal(18,2)").as("y")))

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of [[graft.operators.Quality.benford]] — the
   * fraud/corruption digit audit maintained LIVE over the order feed
@@ -26,21 +25,10 @@ object StreamBenford {
 
   /** The stateful core: count per digit; sentinel flushes digits
     * that actually occurred. */
-  def census(ds: Dataset[Dg]): Dataset[Cell] = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-    ds.groupByKey(_.digit)
-      .flatMapGroupsWithState[Long, Cell](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (digit, it, state: GroupState[Long]) =>
-          var n = state.getOption.getOrElse(0L)
-          var flush = false
-          it.foreach(d => if (d.sentinel) flush = true else n += 1L)
-          state.update(n)
-          if (flush && n > 0L) Iterator.single(Cell(digit, n))
-          else Iterator.empty
-      }
-  }
+  def census(ds: Dataset[Dg]): Dataset[Cell] =
+    Staged.atBarrier(ds)(_.digit, _.sentinel)(0L)((n, _) => n + 1L) { (digit, n) =>
+      if (n > 0L) Some(Cell(digit, n)) else None
+    }
 
   def streamedBenford(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -48,21 +36,12 @@ object StreamBenford {
       .select($"l_orderkey",
         substring(graft.operators.dec($"l_extendedprice").cast("string"), 1, 1)
           .cast("int").as("digit"))
-    if (digits.isEmpty) return spark.emptyDataFrame
     // the order feed staged at the median order key — a digit's
     // count must accumulate across the cut
-    val bounds = digits.agg(min($"l_orderkey"), max($"l_orderkey")).head()
-    val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
-    val sentinels = Seq.range(1, 10).toDF("digit")
-      .select($"digit", lit(true).as("sentinel"))
-    val cells = StreamDedup.runStagedStream(spark, Seq(
-        digits.filter($"l_orderkey" <= cut)
-          .select($"digit", lit(false).as("sentinel")),
-        digits.filter($"l_orderkey" > cut)
-          .select($"digit", lit(false).as("sentinel"))
-          .unionByName(sentinels))) { stream =>
+    val cells = Staged.run(spark, Staged.withBarrier[Dg](Staged.timeCut(digits, $"l_orderkey"),
+        Seq.range(1, 10).toDF("digit"))) { stream =>
       census(stream.as[Dg]).toDF()
-    }.getOrElse(return spark.emptyDataFrame)
+    }
     graft.operators.Quality.benfordAssembly(cells
       .select($"digit", $"n_rows"))
   }

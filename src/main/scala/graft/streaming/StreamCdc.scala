@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming changelog materialization — [[graft.operators.Changelog.cdcApply]]
   * run INCREMENTALLY: the CDC topic arrives as an unbounded stream
@@ -17,12 +16,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * still lose to the tombstone, which a delete-on-tombstone state
   * model gets wrong.
   *
-  * The batch-gated run stages the events log as two micro-batches
-  * split at the median event time plus a per-key sentinel barrier
-  * that flushes the final compacted row — shares `q_cdc_apply`'s
-  * oracle, so batch-2 operations must fold into batch-1 election
-  * state for the hash to match. Keys whose final op is a tombstone
-  * drop in the post-pass, exactly like the batch operator.
+  * A per-key barrier flushes the final compacted row — shares
+  * `q_cdc_apply`'s oracle, so batch-2 operations must fold into
+  * batch-1 election state for the hash to match. Keys whose final op
+  * is a tombstone drop in the post-pass, exactly like the batch
+  * operator.
   *
   * Scale posture: state is one row per LIVE key sharded on the same
   * key the batch groupBy shuffles on; emission is append-mode
@@ -46,53 +44,28 @@ object StreamCdc {
     * election; emit the compacted row exactly once, at the
     * sentinel. (user, ts) is unique in the corpus so the µs max-by
     * is tie-free, matching the batch `max_by`. */
-  def compact(ops: Dataset[Op]): Dataset[CdcOut] = {
-    val spark = ops.sparkSession
-    import spark.implicits._
-    ops.groupByKey(_.user_id)
-      .flatMapGroupsWithState[Compacted, CdcOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (uid, it, state: GroupState[Compacted]) =>
-          var s = state.getOption.orNull
-          var flush = false
-          it.foreach { e =>
-            if (e.sentinel) flush = true
-            else if (s == null)
-              s = Compacted(1L, if (e.op == "D") 1L else 0L, e.op, e.value, e.ts_us)
-            else {
-              val win = e.ts_us > s.tsUs
-              s = Compacted(s.nOps + 1,
-                s.nDeletes + (if (e.op == "D") 1L else 0L),
-                if (win) e.op else s.op,
-                if (win) e.value else s.value,
-                if (win) e.ts_us else s.tsUs)
-            }
-          }
-          if (s != null) state.update(s)
-          if (flush && s != null)
-            Iterator.single(CdcOut(uid, s.nOps, s.nDeletes, s.op, s.value, s.tsUs))
-          else Iterator.empty
-      }
-  }
+  def compact(ops: Dataset[Op]): Dataset[CdcOut] =
+    Staged.atBarrier(ops)(_.user_id, _.sentinel)(Option.empty[Compacted]) { (s, e) =>
+      val del = if (e.op == "D") 1L else 0L
+      Some(s match {
+        case None => Compacted(1L, del, e.op, e.value, e.ts_us)
+        case Some(c) if e.ts_us > c.tsUs =>
+          Compacted(c.nOps + 1, c.nDeletes + del, e.op, e.value, e.ts_us)
+        case Some(c) => c.copy(nOps = c.nOps + 1, nDeletes = c.nDeletes + del)
+      })
+    } { (uid, s) => s.map(c => CdcOut(uid, c.nOps, c.nDeletes, c.op, c.value, c.tsUs)) }
 
   /** The batch-gated run: shares q_cdc_apply's oracle. */
   def streamedCdc(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val log = graft.sources.Tables.events(spark, dir)
+      .filter($"ts".isNotNull)
       .select($"user_id", unix_micros($"ts").as("ts_us"), $"value",
-        when($"event_type" === "error", lit("D")).otherwise(lit("U")).as("op"),
-        lit(false).as("sentinel"))
-    val bounds = log.agg(min($"ts_us"), max($"ts_us")).head()
-    if (bounds.isNullAt(0)) return spark.emptyDataFrame
-    val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
-    val sentinels = log.select($"user_id").distinct()
-      .select($"user_id", lit(0L).as("ts_us"),
-        lit(null).cast("double").as("value"),
-        lit("S").as("op"), lit(true).as("sentinel"))
-    val out = StreamDedup.runStagedStream(spark,
-        Seq(log.filter($"ts_us" <= cut), log.filter($"ts_us" > cut), sentinels)) {
-      stream => compact(stream.as[Op]).toDF()
-    }.getOrElse(return spark.emptyDataFrame)
+        when($"event_type" === "error", lit("D")).otherwise(lit("U")).as("op"))
+    val out = Staged.run(spark, Staged.withBarrier[Op](Staged.timeCut(log, $"ts_us"),
+        log.select($"user_id").distinct())) { stream =>
+      compact(stream.as[Op]).toDF()
+    }
     val badUsers = out.groupBy($"user_id").count().filter($"count" =!= 1L).count()
     if (badUsers > 0)
       throw new IllegalStateException(

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of [[graft.operators.Telemetry.changepoints]] — the
   * mean-shift detector run CAUSALLY: per stream the state is a ring
@@ -32,7 +31,6 @@ object StreamChangepoint {
   case class Ev(event_type: Option[String], tsUs: Long, event_id: Long,
     cents: Option[Long])
   case class Slot(tsUs: Long, event_id: Long, cents: Option[Long])
-  case class St(ring: Seq[Slot])
   case class Jump(event_type: Option[String], event_id: Long, tsUs: Long,
     pre_mean: Option[Double], post_mean: Option[Double],
     jump: Option[Double])
@@ -49,32 +47,21 @@ object StreamChangepoint {
 
   /** The stateful core: 2k-slot ring per stream; the row k-from-the-
     * tail emits its jump when its leading frame completes. */
-  def jumps(ev: Dataset[Ev], k: Int = 8): Dataset[Jump] = {
-    val spark = ev.sparkSession
-    import spark.implicits._
-    ev.groupByKey(_.event_type)
-      .flatMapGroupsWithState[St, Jump](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (typ, it, state: GroupState[St]) =>
-          var ring = state.getOption.map(_.ring.toVector).getOrElse(Vector.empty)
-          val out = scala.collection.mutable.ArrayBuffer.empty[Jump]
-          it.toSeq.sortBy(e => (e.tsUs, e.event_id)).foreach { e =>
-            ring = (ring :+ Slot(e.tsUs, e.event_id, e.cents)).takeRight(2 * k)
-            if (ring.length == 2 * k) {
-              // the row k from the tail: pre = slots [0, k), post =
-              // slots [k, 2k) — post INCLUDES the row itself (the
-              // batch rowsBetween(currentRow, k-1) frame)
-              val cur = ring(k)
-              val pre = mean(ring.slice(0, k), k)
-              val post = mean(ring.slice(k, 2 * k), k)
-              out += Jump(typ, cur.event_id, cur.tsUs, pre, post,
-                for (a <- post; b <- pre) yield a - b)
-            }
-          }
-          state.update(St(ring))
-          out.iterator
-      }
-  }
+  def jumps(ev: Dataset[Ev], k: Int = 8): Dataset[Jump] =
+    Staged.onArrival(ev)(_.event_type, e => (e.tsUs, e.event_id))(Seq.empty[Slot]) {
+      (ring0, e) =>
+        val ring = (ring0 :+ Slot(e.tsUs, e.event_id, e.cents)).takeRight(2 * k)
+        // the row k from the tail: pre = slots [0, k), post = slots
+        // [k, 2k) — post INCLUDES the row itself (the batch
+        // rowsBetween(currentRow, k-1) frame)
+        (ring, if (ring.length < 2 * k) None else {
+          val cur = ring(k)
+          val pre = mean(ring.slice(0, k), k)
+          val post = mean(ring.slice(k, 2 * k), k)
+          Some(Jump(e.event_type, cur.event_id, cur.tsUs, pre, post,
+            for (a <- post; b <- pre) yield a - b))
+        })
+    }
 
   def streamedChangepoints(spark: SparkSession, dir: String,
       k: Int = 8, mult: Double = 3.0): DataFrame = {
@@ -85,13 +72,9 @@ object StreamChangepoint {
         when($"value".isNotNull,
           (expr("CAST(value AS DECIMAL(18,2))") * 100).cast("long"))
           .as("cents"))
-    val bounds = ev.agg(min($"tsUs"), max($"tsUs")).head()
-    if (bounds.isNullAt(0)) return spark.emptyDataFrame
-    val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
-    val log = StreamDedup.runStagedStream(spark, Seq(
-        ev.filter($"tsUs" <= cut), ev.filter($"tsUs" > cut))) { stream =>
+    val log = Staged.run(spark, Staged.timeCut(ev, $"tsUs")) { stream =>
       jumps(stream.as[Ev], k).toDF()
-    }.getOrElse(return spark.emptyDataFrame)
+    }
     graft.operators.Telemetry.changepointAssembly(
       log.select($"event_type", $"event_id",
         timestamp_micros($"tsUs").as("ts"),

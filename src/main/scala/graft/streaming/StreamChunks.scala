@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of [[graft.operators.Telemetry.chunkReassemble]] —
   * the relay's lost-message accounting run INCREMENTALLY: chunks of
@@ -11,9 +10,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * O(1) per in-flight message however large the payload, the receive
   * buffer a real reassembler keeps. The EXPECTED side (a message
   * whose every chunk was lost must still report, n_received = 0) is
-  * handled in-stream: the sentinel barrier carries one row PER
-  * EXPECTED MESSAGE (event_id-keyed, the per-user sentinel pattern
-  * one level finer), so a key with no state still emits its zero row
+  * handled in-stream: the barrier carries one row PER EXPECTED
+  * MESSAGE (event_id-keyed, the per-user barrier one level finer),
+  * so a key with no state still emits its zero row
   * at flush. Completeness (n_expected from the declared size, the
   * is_complete flag) joins on afterward, message-dimension-sized.
   * Chunk loss is the same deterministic (event_id + chunk_idx) % 97
@@ -30,24 +29,10 @@ object StreamChunks {
   /** The stateful core: fold surviving chunks per message; the
     * sentinel row flushes the message's totals (zeros if no chunk
     * ever arrived). */
-  def reassemble(ch: Dataset[Chunk]): Dataset[Out] = {
-    val spark = ch.sparkSession
-    import spark.implicits._
-    ch.groupByKey(_.event_id)
-      .flatMapGroupsWithState[St, Out](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (mid, it, state: GroupState[St]) =>
-          var st = state.getOption.getOrElse(St(0L, 0L))
-          var flush = false
-          it.foreach { c =>
-            if (c.sentinel) flush = true
-            else st = St(st.rcv + 1L, st.rbytes + c.chunk_bytes)
-          }
-          state.update(st)
-          if (flush) Iterator.single(Out(mid, st.rcv, st.rbytes))
-          else Iterator.empty
-      }
-  }
+  def reassemble(ch: Dataset[Chunk]): Dataset[Out] =
+    Staged.atBarrier(ch)(_.event_id, _.sentinel)(St(0L, 0L)) { (st, c) =>
+      St(st.rcv + 1L, st.rbytes + c.chunk_bytes)
+    } { (mid, st) => Some(Out(mid, st.rcv, st.rbytes)) }
 
   def streamedChunks(spark: SparkSession, dir: String,
       chunkBytes: Long = 6400L): DataFrame = {
@@ -58,19 +43,13 @@ object StreamChunks {
       .filter($"nbytes" > 0L)
     val surviving = graft.operators.Telemetry.chunkMessages(spark, dir, chunkBytes)
       .filter(($"event_id" + $"chunk_idx") % 97 =!= 0L)
-      .select($"event_id", $"chunk_idx", $"chunk_bytes", lit(false).as("sentinel"))
-    if (msgs.isEmpty) return spark.emptyDataFrame
-    // one sentinel per EXPECTED message — the all-chunks-lost case
+    // one barrier row per EXPECTED message — the all-chunks-lost case
     // must still flush a zero row
-    val sentinels = msgs
-      .select($"event_id", lit(-1L).as("chunk_idx"), lit(0L).as("chunk_bytes"),
-        lit(true).as("sentinel"))
-    val flushed = StreamDedup.runStagedStream(spark, Seq(
-        surviving.filter($"chunk_idx" % 2 === 0L).drop("chunk_idx"),
-        surviving.filter($"chunk_idx" % 2 === 1L).drop("chunk_idx")
-          .unionByName(sentinels.drop("chunk_idx")))) { stream =>
+    val flushed = Staged.run(spark, Staged.withBarrier[Chunk](
+        Seq(surviving.filter($"chunk_idx" % 2 === 0L), surviving.filter($"chunk_idx" % 2 === 1L)),
+        msgs.select($"event_id"))) { stream =>
       reassemble(stream.as[Chunk]).toDF()
-    }.getOrElse(return spark.emptyDataFrame)
+    }
     // message-dimension completeness join — the batch operator's own
     // expected-side anchor
     msgs.join(flushed, Seq("event_id"), "left")

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of [[graft.operators.Quality.completeness]] — the
   * per-column null/blank audit run ONLINE at the ingest edge: every
@@ -32,27 +31,14 @@ object StreamCompleteness {
 
   /** The stateful core: ten counters per shard, flushed at the
     * sentinel. */
-  def census(ev: Dataset[Flags]): Dataset[Out] = {
-    val spark = ev.sparkSession
-    import spark.implicits._
-    ev.groupByKey(_.shard)
-      .flatMapGroupsWithState[St, Out](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (shard, it, state: GroupState[St]) =>
-          var s = state.getOption.getOrElse(St(0L, 0L, 0L, 0L, 0L, 0L, 0L, 0L))
-          var flush = false
-          it.foreach { e =>
-            if (e.sentinel) flush = true
-            else s = St(s.n + 1L, s.nTs + e.nTs, s.nUid + e.nUid,
-              s.nTyp + e.nTyp, s.bTyp + e.bTyp, s.nVal + e.nVal,
-              s.nPr + e.nPr, s.bPr + e.bPr)
-          }
-          state.update(s)
-          if (flush) Iterator.single(Out(shard, s.n, s.nTs, s.nUid,
-            s.nTyp, s.bTyp, s.nVal, s.nPr, s.bPr))
-          else Iterator.empty
-      }
-  }
+  def census(ev: Dataset[Flags]): Dataset[Out] =
+    Staged.atBarrier(ev)(_.shard, _.sentinel)(St(0L, 0L, 0L, 0L, 0L, 0L, 0L, 0L)) { (s, e) =>
+      St(s.n + 1L, s.nTs + e.nTs, s.nUid + e.nUid,
+        s.nTyp + e.nTyp, s.bTyp + e.bTyp, s.nVal + e.nVal,
+        s.nPr + e.nPr, s.bPr + e.bPr)
+    } { (shard, s) =>
+      Some(Out(shard, s.n, s.nTs, s.nUid, s.nTyp, s.bTyp, s.nVal, s.nPr, s.bPr))
+    }
 
   def streamedCompleteness(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -64,20 +50,11 @@ object StreamCompleteness {
         f($"ts").as("nTs"), f($"user_id").as("nUid"),
         f($"event_type").as("nTyp"), b($"event_type").as("bTyp"),
         f($"value").as("nVal"), f($"props").as("nPr"), b($"props").as("bPr"),
-        lit(false).as("sentinel"), xxhash64($"event_id", $"ts").as("ord"))
-    val bounds = ev.agg(min($"ord"), max($"ord")).head()
-    if (bounds.isNullAt(0)) return spark.emptyDataFrame
-    val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
-    val sentinels = spark.range(NShards.toLong)
-      .select($"id".as("shard"), lit(0L).as("nTs"), lit(0L).as("nUid"),
-        lit(0L).as("nTyp"), lit(0L).as("bTyp"), lit(0L).as("nVal"),
-        lit(0L).as("nPr"), lit(0L).as("bPr"), lit(true).as("sentinel"))
-    val flushed = StreamDedup.runStagedStream(spark, Seq(
-        ev.filter($"ord" <= cut).drop("ord"),
-        ev.filter($"ord" > cut).drop("ord")
-          .unionByName(sentinels))) { stream =>
+        xxhash64($"event_id", $"ts").as("ord"))
+    val flushed = Staged.run(spark, Staged.withBarrier[Flags](Staged.timeCut(ev, $"ord"),
+        spark.range(NShards.toLong).select($"id".as("shard")))) { stream =>
       census(stream.as[Flags]).toDF()
-    }.getOrElse(return spark.emptyDataFrame)
+    }
     // shard rollup to the single 11-counter row, then the batch
     // unpivot — #shards rows in, 5 rows out
     graft.operators.Quality.completenessAssembly(flushed.agg(

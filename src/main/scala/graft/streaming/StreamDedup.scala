@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.functions.{HashFns, TextFns}
 
@@ -34,7 +33,6 @@ object StreamDedup {
 
   case class BandRow(band: Int, bkey: Long, doc_id: Long, sig: Seq[Long])
   case class Member(id: Long, sig: Seq[Long])
-  case class PairOut(doc_a: Long, doc_b: Long, est_jaccard: Double)
   /** Sink event of the demote-aware index: a candidate pair tagged
     * with its bucket, or (demoted=true) a tombstone announcing the
     * bucket crossed the cap IN-STREAM — past the static profile — and
@@ -80,52 +78,39 @@ object StreamDedup {
     * Estimate = agreeing signature components / 16, bit-identical to
     * the batch SigAgreeCount path. */
   def incrementalPairs(bands: Dataset[BandRow], maxBucket: Int = 200,
-      overflow: Option[org.apache.spark.util.LongAccumulator] = None): Dataset[PairEv] = {
-    val spark = bands.sparkSession
-    import spark.implicits._
-    bands.groupByKey(r => (r.band, r.bkey))
-      .flatMapGroupsWithState[BucketSt, PairEv](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case ((band, bkey), rows, state: GroupState[BucketSt]) =>
-          var st = state.getOption.getOrElse(BucketSt(Seq.empty, demoted = false))
-          val out = scala.collection.mutable.ArrayBuffer.empty[PairEv]
-          // deterministic intra-batch order (arrival order proxy)
-          rows.toSeq.sortBy(_.doc_id).foreach { r =>
-            if (st.demoted) {
-              // census-only mode: the bucket crossed the cap past the
-              // static profile (DRIFT) — count arrivals for the audit,
-              // hold no members, emit no pairs
-              overflow.foreach(_.add(1L))
-            } else if (!st.members.exists(_.id == r.doc_id)) {   // replay-safe
-              if (st.members.size >= maxBucket) {
-                // the (cap+1)-th DISTINCT doc: in the batch census this
-                // bucket has bc > maxBucket and is stop-banded WHOLE —
-                // demote it (r12 VERDICT task 4): clear the state,
-                // announce a tombstone so the read-back retracts the
-                // pairs it emitted while still under the cap. The
-                // streamed pair set stays EQUAL to the batch oracle's
-                // even when the profile lagged the corpus — drift costs
-                // an audit line, never a crash and never a divergence.
-                st = BucketSt(Seq.empty, demoted = true)
-                overflow.foreach(_.add(1L))
-                out += PairEv(band, bkey, -1L, -1L, 0.0d, demoted = true)
-              } else {
-                st.members.foreach { m =>
-                  var c = 0
-                  var i = 0
-                  val n = math.min(m.sig.length, r.sig.length)
-                  while (i < n) { if (m.sig(i) == r.sig(i)) c += 1; i += 1 }
-                  val (a, b) = if (m.id < r.doc_id) (m.id, r.doc_id) else (r.doc_id, m.id)
-                  out += PairEv(band, bkey, a, b, c / 16.0d, demoted = false)
-                }
-                st = BucketSt(st.members :+ Member(r.doc_id, r.sig), demoted = false)
-              }
-            }
-          }
-          state.update(st)
-          out.iterator
-      }
-  }
+      overflow: Option[org.apache.spark.util.LongAccumulator] = None): Dataset[PairEv] =
+    // deterministic intra-batch order (arrival order proxy)
+    Staged.onArrival(bands)(r => (r.band, r.bkey), _.doc_id)(
+        BucketSt(Seq.empty, demoted = false)) { (st, r) =>
+      if (st.demoted) {
+        // census-only mode: the bucket crossed the cap past the
+        // static profile (DRIFT) — count arrivals for the audit,
+        // hold no members, emit no pairs
+        overflow.foreach(_.add(1L))
+        (st, Nil)
+      } else if (st.members.exists(_.id == r.doc_id)) (st, Nil)   // replay-safe
+      else if (st.members.size >= maxBucket) {
+        // the (cap+1)-th DISTINCT doc: in the batch census this
+        // bucket has bc > maxBucket and is stop-banded WHOLE —
+        // demote it (r12 VERDICT task 4): clear the state,
+        // announce a tombstone so the read-back retracts the
+        // pairs it emitted while still under the cap. The
+        // streamed pair set stays EQUAL to the batch oracle's
+        // even when the profile lagged the corpus — drift costs
+        // an audit line, never a crash and never a divergence.
+        overflow.foreach(_.add(1L))
+        (BucketSt(Seq.empty, demoted = true),
+          Seq(PairEv(r.band, r.bkey, -1L, -1L, 0.0d, demoted = true)))
+      } else (BucketSt(st.members :+ Member(r.doc_id, r.sig), demoted = false),
+        st.members.map { m =>
+          var c = 0
+          var i = 0
+          val n = math.min(m.sig.length, r.sig.length)
+          while (i < n) { if (m.sig(i) == r.sig(i)) c += 1; i += 1 }
+          val (lo, hi) = if (m.id < r.doc_id) (m.id, r.doc_id) else (r.doc_id, m.id)
+          PairEv(r.band, r.bkey, lo, hi, c / 16.0d, demoted = false)
+        })
+    }
 
   /** Read-back retraction for the demote-aware index: drop every pair
     * belonging to a tombstoned bucket, then project to the distinct
@@ -149,222 +134,6 @@ object StreamDedup {
       .distinct()
   }
 
-  /** Shared two-batch staging for the batch-gated streaming twins:
-    * split `docs` at the median doc_id into two parquet files, stream
-    * them through `transform` one file per micro-batch into a durable
-    * parquet sink, and return the sink contents lazily (None on an
-    * empty corpus). */
-  private def runTwoBatchStream(spark: SparkSession, docs: DataFrame)
-      (transform: DataFrame => DataFrame): Option[DataFrame] = {
-    import spark.implicits._
-    // empty corpus: min/max aggregate to null — signal the caller
-    // instead of NPEing on getLong
-    val bounds = docs.agg(min($"doc_id"), max($"doc_id")).head()
-    if (bounds.isNullAt(0)) return None
-    val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
-    runStagedStream(spark,
-      Seq(docs.filter($"doc_id" <= cut), docs.filter($"doc_id" > cut)))(transform)
-  }
-
-  /** Shared N-batch staging for every batch-gated streaming twin:
-    * write each DataFrame as one parquet file, stream them through
-    * `transform` one file per micro-batch into a durable parquet sink
-    * (RAM scratch; exactly-once via the sink's _spark_metadata log),
-    * and return the sink contents as a lazy scan. A memory sink here
-    * collected each twin's WHOLE emitted log driver-side — at the
-    * 100x census dedup_stream's ~27M-row pair log forced
-    * spark.driver.maxResultSize to 8g session-wide; the parquet sink
-    * keeps the driver out of the data plane entirely, the same path a
-    * real deployment uses (see StreamRelay.startAppendRelay).
-    * Batch ORDER is load-bearing for keeper-state
-    * twins (keeper = first arrival): FileStreamSource orders files by
-    * mtime with path as the tiebreak, and on coarse-granularity
-    * filesystems the writes can land in the same tick with no
-    * guaranteed path order — so mtimes are pinned strictly
-    * increasing, batch i always forms micro-batch i+1. The staged
-    * input and the checkpoint live only for this call; the returned
-    * frame reads the sink alone. */
-  private[streaming] def runStagedStream(spark: SparkSession, batches: Seq[DataFrame])
-      (transform: DataFrame => DataFrame): Option[DataFrame] = {
-    import java.nio.file.Files
-    require(batches.nonEmpty, "staged stream needs at least one batch")
-    val tmp = graft.sources.Scratch.tempDir("graft_sdedup_")
-    // fresh checkpoint per RUN (a reused checkpoint would resume the
-    // previous query instead of replaying the staged batches)
-    val ckpt = graft.sources.Scratch.tempDir("graft_ckpt_")
-    try {
-      // ONE write job stages every batch: union with a literal gbatch
-      // column (no leading underscore: `_`-prefixed paths are hidden to
-      // Spark file listing), partitionBy into per-batch dirs. N separate writes
-      // each paid a full job (planning + commit protocol + upstream
-      // recompute) — ~0.5 s × batches per twin, pure overhead. An
-      // EMPTY batch writes no dir and simply contributes no
-      // micro-batch, which is behavior-identical (an empty
-      // micro-batch is a no-op for every twin's state).
-      batches.zipWithIndex
-        .map { case (b, i) => b.withColumn("gbatch", lit(f"b_$i%03d")) }
-        .reduce(_ unionByName _)
-        .repartition(batches.length, col("gbatch"))
-        .write.partitionBy("gbatch").parquet(s"$tmp/in")
-      val batchDirs = batches.indices
-        .map(i => tmp.resolve(f"in/gbatch=b_$i%03d"))
-        .filter(Files.isDirectory(_))
-      // Batch ORDER is load-bearing (keeper = first arrival):
-      // FileStreamSource orders files by mtime with path tiebreak, so
-      // mtimes are pinned strictly increasing — batch i is micro-batch i+1.
-      locally {
-        import java.nio.file.attribute.FileTime
-        var t = 1000000L
-        batchDirs.foreach { dir =>
-          val walk = Files.walk(dir)
-          try {
-            import scala.jdk.CollectionConverters._
-            walk.iterator().asScala.foreach(p => Files.setLastModifiedTime(p, FileTime.fromMillis(t)))
-          } finally walk.close()
-          t += 60000L
-        }
-      }
-      // Row counts and schema come from the staged files' parquet
-      // footers, read on the driver — no Spark job. All-empty input
-      // (a fully degenerate corpus): no partition dir was written, so
-      // there is nothing to read a schema from — and nothing to
-      // trigger on. Point the source at the (existing, empty) staging
-      // root with the INPUT DataFrame's own schema; the query starts,
-      // zero micro-batches run, and the sink read-back still carries
-      // the TRANSFORMED schema, so callers get an empty but
-      // correctly-shaped frame instead of a crash (the batch twins
-      // return exactly that on the same corpus).
-      val footers = batchDirs.map(d => parquetFooter(spark, d))
-      val schema = footers.headOption.flatMap(_.schema).getOrElse(batches.head.schema)
-      val width = stateWidth(footers.map(_.rows).maxOption.getOrElse(0L),
-        spark.sparkContext.defaultParallelism)
-      // cloned session (shared context, independent SQLConf): the
-      // stateful width is set per run without touching the caller's
-      // conf. The width is fixed when the query's fresh checkpoint is
-      // created, so a restart from that checkpoint never sees a change.
-      val ss = spark.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", width.toString)
-      // No trailing no-data micro-batches in the GATE session: every
-      // twin's final emission is driven by data (sentinel rows riding
-      // the last batch, or per-arrival append) — measured r10: all 61
-      // streaming keys hash-identical without them, and the trailing
-      // empty batch was ~13% of the heavy twins' wall time. Gate
-      // scaffolding only: a real deployment keeps the Spark default
-      // (true) so watermark-closed windows emit without waiting for
-      // the next arrival.
-      //
-      // CONTRACT for twins staged through THIS path: the final
-      // emission must be data-driven (a sentinel/barrier row IN the
-      // last staged batch, or per-arrival append). A twin that relies
-      // on a watermark-closed window emitting in a NO-DATA batch (the
-      // windowedRelay shape — barrier advances the watermark in batch
-      // N, windows emit in empty batch N+1) silently loses its final
-      // rows here; such twins must run through windowedRelay's own
-      // session (which keeps no-data batches) instead. The oracle gate
-      // is the enforcement: a watermark-emission twin added through
-      // runStagedStream fails its batch oracle on row count.
-      ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      val stream = ss.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$tmp/${if (batchDirs.isEmpty) "in" else "in/*"}")
-      // the sink writes at the stateful width: one file per state
-      // partition per micro-batch, and the width follows input volume
-      val transformed = transform(stream)
-      // durable sink dir in RAM scratch, one per RUN: the sink's
-      // _spark_metadata log lists exactly the committed files, so the
-      // read-back is exactly-once even though q.stop() can race a
-      // speculative in-flight write. deleteOnExit (not eager delete):
-      // the returned scan is LAZY and the caller consumes it after
-      // this frame returns. Checkpoint is in RAM scratch too — the
-      // default temp checkpoint lands under java.io.tmpdir (disk
-      // here) and pays fsyncs per micro-batch for offsets/commits/
-      // state deltas that die with the query.
-      val outDir = graft.sources.Scratch.tempDir("graft_sdsink_")
-      StreamRelay.deleteOnExit(outDir)
-      val q = transformed
-        .writeStream.outputMode("append").format("parquet")
-        .option("path", outDir.toString)
-        .option("checkpointLocation", ckpt.toString).start()
-      try q.processAllAvailable() finally q.stop()
-      // explicit schema: an all-pruned run commits zero data files and
-      // schema inference over an empty sink would throw — the memory
-      // sink returned a correctly-shaped empty frame, so this does too
-      Some(ss.read.schema(transformed.schema).parquet(outDir.toString))
-    } finally StreamRelay.deleteTree(ckpt, tmp)
-  }
-
-  /** Staged rows per state partition: the gate's stateful shuffle
-    * width is `ceil(rows of the largest staged batch / R)`, clamped to
-    * [1, defaultParallelism]. Each stateful operator loads and commits
-    * one state store per shuffle partition per micro-batch, so width
-    * beyond what the input volume fills buys only commit overhead.
-    * Calibration (sf0.1, 4 cores, TimeOne medians in seconds; rows =
-    * the largest staged batch):
-    * {{{
-    *   twin                 rows   w=8        w=4   w=2   w=1
-    *   stream_orphans       425k   4.79-4.95  4.53  4.82  5.47-6.27
-    *   stream_join           99k   4.17-4.72  3.98  3.27  4.30-4.72
-    *   stream_anomaly        50k   3.53       -     -     2.86
-    *   dedup_stream          2.5k  3.17       -     -     2.47
-    *   dedup_exact_stream    2.5k  2.63       -     -     2.13
-    *   stream_novelty       441k   3.93       -     -     3.97
-    * }}}
-    * 64k rows per partition picks the fastest measured width at every
-    * point (novelty is flat between 8 and 1): 425k → 4 at 4 cores,
-    * 99k → 2, ≤ 64k → 1. At sf0.01 every twin's largest staged batch
-    * is at most 45k rows, so the whole wave runs at width 1 (perfbench
-    * stream_twins on 4 cores: cpu_s_per_lap 10.1 → 6.0 s against the
-    * old fixed 8). */
-  private[streaming] val RowsPerStatePartition = 65536L
-
-  /** The width rule of [[RowsPerStatePartition]]: pure, so its edges
-    * are unit-tested. */
-  private[streaming] def stateWidth(rows: Long, cap: Int): Int =
-    math.min(math.max((rows + RowsPerStatePartition - 1) / RowsPerStatePartition, 1L),
-      cap.toLong).toInt
-
-  /** What a parquet footer says about a file (or every part file of a
-    * directory): total rows, and the Spark schema Spark wrote into the
-    * key-value metadata (None for files from another writer). */
-  private[streaming] case class Footer(rows: Long,
-      schema: Option[org.apache.spark.sql.types.StructType])
-
-  /** Read the parquet footers under `path` on the driver — no Spark
-    * job. The schema is made nullable, as Spark's own file read does. */
-  private[streaming] def parquetFooter(spark: SparkSession, path: java.nio.file.Path): Footer = {
-    import java.nio.file.Files
-    import scala.jdk.CollectionConverters._
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
-    def nullable(t: DataType): DataType = t match {
-      case s: StructType => StructType(s.fields.map(f =>
-        f.copy(dataType = nullable(f.dataType), nullable = true)))
-      case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
-      case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
-      case o => o
-    }
-    val files =
-      if (!Files.isDirectory(path)) Seq(path)
-      else {
-        val ls = Files.list(path)
-        try ls.iterator().asScala.toSeq.filter { p =>
-          val n = p.getFileName.toString
-          n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
-        }.sortBy(_.toString) finally ls.close()
-      }
-    val conf = spark.sparkContext.hadoopConfiguration
-    val facts = files.map { f =>
-      val r = ParquetFileReader.open(
-        HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f.toUri), conf))
-      try (r.getRecordCount, Option(r.getFooter.getFileMetaData.getKeyValueMetaData
-          .get("org.apache.spark.sql.parquet.row.metadata")))
-      finally r.close()
-    }
-    Footer(facts.map(_._1).sum, facts.flatMap(_._2).headOption
-      .map(j => nullable(DataType.fromJson(j)).asInstanceOf[StructType]))
-  }
-
   /** Streaming EXACT dedup — the other half of the daily pipeline
     * beside the near-dup index: per content hash the state is the
     * keeper's existence, and every arrival is flagged new-vs-duplicate
@@ -374,26 +143,13 @@ object StreamDedup {
     * emitted log. State per hash is one boolean — the 100 TB state
     * footprint is the distinct-document count, sharded by the same
     * hash the batch plan groups on. */
-  def incrementalExact(rows: Dataset[HashRow]): Dataset[ArrivalOut] = {
-    val spark = rows.sparkSession
-    import spark.implicits._
-    rows.groupByKey(_.content_hash)
-      .flatMapGroupsWithState[Boolean, ArrivalOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (hash, it, state: GroupState[Boolean]) =>
-          var seen = state.getOption.getOrElse(false)
-          // deterministic intra-batch order (arrival order proxy):
-          // smaller doc_id arrives first, so the keeper is the global
-          // min when batches are staged in doc_id order
-          val out = it.toSeq.sortBy(_.doc_id).map { r =>
-            val dup = seen
-            seen = true
-            ArrivalOut(hash, r.doc_id, dup)
-          }
-          state.update(seen)
-          out.iterator
-      }
-  }
+  def incrementalExact(rows: Dataset[HashRow]): Dataset[ArrivalOut] =
+    // deterministic intra-batch order (arrival order proxy): smaller
+    // doc_id arrives first, so the keeper is the global min when
+    // batches are staged in doc_id order
+    Staged.onArrival(rows)(_.content_hash, _.doc_id)(false) { (seen, r) =>
+      (true, Some(ArrivalOut(r.content_hash, r.doc_id, seen)))
+    }
 
   /** The batch-gated run (`dedup_exact_stream`): two doc_id-ordered
     * micro-batches through [[incrementalExact]]; the arrival log
@@ -405,9 +161,9 @@ object StreamDedup {
     import spark.implicits._
     val docs = graft.sources.Tables.documents(spark, dir)
       .select($"doc_id", graft.functions.HashFns.polyHash($"text").as("content_hash"))
-    val log = runTwoBatchStream(spark, docs) { stream =>
-      incrementalExact(stream.select($"content_hash", $"doc_id").as[HashRow]).toDF()
-    }.getOrElse(spark.emptyDataset[ArrivalOut].toDF())
+    val log = Staged.run(spark, Staged.timeCut(docs.filter($"doc_id".isNotNull), $"doc_id")) {
+      stream => incrementalExact(stream.select($"content_hash", $"doc_id").as[HashRow]).toDF()
+    }
     // exactly one keeper per hash, and it must be the smallest id —
     // anything else means cross-batch state was not consulted
     val badKeeper = log.groupBy($"content_hash")
@@ -438,25 +194,19 @@ object StreamDedup {
     * the batch cadence; the gate builds it from the staged corpus,
     * which is the same data the oracle sees. Runs through
     * [[StopBand.audited]], so the pruned buckets/members are reported
-    * loudly on the observation channel — the prune is never silent.
-    * Memoized per corpus plan (gate scaffolding: the census is a
-    * profile build, not per-arrival operator cost). */
-  private val profileCache = new java.util.concurrent.ConcurrentHashMap[
-    org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Set[(Int, Long)]]()
-  private[graft] def hotBucketProfile(docs: DataFrame): Set[(Int, Long)] =
-    profileCache.computeIfAbsent(docs.queryExecution.analyzed.canonicalized, { _ =>
-      val spark = docs.sparkSession
-      import spark.implicits._
-      graft.operators.StopBand.audited(
-          bandRows(docs).groupBy($"band", $"bkey").agg(count(lit(1)).as("bc")),
-          "dedup_stream_profile", MaxBucket)
-        .filter($"bc" > MaxBucket)
-        .select($"band", $"bkey").as[(Int, Long)]
-        // driver-held profile is bounded: ≤ bands·N/cap entries (each
-        // hot bucket holds > cap docs), i.e. ~40k tuples at the 100x
-        // census — a profile, not a corpus
-        .collect().toSet
-    })
+    * loudly on the observation channel — the prune is never silent. */
+  private[graft] def hotBucketProfile(docs: DataFrame): Set[(Int, Long)] = {
+    import docs.sparkSession.implicits._
+    graft.operators.StopBand.audited(
+        bandRows(docs).groupBy($"band", $"bkey").agg(count(lit(1)).as("bc")),
+        "dedup_stream_profile", MaxBucket)
+      .filter($"bc" > MaxBucket)
+      .select($"band", $"bkey").as[(Int, Long)]
+      // driver-held profile is bounded: ≤ bands·N/cap entries (each
+      // hot bucket holds > cap docs), i.e. ~40k tuples at the 100x
+      // census — a profile, not a corpus
+      .collect().toSet
+  }
 
   /** The batch-gated end-to-end run (`dedup_stream`): the documents
     * table staged as TWO micro-batches (split at the median doc_id),
@@ -490,11 +240,11 @@ object StreamDedup {
     val hot = spark.sparkContext.broadcast(
       staleProfile.getOrElse(hotBucketProfile(docs)))
     val dropped = spark.sparkContext.longAccumulator("dedup_stream_bucket_overflow")
-    val sink = runTwoBatchStream(spark, docs) { stream =>
-      incrementalPairs(
+    val sink = Staged.run(spark, Staged.timeCut(docs.filter($"doc_id".isNotNull), $"doc_id")) {
+      stream => incrementalPairs(
         bandRows(stream).filter(r => !hot.value.contains((r.band, r.bkey))),
         maxBucket = MaxBucket, overflow = Some(dropped)).toDF()
-    }.getOrElse(return spark.emptyDataset[PairOut].toDF())
+    }
     // one pair per band bucket shared -> distinct across bands
     // (est_jaccard depends only on the full signatures, so the
     // duplicates are exact); demoted buckets' pairs retract first

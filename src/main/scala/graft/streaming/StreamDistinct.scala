@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
 /** STREAMING distinct-count sketching (`stream_distinct`) — the
@@ -26,7 +25,6 @@ object StreamDistinct {
   val K = 64
 
   case class Ev(event_type: String, h: Long, sentinel: Boolean)
-  case class SketchState(hs: Seq[Long])
   case class SketchOut(event_type: String, hs: Seq[Long])
 
   /** Insert into a sorted distinct k-min buffer. */
@@ -43,24 +41,10 @@ object StreamDistinct {
 
   /** The stateful core: per-type k-min-values fold, emitted once at
     * the sentinel. */
-  def census(ev: Dataset[Ev]): Dataset[SketchOut] = {
-    val spark = ev.sparkSession
-    import spark.implicits._
-    ev.groupByKey(_.event_type)
-      .flatMapGroupsWithState[SketchState, SketchOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (tp, it, state: GroupState[SketchState]) =>
-          var hs = state.getOption.map(_.hs).getOrElse(Vector.empty[Long])
-          var flush = false
-          it.foreach { e =>
-            if (e.sentinel) flush = true
-            else hs = insert(hs, e.h, K)
-          }
-          state.update(SketchState(hs))
-          if (flush) Iterator.single(SketchOut(tp, hs))
-          else Iterator.empty
-      }
-  }
+  def census(ev: Dataset[Ev]): Dataset[SketchOut] =
+    Staged.atBarrier(ev)(_.event_type, _.sentinel)(Seq.empty[Long])((hs, e) => insert(hs, e.h, K)) {
+      (tp, hs) => Some(SketchOut(tp, hs))
+    }
 
   def streamedDistinct(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -71,18 +55,10 @@ object StreamDistinct {
       .select($"event_type",
         HashFns.polyHash($"user_id".cast("string")).as("h"),
         unix_micros($"ts").as("tsUs"))
-    val bounds = ev.agg(min($"tsUs"), max($"tsUs")).head()
-    if (bounds.isNullAt(0)) return spark.emptyDataFrame
-    val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
-    val staged = ev.select($"event_type", $"h", lit(false).as("sentinel"), $"tsUs")
-    val sentinels = ev.select($"event_type").distinct()
-      .select($"event_type", lit(0L).as("h"), lit(true).as("sentinel"))
-    val sketches = StreamDedup.runStagedStream(spark,
-        Seq(staged.filter($"tsUs" <= cut).drop("tsUs"),
-          staged.filter($"tsUs" > cut).drop("tsUs"),
-          sentinels)) { stream =>
+    val sketches = Staged.run(spark, Staged.withBarrier[Ev](Staged.timeCut(ev, $"tsUs"),
+        ev.select($"event_type").distinct())) { stream =>
       census(stream.as[Ev]).toDF()
-    }.getOrElse(return spark.emptyDataFrame)
+    }
     val bad = sketches.groupBy($"event_type").count()
       .filter($"count" =!= 1L).count()
     if (bad > 0)

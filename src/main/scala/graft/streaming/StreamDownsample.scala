@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of [[graft.operators.Telemetry.downsample1Hz]] —
   * the reference's "don't send at 5 Hz, send at 1 Hz" (notes.org) run
@@ -19,9 +18,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * batch window's sort key — so two events inside one second elect
   * the same keeper as the batch `row_number() = 1`.
   *
-  * Batch-gated run: two micro-batches split at the median event
-  * time. A second that STRADDLES the cut (first event in batch 1,
-  * more in batch 2) must suppress the batch-2 arrivals from
+  * Gated property: a second that STRADDLES the cut (first event in
+  * batch 1, more in batch 2) must suppress the batch-2 arrivals from
   * cross-batch state — that straddle is what the shared
   * `downsample_1hz` oracle check makes non-vacuous. NULL timestamps
   * sort first (the batch window's null-first asc), encoded as a
@@ -41,46 +39,24 @@ object StreamDownsample {
     tsUs.map(t => t - java.lang.Math.floorMod(t, 1000000L))
       .getOrElse(Long.MinValue)
 
-  /** The stateful core: state = last second emitted for this user. */
-  def gate(ev: Dataset[Ev]): Dataset[Kept] = {
-    val spark = ev.sparkSession
-    import spark.implicits._
-    ev.groupByKey(_.user_id)
-      .flatMapGroupsWithState[Long, Kept](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (uid, it, state: GroupState[Long]) =>
-          // Long.MinValue bucket is a real key (null ts); the "no
-          // state yet" sentinel must sit strictly below it
-          var last = state.getOption.getOrElse(Long.MinValue)
-          var emitted = state.exists
-          val out = scala.collection.mutable.ArrayBuffer.empty[Kept]
-          it.toSeq.sortBy(e => (e.tsUs.getOrElse(Long.MinValue), e.event_id))
-            .foreach { e =>
-              val b = bucket(e.tsUs)
-              if (!emitted || b > last) {
-                out += Kept(uid, e.event_id,
-                  e.tsUs.map(_ => b), e.value)
-                last = b
-                emitted = true
-              }
-            }
-          if (emitted) state.update(last)
-          out.iterator
-      }
-  }
+  /** The stateful core: state = last second emitted for this user
+    * (None before the first emission: the Long.MinValue bucket of a
+    * NULL ts is a real key). */
+  def gate(ev: Dataset[Ev]): Dataset[Kept] =
+    Staged.onArrival(ev)(_.user_id, e => (e.tsUs.getOrElse(Long.MinValue), e.event_id))(
+        Option.empty[Long]) { (last, e) =>
+      val b = bucket(e.tsUs)
+      if (last.exists(_ >= b)) (last, None)
+      else (Some(b), Some(Kept(e.user_id, e.event_id, e.tsUs.map(_ => b), e.value)))
+    }
 
   def streamedDownsample(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val ev = graft.sources.Tables.events(spark, dir)
       .select($"user_id", unix_micros($"ts").as("tsUs"), $"event_id", $"value")
-    val bounds = ev.agg(min($"tsUs"), max($"tsUs")).head()
-    if (bounds.isNullAt(0)) return spark.emptyDataFrame
-    val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
-    val log = StreamDedup.runStagedStream(spark,
-        Seq(ev.filter($"tsUs".isNull || $"tsUs" <= cut),
-          ev.filter($"tsUs" > cut))) { stream =>
+    val log = Staged.run(spark, Staged.timeCut(ev, $"tsUs")) { stream =>
       gate(stream.as[Ev]).toDF()
-    }.getOrElse(return spark.emptyDataFrame)
+    }
     log.select($"event_id", $"user_id",
       timestamp_micros($"secUs").as("sec"), $"value")
   }

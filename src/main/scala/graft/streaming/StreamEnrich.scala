@@ -23,26 +23,17 @@ import org.apache.spark.sql.types.DoubleType
   */
 object StreamEnrich {
 
-  case class EnrichOut(user_id: Long, n_purchases: Long,
-      hist_events: Long, hist_value: Double)
-
-  /** Batch-gated run (`stream_enrich`): events staged as two
-    * micro-batches split at the median timestamp, purchases streamed
-    * through a broadcast stream-static join against the per-user
-    * batch profile, appended to a memory sink, then rolled up per
-    * user. The oracle is the equivalent batch join; equality holds
-    * because the static side is identical in every micro-batch. */
+  /** Batch-gated run (`stream_enrich`): purchases streamed through a
+    * broadcast stream-static join against the per-user batch profile,
+    * then rolled up per user. The oracle is the equivalent batch
+    * join; equality holds because the static side is identical in
+    * every micro-batch. */
   def streamedEnrich(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val ev = graft.sources.Tables.events(spark, dir)
       .filter($"ts".isNotNull)
       .select($"event_id", $"user_id", $"ts", $"event_type")
-    val bounds = ev.agg(min(unix_micros($"ts")), max(unix_micros($"ts"))).head()
-    if (bounds.isNullAt(0)) return spark.emptyDataset[EnrichOut].toDF()
-    val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
-    val log = StreamDedup.runStagedStream(spark,
-        Seq(ev.filter(unix_micros($"ts") <= cut),
-          ev.filter(unix_micros($"ts") > cut))) { stream =>
+    val log = Staged.run(spark, Staged.timeCut(ev, unix_micros($"ts"))) { stream =>
       val ss = stream.sparkSession
       import ss.implicits._
       // the static side re-resolves per micro-batch from the session
@@ -58,7 +49,7 @@ object StreamEnrich {
         .join(graft.operators.JoinGate.gatedBroadcast(prof,
           "stream_enrich.profile"), Seq("user_id"))
         .select($"event_id", $"user_id", $"hist_events", $"hist_value")
-    }.getOrElse(return spark.emptyDataset[EnrichOut].toDF())
+    }
     val out = log.groupBy($"user_id")
       .agg(count(lit(1)).as("n_purchases"),
         max($"hist_events").as("hist_events"),

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of [[graft.operators.Telemetry.ewma]] — the
   * dyadic-weight trailing smoother run as a LIVE filter: per-user
@@ -21,43 +20,30 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 object StreamEwma {
 
   case class Ev(user_id: Option[Long], tsUs: Long, event_id: Long, cents: Long)
-  // the delay line, newest first, at most taps−1 entries
-  case class Line(vals: Seq[Long])
   case class Out(event_id: Long, user_id: Option[Long], eus: Long,
       n_window: Long, ewma: Double)
 
-  /** The stateful core: fold each arrival against the delay line;
-    * weight 2^(taps−1−j) for tap j (0 = the arrival itself). */
+  /** The stateful core: fold each arrival against the delay line
+    * (newest first, at most taps−1 entries); weight 2^(taps−1−j) for
+    * tap j (0 = the arrival itself). */
   def smooth(ev: Dataset[Ev], taps: Int = 8): Dataset[Out] = {
     require(taps >= 1 && taps <= 32, "dyadic weights need 1..32 taps")
-    val spark = ev.sparkSession
-    import spark.implicits._
-    ev.groupByKey(_.user_id)
-      .flatMapGroupsWithState[Line, Out](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (uid, it, state: GroupState[Line]) =>
-          var line: List[Long] = state.getOption.map(_.vals.toList).getOrElse(Nil)
-          val out = scala.collection.mutable.ArrayBuffer.empty[Out]
-          it.toSeq.sortBy(e => (e.tsUs, e.event_id)).foreach { e =>
-            var num = e.cents * (1L << (taps - 1))
-            var den = 1L << (taps - 1)
-            var n = 1L
-            var j = 1
-            var rest = line
-            while (j < taps && rest.nonEmpty) {
-              num += rest.head * (1L << (taps - 1 - j))
-              den += 1L << (taps - 1 - j)
-              n += 1L
-              rest = rest.tail
-              j += 1
-            }
-            out += Out(e.event_id, uid, e.tsUs, n,
-              num.toDouble / den.toDouble / 100.0d)
-            line = (e.cents :: line).take(taps - 1)
-          }
-          state.update(Line(line))
-          out.iterator
+    Staged.onArrival(ev)(_.user_id, e => (e.tsUs, e.event_id))(List.empty[Long]) { (line, e) =>
+      var num = e.cents * (1L << (taps - 1))
+      var den = 1L << (taps - 1)
+      var n = 1L
+      var j = 1
+      var rest = line
+      while (j < taps && rest.nonEmpty) {
+        num += rest.head * (1L << (taps - 1 - j))
+        den += 1L << (taps - 1 - j)
+        n += 1L
+        rest = rest.tail
+        j += 1
       }
+      ((e.cents :: line).take(taps - 1),
+        Some(Out(e.event_id, e.user_id, e.tsUs, n, num.toDouble / den.toDouble / 100.0d)))
+    }
   }
 
   def streamedEwma(spark: SparkSession, dir: String, taps: Int = 8): DataFrame = {
@@ -66,13 +52,9 @@ object StreamEwma {
       .filter($"ts".isNotNull && $"value".isNotNull)
       .select($"user_id", unix_micros($"ts").as("tsUs"), $"event_id",
         round($"value" * 100).cast("long").as("cents"))
-    val bounds = ev.agg(min($"tsUs"), max($"tsUs")).head()
-    if (bounds.isNullAt(0)) return spark.emptyDataFrame
-    val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
-    val log = StreamDedup.runStagedStream(spark,
-        Seq(ev.filter($"tsUs" <= cut), ev.filter($"tsUs" > cut))) { stream =>
+    val log = Staged.run(spark, Staged.timeCut(ev, $"tsUs")) { stream =>
       smooth(stream.as[Ev], taps).toDF()
-    }.getOrElse(return spark.emptyDataFrame)
+    }
     log.select($"event_id", $"user_id", $"eus", $"n_window", $"ewma")
   }
 }

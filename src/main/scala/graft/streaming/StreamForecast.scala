@@ -28,21 +28,12 @@ object StreamForecast {
       .select($"event_type",
         unix_micros(date_trunc("day", $"ts")).as("dayUs"),
         unix_micros($"ts").as("tsUs"))
-    val bounds = ev.agg(min($"tsUs"), max($"tsUs")).head()
-    if (bounds.isNullAt(0)) return spark.emptyDataFrame
-    val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
-    val sentinels = ev.select($"event_type").distinct()
-      .select($"event_type", lit(0L).as("dayUs"), lit(true).as("sentinel"))
-    val flushed = StreamDedup.runStagedStream(spark, Seq(
-        ev.filter($"tsUs" <= cut)
-          .select($"event_type", $"dayUs", lit(false).as("sentinel")),
-        ev.filter($"tsUs" > cut)
-          .select($"event_type", $"dayUs", lit(false).as("sentinel"))
-          .unionByName(sentinels))) { stream =>
+    val flushed = Staged.run(spark, Staged.withBarrier[StreamVolume.Ev](
+        Staged.timeCut(ev, $"tsUs"), ev.select($"event_type").distinct())) { stream =>
       StreamVolume.census(stream.as[StreamVolume.Ev]).toDF()
-    }.getOrElse(return spark.emptyDataFrame)
+    }
     // localCheckpoint: the assembly self-joins the census (actual ×
-    // day−7 prior both derive from it) over one memory-sink view
+    // day−7 prior both derive from it) over one sink scan
     graft.operators.Telemetry.forecastAssembly(
       flushed.select($"event_type", $"dayUs".as("day_us"),
         $"n_events").localCheckpoint())

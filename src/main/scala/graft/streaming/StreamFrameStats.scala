@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.LongType
 
 /** Streaming twin of [[graft.operators.Frames.stats]] — the A-family
@@ -23,6 +22,10 @@ import org.apache.spark.sql.types.LongType
   */
 object StreamFrameStats {
 
+  /** The staged row: data rows carry the wire bytes (device_id NULL —
+    * the decoder must recover it from the wire), barrier rows carry
+    * the device key and a NULL frame. */
+  case class Wire(frame: Array[Byte], device_id: Option[Long], sentinel: Boolean)
   case class Fr(device_id: Option[Long], fsum: Long, fmin: Long, fmax: Long,
     sentinel: Boolean)
   case class St(n: Long, s: Long, mn: Long, mx: Long)
@@ -30,50 +33,22 @@ object StreamFrameStats {
     sample_min: Long, sample_max: Long)
 
   /** The stateful core: four integers per device; sentinel flushes. */
-  def census(ev: Dataset[Fr]): Dataset[Out] = {
-    val spark = ev.sparkSession
-    import spark.implicits._
-    ev.groupByKey(_.device_id)
-      .flatMapGroupsWithState[St, Out](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (dev, it, state: GroupState[St]) =>
-          var s = state.getOption.getOrElse(St(0L, 0L, Long.MaxValue, Long.MinValue))
-          var flush = false
-          it.foreach { e =>
-            if (e.sentinel) flush = true
-            else s = St(s.n + 1L, s.s + e.fsum,
-              math.min(s.mn, e.fmin), math.max(s.mx, e.fmax))
-          }
-          state.update(s)
-          if (flush && s.n > 0L)
-            Iterator.single(Out(dev, s.n, s.s, s.mn, s.mx))
-          else Iterator.empty
-      }
-  }
+  def census(ev: Dataset[Fr]): Dataset[Out] =
+    Staged.atBarrier(ev)(_.device_id, _.sentinel)(St(0L, 0L, Long.MaxValue, Long.MinValue)) {
+      (s, e) => St(s.n + 1L, s.s + e.fsum, math.min(s.mn, e.fmin), math.max(s.mx, e.fmax))
+    } { (dev, s) => if (s.n > 0L) Some(Out(dev, s.n, s.s, s.mn, s.mx)) else None }
 
   def streamedFrameStats(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     // the batch operator's own packed frames — the wire bytes are the
-    // stream payload; event time rides along only to place the cut.
-    // Staged schema is (frame, device_id, sentinel): data rows carry
-    // the bytes (device_id null — the decoder must recover it from
-    // the wire), sentinel rows carry the device key and a null frame.
+    // stream payload; event time rides along only to place the cut
     val frames = graft.operators.Frames.parsedFrames(spark, dir)
-      .select($"frame", unix_micros($"ts").as("tsUs"))
-    val bounds = frames.agg(min($"tsUs"), max($"tsUs")).head()
-    if (bounds.isNullAt(0)) return spark.emptyDataFrame
-    val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
-    def staged(df: DataFrame): DataFrame = df
       .select($"frame", lit(null).cast(LongType).as("device_id"),
-        lit(false).as("sentinel"))
-    val sentinels = graft.operators.Frames.parsedFrames(spark, dir)
+        unix_micros($"ts").as("tsUs"))
+    val devices = graft.operators.Frames.parsedFrames(spark, dir)
       .select($"parsed.device".cast(LongType).as("device_id")).distinct()
-      .select(lit(null).cast("binary").as("frame"), $"device_id",
-        lit(true).as("sentinel"))
-    val flushed = StreamDedup.runStagedStream(spark, Seq(
-        staged(frames.filter($"tsUs" <= cut)),
-        staged(frames.filter($"tsUs" > cut))
-          .unionByName(sentinels))) { stream =>
+    val flushed = Staged.run(spark,
+        Staged.withBarrier[Wire](Staged.timeCut(frames, $"tsUs"), devices)) { stream =>
       // scan-local decode BEFORE the stateful shuffle; UnpackFrame of
       // a sentinel's null frame is null, coalesced to flag defaults
       val parsed = stream
@@ -87,7 +62,7 @@ object StreamFrameStats {
           coalesce(array_max($"parsed.samples").cast(LongType), lit(0L)).as("fmax"),
           $"sentinel")
       census(parsed.as[Fr]).toDF()
-    }.getOrElse(return spark.emptyDataFrame)
+    }
     graft.operators.Frames.statsAssembly(
       flushed.select($"device_id", $"n_frames", $"sample_sum",
         $"sample_min", $"sample_max"))

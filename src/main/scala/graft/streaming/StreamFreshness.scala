@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.LongType
 
 /** Streaming twin of [[graft.operators.Quality.freshness]] — the
@@ -37,44 +36,34 @@ object StreamFreshness {
 
   /** The stateful core: per-type high-water mark + 24h-of-type-max
     * arrival buffer; sentinel flushes the census row. */
-  def census(ev: Dataset[Ev]): Dataset[Out] = {
-    val spark = ev.sparkSession
-    import spark.implicits._
-    ev.groupByKey(_.event_type)
-      .flatMapGroupsWithState[St, Out](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (typ, it, state: GroupState[St]) =>
-          val s0 = state.getOption.getOrElse(St(Long.MinValue, 0L, Nil))
-          var flush = false
-          // drain first, prune ONCE against the batch-final max:
-          // per-arrival Seq filter+append was O(|buf|) per event —
-          // O(window²) per type per batch, which the 100x census
-          // measured as a >900 s timeout (33k-event day windows).
-          // The end-of-batch state is identical: an arrival survives
-          // iff ts >= finalMax − 1d, whether checked at admission
-          // (running max only grows) or once at the end.
-          val fresh = scala.collection.mutable.ArrayBuffer.empty[Long]
-          var mx = s0.maxUs
-          var n = s0.n
-          it.foreach { e =>
-            if (e.sentinel) flush = true
-            else {
-              if (e.tsUs > mx) mx = e.tsUs
-              n += 1L
-              fresh += e.tsUs
-            }
-          }
-          val lo = mx - DayUs
-          val s =
-            if (fresh.isEmpty) s0
-            else St(mx, n,
-              (s0.buf.iterator ++ fresh.iterator).filter(_ >= lo).toList)
-          state.update(s)
-          if (flush && s.n > 0L)
-            Iterator.single(Out(typ, s.maxUs, s.n, s.buf))
-          else Iterator.empty
+  def census(ev: Dataset[Ev]): Dataset[Out] =
+    Staged.perBatch(ev)(_.event_type)(St(Long.MinValue, 0L, Nil)) { (typ, s0, it) =>
+      var flush = false
+      // drain first, prune ONCE against the batch-final max:
+      // per-arrival Seq filter+append was O(|buf|) per event —
+      // O(window²) per type per batch, which the 100x census
+      // measured as a >900 s timeout (33k-event day windows).
+      // The end-of-batch state is identical: an arrival survives
+      // iff ts >= finalMax − 1d, whether checked at admission
+      // (running max only grows) or once at the end.
+      val fresh = scala.collection.mutable.ArrayBuffer.empty[Long]
+      var mx = s0.maxUs
+      var n = s0.n
+      it.foreach { e =>
+        if (e.sentinel) flush = true
+        else {
+          if (e.tsUs > mx) mx = e.tsUs
+          n += 1L
+          fresh += e.tsUs
+        }
       }
-  }
+      val lo = mx - DayUs
+      val s =
+        if (fresh.isEmpty) s0
+        else St(mx, n, (s0.buf.iterator ++ fresh.iterator).filter(_ >= lo).toList)
+      (s, if (flush && s.n > 0L) Iterator.single(Out(typ, s.maxUs, s.n, s.buf))
+        else Iterator.empty)
+    }
 
   def streamedFreshness(spark: SparkSession, dir: String,
       staleSecs: Long = 86400L): DataFrame = {
@@ -82,17 +71,10 @@ object StreamFreshness {
     val ev = graft.sources.Tables.events(spark, dir)
       .filter($"ts".isNotNull)
       .select($"event_type", unix_micros($"ts").as("tsUs"))
-    val bounds = ev.agg(min($"tsUs"), max($"tsUs")).head()
-    if (bounds.isNullAt(0)) return spark.emptyDataFrame
-    val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
-    val sentinels = ev.select($"event_type").distinct()
-      .select($"event_type", lit(0L).as("tsUs"), lit(true).as("sentinel"))
-    val flushed = StreamDedup.runStagedStream(spark, Seq(
-        ev.filter($"tsUs" <= cut).select($"event_type", $"tsUs", lit(false).as("sentinel")),
-        ev.filter($"tsUs" > cut).select($"event_type", $"tsUs", lit(false).as("sentinel"))
-          .unionByName(sentinels))) { stream =>
+    val flushed = Staged.run(spark, Staged.withBarrier[Ev](Staged.timeCut(ev, $"tsUs"),
+        ev.select($"event_type").distinct())) { stream =>
       census(stream.as[Ev]).toDF()
-    }.getOrElse(return spark.emptyDataFrame)
+    }
     // type-dimension assembly: corpus max from the flushed census,
     // each type's last-day count from its own retained buffer
     val hwm = flushed.agg(max($"max_us").as("gmax"))

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming conversion funnel — [[graft.operators.Telemetry.funnel]]
   * run INCREMENTALLY: signup/purchase events arrive as an unbounded
@@ -23,11 +22,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * watermark-final min signup are droppable); signup/qualifying state
   * is O(1) per user forever.
   *
-  * The batch-gated run stages the filtered log as two micro-batches
-  * split at the median event time plus a per-user sentinel barrier
-  * that flushes the funnel row — shares `events_funnel`'s oracle, so
-  * batch-2 purchases must fold into batch-1 signup state (and
-  * vice-versa promotions must fire) for the hash to match.
+  * A per-user barrier flushes the funnel row — shares
+  * `events_funnel`'s oracle, so batch-2 purchases must fold into
+  * batch-1 signup state (and vice-versa promotions must fire) for the
+  * hash to match.
   *
   * Scale posture: the stream filters to the two funnel event types
   * BEFORE the stateful shuffle (at 100 TB that is the difference
@@ -45,64 +43,47 @@ object StreamFunnel {
 
   /** The stateful core: fold signups/purchases into the per-user
     * funnel election; emit exactly once, at the sentinel. */
-  def funnelStream(evs: Dataset[Ev]): Dataset[FunnelOut] = {
-    val spark = evs.sparkSession
-    import spark.implicits._
-    evs.groupByKey(_.user_id)
-      .flatMapGroupsWithState[FunnelState, FunnelOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (uid, it, state: GroupState[FunnelState]) =>
-          var s = state.getOption.getOrElse(FunnelState(None_, None_, Nil))
-          var flush = false
-          it.foreach { e =>
-            if (e.sentinel) flush = true
-            // a NULL user never equi-joins in the batch shape: its
-            // purchases can't qualify against its signups
-            else if (uid.isEmpty && e.typ != "signup") ()
-            else if (e.typ == "signup") {
-              if (e.ts_us < s.minSignup) {
-                // a lower min signup legitimizes pending purchases at
-                // or after it — promote them into the qualifying min
-                val (promoted, keep) = s.pend.partition(_ >= e.ts_us)
-                val q = if (promoted.isEmpty) s.qualMin
-                        else math.min(s.qualMin, promoted.min)
-                // entries >= the new qualMin can never lower it again
-                // (any future promotion takes min against q), so drop
-                // them — pend stays bounded by distinct ts below q
-                s = FunnelState(e.ts_us, q, keep.filter(_ < q))
-              }
-            } else if (e.typ == "purchase") {
-              if (e.ts_us >= s.minSignup)
-                s = s.copy(qualMin = math.min(s.qualMin, e.ts_us))
-              else if (e.ts_us < s.qualMin && !s.pend.contains(e.ts_us))
-                s = s.copy(pend = s.pend :+ e.ts_us)
-            }
-          }
-          state.update(s)
-          if (flush && s.minSignup != None_)
-            Iterator.single(FunnelOut(uid, s.minSignup,
-              if (s.qualMin != None_) Some(s.qualMin) else None))
-          else Iterator.empty
-      }
-  }
+  def funnelStream(evs: Dataset[Ev]): Dataset[FunnelOut] =
+    Staged.atBarrier(evs)(_.user_id, _.sentinel)(FunnelState(None_, None_, Nil)) { (s, e) =>
+      // a NULL user never equi-joins in the batch shape: its
+      // purchases can't qualify against its signups
+      if (e.user_id.isEmpty && e.typ != "signup") s
+      else if (e.typ == "signup") {
+        if (e.ts_us >= s.minSignup) s
+        else {
+          // a lower min signup legitimizes pending purchases at
+          // or after it — promote them into the qualifying min
+          val (promoted, keep) = s.pend.partition(_ >= e.ts_us)
+          val q = if (promoted.isEmpty) s.qualMin
+                  else math.min(s.qualMin, promoted.min)
+          // entries >= the new qualMin can never lower it again
+          // (any future promotion takes min against q), so drop
+          // them — pend stays bounded by distinct ts below q
+          FunnelState(e.ts_us, q, keep.filter(_ < q))
+        }
+      } else if (e.typ == "purchase") {
+        if (e.ts_us >= s.minSignup) s.copy(qualMin = math.min(s.qualMin, e.ts_us))
+        else if (e.ts_us < s.qualMin && !s.pend.contains(e.ts_us))
+          s.copy(pend = s.pend :+ e.ts_us)
+        else s
+      } else s
+    } { (uid, s) =>
+      if (s.minSignup == None_) None
+      else Some(FunnelOut(uid, s.minSignup,
+        if (s.qualMin != None_) Some(s.qualMin) else None))
+    }
 
   /** The batch-gated run: shares events_funnel's oracle. */
   def streamedFunnel(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val log = graft.sources.Tables.events(spark, dir)
-      .filter($"event_type".isin("signup", "purchase"))
+      .filter($"event_type".isin("signup", "purchase") && $"ts".isNotNull)
       .select($"user_id", unix_micros($"ts").as("ts_us"),
-        $"event_type".as("typ"), lit(false).as("sentinel"))
-    val bounds = log.agg(min($"ts_us"), max($"ts_us")).head()
-    if (bounds.isNullAt(0)) return spark.emptyDataFrame
-    val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
-    val sentinels = log.select($"user_id").distinct()
-      .select($"user_id", lit(0L).as("ts_us"), lit("S").as("typ"),
-        lit(true).as("sentinel"))
-    val out = StreamDedup.runStagedStream(spark,
-        Seq(log.filter($"ts_us" <= cut), log.filter($"ts_us" > cut), sentinels)) {
-      stream => funnelStream(stream.as[Ev]).toDF()
-    }.getOrElse(return spark.emptyDataFrame)
+        $"event_type".as("typ"))
+    val out = Staged.run(spark, Staged.withBarrier[Ev](Staged.timeCut(log, $"ts_us"),
+        log.select($"user_id").distinct())) { stream =>
+      funnelStream(stream.as[Ev]).toDF()
+    }
     val dupUsers = out.groupBy($"user_id").count().filter($"count" =!= 1L).count()
     if (dupUsers > 0)
       throw new IllegalStateException(

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of [[graft.operators.Telemetry.funnel3]] — the
   * three-step signup → view → purchase funnel run INCREMENTALLY,
@@ -50,79 +49,60 @@ object StreamFunnel3 {
     (q, keep.filter(_ < q))
   }
 
+  /** The view threshold moved down: re-run the purchase election
+    * against it. */
+  private def requalifyPurchases(s: F3State): F3State = {
+    val (pq, pp) = promote(s.purchQual, s.purchPend, s.viewQual)
+    s.copy(purchQual = pq, purchPend = pp)
+  }
+
   /** The stateful core: fold the three event types into the chained
     * election; emit exactly once, at the sentinel. */
-  def funnel3Stream(evs: Dataset[Ev]): Dataset[F3Out] = {
-    val spark = evs.sparkSession
-    import spark.implicits._
-    evs.groupByKey(_.user_id)
-      .flatMapGroupsWithState[F3State, F3Out](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (uid, it, state: GroupState[F3State]) =>
-          var s = state.getOption.getOrElse(
-            F3State(None_, None_, Nil, None_, Nil))
-          var flush = false
-          def requalifyPurchases(): Unit = {
-            // the view threshold moved down: re-run the purchase
-            // election against it
-            val (pq, pp) = promote(s.purchQual, s.purchPend, s.viewQual)
-            s = s.copy(purchQual = pq, purchPend = pp)
-          }
-          it.foreach { e =>
-            if (e.sentinel) flush = true
-            // a NULL user never equi-joins in the batch shape: its
-            // views/purchases can't qualify against its signups —
-            // only the signup election itself survives (s1 groups
-            // nulls; s2/s3 joins drop them)
-            else if (uid.isEmpty && e.typ != "signup") ()
-            else e.typ match {
-              case "signup" if e.ts_us < s.minSignup =>
-                val (vq, vp) = promote(s.viewQual, s.viewPend, e.ts_us)
-                val moved = vq < s.viewQual
-                s = s.copy(minSignup = e.ts_us, viewQual = vq, viewPend = vp)
-                if (moved) requalifyPurchases()
-              case "view" =>
-                if (e.ts_us >= s.minSignup) {
-                  if (e.ts_us < s.viewQual) {
-                    s = s.copy(viewQual = e.ts_us)
-                    requalifyPurchases()
-                  }
-                } else if (e.ts_us < s.viewQual && !s.viewPend.contains(e.ts_us))
-                  s = s.copy(viewPend = s.viewPend :+ e.ts_us)
-              case "purchase" =>
-                if (e.ts_us >= s.viewQual)
-                  s = s.copy(purchQual = math.min(s.purchQual, e.ts_us))
-                else if (e.ts_us < s.purchQual && !s.purchPend.contains(e.ts_us))
-                  s = s.copy(purchPend = s.purchPend :+ e.ts_us)
-              case _ => ()
-            }
-          }
-          state.update(s)
-          if (flush && s.minSignup != None_)
-            Iterator.single(F3Out(uid, s.minSignup,
-              if (s.viewQual != None_) Some(s.viewQual) else None,
-              if (s.purchQual != None_) Some(s.purchQual) else None))
-          else Iterator.empty
-      }
-  }
+  def funnel3Stream(evs: Dataset[Ev]): Dataset[F3Out] =
+    Staged.atBarrier(evs)(_.user_id, _.sentinel)(F3State(None_, None_, Nil, None_, Nil)) {
+      (s, e) =>
+        // a NULL user never equi-joins in the batch shape: its
+        // views/purchases can't qualify against its signups —
+        // only the signup election itself survives (s1 groups
+        // nulls; s2/s3 joins drop them)
+        if (e.user_id.isEmpty && e.typ != "signup") s
+        else e.typ match {
+          case "signup" if e.ts_us < s.minSignup =>
+            val (vq, vp) = promote(s.viewQual, s.viewPend, e.ts_us)
+            val s2 = s.copy(minSignup = e.ts_us, viewQual = vq, viewPend = vp)
+            if (vq < s.viewQual) requalifyPurchases(s2) else s2
+          case "view" =>
+            if (e.ts_us >= s.minSignup) {
+              if (e.ts_us < s.viewQual) requalifyPurchases(s.copy(viewQual = e.ts_us))
+              else s
+            } else if (e.ts_us < s.viewQual && !s.viewPend.contains(e.ts_us))
+              s.copy(viewPend = s.viewPend :+ e.ts_us)
+            else s
+          case "purchase" =>
+            if (e.ts_us >= s.viewQual) s.copy(purchQual = math.min(s.purchQual, e.ts_us))
+            else if (e.ts_us < s.purchQual && !s.purchPend.contains(e.ts_us))
+              s.copy(purchPend = s.purchPend :+ e.ts_us)
+            else s
+          case _ => s
+        }
+    } { (uid, s) =>
+      if (s.minSignup == None_) None
+      else Some(F3Out(uid, s.minSignup,
+        if (s.viewQual != None_) Some(s.viewQual) else None,
+        if (s.purchQual != None_) Some(s.purchQual) else None))
+    }
 
   /** The batch-gated run: shares events_funnel3's oracle. */
   def streamedFunnel3(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val log = graft.sources.Tables.events(spark, dir)
-      .filter($"event_type".isin("signup", "view", "purchase"))
+      .filter($"event_type".isin("signup", "view", "purchase") && $"ts".isNotNull)
       .select($"user_id", unix_micros($"ts").as("ts_us"),
-        $"event_type".as("typ"), lit(false).as("sentinel"))
-    val bounds = log.agg(min($"ts_us"), max($"ts_us")).head()
-    if (bounds.isNullAt(0)) return spark.emptyDataFrame
-    val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
-    val sentinels = log.select($"user_id").distinct()
-      .select($"user_id", lit(0L).as("ts_us"), lit("S").as("typ"),
-        lit(true).as("sentinel"))
-    val out = StreamDedup.runStagedStream(spark,
-        Seq(log.filter($"ts_us" <= cut), log.filter($"ts_us" > cut), sentinels)) {
-      stream => funnel3Stream(stream.as[Ev]).toDF()
-    }.getOrElse(return spark.emptyDataFrame)
+        $"event_type".as("typ"))
+    val out = Staged.run(spark, Staged.withBarrier[Ev](Staged.timeCut(log, $"ts_us"),
+        log.select($"user_id").distinct())) { stream =>
+      funnel3Stream(stream.as[Ev]).toDF()
+    }
     val dupUsers = out.groupBy($"user_id").count().filter($"count" =!= 1L).count()
     if (dupUsers > 0)
       throw new IllegalStateException(

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of [[graft.operators.Telemetry.gapfill]] — the
   * minute-grid carry-forward resampler run CAUSALLY: the batch shape
@@ -31,9 +30,6 @@ object StreamGapfill {
 
   case class Ev(user_id: Option[Long], tsUs: Long, event_id: Long,
       cents: Option[Long])
-  // hr = −1 encodes "no open hour" (the state lives on after a close
-  // because GroupState.remove-then-update within one invocation is
-  // messier than a tombstone)
   case class St(hr: Long, nextSlot: Int, carry: Option[Long],
       nFilled: Long, sumCents: Long)
   case class Out(user_id: Option[Long], hour_us: Long, n_slots: Long,
@@ -43,55 +39,50 @@ object StreamGapfill {
   private val minUs = 60000000L
 
   /** The stateful core: fold arrivals into the open hour's slot
-    * cursor; sentinel (event_id = −1) closes the open hour. */
-  def fill(ev: Dataset[Ev]): Dataset[Out] = {
-    val spark = ev.sparkSession
-    import spark.implicits._
-    ev.groupByKey(_.user_id)
-      .flatMapGroupsWithState[St, Out](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (uid, it, state: GroupState[St]) =>
-          var st = state.getOption.filter(_.hr >= 0L).orNull
-          val out = scala.collection.mutable.ArrayBuffer.empty[Out]
-          def advance(boundUs: Long): Unit = {
-            var m = st.nextSlot
-            while (m < 60 && st.hr + (m + 1) * minUs - 1L < boundUs) {
-              st.carry.foreach { c =>
-                st = st.copy(nFilled = st.nFilled + 1L,
-                  sumCents = Math.addExact(st.sumCents, c))
-              }
-              m += 1
-              st = st.copy(nextSlot = m)
-            }
+    * cursor (None: no open hour); sentinel (event_id = −1) closes the
+    * open hour. Same-µs groups look ahead, so a key's micro-batch
+    * folds as a whole. */
+  def fill(ev: Dataset[Ev]): Dataset[Out] =
+    Staged.perBatch(ev)(_.user_id)(Option.empty[St]) { (uid, open, it) =>
+      var st = open.orNull
+      val out = scala.collection.mutable.ArrayBuffer.empty[Out]
+      def advance(boundUs: Long): Unit = {
+        var m = st.nextSlot
+        while (m < 60 && st.hr + (m + 1) * minUs - 1L < boundUs) {
+          st.carry.foreach { c =>
+            st = st.copy(nFilled = st.nFilled + 1L,
+              sumCents = Math.addExact(st.sumCents, c))
           }
-          def closeHour(): Unit = {
-            advance(Long.MaxValue)
-            out += Out(uid, st.hr, 60L, st.nFilled, st.sumCents)
-            st = null
-          }
-          val all = it.toSeq.sortBy(e => (e.tsUs, e.event_id))
-          var i = 0
-          while (i < all.length) {
-            val e = all(i)
-            if (e.event_id == -1L) {
-              if (st != null) closeHour()
-            } else if (!(i + 1 < all.length && all(i + 1).tsUs == e.tsUs &&
-                all(i + 1).event_id != -1L)) {
-              // same-µs groups keep only the max event_id (the batch
-              // dedup rank) — it sorts last, so earlier ones skip
-              val hr = e.tsUs - e.tsUs % hourUs
-              if (st != null && hr != st.hr) closeHour()
-              if (st == null) st = St(hr, 0, None, 0L, 0L)
-              advance(e.tsUs)
-              // IGNORE NULLS carry: a null value never resets it
-              e.cents.foreach(c => st = st.copy(carry = Some(c)))
-            }
-            i += 1
-          }
-          state.update(if (st == null) St(-1L, 60, None, 0L, 0L) else st)
-          out.iterator
+          m += 1
+          st = st.copy(nextSlot = m)
+        }
       }
-  }
+      def closeHour(): Unit = {
+        advance(Long.MaxValue)
+        out += Out(uid, st.hr, 60L, st.nFilled, st.sumCents)
+        st = null
+      }
+      val all = it.toSeq.sortBy(e => (e.tsUs, e.event_id))
+      var i = 0
+      while (i < all.length) {
+        val e = all(i)
+        if (e.event_id == -1L) {
+          if (st != null) closeHour()
+        } else if (!(i + 1 < all.length && all(i + 1).tsUs == e.tsUs &&
+            all(i + 1).event_id != -1L)) {
+          // same-µs groups keep only the max event_id (the batch
+          // dedup rank) — it sorts last, so earlier ones skip
+          val hr = e.tsUs - e.tsUs % hourUs
+          if (st != null && hr != st.hr) closeHour()
+          if (st == null) st = St(hr, 0, None, 0L, 0L)
+          advance(e.tsUs)
+          // IGNORE NULLS carry: a null value never resets it
+          e.cents.foreach(c => st = st.copy(carry = Some(c)))
+        }
+        i += 1
+      }
+      (Option(st), out.iterator)
+    }
 
   def streamedGapfill(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -99,16 +90,11 @@ object StreamGapfill {
       .filter($"ts".isNotNull)
       .select($"user_id", unix_micros($"ts").as("tsUs"), $"event_id",
         (graft.operators.dec($"value") * 100).cast("long").as("cents"))
-    val bounds = ev.agg(min($"tsUs"), max($"tsUs")).head()
-    if (bounds.isNullAt(0)) return spark.emptyDataFrame
-    val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
-    val sentinels = ev.select($"user_id").distinct()
-      .select($"user_id", lit(bounds.getLong(1) + 2L * hourUs).as("tsUs"),
-        lit(-1L).as("event_id"), lit(null).cast("long").as("cents"))
-    val rows = StreamDedup.runStagedStream(spark,
-        Seq(ev.filter($"tsUs" <= cut), ev.filter($"tsUs" > cut), sentinels)) { stream =>
-      fill(stream.as[Ev]).toDF()
-    }.getOrElse(return spark.emptyDataFrame)
+    val rows = Staged.run(spark, Staged.withBarrier[Ev](Staged.timeCut(ev, $"tsUs"),
+        ev.select($"user_id").distinct()
+          .select($"user_id", lit(Staged.FarFutureUs).as("tsUs"), lit(-1L).as("event_id")))) {
+      stream => fill(stream.as[Ev]).toDF()
+    }
     rows.select($"user_id", timestamp_micros($"hour_us").as("hour_ts"),
       $"n_slots", $"n_filled",
       when($"n_filled" > 0L,

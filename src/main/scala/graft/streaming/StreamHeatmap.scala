@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 
 /** Streaming twin of [[graft.operators.Telemetry.heatmap]] — the
@@ -17,8 +16,8 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
   * the batch `dsum`, so the shared `events_heatmap` oracle
   * hash-matches bit-for-bit. A cell whose every value is NULL keeps
   * a None sum and emits NULL, matching SUM's skip-null semantics on
-  * both engines. Counts crossing the staged median-time cut must
-  * fold into batch-1 cell state (exactly-once emission is asserted
+  * both engines. Counts crossing the micro-batch cut must fold into
+  * batch-1 cell state (exactly-once emission is asserted
   * in-operator).
   */
 object StreamHeatmap {
@@ -29,30 +28,11 @@ object StreamHeatmap {
 
   /** The stateful core: per-cell (count, exact cents sum), emitted
     * once at the sentinel. */
-  def census(ev: Dataset[Cell]): Dataset[CellOut] = {
-    val spark = ev.sparkSession
-    import spark.implicits._
-    ev.groupByKey(e => (e.dow, e.hour))
-      .flatMapGroupsWithState[CellState, CellOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case ((dow, hour), it, state: GroupState[CellState]) =>
-          var s = state.getOption.getOrElse(CellState(0L, None))
-          var flush = false
-          it.foreach { e =>
-            if (e.sentinel) flush = true
-            else {
-              val ns = e.cents match {
-                case Some(c) => Some(Math.addExact(s.s1c.getOrElse(0L), c))
-                case None    => s.s1c
-              }
-              s = CellState(s.n + 1L, ns)
-            }
-          }
-          state.update(s)
-          if (flush) Iterator.single(CellOut(dow, hour, s.n, s.s1c))
-          else Iterator.empty
-      }
-  }
+  def census(ev: Dataset[Cell]): Dataset[CellOut] =
+    Staged.atBarrier(ev)(e => (e.dow, e.hour), _.sentinel)(CellState(0L, None)) { (s, e) =>
+      CellState(s.n + 1L,
+        e.cents.fold(s.s1c)(c => Some(Math.addExact(s.s1c.getOrElse(0L), c))))
+    } { case ((dow, hour), s) => Some(CellOut(dow, hour, s.n, s.s1c)) }
 
   def streamedHeatmap(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -64,20 +44,10 @@ object StreamHeatmap {
         expr("(unix_micros(ts) % 86400000000) div 3600000000").as("hour"),
         (dec($"value") * 100).cast(LongType).as("cents"),
         unix_micros($"ts").as("tsUs"))
-    val bounds = ev.agg(min($"tsUs"), max($"tsUs")).head()
-    if (bounds.isNullAt(0)) return spark.emptyDataFrame
-    val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
-    val staged = ev.select($"dow", $"hour", $"cents",
-      lit(false).as("sentinel"), $"tsUs")
-    val sentinels = ev.select($"dow", $"hour").distinct()
-      .select($"dow", $"hour", lit(null).cast("long").as("cents"),
-        lit(true).as("sentinel"))
-    val cells = StreamDedup.runStagedStream(spark,
-        Seq(staged.filter($"tsUs" <= cut).drop("tsUs"),
-          staged.filter($"tsUs" > cut).drop("tsUs"),
-          sentinels)) { stream =>
+    val cells = Staged.run(spark, Staged.withBarrier[Cell](Staged.timeCut(ev, $"tsUs"),
+        ev.select($"dow", $"hour").distinct())) { stream =>
       census(stream.as[Cell]).toDF()
-    }.getOrElse(return spark.emptyDataFrame)
+    }
     val bad = cells.groupBy($"dow", $"hour").count()
       .filter($"count" =!= 1L).count()
     if (bad > 0)

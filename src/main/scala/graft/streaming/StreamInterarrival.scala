@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of [[graft.operators.Telemetry.interarrival]] —
   * the arrival-process profile run INCREMENTALLY: per event-type
@@ -26,36 +25,20 @@ object StreamInterarrival {
 
   /** The stateful core: one (ts, id) per type; each arrival emits its
     * delta to the previous arrival. */
-  def gaps(ev: Dataset[Ev]): Dataset[Gap] = {
-    val spark = ev.sparkSession
-    import spark.implicits._
-    ev.groupByKey(_.event_type)
-      .flatMapGroupsWithState[Last, Gap](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (tp, it, state: GroupState[Last]) =>
-          var last = state.getOption
-          val out = scala.collection.mutable.ArrayBuffer.empty[Gap]
-          it.toSeq.sortBy(e => (e.tsUs, e.event_id)).foreach { e =>
-            last.foreach(l => out += Gap(tp, e.event_id, e.tsUs - l.tsUs))
-            last = Some(Last(e.tsUs, e.event_id))
-          }
-          last.foreach(state.update)
-          out.iterator
-      }
-  }
+  def gaps(ev: Dataset[Ev]): Dataset[Gap] =
+    Staged.onArrival(ev)(_.event_type, e => (e.tsUs, e.event_id))(Option.empty[Last]) {
+      (last, e) => (Some(Last(e.tsUs, e.event_id)),
+        last.map(l => Gap(e.event_type, e.event_id, e.tsUs - l.tsUs)))
+    }
 
   def streamedInterarrival(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val ev = graft.sources.Tables.events(spark, dir)
       .filter($"ts".isNotNull && $"event_type".isNotNull)
       .select($"event_type", unix_micros($"ts").as("tsUs"), $"event_id")
-    val bounds = ev.agg(min($"tsUs"), max($"tsUs")).head()
-    if (bounds.isNullAt(0)) return spark.emptyDataFrame
-    val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
-    val log = StreamDedup.runStagedStream(spark,
-        Seq(ev.filter($"tsUs" <= cut), ev.filter($"tsUs" > cut))) { stream =>
+    val log = Staged.run(spark, Staged.timeCut(ev, $"tsUs")) { stream =>
       gaps(stream.as[Ev]).toDF()
-    }.getOrElse(return spark.emptyDataFrame)
+    }
     // the batch operator's own rank rollup over the streamed gap log
     val wRank = Window.partitionBy($"event_type")
       .orderBy($"gap_us".asc, $"event_id".asc)

@@ -20,19 +20,16 @@ import org.apache.spark.sql.functions._
   */
 object StreamJoin {
 
-  case class JoinOut(event_id: Long, user_id: Long, ts: java.sql.Timestamp,
-      ctl_event_id: Long, ctl_type: String, delay_us: Long)
-
   /** Batch-gated run (`stream_join`): events staged as two
     * micro-batches split at the control timestamp of a known
     * cross-batch match (a median-time cut almost never lands inside
     * a 10-minute window, which would leave the cross-batch buffering
-    * untested), streamed through a watermarked interval self-join
-    * into an append memory sink. The oracle is the equivalent batch
-    * range join — it only matches if control rows buffered in batch
-    * 1 meet data rows arriving in batch 2. The staging cut is
-    * harness logic (a production deployment replays a day boundary);
-    * the joined PLAN is the shipped operator. */
+    * untested), streamed through a watermarked interval self-join.
+    * The oracle is the equivalent batch range join — it only matches
+    * if control rows buffered in batch 1 meet data rows arriving in
+    * batch 2. The staging cut is harness logic (a production
+    * deployment replays a day boundary); the joined PLAN is the
+    * shipped operator. */
   def streamedJoin(spark: SparkSession, dir: String,
       windowSecs: Long = 600L): DataFrame = {
     import spark.implicits._
@@ -40,8 +37,6 @@ object StreamJoin {
     val ev = graft.sources.Tables.events(spark, dir)
       .filter($"ts".isNotNull)
       .select($"event_id", $"user_id", $"ts", $"event_type")
-    val bounds = ev.agg(min(unix_micros($"ts")), max(unix_micros($"ts"))).head()
-    if (bounds.isNullAt(0)) return spark.emptyDataset[JoinOut].toDF()
     // cut so that at least one matched pair straddles the batches:
     // the strict pair (ctl before data) with the earliest data side,
     // cut AT its control timestamp — ctl lands in batch 1, its data
@@ -51,16 +46,12 @@ object StreamJoin {
       .select($"user_id".as("cu"), unix_micros($"ts").as("cus"))
     val data0 = ev.filter(!$"event_type".isin(ctlTypes: _*))
       .select($"user_id".as("du"), unix_micros($"ts").as("dus"))
-    val strictCut =
+    val strict =
       data0.join(ctl0, $"du" === $"cu" &&
         $"cus" < $"dus" && $"cus" >= $"dus" - windowSecs * 1000000L)
       .agg(min(struct($"dus", $"cus"))).head()
-    val cut =
-      if (strictCut.isNullAt(0)) (bounds.getLong(0) + bounds.getLong(1)) / 2
-      else strictCut.getStruct(0).getLong(1)
-    val log = StreamDedup.runStagedStream(spark,
-        Seq(ev.filter(unix_micros($"ts") <= cut),
-          ev.filter(unix_micros($"ts") > cut))) { stream =>
+    val strictCut = Option.when(!strict.isNullAt(0))(strict.getStruct(0).getLong(1))
+    val log = Staged.run(spark, Staged.timeCut(ev, unix_micros($"ts"), strictCut)) { stream =>
       val ss = stream.sparkSession
       import ss.implicits._
       // time-split batches arrive in event-time order, so a zero
@@ -81,11 +72,11 @@ object StreamJoin {
           $"ctl_ts" <= $"ts")
         .select($"event_id", $"user_id", $"ts", $"ctl_event_id", $"ctl_type",
           (unix_micros($"ts") - unix_micros($"ctl_ts")).as("delay_us"))
-    }.getOrElse(return spark.emptyDataset[JoinOut].toDF())
+    }
     // if the staging found a straddling pair, the sink must contain at
     // least one cross-batch match — otherwise batch-1 control state
     // was not consulted and the oracle diff would be cryptic
-    if (!strictCut.isNullAt(0)) {
+    strictCut.foreach { cut =>
       val crossBatch = log.filter(
         unix_micros($"ts") > cut && unix_micros($"ts") - $"delay_us" <= cut).count()
       if (crossBatch < 1)

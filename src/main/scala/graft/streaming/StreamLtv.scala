@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of [[graft.operators.Telemetry.ltv]] — the cohort
   * lifetime-value triangle maintained LIVE: per-user state is the
@@ -12,8 +11,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * — bounded by the TIME AXIS like stream_retention, because a
   * LATE-ARRIVING EARLIER SIGNUP re-assigns the user's cohort and
   * re-offsets every cell the user touches: no cell is final before
-  * the snapshot, so users flush once at the per-user sentinel
-  * barrier. The flush emits one row per (user, purchase week) at or
+  * the snapshot, so users flush once at the per-user barrier. The
+  * flush emits one row per (user, purchase week) at or
   * after the cohort week; the cells assembly (distinct buyers,
   * DECIMAL revenue, running cumulative) is the batch operator's own
   * cohort-dimension rollup over the sink. A week whose every
@@ -37,44 +36,28 @@ object StreamLtv {
 
   /** The stateful core: earliest-signup election + per-week cent
     * folds; sentinel flushes the user's triangle slice. */
-  def cells(ev: Dataset[Ev]): Dataset[Cell] = {
-    val spark = ev.sparkSession
-    import spark.implicits._
-    ev.groupByKey(_.user_id)
-      .flatMapGroupsWithState[St, Cell](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (uid, it, state: GroupState[St]) =>
-          var st = state.getOption.getOrElse(St(None, None, Nil))
-          var flush = false
-          it.foreach { e =>
-            if (e.sentinel) flush = true
-            else if (e.isSignup) {
-              if (st.minRawUs.forall(e.tsUs < _))
-                st = st.copy(minRawUs = Some(e.tsUs), minWeekUs = Some(e.weekUs))
-            } else {
-              val i = st.weeks.indexWhere(_.weekUs == e.weekUs)
-              st =
-                if (i < 0)
-                  st.copy(weeks = st.weeks :+
-                    WeekCell(e.weekUs, e.cents.getOrElse(0L),
-                      if (e.cents.isDefined) 1L else 0L))
-                else {
-                  val w = st.weeks(i)
-                  st.copy(weeks = st.weeks.updated(i,
-                    w.copy(cents = Math.addExact(w.cents, e.cents.getOrElse(0L)),
-                      nNonNull = w.nNonNull + (if (e.cents.isDefined) 1L else 0L))))
-                }
-            }
-          }
-          state.update(st)
-          if (flush)
-            st.minWeekUs.iterator.flatMap(cw =>
-              st.weeks.iterator.filter(_.weekUs >= cw).map(w =>
-                Cell(uid, cw, w.weekUs,
-                  if (w.nNonNull > 0L) Some(w.cents) else None)))
-          else Iterator.empty
+  def cells(ev: Dataset[Ev]): Dataset[Cell] =
+    Staged.atBarrier(ev)(_.user_id, _.sentinel)(St(None, None, Nil)) { (st, e) =>
+      if (e.isSignup) {
+        if (st.minRawUs.forall(e.tsUs < _))
+          st.copy(minRawUs = Some(e.tsUs), minWeekUs = Some(e.weekUs))
+        else st
+      } else {
+        val i = st.weeks.indexWhere(_.weekUs == e.weekUs)
+        val nn = if (e.cents.isDefined) 1L else 0L
+        if (i < 0) st.copy(weeks = st.weeks :+ WeekCell(e.weekUs, e.cents.getOrElse(0L), nn))
+        else {
+          val w = st.weeks(i)
+          st.copy(weeks = st.weeks.updated(i,
+            w.copy(cents = Math.addExact(w.cents, e.cents.getOrElse(0L)),
+              nNonNull = w.nNonNull + nn)))
+        }
       }
-  }
+    } { (uid, st) =>
+      st.minWeekUs.toSeq.flatMap(cw =>
+        st.weeks.filter(_.weekUs >= cw).map(w =>
+          Cell(uid, cw, w.weekUs, if (w.nNonNull > 0L) Some(w.cents) else None)))
+    }
 
   def streamedLtv(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -87,19 +70,11 @@ object StreamLtv {
         unix_micros(date_trunc("week", $"ts")).as("weekUs"),
         ($"event_type" === "signup").as("isSignup"),
         when($"event_type" === "purchase",
-          (graft.operators.dec($"value") * 100).cast("long")).as("cents"),
-        lit(false).as("sentinel"))
-    val bounds = ev.agg(min($"tsUs"), max($"tsUs")).head()
-    if (bounds.isNullAt(0)) return spark.emptyDataFrame
-    val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
-    val sentinels = ev.select($"user_id").distinct()
-      .select($"user_id", lit(bounds.getLong(1) + 1L).as("tsUs"),
-        lit(0L).as("weekUs"), lit(false).as("isSignup"),
-        lit(null).cast("long").as("cents"), lit(true).as("sentinel"))
-    val flushed = StreamDedup.runStagedStream(spark,
-        Seq(ev.filter($"tsUs" <= cut), ev.filter($"tsUs" > cut), sentinels)) { stream =>
+          (graft.operators.dec($"value") * 100).cast("long")).as("cents"))
+    val flushed = Staged.run(spark, Staged.withBarrier[Ev](Staged.timeCut(ev, $"tsUs"),
+        ev.select($"user_id").distinct())) { stream =>
       cells(stream.as[Ev]).toDF()
-    }.getOrElse(return spark.emptyDataFrame)
+    }
     // the batch operator's own cohort-dimension assembly
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy($"cohort_week").orderBy($"week_offset")

@@ -18,20 +18,16 @@ import org.apache.spark.sql.types.LongType
   *
   * Spark's `window()` floors to epoch-aligned buckets, which is the
   * oracle's `//`-floor arithmetic exactly (the batch operator's
-  * integer `div` agrees on the post-1970 domain). Sentinel exclusion
-  * is by TIME, not key: real buckets start at or before the corpus
-  * max event time, sentinel buckets (2 and 4 days past it) cannot —
-  * no reserved device id needed.
+  * integer `div` agrees on the post-1970 domain). Marker exclusion
+  * is by TIME, not key: real buckets start before 2100, the
+  * watermark markers' buckets cannot — no reserved device id needed.
   *
-  * Batch-gated run: the cut lands inside the busiest bucket's own
+  * Gated property: the cut lands inside the busiest bucket's own
   * [first, last] span so at least one bucket provably carries window
-  * state across the micro-batch boundary; two sentinels advance the
-  * watermark so every real bucket closes and flushes. Shares ts_m4's
-  * DuckDB oracle.
+  * state across the micro-batch boundary. Shares ts_m4's DuckDB
+  * oracle.
   */
 object StreamM4 {
-
-  private val BucketUs = 21600000000L
 
   /** Midpoint of the busiest multi-event (user, bucket) span — the
     * StreamOhlc straddling-cut election at M4's bucket width. */
@@ -53,23 +49,11 @@ object StreamM4 {
     val ev = graft.sources.Tables.events(spark, dir)
       .filter($"value".isNotNull && $"ts".isNotNull)
       .select($"user_id", $"ts", $"value")
-    val bounds = ev.agg(min(unix_micros($"ts")), max(unix_micros($"ts"))).head()
-    if (bounds.isNullAt(0)) return spark.emptyDataFrame
-    val hiUs = bounds.getLong(1)
-    val cutUs = straddlingCut(ev).getOrElse((bounds.getLong(0) + hiUs) / 2)
-    val dayUs = 86400000000L
-    def sentinel(offsetUs: Long): DataFrame =
-      spark.range(1).select(
-        lit(-1L).as("user_id"),
-        timestamp_micros(lit(hiUs + offsetUs)).as("ts"),
+    def marker(us: Long): DataFrame =
+      spark.range(1).select(lit(-1L).as("user_id"), timestamp_micros(lit(us)).as("ts"),
         lit(0.0d).as("value"))
-    // sentinel 1 rides the last data batch — identical emitted set,
-    // one micro-batch cheaper (see StreamXcorr's staging note, r14)
-    val buckets = StreamDedup.runStagedStream(spark, Seq(
-        ev.filter(unix_micros($"ts") <= cutUs),
-        ev.filter(unix_micros($"ts") > cutUs)
-          .unionByName(sentinel(2L * dayUs)),
-        sentinel(4L * dayUs))) { stream =>
+    val buckets = Staged.run(spark, Staged.closingWindows(
+        Staged.timeCut(ev, unix_micros($"ts"), straddlingCut(ev)), marker)) { stream =>
       stream
         .withWatermark("ts", "0 seconds")
         .groupBy(window($"ts", "6 hours"), $"user_id")
@@ -79,11 +63,9 @@ object StreamM4 {
           max_by($"value", unix_micros($"ts")).as("v_last"),
           min($"value").as("v_min"),
           max($"value").as("v_max"))
-    }.getOrElse(return spark.emptyDataFrame)
-    // time-based sentinel exclusion: a real bucket starts <= the
-    // corpus max event time; sentinel buckets start days past it
+    }
     buckets
-      .filter(unix_micros($"window.start") <= hiUs)
+      .filter(unix_micros($"window.start") < Staged.FarFutureUs)
       .select($"user_id", $"window.start".as("bucket"),
         $"n_points", $"v_first", $"v_last", $"v_min", $"v_max")
   }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of [[graft.operators.Telemetry.markov]] — the
   * behavior transition matrix fed LIVE: per-user state is the single
@@ -34,23 +33,11 @@ object StreamMarkov {
 
   /** The stateful core: fold each arrival against the last-seen
     * type; emit a bigram when the PREDECESSOR's type is non-null. */
-  def bigrams(ev: Dataset[Ev]): Dataset[Bigram] = {
-    val spark = ev.sparkSession
-    import spark.implicits._
-    ev.groupByKey(_.user_id)
-      .flatMapGroupsWithState[Prev, Bigram](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (uid, it, state: GroupState[Prev]) =>
-          var prev: Option[Prev] = state.getOption
-          val out = scala.collection.mutable.ArrayBuffer.empty[Bigram]
-          it.toSeq.sortBy(e => (e.tsUs, e.event_id)).foreach { e =>
-            prev.flatMap(_.t).foreach(f => out += Bigram(uid, f, e.event_type))
-            prev = Some(Prev(e.event_type))
-          }
-          prev.foreach(state.update)
-          out.iterator
-      }
-  }
+  def bigrams(ev: Dataset[Ev]): Dataset[Bigram] =
+    Staged.onArrival(ev)(_.user_id, e => (e.tsUs, e.event_id))(Option.empty[Prev]) {
+      (prev, e) => (Some(Prev(e.event_type)),
+        prev.flatMap(_.t).map(f => Bigram(e.user_id, f, e.event_type)))
+    }
 
   def streamedMarkov(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -58,13 +45,9 @@ object StreamMarkov {
       .filter($"ts".isNotNull)
       .select($"user_id", unix_micros($"ts").as("tsUs"), $"event_id",
         $"event_type")
-    val bounds = ev.agg(min($"tsUs"), max($"tsUs")).head()
-    if (bounds.isNullAt(0)) return spark.emptyDataFrame
-    val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
-    val log = StreamDedup.runStagedStream(spark,
-        Seq(ev.filter($"tsUs" <= cut), ev.filter($"tsUs" > cut))) { stream =>
+    val log = Staged.run(spark, Staged.timeCut(ev, $"tsUs")) { stream =>
       bigrams(stream.as[Ev]).toDF()
-    }.getOrElse(return spark.emptyDataFrame)
+    }
     graft.operators.Telemetry.markovAssembly(
       log.groupBy($"from_state", $"to_state")
         .agg(count(lit(1)).as("n_transitions")))

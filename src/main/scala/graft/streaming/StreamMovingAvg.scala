@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of [[graft.operators.Telemetry.movingAvg]] — the
   * 10-minute trailing average run as a live filter: per-user state
@@ -26,36 +25,30 @@ object StreamMovingAvg {
   case class Ev(user_id: Option[Long], tsUs: Long, event_id: Long,
       cents: Option[Long], value: Option[Double])
   case class Entry(tUs: Long, cents: Option[Long])
-  case class Buf(entries: Seq[Entry])
   case class Out(event_id: Long, user_id: Option[Long], eus: Long,
       value: Option[Double], n_window: Long, sum_cents: Option[Long])
 
-  /** The stateful core. */
-  def smooth(ev: Dataset[Ev], spanUs: Long): Dataset[Out] = {
-    val spark = ev.sparkSession
-    import spark.implicits._
-    ev.groupByKey(_.user_id)
-      .flatMapGroupsWithState[Buf, Out](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (uid, it, state: GroupState[Buf]) =>
-          var buf = state.getOption.map(_.entries.toList).getOrElse(Nil)
-          val out = scala.collection.mutable.ArrayBuffer.empty[Out]
-          it.toSeq.sortBy(e => (e.tsUs, e.event_id))
-            .groupBy(_.tsUs).toSeq.sortBy(_._1).foreach { case (t, group) =>
-              buf = buf.filter(_.tUs >= t - spanUs)
-              group.foreach(e => buf ::= Entry(e.tsUs, e.cents))
-              val n = buf.length.toLong
-              val nv = buf.count(_.cents.isDefined)
-              val s = buf.iterator.flatMap(_.cents).sum
-              group.foreach { e =>
-                out += Out(e.event_id, uid, t, e.value, n,
-                  if (nv > 0) Some(s) else None)
-              }
-            }
-          state.update(Buf(buf))
-          out.iterator
-      }
-  }
+  /** The stateful core: the span-pruned buffer; a same-µs group
+    * enters whole before any member emits, so a key's micro-batch
+    * folds as a whole. */
+  def smooth(ev: Dataset[Ev], spanUs: Long): Dataset[Out] =
+    Staged.perBatch(ev)(_.user_id)(List.empty[Entry]) { (uid, buf0, it) =>
+      var buf = buf0
+      val out = scala.collection.mutable.ArrayBuffer.empty[Out]
+      it.toSeq.sortBy(e => (e.tsUs, e.event_id))
+        .groupBy(_.tsUs).toSeq.sortBy(_._1).foreach { case (t, group) =>
+          buf = buf.filter(_.tUs >= t - spanUs)
+          group.foreach(e => buf ::= Entry(e.tsUs, e.cents))
+          val n = buf.length.toLong
+          val nv = buf.count(_.cents.isDefined)
+          val s = buf.iterator.flatMap(_.cents).sum
+          group.foreach { e =>
+            out += Out(e.event_id, uid, t, e.value, n,
+              if (nv > 0) Some(s) else None)
+          }
+        }
+      (buf, out.iterator)
+    }
 
   def streamedMovingAvg(spark: SparkSession, dir: String,
       minutes: Int = 10): DataFrame = {
@@ -65,13 +58,9 @@ object StreamMovingAvg {
       .select($"user_id", unix_micros($"ts").as("tsUs"), $"event_id",
         (graft.operators.dec($"value") * 100).cast("long").as("cents"),
         $"value")
-    val bounds = ev.agg(min($"tsUs"), max($"tsUs")).head()
-    if (bounds.isNullAt(0)) return spark.emptyDataFrame
-    val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
-    val log = StreamDedup.runStagedStream(spark,
-        Seq(ev.filter($"tsUs" <= cut), ev.filter($"tsUs" > cut))) { stream =>
+    val log = Staged.run(spark, Staged.timeCut(ev, $"tsUs")) { stream =>
       smooth(stream.as[Ev], minutes.toLong * 60L * 1000000L).toDF()
-    }.getOrElse(return spark.emptyDataFrame)
+    }
     log.select($"event_id", $"user_id", $"eus", $"value", $"n_window",
       (($"sum_cents".cast("decimal(38,0)") / 100).cast("decimal(38,2)")
         .cast("double") / $"n_window").as("avg_window"))

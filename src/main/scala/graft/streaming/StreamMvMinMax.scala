@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.LongType
 
 /** Incremental MIN/MAX view maintenance under deletes
@@ -62,69 +61,54 @@ object StreamMvMinMax {
     "del" -> 1, "ins" -> 1)
 
   /** The stateful core. Seeds sort before deltas inside a batch (the
-    * synopsis must exist before the first delta lands); deltas order
-    * by id for determinism, though retirement matches on exact
-    * (v, id) so delta order cannot change the outcome. */
-  def fold(ev: Dataset[Ev], k: Int = K): Dataset[Out] = {
-    val spark = ev.sparkSession
-    import spark.implicits._
-    ev.groupByKey(_.lang)
-      .flatMapGroupsWithState[St, Out](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (lang, it, state: GroupState[St]) =>
-          var st = state.getOption.getOrElse(
-            St(Nil, Nil, None, None, 0L, 0L))
-          var flush = false
-          it.toSeq.sortBy(e => (prio.getOrElse(e.kind, 2), e.id)).foreach { e =>
-            e.kind match {
-              case _ if e.sentinel => flush = true
-              case "seedmin" =>
-                val c = (st.minC :+ Cand(e.v.get, e.id)).sortBy(c => (c.v, c.id))
-                // horizon = the largest seeded candidate once the seed
-                // is K wide; a narrower seed means the WHOLE language
-                // fits, so every insert is absorbed (horizon stays None
-                // only while the seed covers everything)
-                st = st.copy(minC = c,
-                  minHorizon = if (c.length >= k) Some(c.last.v) else None)
-              case "seedmax" =>
-                val c = (st.maxC :+ Cand(e.v.get, e.id)).sortBy(c => (-c.v, c.id))
-                st = st.copy(maxC = c,
-                  maxHorizon = if (c.length >= k) Some(c.last.v) else None)
-              case "count" =>
-                st = st.copy(nDocs = st.nDocs + e.nDocs,
-                  nNonnull = st.nNonnull + e.nNonnull)
-              case "del" =>
-                st = st.copy(nDocs = st.nDocs - 1L,
-                  nNonnull = st.nNonnull - e.v.fold(0L)(_ => 1L),
-                  minC = e.v.fold(st.minC)(v =>
-                    st.minC.filterNot(c => c.v == v && c.id == e.id)),
-                  maxC = e.v.fold(st.maxC)(v =>
-                    st.maxC.filterNot(c => c.v == v && c.id == e.id)))
-              case "ins" =>
-                st = st.copy(nDocs = st.nDocs + 1L,
-                  nNonnull = st.nNonnull + e.v.fold(0L)(_ => 1L))
-                e.v.foreach { v =>
-                  if (st.minHorizon.forall(v <= _))
-                    st = st.copy(minC =
-                      (st.minC :+ Cand(v, e.id)).sortBy(c => (c.v, c.id)))
-                  if (st.maxHorizon.forall(v >= _))
-                    st = st.copy(maxC =
-                      (st.maxC :+ Cand(v, e.id)).sortBy(c => (-c.v, c.id)))
-                }
-              case other =>
-                throw new IllegalStateException(s"unknown delta kind $other")
-            }
+    * synopsis must exist before the first delta lands), the sentinel
+    * after both; deltas order by id for determinism, though
+    * retirement matches on exact (v, id) so delta order cannot change
+    * the outcome. */
+  def fold(ev: Dataset[Ev], k: Int = K): Dataset[Out] =
+    Staged.onArrival(ev)(_.lang, e => (prio.getOrElse(e.kind, 2), e.id))(
+        St(Nil, Nil, None, None, 0L, 0L)) { (st, e) =>
+      if (e.sentinel)
+        (st, if (st.nDocs <= 0L) None else Some(Out(e.lang,
+          st.minC.headOption.map(_.v), st.maxC.headOption.map(_.v),
+          exposed_min = st.minC.isEmpty && st.nNonnull > 0L,
+          exposed_max = st.maxC.isEmpty && st.nNonnull > 0L,
+          st.nDocs)))
+      else (e.kind match {
+        case "seedmin" =>
+          val c = (st.minC :+ Cand(e.v.get, e.id)).sortBy(c => (c.v, c.id))
+          // horizon = the largest seeded candidate once the seed
+          // is K wide; a narrower seed means the WHOLE language
+          // fits, so every insert is absorbed (horizon stays None
+          // only while the seed covers everything)
+          st.copy(minC = c, minHorizon = if (c.length >= k) Some(c.last.v) else None)
+        case "seedmax" =>
+          val c = (st.maxC :+ Cand(e.v.get, e.id)).sortBy(c => (-c.v, c.id))
+          st.copy(maxC = c, maxHorizon = if (c.length >= k) Some(c.last.v) else None)
+        case "count" =>
+          st.copy(nDocs = st.nDocs + e.nDocs, nNonnull = st.nNonnull + e.nNonnull)
+        case "del" =>
+          st.copy(nDocs = st.nDocs - 1L,
+            nNonnull = st.nNonnull - e.v.fold(0L)(_ => 1L),
+            minC = e.v.fold(st.minC)(v =>
+              st.minC.filterNot(c => c.v == v && c.id == e.id)),
+            maxC = e.v.fold(st.maxC)(v =>
+              st.maxC.filterNot(c => c.v == v && c.id == e.id)))
+        case "ins" =>
+          val counted = st.copy(nDocs = st.nDocs + 1L,
+            nNonnull = st.nNonnull + e.v.fold(0L)(_ => 1L))
+          e.v.fold(counted) { v =>
+            val withMin = if (counted.minHorizon.forall(v <= _))
+              counted.copy(minC = (counted.minC :+ Cand(v, e.id)).sortBy(c => (c.v, c.id)))
+              else counted
+            if (withMin.maxHorizon.forall(v >= _))
+              withMin.copy(maxC = (withMin.maxC :+ Cand(v, e.id)).sortBy(c => (-c.v, c.id)))
+            else withMin
           }
-          state.update(st)
-          if (flush && st.nDocs > 0L)
-            Iterator.single(Out(lang,
-              st.minC.headOption.map(_.v), st.maxC.headOption.map(_.v),
-              exposed_min = st.minC.isEmpty && st.nNonnull > 0L,
-              exposed_max = st.maxC.isEmpty && st.nNonnull > 0L,
-              st.nDocs))
-          else Iterator.empty
-      }
-  }
+        case other =>
+          throw new IllegalStateException(s"unknown delta kind $other")
+      }, None)
+    }
 
   def streamedMvMinMax(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -158,10 +142,8 @@ object StreamMvMinMax {
         lit(0L).as("id"), $"nDocs", $"nNonnull")
     def ev(df: DataFrame): DataFrame =
       df.select($"lang", $"kind", $"v", $"id",
-        lit(0L).as("nDocs"), lit(0L).as("nNonnull"),
-        lit(false).as("sentinel"))
-    val seeds = ev(seedMin).unionByName(ev(seedMax))
-      .unionByName(counts.withColumn("sentinel", lit(false)))
+        lit(0L).as("nDocs"), lit(0L).as("nNonnull"))
+    val seeds = ev(seedMin).unionByName(ev(seedMax)).unionByName(counts)
     // --- the delta feed: snapshotDiff's re-crawl classes. A revision
     // is delete(old) + insert(new) for an order-sensitive view; the
     // +7 rides only on non-NULL bytes (NULL revises to NULL — the
@@ -181,20 +163,13 @@ object StreamMvMinMax {
     val delta = ev(dels).unionByName(ev(revDel))
       .unionByName(ev(revIns)).unionByName(ev(ins))
     // stage at the median doc-id cut so every language's delta
-    // straddles it (the cross-batch fold is the gated property)
-    val uid = when($"id" < 0, -$"id" - 1L).otherwise($"id")
-    val bounds = docs.agg(min($"doc_id"), max($"doc_id")).head()
-    if (bounds.isNullAt(0)) return spark.emptyDataset[Out].toDF()
-    val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
-    val sentinels = docs.select($"lang").distinct()
-      .select($"lang", lit("flush").as("kind"), lit(null).cast(LongType).as("v"),
-        lit(0L).as("id"), lit(0L).as("nDocs"), lit(0L).as("nNonnull"),
-        lit(true).as("sentinel"))
-    val flushed = StreamDedup.runStagedStream(spark, Seq(
-        seeds.unionByName(delta.filter(uid <= cut || $"id".isNull)),
-        delta.filter(uid > cut).unionByName(sentinels))) {
-        stream => fold(stream.as[Ev]).toDF()
-      }.getOrElse(return spark.emptyDataset[Out].toDF())
+    // straddles it (the cross-batch fold is the gated property); the
+    // seeds ride batch 1
+    val cut = Staged.timeCut(delta, when($"id" < 0, -$"id" - 1L).otherwise($"id"))
+    val flushed = Staged.run(spark, Staged.withBarrier[Ev](
+        seeds.unionByName(cut.head) +: cut.tail, docs.select($"lang").distinct())) {
+      stream => fold(stream.as[Ev]).toDF()
+    }
     // --- rescan-on-expose: the one batch pass a deleted-out extreme
     // tier costs, restricted to the exposed languages and audited
     val merged = docs.filter($"doc_id" % 11 =!= 0)

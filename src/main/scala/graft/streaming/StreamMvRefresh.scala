@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.LongType
 
 /** Streaming twin of [[graft.operators.Curation.mvRefresh]] — the
@@ -40,35 +39,14 @@ object StreamMvRefresh {
   /** The stateful core: per-language delta fold; sentinel flushes the
     * accumulated cell. NULL d_bytes rows (a removed/inserted doc with
     * NULL text) contribute 0 bytes — the batch SUM's skip-null
-    * semantics, identical after the merge's coalesce. */
-  def fold(ev: Dataset[Delta]): Dataset[Out] = {
-    val spark = ev.sparkSession
-    import spark.implicits._
-    ev.groupByKey(_.lang)
-      .flatMapGroupsWithState[St, Out](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (lang, it, state: GroupState[St]) =>
-          var st = state.getOption.getOrElse(St(0L, 0L))
-          var flush = false
-          it.foreach { e =>
-            if (e.sentinel) flush = true
-            else st = St(st.dDocs + e.d_docs.getOrElse(0L),
-              st.dBytes + e.d_bytes.getOrElse(0L))
-          }
-          if (flush) {
-            // emit the accumulated cell, then RESET: a later snapshot
-            // barrier for the same key must ship the per-interval
-            // delta, not re-emit cumulative totals into the append
-            // sink (r12 ADVICE — the staged gate sends one sentinel
-            // per language, but the fold shouldn't depend on that)
-            state.update(St(0L, 0L))
-            Iterator.single(Out(lang, st.dDocs, st.dBytes))
-          } else {
-            state.update(st)
-            Iterator.empty
-          }
-      }
-  }
+    * semantics, identical after the merge's coalesce. The flush
+    * resets the cell, so a later snapshot barrier for the same key
+    * ships the per-interval delta, not cumulative totals (r12
+    * ADVICE). */
+  def fold(ev: Dataset[Delta]): Dataset[Out] =
+    Staged.atBarrier(ev)(_.lang, _.sentinel)(St(0L, 0L)) { (st, e) =>
+      St(st.dDocs + e.d_docs.getOrElse(0L), st.dBytes + e.d_bytes.getOrElse(0L))
+    } { (lang, st) => Some(Out(lang, st.dDocs, st.dBytes)) }
 
   def streamedMvRefresh(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -96,21 +74,11 @@ object StreamMvRefresh {
         .select($"doc_id", $"lang", lit(1L).as("d_docs"), $"n_bytes".as("d_bytes")))
     // stage at the median delta doc_id so every language's
     // contributions straddle the cut (the cross-batch fold is the
-    // gated property); NULL doc_id routes to batch 1
-    val bounds = delta.agg(min($"doc_id"), max($"doc_id")).head()
-    val cut = if (bounds.isNullAt(0)) 0L
-      else (bounds.getLong(0) + bounds.getLong(1)) / 2
-    val sentinels = delta.select($"lang").distinct()
-      .select($"lang", lit(null).cast("long").as("d_docs"),
-        lit(null).cast("long").as("d_bytes"), lit(true).as("sentinel"))
-    val flushed = StreamDedup.runStagedStream(spark, Seq(
-        delta.filter($"doc_id" <= cut || $"doc_id".isNull)
-          .select($"lang", $"d_docs", $"d_bytes", lit(false).as("sentinel")),
-        delta.filter($"doc_id" > cut)
-          .select($"lang", $"d_docs", $"d_bytes", lit(false).as("sentinel"))
-          .unionByName(sentinels))) { stream =>
+    // gated property)
+    val flushed = Staged.run(spark, Staged.withBarrier[Delta](Staged.timeCut(delta, $"doc_id"),
+        delta.select($"lang").distinct())) { stream =>
       fold(stream.as[Delta]).toDF()
-    }.getOrElse(spark.emptyDataset[Out].toDF())
+    }
     // the batch operator's null-safe full-outer merge, verbatim: the
     // NULL-lang group reconciles like any other (<=>), base-only
     // languages flow through untouched, delta-only languages insert

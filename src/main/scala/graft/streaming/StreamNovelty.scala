@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of [[graft.operators.TextAnalysis.novelty]] — the
   * corpus novelty curve maintained INCREMENTALLY as documents arrive
@@ -28,36 +27,21 @@ object StreamNovelty {
 
   /** The stateful core: per-gram min-doc state; occurrences from
     * strictly-later docs classify as seen. */
-  def classify(ev: Dataset[GramEv]): Dataset[Occ] = {
-    val spark = ev.sparkSession
-    import spark.implicits._
-    ev.groupByKey(_.gram)
-      .flatMapGroupsWithState[Long, Occ](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (_, it, state: GroupState[Long]) =>
-          var first = state.getOption
-          val out = scala.collection.mutable.ArrayBuffer.empty[Occ]
-          it.toSeq.sortBy(_.doc_id).foreach { e =>
-            out += Occ(e.doc_id, first.exists(_ < e.doc_id))
-            if (!first.exists(_ <= e.doc_id)) first = Some(e.doc_id)
-          }
-          first.foreach(state.update)
-          out.iterator
-      }
-  }
+  def classify(ev: Dataset[GramEv]): Dataset[Occ] =
+    Staged.onArrival(ev)(_.gram, _.doc_id)(Option.empty[Long]) { (first, e) =>
+      (if (first.exists(_ <= e.doc_id)) first else Some(e.doc_id),
+        Some(Occ(e.doc_id, first.exists(_ < e.doc_id))))
+    }
 
   def streamedNovelty(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val index = graft.sources.Tables.documents(spark, dir)
+      .filter($"doc_id".isNotNull)
       .select($"doc_id",
         explode(graft.functions.TextFns.charNGrams($"text", 4)).as("gram"))
-    val bounds = index.agg(min($"doc_id"), max($"doc_id")).head()
-    if (bounds.isNullAt(0)) return spark.emptyDataFrame
-    val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
-    val log = StreamDedup.runStagedStream(spark,
-        Seq(index.filter($"doc_id" <= cut), index.filter($"doc_id" > cut))) { stream =>
+    val log = Staged.run(spark, Staged.timeCut(index, $"doc_id")) { stream =>
       classify(stream.select($"gram", $"doc_id").as[GramEv]).toDF()
-    }.getOrElse(return spark.emptyDataFrame)
+    }
     // the batch operator's per-doc rollup over the streamed verdicts
     log.groupBy($"doc_id")
       .agg(count(lit(1)).as("n_grams"),

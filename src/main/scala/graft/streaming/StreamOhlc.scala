@@ -24,18 +24,14 @@ import org.apache.spark.sql.types.LongType
   * downstream view is part of this operator, not a cheat: append-mode
   * finality is the property that MAKES the sink-side lag well-defined.
   *
-  * Batch-gated run: the two micro-batches cut INSIDE the busiest
+  * Gated property: the two micro-batches cut INSIDE the busiest
   * candle's own [first-event, last-event] span (a median-time cut can
   * land near a day boundary and split no candle at all — the corpus
   * median here falls at 23:48), so at least one candle is GUARANTEED
-  * to carry window state across the cut; two sentinel batches 2 and 4
-  * days past the corpus maximum advance the watermark so every real
-  * day closes and flushes (emission lags one batch — sentinel 1
-  * raises max event time, sentinel 2's batch computes the new
-  * watermark and emits). Sentinels carry event_type "__sentinel__"
-  * and filter out; their own windows never close, which is fine.
-  * Shares ts_ohlc's DuckDB oracle: the streaming emission must equal
-  * the batch groupBy bit-for-bit, close deltas included.
+  * to carry window state across the cut. The watermark markers carry
+  * event_type "__sentinel__" and filter out. Shares ts_ohlc's DuckDB
+  * oracle: the streaming emission must equal the batch groupBy
+  * bit-for-bit, close deltas included.
   */
 object StreamOhlc {
 
@@ -62,26 +58,13 @@ object StreamOhlc {
   def streamedOhlc(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val ev = graft.sources.Tables.events(spark, dir)
-      .filter($"value".isNotNull)   // the batch ohlc null contract
+      .filter($"value".isNotNull && $"ts".isNotNull)   // the batch ohlc null contract
       .select($"event_id", $"ts", $"event_type", $"value")
-    val bounds = ev.agg(min(unix_micros($"ts")), max(unix_micros($"ts"))).head()
-    if (bounds.isNullAt(0)) return spark.emptyDataFrame
-    val hiUs = bounds.getLong(1)
-    val cutUs = straddlingCut(spark, dir).getOrElse((bounds.getLong(0) + hiUs) / 2)
-    val dayUs = 86400000000L
-    def sentinel(offsetUs: Long): DataFrame =
-      spark.range(1).select(
-        lit(-1L).as("event_id"),
-        timestamp_micros(lit(hiUs + offsetUs)).as("ts"),
-        lit("__sentinel__").as("event_type"),
-        lit(0.0d).as("value"))
-    // sentinel 1 rides the last data batch — identical emitted set,
-    // one micro-batch cheaper (see StreamXcorr's staging note, r14)
-    val candles = StreamDedup.runStagedStream(spark, Seq(
-        ev.filter(unix_micros($"ts") <= cutUs),
-        ev.filter(unix_micros($"ts") > cutUs)
-          .unionByName(sentinel(2L * dayUs)),
-        sentinel(4L * dayUs))) { stream =>
+    def marker(us: Long): DataFrame =
+      spark.range(1).select(lit(-1L).as("event_id"), timestamp_micros(lit(us)).as("ts"),
+        lit("__sentinel__").as("event_type"), lit(0.0d).as("value"))
+    val candles = Staged.run(spark, Staged.closingWindows(
+        Staged.timeCut(ev, unix_micros($"ts"), straddlingCut(spark, dir)), marker)) { stream =>
       stream
         .withWatermark("ts", "0 seconds")
         .groupBy(window($"ts", "1 day"), $"event_type")
@@ -91,12 +74,12 @@ object StreamOhlc {
           min($"value").as("low"),
           max_by($"value", unix_micros($"ts")).as("close"),
           count(lit(1)).cast(LongType).as("n_events"))
-    }.getOrElse(return spark.emptyDataFrame)
+    }
     // sink-side delta view: candles are final (append mode), so the
     // lag runs over the dimension-sized resampled series, not raw rows
     val bySeries = Window.partitionBy($"event_type").orderBy($"day")
     // null-safe: =!= on a NULL event_type is NULL and would drop
-    // the whole null-type series, not just the sentinels
+    // the whole null-type series, not just the markers
     candles.filter(!($"event_type" <=> "__sentinel__"))
       .select($"event_type", $"window.start".as("day"),
         $"open", $"high", $"low", $"close", $"n_events")

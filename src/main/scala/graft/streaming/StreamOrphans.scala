@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of [[graft.operators.Quality.orphans]] — the
   * referential-integrity audit run at the ingest edge, the way FK
@@ -24,30 +23,20 @@ object StreamOrphans {
 
   private val NShards = 8
 
+  /** The staged child row: `shard` assigns at staging time
+    * (deterministic content hash), so barrier rows can address every
+    * (fk, shard) state cell exactly. */
+  case class Child(fk: String, k: Option[Long], shard: Long, sentinel: Boolean)
   case class V(fk: String, shard: Long, orphan: Long, sentinel: Boolean)
   case class St(n: Long, orph: Long)
   case class Out(fk: String, shard: Long, n_child: Long, n_orphans: Long)
 
   /** The stateful core: per-(fk, shard) row/orphan counters; sentinel
     * flushes. */
-  def census(ev: Dataset[V]): Dataset[Out] = {
-    val spark = ev.sparkSession
-    import spark.implicits._
-    ev.groupByKey(e => (e.fk, e.shard))
-      .flatMapGroupsWithState[St, Out](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case ((fk, shard), it, state: GroupState[St]) =>
-          var s = state.getOption.getOrElse(St(0L, 0L))
-          var flush = false
-          it.foreach { e =>
-            if (e.sentinel) flush = true
-            else s = St(s.n + 1L, s.orph + e.orphan)
-          }
-          state.update(s)
-          if (flush) Iterator.single(Out(fk, shard, s.n, s.orph))
-          else Iterator.empty
-      }
-  }
+  def census(ev: Dataset[V]): Dataset[Out] =
+    Staged.atBarrier(ev)(e => (e.fk, e.shard), _.sentinel)(St(0L, 0L)) { (s, e) =>
+      St(s.n + 1L, s.orph + e.orphan)
+    } { case ((fk, shard), s) => Some(Out(fk, shard, s.n, s.orph)) }
 
   def streamedOrphans(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -60,6 +49,7 @@ object StreamOrphans {
           $"o_custkey".as("k"), xxhash64($"o_orderkey").as("ord")))
         .unionByName(t.events(spark, dir).select(lit("events->customer").as("fk"),
           $"user_id".as("k"), xxhash64($"event_id").as("ord")))
+        .withColumn("shard", pmod(xxhash64($"k"), lit(NShards.toLong)))
     // static parent key sets, unioned and tagged with their edge
     val parents =
       t.orders(spark, dir).select(lit("lineitem->orders").as("fk"), $"o_orderkey".as("pk"))
@@ -68,23 +58,13 @@ object StreamOrphans {
         .unionByName(t.customer(spark, dir).select(lit("events->customer").as("fk"),
           $"c_custkey".as("pk")))
         .distinct()
-    val bounds = children.agg(min($"ord"), max($"ord")).head()
-    if (bounds.isNullAt(0)) return spark.emptyDataFrame
-    val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
-    // shard assigns at staging time (deterministic content hash) so
-    // sentinel rows can address every (fk, shard) state cell exactly
-    def staged(df: DataFrame): DataFrame =
-      df.select($"fk", $"k",
-        pmod(xxhash64($"k"), lit(NShards.toLong)).as("shard"),
-        lit(false).as("sentinel"))
-    val sentinels = spark.range(NShards.toLong).crossJoin(
-        children.select($"fk").distinct())
-      .select($"fk", lit(null).cast("long").as("k"), $"id".as("shard"),
-        lit(true).as("sentinel"))
-    val flushed = StreamDedup.runStagedStream(spark, Seq(
-        staged(children.filter($"ord" <= cut)),
-        staged(children.filter($"ord" > cut))
-          .unionByName(sentinels))) { stream =>
+    // every edge's cells flush, child rows or not: the batch audit
+    // reports each edge
+    val cells = spark.range(NShards.toLong)
+      .crossJoin(Seq("lineitem->orders", "orders->customer", "events->customer").toDF("fk"))
+      .select($"fk", $"id".as("shard"))
+    val flushed = Staged.run(spark,
+        Staged.withBarrier[Child](Staged.timeCut(children, $"ord"), cells)) { stream =>
       // stream-static FK probe per micro-batch, BEFORE the stateful
       // shuffle; sentinels skip the verdict via their flag. The
       // parent key sets scale with the DIMENSION tables (orders keys
@@ -99,9 +79,12 @@ object StreamOrphans {
           when($"pk".isNull, 1L).otherwise(0L).as("orphan"),
           stream("sentinel"))
       census(flagged.as[V]).toDF()
-    }.getOrElse(return spark.emptyDataFrame)
+    }
+    // n_child is NULL for an edge without child rows: the batch SUM
+    // over no rows
     flushed.groupBy($"fk")
-      .agg(sum($"n_child").as("n_child"), sum($"n_orphans").as("n_orphans"))
+      .agg(sum(when($"n_child" > 0L, $"n_child")).as("n_child"),
+        sum($"n_orphans").as("n_orphans"))
       .select($"fk", $"n_child", $"n_orphans")
   }
 }

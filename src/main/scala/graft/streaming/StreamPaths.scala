@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of [[graft.operators.Telemetry.paths]] — the
   * event-path transition matrix run INCREMENTALLY: per-user state is
@@ -29,29 +28,17 @@ object StreamPaths {
       event_type: Option[String])
   case class Edge(user_id: Option[Long], from_type: Option[String],
       to_type: String)
-  // state wrapper: GroupState[Option[String]] would encode Some(None)
+  // state wrapper: Option[Option[String]] would encode Some(None)
   // and "no state" both as null — the wrapper keeps them distinct
   case class Prev(t: Option[String])
 
   /** The stateful core: fold each arrival against the last-seen
     * type; emit a bigram when the arrival's own type is non-null. */
-  def transitions(ev: Dataset[Ev]): Dataset[Edge] = {
-    val spark = ev.sparkSession
-    import spark.implicits._
-    ev.groupByKey(_.user_id)
-      .flatMapGroupsWithState[Prev, Edge](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (uid, it, state: GroupState[Prev]) =>
-          var prev: Option[Prev] = state.getOption
-          val out = scala.collection.mutable.ArrayBuffer.empty[Edge]
-          it.toSeq.sortBy(e => (e.tsUs, e.event_id)).foreach { e =>
-            prev.foreach(p => e.event_type.foreach(t => out += Edge(uid, p.t, t)))
-            prev = Some(Prev(e.event_type))
-          }
-          prev.foreach(state.update)
-          out.iterator
-      }
-  }
+  def transitions(ev: Dataset[Ev]): Dataset[Edge] =
+    Staged.onArrival(ev)(_.user_id, e => (e.tsUs, e.event_id))(Option.empty[Prev]) {
+      (prev, e) => (Some(Prev(e.event_type)),
+        for (p <- prev; t <- e.event_type) yield Edge(e.user_id, p.t, t))
+    }
 
   def streamedPaths(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -59,13 +46,9 @@ object StreamPaths {
       .filter($"ts".isNotNull)
       .select($"user_id", unix_micros($"ts").as("tsUs"), $"event_id",
         $"event_type")
-    val bounds = ev.agg(min($"tsUs"), max($"tsUs")).head()
-    if (bounds.isNullAt(0)) return spark.emptyDataFrame
-    val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
-    val log = StreamDedup.runStagedStream(spark,
-        Seq(ev.filter($"tsUs" <= cut), ev.filter($"tsUs" > cut))) { stream =>
+    val log = Staged.run(spark, Staged.timeCut(ev, $"tsUs")) { stream =>
       transitions(stream.as[Ev]).toDF()
-    }.getOrElse(return spark.emptyDataFrame)
+    }
     // same partial-aggregated rollup as the batch operator
     log.groupBy($"from_type", $"to_type")
       .agg(count(lit(1)).as("n_transitions"),

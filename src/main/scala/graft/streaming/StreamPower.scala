@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of [[graft.operators.Telemetry.powerBudget]] — the
   * battery monitor run LIVE (notes.org: "658 mamps modem
@@ -29,25 +28,10 @@ object StreamPower {
 
   /** The stateful core: per-device (count, cents) fold; sentinel
     * flushes the rollup. O(1) state per device, forever. */
-  def rollup(ev: Dataset[Ev]): Dataset[Out] = {
-    val spark = ev.sparkSession
-    import spark.implicits._
-    ev.groupByKey(_.user_id)
-      .flatMapGroupsWithState[St, Out](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (uid, it, state: GroupState[St]) =>
-          var st = state.getOption.getOrElse(St(0L, 0L, 0L))
-          var flush = false
-          it.foreach { e =>
-            if (e.sentinel) flush = true
-            else st = St(st.n + 1L, st.cents + e.cents.getOrElse(0L),
-              st.nvals + (if (e.cents.isDefined) 1L else 0L))
-          }
-          state.update(st)
-          if (flush) Iterator.single(Out(uid, st.n, st.cents, st.nvals))
-          else Iterator.empty
-      }
-  }
+  def rollup(ev: Dataset[Ev]): Dataset[Out] =
+    Staged.atBarrier(ev)(_.user_id, _.sentinel)(St(0L, 0L, 0L)) { (st, e) =>
+      St(st.n + 1L, st.cents + e.cents.getOrElse(0L), st.nvals + e.cents.size)
+    } { (uid, st) => Some(Out(uid, st.n, st.cents, st.nvals)) }
 
   def streamedPower(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -59,23 +43,10 @@ object StreamPower {
     val ev = graft.sources.Tables.events(spark, dir)
       .select($"user_id", unix_micros($"ts").as("tsUs"),
         (graft.operators.dec($"value") * 100).cast("long").as("cents"))
-    val bounds = ev.agg(min($"tsUs"), max($"tsUs")).head()
-    // all-null ts: every row routes to batch 1 (the batch shape has no
-    // ts filter); truly empty corpus flows through the zero-trigger
-    // staging fallback into an empty but correctly-shaped rollup
-    val cut = if (bounds.isNullAt(0)) 0L
-      else (bounds.getLong(0) + bounds.getLong(1)) / 2
-    val sentinels = ev.select($"user_id").distinct()
-      .select($"user_id", lit(null).cast("long").as("cents"),
-        lit(true).as("sentinel"))
-    val flushed = StreamDedup.runStagedStream(spark, Seq(
-        ev.filter($"tsUs" <= cut || $"tsUs".isNull)
-          .select($"user_id", $"cents", lit(false).as("sentinel")),
-        ev.filter($"tsUs" > cut)
-          .select($"user_id", $"cents", lit(false).as("sentinel"))
-          .unionByName(sentinels))) { stream =>
+    val flushed = Staged.run(spark, Staged.withBarrier[Ev](Staged.timeCut(ev, $"tsUs"),
+        ev.select($"user_id").distinct())) { stream =>
       rollup(stream.as[Ev]).toDF()
-    }.getOrElse(spark.emptyDataset[Out].toDF())
+    }
     // the batch operator's exact float ladder over the exact sum; a
     // device with ZERO non-null values reports NULL kb (the batch
     // SUM-over-nothing semantics), not 0.0

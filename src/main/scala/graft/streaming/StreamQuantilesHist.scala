@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of [[graft.operators.Relational.qQuantilesHist]] —
   * the mergeable histogram-sketch quantiles run as a LIVE dashboard
@@ -25,34 +24,16 @@ object StreamQuantilesHist {
 
   case class Li(flag: Option[String], bucket: Option[Long], sentinel: Boolean)
   case class Cell(bucket: Option[Long], c: Long)
-  case class St(cells: Seq[Cell])
   case class Out(l_returnflag: Option[String], bucket: Option[Long], c: Long)
 
   /** The stateful core: bucket→count folds per group; the sentinel
     * flushes the census. */
-  def census(rows: Dataset[Li]): Dataset[Out] = {
-    val spark = rows.sparkSession
-    import spark.implicits._
-    rows.groupByKey(_.flag)
-      .flatMapGroupsWithState[St, Out](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (flag, it, state: GroupState[St]) =>
-          var cells = state.getOption.map(_.cells.toList).getOrElse(Nil)
-          var flush = false
-          it.foreach { r =>
-            if (r.sentinel) flush = true
-            else {
-              val i = cells.indexWhere(_.bucket == r.bucket)
-              cells =
-                if (i < 0) Cell(r.bucket, 1L) :: cells
-                else cells.updated(i, cells(i).copy(c = cells(i).c + 1L))
-            }
-          }
-          state.update(St(cells))
-          if (flush) cells.iterator.map(c => Out(flag, c.bucket, c.c))
-          else Iterator.empty
-      }
-  }
+  def census(rows: Dataset[Li]): Dataset[Out] =
+    Staged.atBarrier(rows)(_.flag, _.sentinel)(List.empty[Cell]) { (cells, r) =>
+      val i = cells.indexWhere(_.bucket == r.bucket)
+      if (i < 0) Cell(r.bucket, 1L) :: cells
+      else cells.updated(i, cells(i).copy(c = cells(i).c + 1L))
+    } { (flag, cells) => cells.map(c => Out(flag, c.bucket, c.c)) }
 
   def streamedQuantilesHist(spark: SparkSession, dir: String,
       width: Double = 500.0d): DataFrame = {
@@ -61,20 +42,10 @@ object StreamQuantilesHist {
       .select($"l_returnflag".as("flag"),
         floor($"l_extendedprice" / lit(width)).cast("long").as("bucket"),
         $"l_orderkey")
-    val bounds = li.agg(min($"l_orderkey"), max($"l_orderkey")).head()
-    if (bounds.isNullAt(0)) return spark.emptyDataFrame
-    val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
-    val sentinels = li.select($"flag").distinct()
-      .select($"flag", lit(null).cast("long").as("bucket"),
-        lit(true).as("sentinel"))
-    val flushed = StreamDedup.runStagedStream(spark, Seq(
-        li.filter($"l_orderkey" <= cut)
-          .select($"flag", $"bucket", lit(false).as("sentinel")),
-        li.filter($"l_orderkey" > cut)
-          .select($"flag", $"bucket", lit(false).as("sentinel"))
-          .unionByName(sentinels))) { stream =>
+    val flushed = Staged.run(spark, Staged.withBarrier[Li](Staged.timeCut(li, $"l_orderkey"),
+        li.select($"flag").distinct())) { stream =>
       census(stream.as[Li]).toDF()
-    }.getOrElse(return spark.emptyDataFrame)
+    }
     graft.operators.Relational.quantilesHistAssembly(
       flushed.select($"l_returnflag", $"bucket", $"c"), width)
   }

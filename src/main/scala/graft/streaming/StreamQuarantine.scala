@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.LongType
 
 /** Streaming twin of [[graft.operators.Quality.quarantine]] — the
@@ -17,7 +16,7 @@ import org.apache.spark.sql.types.LongType
   * that never saw a non-NULL flag emits NULL) so the batch-side
   * shard rollup reproduces SUM-over-all-rows exactly; the shared
   * `events_quarantine` oracle gates the 5-row output. Rows crossing
-  * the staged median-time cut must fold into batch-1 shard state.
+  * the micro-batch cut must fold into batch-1 shard state.
   */
 object StreamQuarantine {
 
@@ -39,27 +38,11 @@ object StreamQuarantine {
 
   /** The stateful core: per-shard expectation counters, emitted once
     * at the sentinel. */
-  def census(ev: Dataset[Flags]): Dataset[ShardOut] = {
-    val spark = ev.sparkSession
-    import spark.implicits._
-    ev.groupByKey(_.shard)
-      .flatMapGroupsWithState[ShardState, ShardOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (shard, it, state: GroupState[ShardState]) =>
-          var s = state.getOption.getOrElse(
-            ShardState(None, None, None, None, None, 0L))
-          var flush = false
-          it.foreach { e =>
-            if (e.sentinel) flush = true
-            else s = ShardState(add(s.v1, e.f1), add(s.v2, e.f2),
-              add(s.v3, e.f3), add(s.v4, e.f4), add(s.va, e.fa), s.n + 1L)
-          }
-          state.update(s)
-          if (flush)
-            Iterator.single(ShardOut(shard, s.v1, s.v2, s.v3, s.v4, s.va, s.n))
-          else Iterator.empty
-      }
-  }
+  def census(ev: Dataset[Flags]): Dataset[ShardOut] =
+    Staged.atBarrier(ev)(_.shard, _.sentinel)(ShardState(None, None, None, None, None, 0L)) {
+      (s, e) => ShardState(add(s.v1, e.f1), add(s.v2, e.f2),
+        add(s.v3, e.f3), add(s.v4, e.f4), add(s.va, e.fa), s.n + 1L)
+    } { (shard, s) => Some(ShardOut(shard, s.v1, s.v2, s.v3, s.v4, s.va, s.n)) }
 
   def streamedQuarantine(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -70,33 +53,17 @@ object StreamQuarantine {
     val c4 = $"ts" < to_timestamp(lit("2024-01-01")) ||
       $"ts" >= to_timestamp(lit("2024-02-01"))
     // NULL-ts rows must still stream (the batch COUNT(*) counts
-    // them): they ride in batch 1 via the coalesced cut key
+    // them): they ride in batch 1
     val ev = ev0.select(
       coalesce(pmod($"event_id", lit(NShards.toLong)), lit(0L)).as("shard"),
       c1.cast(LongType).as("f1"), c2.cast(LongType).as("f2"),
       c3.cast(LongType).as("f3"), c4.cast(LongType).as("f4"),
       (c1 || c2 || c3 || c4).cast(LongType).as("fa"),
-      coalesce(unix_micros($"ts"), lit(Long.MinValue)).as("tsUs"))
-    // cut from REAL timestamps only: a NULL-ts row's MinValue key
-    // would drag the midpoint so far left the staged cut split
-    // nothing on exactly the adversarial corpus that matters
-    val bounds = ev.filter($"tsUs" =!= Long.MinValue)
-      .agg(min($"tsUs"), max($"tsUs")).head()
-    if (bounds.isNullAt(0)) return spark.emptyDataFrame
-    val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
-    val staged = ev.select($"shard", $"f1", $"f2", $"f3", $"f4", $"fa",
-      lit(false).as("sentinel"), $"tsUs")
-    val sentinels = spark.range(NShards.toLong)
-      .select($"id".as("shard"), lit(null).cast("long").as("f1"),
-        lit(null).cast("long").as("f2"), lit(null).cast("long").as("f3"),
-        lit(null).cast("long").as("f4"), lit(null).cast("long").as("fa"),
-        lit(true).as("sentinel"))
-    val shards = StreamDedup.runStagedStream(spark,
-        Seq(staged.filter($"tsUs" <= cut).drop("tsUs"),
-          staged.filter($"tsUs" > cut).drop("tsUs"),
-          sentinels)) { stream =>
+      unix_micros($"ts").as("tsUs"))
+    val shards = Staged.run(spark, Staged.withBarrier[Flags](Staged.timeCut(ev, $"tsUs"),
+        spark.range(NShards.toLong).select($"id".as("shard")))) { stream =>
       census(stream.as[Flags]).toDF()
-    }.getOrElse(return spark.emptyDataFrame)
+    }
     val nShardRows = shards.groupBy($"shard").count()
       .filter($"count" =!= 1L).count()
     if (nShardRows > 0)

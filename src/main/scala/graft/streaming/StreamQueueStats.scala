@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of [[graft.operators.Telemetry.queueStats]] — the
   * reference's Rx/Tx queue accounting (serial_streaming.lua
@@ -32,42 +31,29 @@ object StreamQueueStats {
 
   /** The stateful core: order-free counter folds; sentinel flushes
     * the report row. */
-  def census(ev: Dataset[Ev]): Dataset[Out] = {
-    val spark = ev.sparkSession
-    import spark.implicits._
-    ev.groupByKey(_.event_type)
-      .flatMapGroupsWithState[St, Out](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (typ, it, state: GroupState[St]) =>
-          var st = state.getOption.getOrElse(St(0L, 0L, 0L, 0L, 0L, 0L, None, None))
-          var flush = false
-          it.foreach { e =>
-            if (e.sentinel) flush = true
-            else {
-              val c = e.cents.getOrElse(0L)
-              st = st.copy(
-                n = st.n + 1L,
-                nv = st.nv + e.cents.size,
-                cents = Math.addExact(st.cents, c),
-                nLost = st.nLost + (if (e.lost.contains(true)) 1L else 0L),
-                nvLost = st.nvLost + (if (e.lost.contains(true)) e.cents.size else 0),
-                centsLost = if (e.lost.contains(true)) Math.addExact(st.centsLost, c)
-                  else st.centsLost,
-                // three-valued: a NULL k (no digits in props) row sets
-                // NEITHER watermark — the batch when(!lost)/when(lost)
-                // both skip it
-                lastSent = if (e.lost.contains(false))
-                  Some(st.lastSent.fold(e.tsUs)(math.max(_, e.tsUs))) else st.lastSent,
-                lastLost = if (e.lost.contains(true))
-                  Some(st.lastLost.fold(e.tsUs)(math.max(_, e.tsUs))) else st.lastLost)
-            }
-          }
-          state.update(st)
-          if (flush) Iterator.single(Out(typ, st.n, st.nv, st.cents,
-            st.nLost, st.nvLost, st.centsLost, st.lastSent, st.lastLost))
-          else Iterator.empty
-      }
-  }
+  def census(ev: Dataset[Ev]): Dataset[Out] =
+    Staged.atBarrier(ev)(_.event_type, _.sentinel)(St(0L, 0L, 0L, 0L, 0L, 0L, None, None)) {
+      (st, e) =>
+        val c = e.cents.getOrElse(0L)
+        st.copy(
+          n = st.n + 1L,
+          nv = st.nv + e.cents.size,
+          cents = Math.addExact(st.cents, c),
+          nLost = st.nLost + (if (e.lost.contains(true)) 1L else 0L),
+          nvLost = st.nvLost + (if (e.lost.contains(true)) e.cents.size else 0),
+          centsLost = if (e.lost.contains(true)) Math.addExact(st.centsLost, c)
+            else st.centsLost,
+          // three-valued: a NULL k (no digits in props) row sets
+          // NEITHER watermark — the batch when(!lost)/when(lost)
+          // both skip it
+          lastSent = if (e.lost.contains(false))
+            Some(st.lastSent.fold(e.tsUs)(math.max(_, e.tsUs))) else st.lastSent,
+          lastLost = if (e.lost.contains(true))
+            Some(st.lastLost.fold(e.tsUs)(math.max(_, e.tsUs))) else st.lastLost)
+    } { (typ, st) =>
+      Some(Out(typ, st.n, st.nv, st.cents, st.nLost, st.nvLost, st.centsLost,
+        st.lastSent, st.lastLost))
+    }
 
   def streamedQueueStats(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -76,22 +62,11 @@ object StreamQueueStats {
       .select($"event_type", unix_micros($"ts").as("tsUs"),
         (regexp_extract($"props", "([0-9]+)", 1).cast("int") > 50)
           .as("lost"),
-        (graft.operators.dec($"value") * 100).cast("long").as("cents"),
-        lit(false).as("sentinel"))
-    val bounds = ev.agg(min($"tsUs"), max($"tsUs")).head()
-    if (bounds.isNullAt(0)) return spark.emptyDataFrame
-    val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
-    val sentinels = ev.select($"event_type").distinct()
-      .select($"event_type", lit(bounds.getLong(1) + 1L).as("tsUs"),
-        lit(null).cast("boolean").as("lost"), lit(null).cast("long").as("cents"),
-        lit(true).as("sentinel"))
-    // the sentinels ride the second data batch: the fold is order-free
-    // and a stream emits only after its whole group is folded, so the
-    // flushed row counts every event of the stream
-    val flushed = StreamDedup.runStagedStream(spark,
-        Seq(ev.filter($"tsUs" <= cut), ev.filter($"tsUs" > cut).unionByName(sentinels))) { stream =>
+        (graft.operators.dec($"value") * 100).cast("long").as("cents"))
+    val flushed = Staged.run(spark, Staged.withBarrier[Ev](Staged.timeCut(ev, $"tsUs"),
+        ev.select($"event_type").distinct())) { stream =>
       census(stream.as[Ev]).toDF()
-    }.getOrElse(return spark.emptyDataFrame)
+    }
     def decCents(c: org.apache.spark.sql.Column) =
       (c.cast("decimal(38,0)") / 100).cast("decimal(38,2)").cast("double")
     flushed.select($"event_type",

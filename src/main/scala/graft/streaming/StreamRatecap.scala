@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of [[graft.operators.Telemetry.rateCap]] — the
   * ingestion throttle run as an ONLINE stateful operator: per
@@ -36,53 +35,23 @@ object StreamRatecap {
     * sentinel. NULL-ts events count toward the total but never enter
     * the keeper set — exactly the batch TopKPairs' null-skipping
     * update (its value, −unix_micros, is null there). */
-  def cap(ev: Dataset[Ev], k: Int): Dataset[CapOut] = {
-    val spark = ev.sparkSession
-    import spark.implicits._
-    ev.groupByKey(e => (e.user_id, e.dayUs))
-      .flatMapGroupsWithState[CapState, CapOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case ((uid, day), it, state: GroupState[CapState]) =>
-          var s = state.getOption.getOrElse(CapState(Nil, 0L))
-          var flush = false
-          it.foreach { e =>
-            if (e.sentinel) flush = true
-            else {
-              val merged = e.tsUs match {
-                case Some(t) => ((t, e.event_id) :: s.kept).sorted.take(k)
-                case None => s.kept
-              }
-              s = CapState(merged, s.total + 1L)
-            }
-          }
-          state.update(s)
-          if (flush)
-            s.kept.zipWithIndex.iterator.map { case ((_, id), i) =>
-              CapOut(uid, day, (i + 1).toLong, id, s.total)
-            }
-          else Iterator.empty
-      }
-  }
+  def cap(ev: Dataset[Ev], k: Int): Dataset[CapOut] =
+    Staged.atBarrier(ev)(e => (e.user_id, e.dayUs), _.sentinel)(CapState(Nil, 0L)) { (s, e) =>
+      CapState(e.tsUs.fold(s.kept)(t => ((t, e.event_id) :: s.kept).sorted.take(k)),
+        s.total + 1L)
+    } { case ((uid, day), s) =>
+      s.kept.zipWithIndex.map { case ((_, id), i) => CapOut(uid, day, (i + 1).toLong, id, s.total) }
+    }
 
   def streamedRatecap(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
     import spark.implicits._
     val ev = graft.sources.Tables.events(spark, dir)
       .select($"user_id", unix_micros(date_trunc("day", $"ts")).as("dayUs"),
         unix_micros($"ts").as("tsUs"), $"event_id")
-    val bounds = ev.agg(min($"tsUs"), max($"tsUs")).head()
-    if (bounds.isNullAt(0)) return spark.emptyDataFrame
-    val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
-    val staged = ev.select($"user_id", $"dayUs", $"tsUs", $"event_id",
-      lit(false).as("sentinel"))
-    val sentinels = ev.select($"user_id", $"dayUs").distinct()
-      .select($"user_id", $"dayUs", lit(null).cast("long").as("tsUs"),
-        lit(-1L).as("event_id"), lit(true).as("sentinel"))
-    val log = StreamDedup.runStagedStream(spark,
-        Seq(staged.filter($"tsUs".isNull || $"tsUs" <= cut),
-          staged.filter($"tsUs" > cut),
-          sentinels)) { stream =>
+    val log = Staged.run(spark, Staged.withBarrier[Ev](Staged.timeCut(ev, $"tsUs"),
+        ev.select($"user_id", $"dayUs").distinct())) { stream =>
       cap(stream.as[Ev], k).toDF()
-    }.getOrElse(return spark.emptyDataFrame)
+    }
     // every (user, day) emits its keepers exactly once: rank 1 must
     // appear once per group or state was replayed/lost
     val bad = log.filter($"rnk" === 1L)

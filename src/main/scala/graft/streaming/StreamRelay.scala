@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.DoubleType
 
 import graft.operators.dec
 
@@ -24,101 +24,22 @@ import graft.operators.dec
   */
 object StreamRelay {
 
-  /** Temp roots awaiting JVM-exit deletion; ONE static hook drains
-    * the registry (a hook per windowedRelay call would accumulate
-    * one thread per invocation in a long-lived application). */
-  private val exitCleanup =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[java.nio.file.Path]()
-  private lazy val exitHookInstalled: Boolean = {
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      import scala.jdk.CollectionConverters._
-      exitCleanup.asScala.toSeq.foreach { d =>
-        try {
-          if (java.nio.file.Files.exists(d)) {
-            val walk = java.nio.file.Files.walk(d)
-            try walk.iterator().asScala.toSeq.reverse
-              .foreach(java.nio.file.Files.deleteIfExists(_))
-            finally walk.close()
-          }
-        } catch { case _: Throwable => () }
-      }
-    }))
-    true
-  }
-  private[graft] def deleteOnExit(p: java.nio.file.Path): Unit = {
-    exitHookInstalled
-    exitCleanup.add(p)
-  }
-
-  private[graft] def deleteTree(roots: java.nio.file.Path*): Unit = {
-    import java.nio.file.Files
-    import scala.jdk.CollectionConverters._
-    roots.filter(Files.exists(_)).foreach { d =>
-      val walk = Files.walk(d)
-      try walk.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-      finally walk.close()
-    }
-  }
-
   /** Windowed rebroadcast with queue accounting: watermark + append
     * mode + parquet sink, driven to completion. A second "barrier"
     * micro-batch carrying one far-future sentinel row pushes the
     * watermark past every real window so append mode flushes them all
-    * — the bounded-input analogue of the stream simply staying open. */
+    * — the bounded-input analogue of the stream simply staying open.
+    * The windows that watermark closes emit in the no-data batch after
+    * the barrier's, so this is the one staged run that keeps no-data
+    * batches on (measured r10: without them the final windows are
+    * lost, 8951 vs 8953 rows at sf0.01). */
   def windowedRelay(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    val tmp = graft.sources.Scratch.tempDir("graft_relay_")
-    // outDir must outlive this call (the returned DataFrame reads it
-    // lazily), but not the JVM: without the exit registration every
-    // invocation would leave a sink directory in /tmp permanently
-    deleteOnExit(tmp)
-    val inDir = tmp.resolve("in"); val outDir = tmp.resolve("out"); val ck = tmp.resolve("ck")
-    // staging or query start can throw (disk full, bad schema): the
-    // input-sized staged copy must not survive such a failure, so the
-    // whole stage+start+drive path cleans up in one try
-    val q =
-      try {
-        Files.createDirectories(inDir)
-        val staged = inDir.resolve("batch0.parquet")
-        Files.copy(Paths.get(s"$dir/events.parquet"), staged,
-          StandardCopyOption.REPLACE_EXISTING)
-        // run the streaming query in a cloned session (shared
-        // SparkContext, independent SQLConf): the stateful aggregation
-        // gets one state store per RowsPerStatePartition rows of the
-        // copy's footer count (see StreamDedup.stateWidth), not the
-        // batch engine's width, without mutating the caller's conf.
-        // The checkpoint is fresh, so the width never changes under a
-        // restart.
-        val ss = spark.newSession()
-        ss.conf.set("spark.sql.shuffle.partitions",
-          StreamDedup.stateWidth(StreamDedup.parquetFooter(spark, staged).rows,
-            spark.sparkContext.defaultParallelism).toString)
-        // no-data micro-batches stay ON here (unlike runStagedStream's
-        // sentinel-flushed twins): the barrier row advances the
-        // watermark in batch N, but the windows that watermark closes
-        // emit in batch N+1 — which has no data. Measured r10:
-        // disabling them loses exactly the final windows
-        // (8951 vs 8953 rows at sf0.01).
-        startAppendRelay(ss, schema, inDir.toString, outDir.toString, ck.toString)
-      } catch {
-        case e: Throwable => deleteTree(tmp); throw e
-      }
-    try {
-      q.processAllAvailable()
-      barrierRow(spark, schema).coalesce(1).write.mode("append").parquet(inDir.toString)
-      q.processAllAvailable()
-    } finally {
-      q.stop()
-      // the staged input copy (full events file) and the checkpoint
-      // are dead once the query stops — delete them so repeated runs
-      // don't accumulate input-sized copies in /tmp
-      deleteTree(inDir, ck)
-    }
-    // null-safe: a NULL event_type window is real output the batch
-    // groupBy keeps; =!= would drop it along with the barrier rows
-    spark.read.parquet(outDir.toString).filter(!($"event_type" <=> BarrierType))
+    val events = spark.read.parquet(s"$dir/events.parquet")
+    Staged.run(spark, Seq(events, barrierRow(spark, events.schema)), noDataBatches = true)(relayWindows)
+      // null-safe: a NULL event_type window is real output the batch
+      // groupBy keeps; =!= would drop it along with the barrier rows
+      .filter(!($"event_type" <=> BarrierType))
   }
 
   /** The relay's streaming query: file source → watermarked 5-minute
@@ -127,19 +48,22 @@ object StreamRelay {
     * (inDir, outDir, ck) resumes from the checkpoint with
     * exactly-once window emission (tested in InfraSpec). */
   def startAppendRelay(ss: SparkSession, schema: org.apache.spark.sql.types.StructType,
-      inDir: String, outDir: String, ck: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    import ss.implicits._
-    val agg = graft.sources.Tables.normalizeEventTs(
-        ss.readStream.schema(schema).parquet(inDir))
-      .withWatermark("ts", "10 minutes")
-      .groupBy(window($"ts", "5 minutes"), $"event_type")
-      .agg(count(lit(1)).as("n_events"), sum(dec($"value")).cast(DoubleType).as("bytes_total"))
-      .select($"window.start".as("window_start"), $"event_type", $"n_events", $"bytes_total")
-    agg.writeStream.outputMode(OutputMode.Append())
+      inDir: String, outDir: String, ck: String): org.apache.spark.sql.streaming.StreamingQuery =
+    relayWindows(ss.readStream.schema(schema).parquet(inDir))
+      .writeStream.outputMode(OutputMode.Append())
       .format("parquet")
       .option("path", outDir)
       .option("checkpointLocation", ck)
       .start()
+
+  /** Raw events → watermarked 5-minute windows per event_type. */
+  private def relayWindows(events: DataFrame): DataFrame = {
+    import events.sparkSession.implicits._
+    graft.sources.Tables.normalizeEventTs(events)
+      .withWatermark("ts", "10 minutes")
+      .groupBy(window($"ts", "5 minutes"), $"event_type")
+      .agg(count(lit(1)).as("n_events"), sum(dec($"value")).cast(DoubleType).as("bytes_total"))
+      .select($"window.start".as("window_start"), $"event_type", $"n_events", $"bytes_total")
   }
 
   val BarrierType = "__barrier"
@@ -169,18 +93,18 @@ object StreamRelay {
     * receive→parse→throttle path as one streaming plan. Drives the
     * query synchronously into a durable parquet sink (RAM scratch)
     * and returns a lazy scan of it — the driver never holds the
-    * emitted rows (same posture as StreamDedup.runStagedStream). */
+    * emitted rows (same posture as [[Staged.run]]). */
   def frameIngest(spark: SparkSession, framesPath: String): org.apache.spark.sql.DataFrame = {
     val schema = spark.read.parquet(framesPath).schema
     val throttled = parseAndThrottle(
       spark.readStream.schema(schema).parquet(framesPath))
     val outDir = graft.sources.Scratch.tempDir("graft_fingest_")
-    deleteOnExit(outDir)
+    graft.sources.Scratch.deleteOnExit(outDir)
     val ck = graft.sources.Scratch.tempDir("graft_fingest_ck_")
     val q = throttled.writeStream.outputMode("append").format("parquet")
       .option("path", outDir.toString)
       .option("checkpointLocation", ck.toString).start()
-    try q.processAllAvailable() finally { q.stop(); deleteTree(ck) }
+    try q.processAllAvailable() finally { q.stop(); graft.sources.Scratch.deleteTree(ck) }
     spark.read.schema(throttled.schema).parquet(outDir.toString)
   }
 
@@ -253,24 +177,14 @@ object StreamRelay {
     * event-time-buffered variant would need a watermark + timer like
     * [[sessionClose]]). Per-key state is one boolean and lives for
     * the stream's lifetime, the gate's actual semantics. */
-  def statefulGate(events: Dataset[GateEvent]): Dataset[GateOut] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[Boolean, GateOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (_, evs, state: GroupState[Boolean]) =>
-          var on = state.getOption.getOrElse(false)
-          val out = evs.toSeq.sortBy(e => (e.ts_us, e.event_id)).flatMap { e =>
-            e.event_type match {
-              case "signup" => on = true; None
-              case "error" => on = false; None
-              case _ => Some(GateOut(e.user_id, e.event_id, on))
-            }
-          }
-          state.update(on)
-          out.iterator
+  def statefulGate(events: Dataset[GateEvent]): Dataset[GateOut] =
+    Staged.onArrival(events)(_.user_id, e => (e.ts_us, e.event_id))(false) { (on, e) =>
+      e.event_type match {
+        case "signup" => (true, None)
+        case "error" => (false, None)
+        case _ => (on, Some(GateOut(e.user_id, e.event_id, on)))
       }
-  }
+    }
 
   case class ConfigOut(user_id: Long, event_id: Long, gate_on: Boolean,
       in_restart: Boolean, forwarded: Boolean)
@@ -281,32 +195,21 @@ object StreamRelay {
     * blackout until ts + restartUs; data events are tagged with
     * (gate, in-restart, forwarded) at their event time. Two-field
     * state per key; same delivery contract as [[statefulGate]]. */
-  def statefulConfigGate(events: Dataset[GateEvent], restartUs: Long): Dataset[ConfigOut] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[(Boolean, Long), ConfigOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (_, evs, state: GroupState[(Boolean, Long)]) =>
-          var (on, blackoutUntil) = state.getOption.getOrElse((false, Long.MinValue))
-          val ordered = evs.toSeq.sortBy(e =>
-            (e.ts_us,
-              if (e.event_type == "signup" || e.event_type == "error" ||
-                e.event_type == "purchase") 0 else 1,
-              e.event_id))
-          val out = ordered.flatMap { e =>
-            e.event_type match {
-              case "signup" => on = true; None
-              case "error" => on = false; None
-              case "purchase" => blackoutUntil = e.ts_us + restartUs; None
-              case _ =>
-                val inRestart = blackoutUntil > e.ts_us
-                Some(ConfigOut(e.user_id, e.event_id, on, inRestart, on && !inRestart))
-            }
-          }
-          state.update((on, blackoutUntil))
-          out.iterator
+  def statefulConfigGate(events: Dataset[GateEvent], restartUs: Long): Dataset[ConfigOut] =
+    Staged.onArrival(events)(_.user_id, e => (e.ts_us,
+        if (e.event_type == "signup" || e.event_type == "error" ||
+          e.event_type == "purchase") 0 else 1,
+        e.event_id))((false, Long.MinValue)) { case ((on, blackoutUntil), e) =>
+      e.event_type match {
+        case "signup" => ((true, blackoutUntil), None)
+        case "error" => ((false, blackoutUntil), None)
+        case "purchase" => ((on, e.ts_us + restartUs), None)
+        case _ =>
+          val inRestart = blackoutUntil > e.ts_us
+          ((on, blackoutUntil),
+            Some(ConfigOut(e.user_id, e.event_id, on, inRestart, on && !inRestart)))
       }
-  }
+    }
 
   case class DelayedOut(user_id: Long, event_id: Long, enabled: Boolean, pending: Boolean)
   /** (current status, pending target, pending apply time µs) — apply
@@ -326,65 +229,42 @@ object StreamRelay {
     * [[statefulGate]]: micro-batches arrive in event-time order per
     * key. */
   def statefulDelayed(events: Dataset[GateEvent], tauUnitUs: Long): Dataset[DelayedOut] = {
-    import events.sparkSession.implicits._
     val none = Long.MinValue
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[DelayedState, DelayedOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (_, evs, state: GroupState[DelayedState]) =>
-          var st = state.getOption.getOrElse(DelayedState(0, 0, none))
-          def firePending(t: Long): Unit =
-            if (st.pendApplyUs != none && st.pendApplyUs <= t)
-              st = DelayedState(st.pendTarget, 0, none)
-          // controls sort ahead of data at the same instant (the
-          // batch plan's kind order: apply 0, arrival 1, data 2)
-          val ordered = evs.toSeq.sortBy(e =>
-            (e.ts_us, if (e.event_type == "signup" || e.event_type == "error") 0 else 1,
-              e.event_id))
-          val out = ordered.flatMap { e =>
-            firePending(e.ts_us)
-            e.event_type match {
-              case "signup" | "error" =>
-                val target = if (e.event_type == "signup") 1 else 0
-                val tau = (e.event_id % 4) * tauUnitUs
-                st = if (tau <= 0) DelayedState(target, 0, none)
-                     else DelayedState(st.cur, target, e.ts_us + tau)
-                None
-              case _ =>
-                Some(DelayedOut(e.user_id, e.event_id, st.cur == 1,
-                  st.pendApplyUs != none && st.pendApplyUs > e.ts_us))
-            }
-          }
-          state.update(st)
-          out.iterator
+    // controls sort ahead of data at the same instant (the batch
+    // plan's kind order: apply 0, arrival 1, data 2)
+    Staged.onArrival(events)(_.user_id, e => (e.ts_us,
+        if (e.event_type == "signup" || e.event_type == "error") 0 else 1,
+        e.event_id))(DelayedState(0, 0, none)) { (st0, e) =>
+      val st = if (st0.pendApplyUs != none && st0.pendApplyUs <= e.ts_us)
+        DelayedState(st0.pendTarget, 0, none) else st0
+      e.event_type match {
+        case "signup" | "error" =>
+          val target = if (e.event_type == "signup") 1 else 0
+          val tau = (e.event_id % 4) * tauUnitUs
+          (if (tau <= 0) DelayedState(target, 0, none)
+           else DelayedState(st.cur, target, e.ts_us + tau), None)
+        case _ =>
+          (st, Some(DelayedOut(e.user_id, e.event_id, st.cur == 1,
+            st.pendApplyUs != none && st.pendApplyUs > e.ts_us)))
       }
+    }
   }
 
   /** Per-user transmission budget as streaming state: events pass
     * through until the cumulative KB crosses the budget, then the
     * stream for that user shuts down (reference: 100 MB shutdown). */
-  def statefulBudget(events: Dataset[RelayEvent], budgetKb: Double): Dataset[Emitted] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[Double, Emitted](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (_, evs, state: GroupState[Double]) =>
-          var cum = state.getOption.getOrElse(0.0)
-          // batch-internal ordering: event time (stable across runs);
-          // prefix-sum-then-filter matches Telemetry.dataBudget exactly
-          val out = evs.toSeq.sortBy(_.ts_us).flatMap { e =>
-            cum += e.kb
-            if (cum <= budgetKb) Some(Emitted(e.user_id, e.ts_us, cum)) else None
-          }
-          state.update(cum)
-          out.iterator
-      }
-  }
+  def statefulBudget(events: Dataset[RelayEvent], budgetKb: Double): Dataset[Emitted] =
+    // batch-internal ordering: event time (stable across runs);
+    // prefix-sum-then-filter matches Telemetry.dataBudget exactly
+    Staged.onArrival(events)(_.user_id, _.ts_us)(0.0) { (cum0, e) =>
+      val cum = cum0 + e.kb
+      (cum, if (cum <= budgetKb) Some(Emitted(e.user_id, e.ts_us, cum)) else None)
+    }
 
   // user_id/cents are Option: the batch window keeps the NULL-user
   // partition, and a NULL value leaves the running SUM unchanged —
   // with an all-NULL prefix the window sum itself is NULL and the
-  // WHERE excludes the row, which the `started` flag reproduces
+  // WHERE excludes the row, which a None running total reproduces
   case class BudgetEvent(event_id: Long, user_id: Option[Long], ts_us: Long, cents: Option[Long])
   case class BudgetOut(event_id: Long, user_id: Option[Long], ts_us: Long, cum_cents: Long)
 
@@ -394,24 +274,12 @@ object StreamRelay {
     * last ulp), ties at the same µs order by event_id — the same
     * (ts, event_id) total order the batch window uses. */
   def incrementalBudget(events: Dataset[BudgetEvent],
-      budgetCents: Long): Dataset[BudgetOut] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[Long, BudgetOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (_, evs, state: GroupState[Long]) =>
-          var started = state.exists
-          var cum = state.getOption.getOrElse(0L)
-          val out = evs.toSeq.sortBy(e => (e.ts_us, e.event_id)).flatMap { e =>
-            e.cents.foreach { c => cum += c; started = true }
-            if (started && cum <= budgetCents)
-              Some(BudgetOut(e.event_id, e.user_id, e.ts_us, cum))
-            else None
-          }
-          if (started) state.update(cum)
-          out.iterator
-      }
-  }
+      budgetCents: Long): Dataset[BudgetOut] =
+    Staged.onArrival(events)(_.user_id, e => (e.ts_us, e.event_id))(Option.empty[Long]) {
+      (cum0, e) =>
+        val cum = e.cents.fold(cum0)(c => Some(cum0.getOrElse(0L) + c))
+        (cum, cum.filter(_ <= budgetCents).map(BudgetOut(e.event_id, e.user_id, e.ts_us, _)))
+    }
 
   /** STREAMING data budget, batch-gated (`stream_budget`): the events
     * table staged as two median-time micro-batches through
@@ -430,15 +298,12 @@ object StreamRelay {
     val budgetCents = new java.math.BigDecimal(budgetKb)
       .movePointRight(2).longValueExact()
     val ev = graft.sources.Tables.events(spark, dir)
+      .filter($"ts".isNotNull)
       .select($"event_id", $"user_id", unix_micros($"ts").as("ts_us"),
         round($"value" * 100).cast(LongType).as("cents"))
-    val bounds = ev.agg(min($"ts_us"), max($"ts_us")).head()
-    if (bounds.isNullAt(0)) return spark.emptyDataset[BudgetOut].toDF()
-    val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
-    val log = StreamDedup.runStagedStream(spark,
-        Seq(ev.filter($"ts_us" <= cut), ev.filter($"ts_us" > cut))) { stream =>
+    val log = Staged.run(spark, Staged.timeCut(ev, $"ts_us")) { stream =>
       incrementalBudget(stream.as[BudgetEvent], budgetCents).toDF()
-    }.getOrElse(return spark.emptyDataset[BudgetOut].toDF())
+    }
     val w = Window.partitionBy($"user_id").orderBy($"ts_us".asc, $"event_id".asc)
     // values are non-negative, so a DECREASE can only mean the running
     // total restarted (lost state); equality is legal — zero-value

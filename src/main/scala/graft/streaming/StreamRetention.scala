@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of [[graft.operators.Telemetry.retention]] — the
   * cohort retention matrix maintained INCREMENTALLY: per-user state
@@ -27,35 +26,17 @@ object StreamRetention {
 
   /** The stateful core: fold signup/activity weeks per user, emit the
     * user's retention cells once at the sentinel. */
-  def cells(ev: Dataset[Ev]): Dataset[Cell] = {
-    val spark = ev.sparkSession
-    import spark.implicits._
-    ev.groupByKey(_.user_id)
-      .flatMapGroupsWithState[RState, Cell](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (uid, it, state: GroupState[RState]) =>
-          var s = state.getOption.getOrElse(RState(None, Nil))
-          var flush = false
-          it.foreach { e =>
-            if (e.sentinel) flush = true
-            else {
-              if (e.isSignup && !s.signupWeekUs.exists(_ <= e.weekUs))
-                s = s.copy(signupWeekUs = Some(e.weekUs))
-              if (!s.weeks.contains(e.weekUs))
-                s = s.copy(weeks = s.weeks :+ e.weekUs)
-            }
-          }
-          state.update(s)
-          if (flush) s.signupWeekUs match {
-            case Some(c) =>
-              s.weeks.filter(_ >= c).map { w =>
-                Cell(c, (w - c) / (7L * 86400000000L), uid)
-              }.iterator
-            case None => Iterator.empty
-          }
-          else Iterator.empty
-      }
-  }
+  def cells(ev: Dataset[Ev]): Dataset[Cell] =
+    Staged.atBarrier(ev)(_.user_id, _.sentinel)(RState(None, Nil)) { (s, e) =>
+      RState(
+        if (e.isSignup && !s.signupWeekUs.exists(_ <= e.weekUs)) Some(e.weekUs)
+        else s.signupWeekUs,
+        if (s.weeks.contains(e.weekUs)) s.weeks else s.weeks :+ e.weekUs)
+    } { (uid, s) =>
+      s.signupWeekUs.toSeq.flatMap(c => s.weeks.filter(_ >= c).map { w =>
+        Cell(c, (w - c) / (7L * 86400000000L), uid)
+      })
+    }
 
   def streamedRetention(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -67,20 +48,10 @@ object StreamRetention {
         // bare comparison NPEs the non-nullable encoder field
         coalesce($"event_type" === "signup", lit(false)).as("isSignup"),
         unix_micros($"ts").as("tsUs"))
-    val bounds = ev.agg(min($"tsUs"), max($"tsUs")).head()
-    if (bounds.isNullAt(0)) return spark.emptyDataFrame
-    val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
-    val staged = ev.select($"user_id", $"weekUs", $"isSignup",
-      lit(false).as("sentinel"), $"tsUs")
-    val sentinels = ev.select($"user_id").distinct()
-      .select($"user_id", lit(0L).as("weekUs"), lit(false).as("isSignup"),
-        lit(true).as("sentinel"))
-    val log = StreamDedup.runStagedStream(spark,
-        Seq(staged.filter($"tsUs" <= cut).drop("tsUs"),
-          staged.filter($"tsUs" > cut).drop("tsUs"),
-          sentinels)) { stream =>
+    val log = Staged.run(spark, Staged.withBarrier[Ev](Staged.timeCut(ev, $"tsUs"),
+        ev.select($"user_id").distinct())) { stream =>
       cells(stream.as[Ev]).toDF()
-    }.getOrElse(return spark.emptyDataFrame)
+    }
     // the batch operator's own rollup over the flushed cells
     log.groupBy(timestamp_micros($"cohort_us").as("cohort_week"),
         $"week_offset")

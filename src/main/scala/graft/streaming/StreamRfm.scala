@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of [[graft.operators.Telemetry.rfm]] — the
   * recency/frequency/monetary segmentation maintained LIVE: per-user
@@ -32,27 +31,11 @@ object StreamRfm {
 
   /** The stateful core: order-free (max, count, sum) folds; sentinel
     * (event_id = −1) flushes the census row. */
-  def census(ev: Dataset[Ev]): Dataset[Out] = {
-    val spark = ev.sparkSession
-    import spark.implicits._
-    ev.groupByKey(_.user_id)
-      .flatMapGroupsWithState[St, Out](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (uid, it, state: GroupState[St]) =>
-          var st = state.getOption.orNull
-          var flush = false
-          it.foreach { e =>
-            if (e.event_id == -1L) flush = true
-            else st =
-              if (st == null) St(e.tsUs, 1L, e.purchase_cents.getOrElse(0L))
-              else St(math.max(st.lastUs, e.tsUs), st.freq + 1L,
-                Math.addExact(st.cents, e.purchase_cents.getOrElse(0L)))
-          }
-          if (st != null) state.update(st)
-          if (flush && st != null) Iterator.single(Out(uid, st.lastUs, st.freq, st.cents))
-          else Iterator.empty
-      }
-  }
+  def census(ev: Dataset[Ev]): Dataset[Out] =
+    Staged.atBarrier(ev)(_.user_id, _.event_id == -1L)(St(Long.MinValue, 0L, 0L)) { (st, e) =>
+      St(math.max(st.lastUs, e.tsUs), st.freq + 1L,
+        Math.addExact(st.cents, e.purchase_cents.getOrElse(0L)))
+    } { (uid, st) => if (st.freq > 0L) Some(Out(uid, st.lastUs, st.freq, st.cents)) else None }
 
   def streamedRfm(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -61,16 +44,10 @@ object StreamRfm {
       .select($"user_id", unix_micros($"ts").as("tsUs"), $"event_id",
         when($"event_type" === "purchase",
           (graft.operators.dec($"value") * 100).cast("long")).as("purchase_cents"))
-    val bounds = ev.agg(min($"tsUs"), max($"tsUs")).head()
-    if (bounds.isNullAt(0)) return spark.emptyDataFrame
-    val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
-    val sentinels = ev.select($"user_id").distinct()
-      .select($"user_id", lit(bounds.getLong(1) + 1L).as("tsUs"),
-        lit(-1L).as("event_id"), lit(null).cast("long").as("purchase_cents"))
-    val flushed = StreamDedup.runStagedStream(spark,
-        Seq(ev.filter($"tsUs" <= cut), ev.filter($"tsUs" > cut), sentinels)) { stream =>
+    val flushed = Staged.run(spark, Staged.withBarrier[Ev](Staged.timeCut(ev, $"tsUs"),
+        ev.select($"user_id").distinct().withColumn("event_id", lit(-1L)))) { stream =>
       census(stream.as[Ev]).toDF()
-    }.getOrElse(return spark.emptyDataFrame)
+    }
     graft.operators.Telemetry.rfmAssembly(
       flushed.select($"user_id", $"last_us", $"frequency",
         ($"cents".cast("decimal(18,0)") / 100)

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of [[graft.operators.Telemetry.seasonal]] — the
   * hour-of-day profile maintained INCREMENTALLY: state is one counter
@@ -22,21 +21,10 @@ object StreamSeasonal {
 
   /** The stateful core: per-cell counter, emitted once at the
     * sentinel. */
-  def census(ev: Dataset[Cell]): Dataset[CellOut] = {
-    val spark = ev.sparkSession
-    import spark.implicits._
-    ev.groupByKey(e => (e.event_type, e.hod, e.day))
-      .flatMapGroupsWithState[Long, CellOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case ((tp, hod, day), it, state: GroupState[Long]) =>
-          var n = state.getOption.getOrElse(0L)
-          var flush = false
-          it.foreach { e => if (e.sentinel) flush = true else n += 1L }
-          state.update(n)
-          if (flush) Iterator.single(CellOut(tp, hod, day, n))
-          else Iterator.empty
-      }
-  }
+  def census(ev: Dataset[Cell]): Dataset[CellOut] =
+    Staged.atBarrier(ev)(e => (e.event_type, e.hod, e.day), _.sentinel)(0L)((n, _) => n + 1L) {
+      case ((tp, hod, day), n) => Some(CellOut(tp, hod, day, n))
+    }
 
   def streamedSeasonal(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -46,19 +34,10 @@ object StreamSeasonal {
         expr("pmod((unix_micros(ts) - pmod(unix_micros(ts), 3600000000)) DIV 3600000000, 24)").as("hod"),
         expr("(unix_micros(ts) - pmod(unix_micros(ts), 86400000000)) DIV 86400000000").as("day"),
         unix_micros($"ts").as("tsUs"))
-    val bounds = ev.agg(min($"tsUs"), max($"tsUs")).head()
-    if (bounds.isNullAt(0)) return spark.emptyDataFrame
-    val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
-    val staged = ev.select($"event_type", $"hod", $"day",
-      lit(false).as("sentinel"), $"tsUs")
-    val sentinels = ev.select($"event_type", $"hod", $"day").distinct()
-      .select($"event_type", $"hod", $"day", lit(true).as("sentinel"))
-    val cells = StreamDedup.runStagedStream(spark,
-        Seq(staged.filter($"tsUs" <= cut).drop("tsUs"),
-          staged.filter($"tsUs" > cut).drop("tsUs"),
-          sentinels)) { stream =>
+    val cells = Staged.run(spark, Staged.withBarrier[Cell](Staged.timeCut(ev, $"tsUs"),
+        ev.select($"event_type", $"hod", $"day").distinct())) { stream =>
       census(stream.as[Cell]).toDF()
-    }.getOrElse(return spark.emptyDataFrame)
+    }
     // every cell emits exactly once (duplicate/missing = state
     // replayed or lost)
     val bad = cells.groupBy($"event_type", $"hod", $"day").count()
@@ -68,9 +47,8 @@ object StreamSeasonal {
         s"streamed seasonal: $bad cells emitted != once " +
           "(cross-batch census state lost or replayed)")
     // the batch operator's own assembly over the streamed census;
-    // localCheckpoint cuts the memory-sink lineage (byHod feeds both
-    // join sides — self-referencing a MemoryPlan view fails analysis)
-    // and the census is (types × 24)-sized, so the cut is free
+    // localCheckpoint cuts the sink lineage (byHod feeds both join
+    // sides) and the census is (types × 24)-sized, so the cut is free
     val byHod = cells.groupBy($"event_type", $"hod")
       .agg(sum($"n").as("n_events"), count(lit(1)).as("n_days"))
       .localCheckpoint()

@@ -28,11 +28,10 @@ import org.apache.spark.sql.types.DoubleType
   * sum_value but excluded from n_users, exactly the batch
   * count(*)/countDistinct pair.
   *
-  * Batch-gated run: median-time cut (slots straddling the cut carry
-  * window state across it), two past-corpus sentinel batches close
-  * the tail (watermark emission lags one batch); sentinel rows carry
-  * user_id = Long.MinValue and filter out null-safely. Shares
-  * events_sliding's oracle.
+  * Gated property: slots straddling the micro-batch cut carry window
+  * state across it. The watermark markers carry user_id =
+  * Long.MinValue and filter out null-safely. Shares events_sliding's
+  * oracle.
   */
 object StreamSliding {
 
@@ -41,32 +40,17 @@ object StreamSliding {
     val ev = graft.sources.Tables.events(spark, dir)
       .filter($"ts".isNotNull)
       .select($"ts", $"user_id", $"value")
-    val bounds = ev.agg(min(unix_micros($"ts")), max(unix_micros($"ts"))).head()
-    if (bounds.isNullAt(0)) return spark.emptyDataFrame
-    val (loUs, hiUs) = (bounds.getLong(0), bounds.getLong(1))
-    val cutUs = (loUs + hiUs) / 2
-    def sentinel(offsetUs: Long): DataFrame =
-      spark.range(1).select(
-        timestamp_micros(lit(hiUs + offsetUs)).as("ts"),
-        lit(Long.MinValue).as("user_id"),
-        lit(0.0d).as("value"))
-    val cells = StreamDedup.runStagedStream(spark, Seq(
-        ev.filter(unix_micros($"ts") <= cutUs),
-        // 2 h / 3 h past the corpus (not beacon's 1 h/2 h): the last
-        // real 1-hour window can end as late as hi + 1 h, and the
-        // watermark during the final sentinel batch derives from the
-        // PREVIOUS batch's max — it must clear that end strictly.
-        // Sentinel 1 rides the last data batch — identical emitted
-        // set, one micro-batch cheaper (see StreamXcorr, r14)
-        ev.filter(unix_micros($"ts") > cutUs)
-          .unionByName(sentinel(7200000000L)),
-        sentinel(10800000000L))) { stream =>
+    def marker(us: Long): DataFrame =
+      spark.range(1).select(timestamp_micros(lit(us)).as("ts"),
+        lit(Long.MinValue).as("user_id"), lit(0.0d).as("value"))
+    val cells = Staged.run(spark,
+        Staged.closingWindows(Staged.timeCut(ev, unix_micros($"ts")), marker)) { stream =>
       stream
         .withWatermark("ts", "0 seconds")
         .groupBy(window($"ts", "1 hour", "15 minutes").as("w"), $"user_id")
         .agg(count(lit(1)).as("n"),
           sum(graft.operators.dec($"value")).as("sum_dec"))
-    }.getOrElse(return spark.emptyDataFrame)
+    }
     cells.filter(!($"user_id" <=> Long.MinValue))
       .groupBy($"w.start".as("window_start"))
       .agg(sum($"n").as("n_events"),

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of [[graft.operators.Telemetry.streaks]] — the
   * consecutive-day activity streak maintained LIVE, without the
@@ -16,7 +15,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * day" is one comparison); a day gap closes the current streak
   * into the best-election (len desc, start asc — strictly-greater
   * update preserves the earliest start on ties because islands
-  * arrive in start order). Users flush ONCE at a per-user sentinel
+  * arrive in start order). Users flush ONCE at a per-user far-future
   * barrier (the StreamSessions pattern): a streak is only final
   * when the stream ends. Shares events_streak's DuckDB oracle.
   */
@@ -30,63 +29,40 @@ object StreamStreak {
 
   private val usPerDay = 86400000000L
 
+  private def close(s: St): St =
+    if (s.curLen > s.bestLen) s.copy(bestLen = s.curLen, bestStart = s.curStart)
+    else s
+
   /** The stateful core: fold non-decreasing days into the running
     * streak; sentinel (event_id = −1) closes and emits. */
-  def streaks(ev: Dataset[Ev]): Dataset[Out] = {
-    val spark = ev.sparkSession
-    import spark.implicits._
-    def close(s: St): St =
-      if (s.curLen > s.bestLen) s.copy(bestLen = s.curLen, bestStart = s.curStart)
-      else s
-    ev.groupByKey(_.user_id)
-      .flatMapGroupsWithState[St, Out](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (uid, it, state: GroupState[St]) =>
-          var st = state.getOption.orNull
-          val out = scala.collection.mutable.ArrayBuffer.empty[Out]
-          it.toSeq.sortBy(e => (e.tsUs, e.event_id)).foreach { e =>
-            if (e.event_id == -1L) {
-              if (st != null) {
-                val c = close(st)
-                out += Out(uid, c.nDays, c.nStreaks, c.bestLen, c.bestStart)
-              }
-            } else {
-              val day = e.tsUs / usPerDay // post-1970 corpus: exact floor
-              if (st == null)
-                st = St(day, 1L, day, 0L, day, 1L, 1L)
-              else if (day > st.lastDay) {
-                st =
-                  if (day == st.lastDay + 1L)
-                    st.copy(lastDay = day, curLen = st.curLen + 1L,
-                      nDays = st.nDays + 1L)
-                  else {
-                    val c = close(st)
-                    c.copy(lastDay = day, curLen = 1L, curStart = day,
-                      nDays = c.nDays + 1L, nStreaks = c.nStreaks + 1L)
-                  }
-              }
-            }
-          }
-          if (st != null) state.update(st)
-          out.iterator
+  def streaks(ev: Dataset[Ev]): Dataset[Out] =
+    Staged.onArrival(ev)(_.user_id, e => (e.tsUs, e.event_id))(Option.empty[St]) { (st, e) =>
+      if (e.event_id == -1L)
+        (st, st.map(close).map(c => Out(e.user_id, c.nDays, c.nStreaks, c.bestLen, c.bestStart)))
+      else {
+        val day = e.tsUs / usPerDay // post-1970 corpus: exact floor
+        (Some(st match {
+          case None => St(day, 1L, day, 0L, day, 1L, 1L)
+          case Some(s) if day == s.lastDay + 1L =>
+            s.copy(lastDay = day, curLen = s.curLen + 1L, nDays = s.nDays + 1L)
+          case Some(s) if day > s.lastDay =>
+            close(s).copy(lastDay = day, curLen = 1L, curStart = day,
+              nDays = s.nDays + 1L, nStreaks = s.nStreaks + 1L)
+          case Some(s) => s
+        }), None)
       }
-  }
+    }
 
   def streamedStreaks(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val ev = graft.sources.Tables.events(spark, dir)
       .filter($"ts".isNotNull)
       .select($"user_id", unix_micros($"ts").as("tsUs"), $"event_id")
-    val bounds = ev.agg(min($"tsUs"), max($"tsUs")).head()
-    if (bounds.isNullAt(0)) return spark.emptyDataFrame
-    val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
-    val sentinels = ev.select($"user_id").distinct()
-      .select($"user_id", lit(bounds.getLong(1) + usPerDay).as("tsUs"),
-        lit(-1L).as("event_id"))
-    val flushed = StreamDedup.runStagedStream(spark,
-        Seq(ev.filter($"tsUs" <= cut), ev.filter($"tsUs" > cut), sentinels)) { stream =>
-      streaks(stream.as[Ev]).toDF()
-    }.getOrElse(return spark.emptyDataFrame)
+    val flushed = Staged.run(spark, Staged.withBarrier[Ev](Staged.timeCut(ev, $"tsUs"),
+        ev.select($"user_id").distinct()
+          .select($"user_id", lit(Staged.FarFutureUs).as("tsUs"), lit(-1L).as("event_id")))) {
+      stream => streaks(stream.as[Ev]).toDF()
+    }
     // dimension-sized date conversion — same literals as the batch op
     flushed.select($"user_id", $"n_active_days", $"n_streaks", $"best_len",
       date_add(to_date(lit("1970-01-01")),

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.functions.{HashFns, TextFns}
 
@@ -30,54 +29,26 @@ object StreamTopTerms {
   val Shards = 8
 
   case class Tok(shard: Long, term: Option[String], sentinel: Boolean)
-  case class St(counts: Map[String, Long])
   case class Out(term: String, doc_freq: Long)
 
   /** The stateful core: term→count folds per shard; the sentinel
     * flushes the shard's census slice. */
-  def census(rows: Dataset[Tok]): Dataset[Out] = {
-    val spark = rows.sparkSession
-    import spark.implicits._
-    rows.groupByKey(_.shard)
-      .flatMapGroupsWithState[St, Out](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (_, it, state: GroupState[St]) =>
-          var counts = state.getOption.map(_.counts).getOrElse(Map.empty[String, Long])
-          var flush = false
-          it.foreach { r =>
-            if (r.sentinel) flush = true
-            else r.term.foreach { t =>
-              counts = counts.updated(t, counts.getOrElse(t, 0L) + 1L)
-            }
-          }
-          state.update(St(counts))
-          if (flush) counts.iterator.map { case (t, n) => Out(t, n) }
-          else Iterator.empty
-      }
-  }
+  def census(rows: Dataset[Tok]): Dataset[Out] =
+    Staged.atBarrier(rows)(_.shard, _.sentinel)(Map.empty[String, Long]) { (counts, r) =>
+      r.term.fold(counts)(t => counts.updated(t, counts.getOrElse(t, 0L) + 1L))
+    } { (_, counts) => counts.map { case (t, n) => Out(t, n) } }
 
   def streamedTopTerms(spark: SparkSession, dir: String,
       k: Int = 20, w: Int = 1024): DataFrame = {
     import spark.implicits._
-    val docs = graft.sources.Tables.documents(spark, dir)
-    val bounds = docs.agg(min($"doc_id"), max($"doc_id")).head()
-    if (bounds.isNullAt(0)) return spark.emptyDataFrame
-    val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
-    val terms = docs.select($"doc_id",
-        explode(array_distinct(TextFns.tokens($"text"))).as("term"))
-      .select($"doc_id", $"term",
-        pmod(HashFns.polyHash($"term"), lit(Shards.toLong)).as("shard"))
-    val sentinels = spark.range(Shards).select(
-      $"id".as("shard"), lit(null).cast("string").as("term"),
-      lit(true).as("sentinel"))
-    val flushed = StreamDedup.runStagedStream(spark, Seq(
-        terms.filter($"doc_id" <= cut)
-          .select($"shard", $"term", lit(false).as("sentinel")),
-        terms.filter($"doc_id" > cut)
-          .select($"shard", $"term", lit(false).as("sentinel"))
-          .unionByName(sentinels))) { stream =>
+    def terms(docs: DataFrame): DataFrame = docs
+      .select(explode(array_distinct(TextFns.tokens($"text"))).as("term"))
+      .select($"term", pmod(HashFns.polyHash($"term"), lit(Shards.toLong)).as("shard"))
+    val flushed = Staged.run(spark, Staged.withBarrier[Tok](
+        Staged.timeCut(graft.sources.Tables.documents(spark, dir), $"doc_id").map(terms),
+        spark.range(Shards).select($"id".as("shard")))) { stream =>
       census(stream.as[Tok]).toDF()
-    }.getOrElse(return spark.emptyDataFrame)
+    }
     graft.operators.TextAnalysis.cmsTopTermsAssembly(
       flushed.select($"term", $"doc_freq"), k, w)
   }

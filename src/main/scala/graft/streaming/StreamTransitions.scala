@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of [[graft.operators.Telemetry.statusTransitions]]
   * — the SetStatus dwell-time timeline (serial_streaming.lua) run
@@ -12,9 +11,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * that causal: a detected transition is held PENDING (one row per
   * user, O(1) state beside the last-seen type) and emitted the
   * moment the next arrival lands — its timestamp closes the dwell.
-  * The per-user far-future sentinel batch (StreamSessions' barrier
-  * pattern) closes each user's final pending transition with dwell
-  * 0, exactly the batch COALESCE(next_us − us, 0) on the last row.
+  * A per-user far-future barrier row (StreamSessions' pattern) closes
+  * each user's final pending transition with dwell 0, exactly the
+  * batch COALESCE(next_us − us, 0) on the last row.
   *
   * Gated property: a transition PAIR split across the micro-batch
   * cut must come out of cross-batch state, and a pending transition
@@ -44,33 +43,18 @@ object StreamTransitions {
     * transition (dwell = its own timestamp minus the pending row's),
     * then opens one if it changes a non-null state; sentinels
     * (event_id = −1) only close, with dwell 0. */
-  def transitions(ev: Dataset[Ev]): Dataset[Trans] = {
-    val spark = ev.sparkSession
-    import spark.implicits._
-    ev.groupByKey(_.user_id)
-      .flatMapGroupsWithState[St, Trans](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (uid, it, state: GroupState[St]) =>
-          var st = state.getOption.getOrElse(St(None, None))
-          val out = scala.collection.mutable.ArrayBuffer.empty[Trans]
-          it.toSeq.sortBy(e => (e.tsUs, e.event_id)).foreach { e =>
-            if (e.event_id == -1L) {
-              st.pend.foreach(p => out += Trans(uid, p.prev, p.cur, 0L))
-              st = st.copy(pend = None)
-            } else {
-              st.pend.foreach(p => out += Trans(uid, p.prev, p.cur, e.tsUs - p.us))
-              val opened = for {
-                lastT <- st.last.flatMap(_.t)
-                curT <- e.event_type
-                if lastT != curT
-              } yield Pend(lastT, curT, e.tsUs)
-              st = St(Some(Last(e.event_type)), opened)
-            }
-          }
-          state.update(st)
-          out.iterator
-      }
-  }
+  def transitions(ev: Dataset[Ev]): Dataset[Trans] =
+    Staged.onArrival(ev)(_.user_id, e => (e.tsUs, e.event_id))(St(None, None)) { (st, e) =>
+      val barrier = e.event_id == -1L
+      val closed = st.pend.map(p =>
+        Trans(e.user_id, p.prev, p.cur, if (barrier) 0L else e.tsUs - p.us))
+      if (barrier) (st.copy(pend = None), closed)
+      else (St(Some(Last(e.event_type)), for {
+        lastT <- st.last.flatMap(_.t)
+        curT <- e.event_type
+        if lastT != curT
+      } yield Pend(lastT, curT, e.tsUs)), closed)
+    }
 
   def streamedTransitions(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -78,18 +62,13 @@ object StreamTransitions {
       .filter($"ts".isNotNull)
       .select($"user_id", unix_micros($"ts").as("tsUs"), $"event_id",
         $"event_type")
-    val bounds = ev.agg(min($"tsUs"), max($"tsUs")).head()
-    if (bounds.isNullAt(0)) return spark.emptyDataFrame
-    val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
-    // one far-future sentinel per user (NULL user included): the
-    // barrier that closes each user's last pending transition
-    val sentinels = ev.select($"user_id").distinct()
-      .select($"user_id", lit(bounds.getLong(1) + 3600000000L).as("tsUs"),
-        lit(-1L).as("event_id"), lit(null).cast("string").as("event_type"))
-    val log = StreamDedup.runStagedStream(spark,
-        Seq(ev.filter($"tsUs" <= cut), ev.filter($"tsUs" > cut), sentinels)) { stream =>
-      transitions(stream.as[Ev]).toDF()
-    }.getOrElse(return spark.emptyDataFrame)
+    // one far-future barrier per user (NULL user included): it closes
+    // each user's last pending transition
+    val log = Staged.run(spark, Staged.withBarrier[Ev](Staged.timeCut(ev, $"tsUs"),
+        ev.select($"user_id").distinct()
+          .select($"user_id", lit(Staged.FarFutureUs).as("tsUs"), lit(-1L).as("event_id")))) {
+      stream => transitions(stream.as[Ev]).toDF()
+    }
     // same partial-aggregated rollup as the batch operator
     log.groupBy($"prev_type", $"cur_type")
       .agg(count(lit(1)).as("n_transitions"),

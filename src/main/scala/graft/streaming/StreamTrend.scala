@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of [[graft.operators.Telemetry.trend]] — the
   * hourly-volume OLS slope run as a LIVE capacity readout: per stream
@@ -21,35 +20,14 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 object StreamTrend {
 
   case class Ev(event_type: Option[String], h: Long, sentinel: Boolean)
-  case class HourCell(h: Long, y: Long)
-  case class St(cells: Seq[HourCell])
   case class Out(event_type: Option[String], h: Long, y: Long)
 
   /** The stateful core: hour→count census per stream; sentinel
     * flushes. */
-  def census(ev: Dataset[Ev]): Dataset[Out] = {
-    val spark = ev.sparkSession
-    import spark.implicits._
-    ev.groupByKey(_.event_type)
-      .flatMapGroupsWithState[St, Out](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (typ, it, state: GroupState[St]) =>
-          var cells = state.getOption.map(_.cells.toList).getOrElse(Nil)
-          var flush = false
-          it.foreach { e =>
-            if (e.sentinel) flush = true
-            else {
-              val i = cells.indexWhere(_.h == e.h)
-              cells =
-                if (i < 0) HourCell(e.h, 1L) :: cells
-                else cells.updated(i, cells(i).copy(y = cells(i).y + 1L))
-            }
-          }
-          state.update(St(cells))
-          if (flush) cells.iterator.map(c => Out(typ, c.h, c.y))
-          else Iterator.empty
-      }
-  }
+  def census(ev: Dataset[Ev]): Dataset[Out] =
+    Staged.atBarrier(ev)(_.event_type, _.sentinel)(Map.empty[Long, Long]) { (cells, e) =>
+      cells.updated(e.h, cells.getOrElse(e.h, 0L) + 1L)
+    } { (typ, cells) => cells.map { case (h, y) => Out(typ, h, y) } }
 
   def streamedTrend(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -58,20 +36,13 @@ object StreamTrend {
       .select($"event_type",
         expr("(unix_micros(ts) - pmod(unix_micros(ts), 3600000000)) DIV 3600000000").as("h"),
         unix_micros($"ts").as("tsUs"))
-    val bounds = ev.agg(min($"tsUs"), max($"tsUs")).head()
-    if (bounds.isNullAt(0)) return spark.emptyDataFrame
-    val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
-    val sentinels = ev.select($"event_type").distinct()
-      .select($"event_type", lit(0L).as("h"), lit(true).as("sentinel"))
-    val flushed = StreamDedup.runStagedStream(spark, Seq(
-        ev.filter($"tsUs" <= cut).select($"event_type", $"h", lit(false).as("sentinel")),
-        ev.filter($"tsUs" > cut).select($"event_type", $"h", lit(false).as("sentinel"))
-          .unionByName(sentinels))) { stream =>
+    val flushed = Staged.run(spark, Staged.withBarrier[Ev](Staged.timeCut(ev, $"tsUs"),
+        ev.select($"event_type").distinct())) { stream =>
       census(stream.as[Ev]).toDF()
-    }.getOrElse(return spark.emptyDataFrame)
+    }
     // localCheckpoint: the assembly reduces the census to (h0, H)
-    // driver-side, then re-aggregates it — two passes over a
-    // memory-sink view exposing one attribute set
+    // driver-side, then re-aggregates it — two passes over one sink
+    // scan exposing one attribute set
     graft.operators.Telemetry.trendAssembly(
       flushed.select($"event_type", $"h", $"y").localCheckpoint())
   }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.LongType
 
 /** Streaming twin of [[graft.operators.Telemetry.queueTtl]] — the
@@ -33,60 +32,43 @@ object StreamTtl {
       cents: Option[Long], svc_us: Long, outcome: String)
 
   /** Incremental classifier: state per stream = the pending (unsent,
-    * unserviced) messages in arrival order; a sent message services
-    * the whole buffer then emits itself as delivered. Batch-internal
-    * order (t_us, event_id) matches the batch operator's window sort
-    * exactly, so outputs are identical under any staging. */
-  def statefulTtl(events: Dataset[TtlEvent], ttlUs: Long): Dataset[TtlOut] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.event_type)
-      .flatMapGroupsWithState[List[TtlEvent], TtlOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (_, evs, state: GroupState[List[TtlEvent]]) =>
-          var pendingRev = state.getOption.getOrElse(Nil)   // newest first
-          val out = scala.collection.mutable.ArrayBuffer[TtlOut]()
-          evs.toSeq.sortBy(e => (e.t_us, e.event_id)).foreach { e =>
-            if (e.sent) {
-              pendingRev.reverseIterator.foreach { p =>
-                val expired = e.t_us - p.t_us > ttlUs
-                out += TtlOut(p.event_type, p.event_id, p.t_us, p.cents,
-                  e.t_us, if (expired) "expired" else "lost")
-              }
-              pendingRev = Nil
-              out += TtlOut(e.event_type, e.event_id, e.t_us, e.cents,
-                e.t_us, "delivered")
-            } else pendingRev = e :: pendingRev
-          }
-          state.update(pendingRev)
-          out.iterator
-      }
-  }
+    * unserviced) messages in arrival order, newest first; a sent
+    * message services the whole buffer then emits itself as
+    * delivered. Batch-internal order (t_us, event_id) matches the
+    * batch operator's window sort exactly, so outputs are identical
+    * under any staging. */
+  def statefulTtl(events: Dataset[TtlEvent], ttlUs: Long): Dataset[TtlOut] =
+    Staged.onArrival(events)(_.event_type, e => (e.t_us, e.event_id))(List.empty[TtlEvent]) {
+      (pendingRev, e) =>
+        if (!e.sent) (e :: pendingRev, Nil)
+        else (Nil, pendingRev.reverse.map { p =>
+          TtlOut(p.event_type, p.event_id, p.t_us, p.cents, e.t_us,
+            if (e.t_us - p.t_us > ttlUs) "expired" else "lost")
+        } :+ TtlOut(e.event_type, e.event_id, e.t_us, e.cents, e.t_us, "delivered"))
+    }
 
-  /** Batch-gated run (`stream_ttl`): the events table staged as two
-    * median-time micro-batches (pending state must CARRY across the
-    * cut for the tail accounting to be right), sentinel flush rows in
-    * the final batch, then the same per-stream rollup as the batch
-    * operator — sharing queue_ttl's DuckDB oracle. */
+  /** Batch-gated run (`stream_ttl`): pending state must CARRY across
+    * the micro-batch cut for the tail accounting to be right; a flush
+    * row per stream in the final batch, then the same per-stream
+    * rollup as the batch operator — sharing queue_ttl's DuckDB
+    * oracle. */
   def streamedTtl(spark: SparkSession, dir: String,
       ttlSecs: Long = 86400L): DataFrame = {
     import spark.implicits._
     val ttlUs = ttlSecs * 1000000L
     val ev = graft.sources.Tables.events(spark, dir)
+      .filter($"ts".isNotNull)
       .withColumn("k", regexp_extract($"props", "([0-9]+)", 1).cast("int"))
       .select($"event_type", $"event_id", unix_micros($"ts").as("t_us"),
         round($"value" * 100).cast(LongType).as("cents"),
         coalesce($"k" <= 50, lit(false)).as("sent"))
-    val bounds = ev.agg(min($"t_us"), max($"t_us")).head()
-    if (bounds.isNullAt(0)) return spark.emptyDataFrame
-    val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
     val flush = ev.select($"event_type").distinct()
       .select($"event_type", lit(-1L).as("event_id"),
-        lit(Long.MaxValue).as("t_us"), lit(0L).as("cents"), lit(true).as("sent"))
-    val log = StreamDedup.runStagedStream(spark,
-        Seq(ev.filter($"t_us" <= cut),
-          ev.filter($"t_us" > cut).unionByName(flush))) { stream =>
+        lit(Long.MaxValue).as("t_us"), lit(true).as("sent"))
+    val log = Staged.run(spark,
+        Staged.withBarrier[TtlEvent](Staged.timeCut(ev, $"t_us"), flush)) { stream =>
       statefulTtl(stream.as[TtlEvent], ttlUs).toDF()
-    }.getOrElse(return spark.emptyDataFrame)
+    }
     log.filter($"event_id" >= 0L)
       .groupBy($"event_type")
       .agg(

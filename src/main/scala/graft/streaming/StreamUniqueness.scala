@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of [[graft.operators.Quality.uniqueness]] — the
   * candidate-key constraint monitor run ONLINE via RUNNING
@@ -38,43 +37,20 @@ object StreamUniqueness {
     typ: Option[String], tsUs: Option[Long])
   case class Ev(cand: Int, eid: Option[Long], uid: Option[Long],
     typ: Option[String], tsUs: Option[Long])
-  case class St(n: Long)
   case class Mult(cand: Int, m: Long)
 
   /** The stateful core: per-(candidate, key) counter; every arrival
-    * emits the key's new multiplicity. */
-  def multiplicities(ev: Dataset[Ev]): Dataset[Mult] = {
-    val spark = ev.sparkSession
-    import spark.implicits._
-    ev.groupByKey(e => Key(e.cand, e.eid, e.uid, e.typ, e.tsUs))
-      .flatMapGroupsWithState[St, Mult](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (key, it, state: GroupState[St]) =>
-          var n = state.getOption.map(_.n).getOrElse(0L)
-          val out = scala.collection.mutable.ArrayBuffer.empty[Mult]
-          it.foreach { _ =>
-            n += 1L
-            out += Mult(key.cand, n)
-          }
-          state.update(St(n))
-          out.iterator
-      }
-  }
+    * emits the key's new multiplicity (order-free). */
+  def multiplicities(ev: Dataset[Ev]): Dataset[Mult] =
+    Staged.onArrival(ev)(e => Key(e.cand, e.eid, e.uid, e.typ, e.tsUs), _ => 0)(0L) {
+      (n, e) => (n + 1L, Some(Mult(e.cand, n + 1L)))
+    }
 
   def streamedUniqueness(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val ev = graft.sources.Tables.events(spark, dir)
       .select($"event_id", $"user_id", $"event_type",
         unix_micros($"ts").as("tsUs"))
-    val bounds = ev.agg(min($"tsUs"), max($"tsUs")).head()
-    // all-null ts (rows exist): every row routes to batch 1 below, so
-    // the cut value is irrelevant — the audit must still run (the
-    // batch twin has no ts filter; bailing to a zero-column frame
-    // diverged from its 3-row result, ADVICE r8). A truly EMPTY
-    // corpus flows through the zero-trigger staging fallback and
-    // yields the 3 zero-count audit rows, same as the batch shape.
-    val cut = if (bounds.isNullAt(0)) 0L
-      else (bounds.getLong(0) + bounds.getLong(1)) / 2
     // one staged stream carries all three candidates: each source row
     // fans into its three key projections SCAN-LOCAL (the Expand
     // shape — no extra scan, no join)
@@ -86,13 +62,9 @@ object StreamUniqueness {
         |               'typ', CAST(NULL AS STRING), 'tsUs', tsUs),
         |  named_struct('cand', 2, 'eid', CAST(NULL AS BIGINT), 'uid', user_id,
         |               'typ', event_type, 'tsUs', tsUs)))""".stripMargin)
-    // null-ts rows carry no order key; route them into batch 1 (the
-    // batch shape has no ts filter — every row is audited)
-    val log = StreamDedup.runStagedStream(spark, Seq(
-        fan(ev.filter($"tsUs" <= cut || $"tsUs".isNull)),
-        fan(ev.filter($"tsUs" > cut)))) { stream =>
+    val log = Staged.run(spark, Staged.timeCut(ev, $"tsUs").map(fan)) { stream =>
       multiplicities(stream.as[Ev]).toDF()
-    }.getOrElse(spark.emptyDataset[Mult].toDF())
+    }
     // localCheckpoint: three audits re-read the same emission log
     val cp = log.localCheckpoint()
     def audit(cand: Int, name: String): DataFrame = cp.filter($"cand" === cand)

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of [[graft.operators.Dedup.urlDedup]]
   * (`dedup_url_stream`) — the cheapest dedup tier, maintained LIVE:
@@ -10,8 +9,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * the arrival count, and the distinct raw-variant set; every fold is
   * ORDER-FREE (min / + / set-union), so batch boundaries and
   * intra-batch order cannot move the census. Rows flush at the
-  * snapshot barrier (per-key sentinels riding the final data batch,
-  * the StreamQueueStats idiom).
+  * snapshot barrier.
   *
   * Scale posture: state per canonical URL is O(1) + the variant set.
   * Raw variants per canonical key are structurally bounded (they
@@ -41,56 +39,27 @@ object StreamUrlDedup {
   /** The stateful core: order-free (min, count, set) folds; sentinel
     * flushes the census row. */
   def census(ev: Dataset[Ev],
-      overflow: Option[org.apache.spark.util.LongAccumulator] = None): Dataset[Out] = {
-    val spark = ev.sparkSession
-    import spark.implicits._
-    ev.groupByKey(_.canonical_url)
-      .flatMapGroupsWithState[St, Out](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (key, it, state: GroupState[St]) =>
-          var st = state.getOption.getOrElse(St(Long.MaxValue, 0L, Set.empty))
-          var flush = false
-          it.foreach { e =>
-            if (e.sentinel) flush = true
-            else {
-              val vs =
-                if (e.url.isEmpty || st.variants.contains(e.url.get)) st.variants
-                else if (st.variants.size < MaxVariants) st.variants + e.url.get
-                else { overflow.foreach(_.add(1L)); st.variants }
-              st = St(
-                keeper = math.min(st.keeper, e.doc_id.getOrElse(Long.MaxValue)),
-                n = st.n + 1L,
-                variants = vs)
-            }
-          }
-          state.update(st)
-          if (flush) Iterator.single(Out(key, st.keeper, st.n,
-            st.variants.size.toLong))
-          else Iterator.empty
-      }
-  }
+      overflow: Option[org.apache.spark.util.LongAccumulator] = None): Dataset[Out] =
+    Staged.atBarrier(ev)(_.canonical_url, _.sentinel)(St(Long.MaxValue, 0L, Set.empty)) {
+      (st, e) =>
+        val vs =
+          if (e.url.isEmpty || st.variants.contains(e.url.get)) st.variants
+          else if (st.variants.size < MaxVariants) st.variants + e.url.get
+          else { overflow.foreach(_.add(1L)); st.variants }
+        St(keeper = math.min(st.keeper, e.doc_id.getOrElse(Long.MaxValue)),
+          n = st.n + 1L,
+          variants = vs)
+    } { (key, st) => Some(Out(key, st.keeper, st.n, st.variants.size.toLong)) }
 
   def streamedUrlDedup(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val cu = graft.operators.Dedup.canonicalUrls(spark, dir)
-      .select($"canonical_url", $"doc_id", $"url", lit(false).as("sentinel"))
-    val bounds = cu.agg(min($"doc_id"), max($"doc_id")).head()
-    if (bounds.isNullAt(0)) return spark.emptyDataset[Out].toDF()
-      .select($"canonical_url", $"keeper_id", $"n_docs", $"n_raw_variants")
-    val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
-    // per-key sentinels ride the final data batch (order inside a
-    // micro-batch is irrelevant: the fold is order-free and the flush
-    // flag emits after the whole group iterates)
-    val sentinels = cu.select($"canonical_url").distinct()
-      .select($"canonical_url", lit(null).cast("long").as("doc_id"),
-        lit(null).cast("string").as("url"), lit(true).as("sentinel"))
+      .select($"canonical_url", $"doc_id", $"url")
     val dropped = spark.sparkContext.longAccumulator("dedup_url_stream_variant_overflow")
-    val flushed = StreamDedup.runStagedStream(spark, Seq(
-        cu.filter($"doc_id" <= cut),
-        cu.filter($"doc_id" > cut).unionByName(sentinels))) { stream =>
+    val flushed = Staged.run(spark, Staged.withBarrier[Ev](Staged.timeCut(cu, $"doc_id"),
+        cu.select($"canonical_url").distinct())) { stream =>
       census(stream.as[Ev], overflow = Some(dropped)).toDF()
-    }.getOrElse(return spark.emptyDataset[Out].toDF()
-      .select($"canonical_url", $"keeper_id", $"n_docs", $"n_raw_variants"))
+    }
     if (dropped.value > 0)
       throw new IllegalStateException(
         s"dedup_url_stream variant cap truncated ${dropped.value} raw-URL " +

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of [[graft.operators.Quality.volume]] — the volume
   * anomaly monitor fed LIVE: per-type state is the day→count census
@@ -20,35 +19,14 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 object StreamVolume {
 
   case class Ev(event_type: Option[String], dayUs: Long, sentinel: Boolean)
-  case class DayCell(dayUs: Long, n: Long)
-  case class St(cells: Seq[DayCell])
   case class Out(event_type: Option[String], dayUs: Long, n_events: Long)
 
   /** The stateful core: day→count folds per type; sentinel flushes
     * the census. */
-  def census(ev: Dataset[Ev]): Dataset[Out] = {
-    val spark = ev.sparkSession
-    import spark.implicits._
-    ev.groupByKey(_.event_type)
-      .flatMapGroupsWithState[St, Out](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (typ, it, state: GroupState[St]) =>
-          var cells = state.getOption.map(_.cells.toList).getOrElse(Nil)
-          var flush = false
-          it.foreach { e =>
-            if (e.sentinel) flush = true
-            else {
-              val i = cells.indexWhere(_.dayUs == e.dayUs)
-              cells =
-                if (i < 0) DayCell(e.dayUs, 1L) :: cells
-                else cells.updated(i, cells(i).copy(n = cells(i).n + 1L))
-            }
-          }
-          state.update(St(cells))
-          if (flush) cells.iterator.map(c => Out(typ, c.dayUs, c.n))
-          else Iterator.empty
-      }
-  }
+  def census(ev: Dataset[Ev]): Dataset[Out] =
+    Staged.atBarrier(ev)(_.event_type, _.sentinel)(Map.empty[Long, Long]) { (cells, e) =>
+      cells.updated(e.dayUs, cells.getOrElse(e.dayUs, 0L) + 1L)
+    } { (typ, cells) => cells.map { case (d, n) => Out(typ, d, n) } }
 
   def streamedVolume(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -57,27 +35,12 @@ object StreamVolume {
       .select($"event_type",
         unix_micros(date_trunc("day", $"ts")).as("dayUs"),
         unix_micros($"ts").as("tsUs"))
-    val bounds = ev.agg(min($"tsUs"), max($"tsUs")).head()
-    if (bounds.isNullAt(0)) return spark.emptyDataFrame
-    val cut = (bounds.getLong(0) + bounds.getLong(1)) / 2
-    val sentinels = ev.select($"event_type").distinct()
-      .select($"event_type", lit(0L).as("dayUs"),
-        lit(bounds.getLong(1) + 1L).as("tsUs"), lit(true).as("sentinel"))
-    // the sentinel RIDES the final data micro-batch (not a third
-    // batch): the fold is flag-based — it drains the whole batch
-    // iterator before emitting — so the flush still snapshots state
-    // from BOTH batches, and one fewer micro-batch is one less round
-    // of per-trigger planning + state-store commits
-    val flushed = StreamDedup.runStagedStream(spark, Seq(
-        ev.filter($"tsUs" <= cut)
-          .select($"event_type", $"dayUs", lit(false).as("sentinel")),
-        ev.filter($"tsUs" > cut)
-          .select($"event_type", $"dayUs", lit(false).as("sentinel"))
-          .unionByName(sentinels.drop("tsUs")))) { stream =>
+    val flushed = Staged.run(spark, Staged.withBarrier[Ev](Staged.timeCut(ev, $"tsUs"),
+        ev.select($"event_type").distinct())) { stream =>
       census(stream.as[Ev]).toDF()
-    }.getOrElse(return spark.emptyDataFrame)
+    }
     // localCheckpoint: the assembly self-joins the census (stats ×
-    // daily both derive from it) and the memory-sink view exposes ONE
+    // daily both derive from it) and the sink scan exposes ONE
     // attribute set — same rationale as StreamXcorr's census; the
     // frame is day-dimension-sized
     graft.operators.Quality.volumeAssembly(

@@ -24,13 +24,10 @@ import org.apache.spark.sql.functions._
   * join well-defined; the twin exists because the census is the only
   * part of ts_xcorr that touches the firehose.
   *
-  * Batch-gated run: the two micro-batches cut INSIDE the busiest
+  * Gated property: the two micro-batches cut INSIDE the busiest
   * multi-event (type, hour) cell's own [first, last] µs span, so at
-  * least one cell provably carries window state across the cut; two
-  * sentinel batches 2 and 4 hours past the corpus maximum advance
-  * the watermark so every real hour closes and flushes (emission
-  * lags one batch). Sentinels carry event_type "__sentinel__" and
-  * filter out.
+  * least one cell provably carries window state across the cut. The
+  * watermark markers carry event_type "__sentinel__" and filter out.
   */
 object StreamXcorr {
 
@@ -53,49 +50,35 @@ object StreamXcorr {
   /** The shared staged streaming hourly census: (event_type, h, n)
     * final cells, one emission per cell (duplicate emission fails
     * loudly), localCheckpointed so downstream assemblies can
-    * self-join. None on an empty corpus. Both [[streamedXcorr]] and
-    * [[streamedDispersion]] run on this — the census is the only
-    * part of either diagnostic that touches the firehose. */
+    * self-join, with the census hour bounds ((0, −1), no hour, on an
+    * empty census). Both [[streamedXcorr]] and [[streamedDispersion]]
+    * run on this — the census is the only part of either diagnostic
+    * that touches the firehose. */
   private[streaming] def streamedHourlyCensus(spark: SparkSession,
-      dir: String): Option[(DataFrame, Option[(Long, Long)])] = {
+      dir: String): (DataFrame, (Long, Long)) = {
     import spark.implicits._
     val ev = graft.sources.Tables.events(spark, dir)
+      .filter($"ts".isNotNull)
       .select($"ts", $"event_type")
-    val bounds = ev.agg(min(unix_micros($"ts")), max(unix_micros($"ts"))).head()
-    if (bounds.isNullAt(0)) return None
-    val hiUs = bounds.getLong(1)
-    val cutUs = straddlingCut(spark, dir).getOrElse((bounds.getLong(0) + hiUs) / 2)
-    val hourUs = 3600000000L
-    def sentinel(offsetUs: Long): DataFrame =
-      spark.range(1).select(
-        timestamp_micros(lit(hiUs + offsetUs)).as("ts"),
+    def marker(us: Long): DataFrame =
+      spark.range(1).select(timestamp_micros(lit(us)).as("ts"),
         lit("__sentinel__").as("event_type"))
-    // sentinel 1 rides the LAST DATA BATCH (r14): the watermark in
-    // effect during a batch is fixed by the PREVIOUS batch's max
-    // event time, so real cells emit once a later batch runs with the
-    // watermark past their end — advancing it from inside the final
-    // data batch and delivering the emission with ONE final sentinel
-    // batch yields the identical emitted set one micro-batch cheaper
-    // than the old separate 2-sentinel tail
-    val cells = StreamDedup.runStagedStream(spark, Seq(
-        ev.filter(unix_micros($"ts") <= cutUs),
-        ev.filter(unix_micros($"ts") > cutUs)
-          .unionByName(sentinel(2L * hourUs)),
-        sentinel(4L * hourUs))) { stream =>
+    val cells = Staged.run(spark, Staged.closingWindows(
+        Staged.timeCut(ev, unix_micros($"ts"), straddlingCut(spark, dir)), marker)) { stream =>
       stream
         .withWatermark("ts", "0 seconds")
         .groupBy(window($"ts", "1 hour"), $"event_type")
         .agg(count(lit(1)).as("n"))
         .select($"event_type",
           expr("unix_micros(window.start) DIV 3600000000").as("h"), $"n")
-    }.getOrElse(return None)
+    }
     // localCheckpoint: the assemblies self-join the census (distinct
-    // types × dense grid both derive from it) and the memory-sink
-    // view exposes ONE attribute set — DeduplicateRelations can only
+    // types × dense grid both derive from it) and the sink scan
+    // exposes ONE attribute set — DeduplicateRelations can only
     // re-alias a materialized LogicalRDD, so without this the join
     // fails analysis with conflicting references
     // null-safe (<=>): a NULL event_type is a real series the batch
-    // operator groups; =!= would silently drop it with the sentinels
+    // operator groups; =!= would silently drop it with the markers
     val counts = cells.filter(!($"event_type" <=> "__sentinel__"))
       .localCheckpoint()
     // ONE job yields the append-mode finality check AND the census
@@ -111,26 +94,20 @@ object StreamXcorr {
         s"streamed hourly census: ${chk.getLong(0)} (type, hour) cells " +
           "emitted != 1 time (tumbling-window state lost or replayed " +
           "across batches)")
-    val hourBounds = if (chk.isNullAt(1)) None
-      else Some((chk.getLong(1), chk.getLong(2)))
-    Some((counts, hourBounds))
+    (counts, if (chk.isNullAt(1)) (0L, -1L) else (chk.getLong(1), chk.getLong(2)))
   }
 
-  def streamedXcorr(spark: SparkSession, dir: String, maxLag: Int = 3): DataFrame =
-    streamedHourlyCensus(spark, dir)
-      .map { case (c, bounds) =>
-        graft.operators.Telemetry.xcorrFromCounts(spark, c, maxLag, bounds) }
-      .getOrElse(spark.emptyDataFrame)
+  def streamedXcorr(spark: SparkSession, dir: String, maxLag: Int = 3): DataFrame = {
+    val (c, hours) = streamedHourlyCensus(spark, dir)
+    graft.operators.Telemetry.xcorrFromCounts(spark, c, maxLag, Some(hours))
+  }
 
   /** Streaming twin of events_dispersion (`stream_dispersion`): the
     * identical staged census, then the VMR rollup — types × hours of
     * state however large the stream, sharing the batch oracle. */
   def streamedDispersion(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    streamedHourlyCensus(spark, dir)
-      .map { case (c, bounds) =>
-        graft.operators.Telemetry.dispersionFromCounts(
-          spark, c.withColumnRenamed("n", "x"), bounds) }
-      .getOrElse(spark.emptyDataFrame)
+    val (c, hours) = streamedHourlyCensus(spark, dir)
+    graft.operators.Telemetry.dispersionFromCounts(
+      spark, c.withColumnRenamed("n", "x"), Some(hours))
   }
 }

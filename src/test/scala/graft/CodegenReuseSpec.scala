@@ -38,7 +38,7 @@ class CodegenReuseSpec extends SparkSpec {
 
   test("a staged stream's sessions share the executor class loader") {
     val key = "spark.sql.artifact.isolation.enabled"
-    // the session runStagedStream clones, which the twin's result reads from
+    // the session Staged.run clones, which the twin's result reads from
     val staged = SparkEntry.queries("stream_downsample")(spark, sf).sparkSession
     assert(staged ne spark)
     assert(staged.conf.get(key) == "false")
@@ -56,7 +56,7 @@ class CodegenReuseSpec extends SparkSpec {
         }.start()
       try while (seen.isEmpty && q.isActive) q.awaitTermination(100L)
       finally q.stop()
-    } finally graft.streaming.StreamRelay.deleteTree(dir)
+    } finally graft.sources.Scratch.deleteTree(dir)
     val (streamIsolation, streamLoader) = seen.getOrElse(fail("no micro-batch ran"))
     assert(streamIsolation == "false")
     assert(streamLoader == taskLoader(spark.range(1).toDF()))

@@ -1,0 +1,77 @@
+package graft.streaming
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
+import graft.SparkEntry
+
+/** Degenerate corpora behave the same way in every streaming twin:
+  * [[Staged.timeCut]] stages an empty or all-NULL-time corpus as one
+  * batch, so a twin neither bails out with a column-less frame nor
+  * drops the rows its batch twin keeps. */
+class StagedSpec extends graft.SparkSpec {
+
+  private val tables = Seq("region", "nation", "customer", "supplier", "part",
+    "orders", "lineitem", "events", "documents", "embeddings")
+
+  /** The keys graft.Verify dumps as streaming twins. */
+  private val streamKeys = SparkEntry.queries.keys.toSeq.sorted
+    .filter(k => k.startsWith("stream_") || k.endsWith("_stream"))
+
+  /** A copy of the sf0.001 tables, each passed through `f`. */
+  private def corpus(prefix: String)(f: (String, DataFrame) => DataFrame): String = {
+    val dir = graft.sources.Scratch.tempDir(prefix)
+    graft.sources.Scratch.deleteOnExit(dir)
+    tables.foreach { t =>
+      f(t, spark.read.parquet(s"$sf/$t.parquet")).write.parquet(s"$dir/$t.parquet")
+    }
+    dir.toString
+  }
+
+  /** The batch key that shares `twin`'s oracle entry. */
+  private def batchTwin(twin: String): Option[String] =
+    SparkEntry.oracleSql.get(twin).flatMap(sql => SparkEntry.oracleSql.collectFirst {
+      case (k, s) if s == sql && !streamKeys.contains(k) => k
+    })
+
+  private def fields(df: DataFrame) = df.schema.fields.map(f => f.name -> f.dataType).toSeq
+
+  private def rows(df: DataFrame): Seq[String] =
+    df.select(df.columns.sorted.map(col).toSeq: _*).collect()
+      .map(_.toSeq.map(String.valueOf).mkString("|")).toSeq.sorted
+
+  test("empty corpus: every streaming twin returns its sf0.001 columns and its batch twin's rows") {
+    assert(streamKeys.size == 64)
+    val empty = corpus("graft_staged_empty_")((_, df) => df.limit(0))
+    val bad = streamKeys.flatMap { k =>
+      try {
+        val q = SparkEntry.queries(k)
+        val got = q(spark, empty)
+        val want = q(spark, sf)
+        // a twin that shares a batch key's oracle returns what that key
+        // returns on the same corpus (a global aggregate keeps its rows)
+        val wantRows = batchTwin(k).fold(0L)(b => SparkEntry.queries(b)(spark, empty).count())
+        val n = got.count()
+        Seq(
+          Option.when(fields(got) != fields(want))(s"$k columns ${fields(got)} != ${fields(want)}"),
+          Option.when(n != wantRows)(s"$k returned $n rows, want $wantRows")).flatten
+      } catch { case e: Exception => Seq(s"$k threw ${e.getMessage.take(300)}") }
+    }
+    assert(bad.isEmpty, bad.mkString("\n"))
+  }
+
+  test("all-NULL ts: the twins that stage NULL-time rows match their batch twins") {
+    val nullTs = corpus("graft_staged_nullts_") { (t, df) =>
+      if (t == "events") df.withColumn("ts", lit(null).cast(df.schema("ts").dataType)) else df
+    }
+    Seq("stream_basket", "stream_diversity", "stream_downsample", "stream_keyskew",
+        "stream_ratecap").foreach { k =>
+      val b = batchTwin(k)
+      assert(b.nonEmpty, s"$k shares no batch oracle entry")
+      val want = SparkEntry.queries(b.get)(spark, nullTs)
+      val got = SparkEntry.queries(k)(spark, nullTs)
+      assert(got.columns.sorted.toSeq == want.columns.sorted.toSeq, s"$k columns")
+      assert(rows(got) == rows(want), s"$k rows differ from ${b.get}")
+    }
+  }
+}

@@ -19,7 +19,7 @@ import graft.operators.Telemetry
   * [1, defaultParallelism], with rows and schema read off the parquet
   * footers. */
 class StreamWidthSpec extends graft.SparkSpec with Eventually {
-  import StreamDedup.{RowsPerStatePartition => R, stateWidth}
+  import Staged.{RowsPerStatePartition => R, stateWidth}
 
   test("width rule: 0 rows, exactly R, R + 1 and above the cap") {
     assert(stateWidth(0L, 4) == 1)
@@ -40,14 +40,14 @@ class StreamWidthSpec extends graft.SparkSpec with Eventually {
           array(col("id")).as("a"), struct(col("id").as("x")).as("st"),
           lit(1).as("one"))
         .write.parquet(out)
-      val f = StreamDedup.parquetFooter(spark, java.nio.file.Paths.get(out))
+      val f = Staged.parquetFooter(spark, java.nio.file.Paths.get(out))
       assert(f.rows == 1500L)
       assert(f.schema.contains(spark.read.parquet(out).schema))
       // a file from another writer carries no Spark schema: rows only
-      val ev = StreamDedup.parquetFooter(spark, java.nio.file.Paths.get(s"$sf/events.parquet"))
+      val ev = Staged.parquetFooter(spark, java.nio.file.Paths.get(s"$sf/events.parquet"))
       assert(ev.rows == graft.sources.Tables.events(spark, sf).count())
       assert(ev.schema.isEmpty)
-    } finally StreamRelay.deleteTree(dir)
+    } finally graft.sources.Scratch.deleteTree(dir)
   }
 
   /** `body`'s result, and the numShufflePartitions of every stateful
@@ -117,7 +117,7 @@ class StreamWidthSpec extends graft.SparkSpec with Eventually {
         withStateWidths(queueRows(StreamQueueStats.streamedQueueStats(spark, d)))
       assert(queueWidths.forall(_ > 1), s"stream_queue_stats widths $queueWidths")
       assert(queue.nonEmpty && queue == queueRows(Telemetry.queueStats(spark, d)))
-    } finally StreamRelay.deleteTree(dir)
+    } finally graft.sources.Scratch.deleteTree(dir)
   }
 
   test("width 1 at sf0.001") {
