@@ -27,13 +27,8 @@ object Verify {
     def selected[A](m: Map[String, A]): Map[String, A] =
       only.fold(m)(ks => m.filter { case (k, _) => ks(k) })
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the shipped session settings, so the gate checks what runs
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     GraftSession.registerObservationLog(spark)
     new java.io.File(outDir).mkdirs()

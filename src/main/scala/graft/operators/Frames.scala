@@ -278,11 +278,11 @@ object Frames {
     val tmp = graft.sources.Scratch.tempDir("graft_fidx_")
     graft.sources.Scratch.deleteOnExit(tmp)
     rolled.write.mode("overwrite").parquet(s"$tmp/blobs")
-    spark.read.parquet(s"$tmp/blobs")
+    graft.sources.Parquet.read(spark, s"$tmp/blobs")
       .select($"device_id", $"blob_seq", $"min_ts_secs", $"max_ts_secs")
       .write.mode("overwrite").parquet(s"$tmp/index")
 
-    val index = spark.read.parquet(s"$tmp/index")
+    val index = graft.sources.Parquet.read(spark, s"$tmp/index")
     val hits = index
       .filter($"max_ts_secs" >= loSec && $"min_ts_secs" < hiSec)
       .select($"device_id", $"blob_seq")
@@ -295,7 +295,7 @@ object Frames {
 
     val unit = Frame.FrameLen + 1
     val n = (octet_length($"wire") / unit).cast(LongType)
-    spark.read.parquet(s"$tmp/blobs")
+    graft.sources.Parquet.read(spark, s"$tmp/blobs")
       .join(broadcast(hits), Seq("device_id", "blob_seq"))
       .select($"device_id",
         explode(transform(sequence(lit(0L), n - 1),

@@ -55,7 +55,7 @@ object Sinks {
 
   /** Read persisted frames back. */
   def readFrames(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    Parquet.read(spark, path)
 
   /** The partition-pruning contract END-TO-END, oracle-gated
     * (`q_partition_prune`): events write hive-partitioned by
@@ -69,7 +69,7 @@ object Sinks {
   def partitionPrunedRollup(spark: SparkSession, dir: String,
       keep: String = "purchase"): DataFrame = {
     import spark.implicits._
-    val pruned = spark.read.parquet(stagedEventsByType(spark, dir))
+    val pruned = Parquet.read(spark, stagedEventsByType(spark, dir))
       .filter($"event_type" === keep)
       .groupBy($"user_id")
       .agg(count(lit(1)).as("n_events"),
@@ -101,7 +101,7 @@ object Sinks {
     val dim = Tables.events(spark, dir)
       .select($"event_type").distinct()
       .withColumn("is_conversion", $"event_type".isin("purchase", "signup"))
-    val fact = spark.read.parquet(stagedEventsByType(spark, dir))
+    val fact = Parquet.read(spark, stagedEventsByType(spark, dir))
     val out = fact
       .join(broadcast(dim.filter($"is_conversion")), Seq("event_type"))
       .groupBy($"event_type")

@@ -4,14 +4,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Parquet source layer over the driver's test tables.
   *
-  * Plain `spark.read.parquet` keeps Catalyst's parquet pushdown
-  * (PushedFilters / ReadSchema pruning) fully available — every
-  * operator projects/filters before wide transforms so the scan
-  * itself stays narrow at 100 TB.
+  * Each table is read with the schema Spark's own inference would pick,
+  * taken from the file's footer on the driver ([[Parquet.read]]), so a
+  * read starts no schema-inference job. A given schema keeps Catalyst's
+  * parquet pushdown (PushedFilters / ReadSchema pruning) fully
+  * available — every operator projects/filters before wide transforms
+  * so the scan itself stays narrow at 100 TB.
   */
 object Tables {
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    Parquet.read(spark, s"$dir/$name.parquet")
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "orders")

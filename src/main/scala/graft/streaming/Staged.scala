@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path}
+import java.nio.file.Files
 
 import scala.reflect.runtime.universe.TypeTag
 
@@ -8,7 +8,6 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.catalyst.ScalaReflection
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.types.StructType
 
 /** The staging protocol of the batch-gated streaming twins, written
   * once. A twin replays a bounded corpus as a stream: the corpus is
@@ -180,11 +179,12 @@ object Staged {
       // rows and schema from the staged footers, read on the driver;
       // all-empty input wrote no batch dir, so the source points at
       // the (empty) staging root with the input's own schema
-      val footers = batchDirs.map(d => parquetFooter(spark, d))
-      val schema = footers.headOption.flatMap(_.schema).getOrElse(batches.head.schema)
+      val rows = batchDirs.map(d => graft.sources.Parquet.rows(spark, d))
+      val schema = batchDirs.headOption.flatMap(d => graft.sources.Parquet.schema(spark, d.toString))
+        .getOrElse(batches.head.schema)
       val ss = spark.newSession()
       ss.conf.set("spark.sql.shuffle.partitions", stateWidth(
-        footers.map(_.rows).maxOption.getOrElse(0L), spark.sparkContext.defaultParallelism).toString)
+        rows.maxOption.getOrElse(0L), spark.sparkContext.defaultParallelism).toString)
       ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", noDataBatches.toString)
       val transformed = transform(ss.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
@@ -233,44 +233,4 @@ object Staged {
   private[streaming] def stateWidth(rows: Long, cap: Int): Int =
     math.min(math.max((rows + RowsPerStatePartition - 1) / RowsPerStatePartition, 1L),
       cap.toLong).toInt
-
-  /** What a parquet footer says about a file (or every part file of a
-    * directory): total rows, and the Spark schema Spark wrote into the
-    * key-value metadata (None for files from another writer). */
-  private[streaming] case class Footer(rows: Long, schema: Option[StructType])
-
-  /** Read the parquet footers under `path` on the driver — no Spark
-    * job. The schema is made nullable, as Spark's own file read does. */
-  private[streaming] def parquetFooter(spark: SparkSession, path: Path): Footer = {
-    import scala.jdk.CollectionConverters._
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    import org.apache.spark.sql.types.{ArrayType, DataType, MapType}
-    def nullable(t: DataType): DataType = t match {
-      case s: StructType => StructType(s.fields.map(f =>
-        f.copy(dataType = nullable(f.dataType), nullable = true)))
-      case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
-      case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
-      case o => o
-    }
-    val files =
-      if (!Files.isDirectory(path)) Seq(path)
-      else {
-        val ls = Files.list(path)
-        try ls.iterator().asScala.toSeq.filter { p =>
-          val n = p.getFileName.toString
-          n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
-        }.sortBy(_.toString) finally ls.close()
-      }
-    val conf = spark.sparkContext.hadoopConfiguration
-    val facts = files.map { f =>
-      val r = ParquetFileReader.open(
-        HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f.toUri), conf))
-      try (r.getRecordCount, Option(r.getFooter.getFileMetaData.getKeyValueMetaData
-          .get("org.apache.spark.sql.parquet.row.metadata")))
-      finally r.close()
-    }
-    Footer(facts.map(_._1).sum, facts.flatMap(_._2).headOption
-      .map(j => nullable(DataType.fromJson(j)).asInstanceOf[StructType]))
-  }
 }

@@ -35,7 +35,7 @@ object StreamRelay {
     * lost, 8951 vs 8953 rows at sf0.01). */
   def windowedRelay(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val events = spark.read.parquet(s"$dir/events.parquet")
+    val events = graft.sources.Tables.load(spark, dir, "events")
     Staged.run(spark, Seq(events, barrierRow(spark, events.schema)), noDataBatches = true)(relayWindows)
       // null-safe: a NULL event_type window is real output the batch
       // groupBy keeps; =!= would drop it along with the barrier rows
@@ -95,7 +95,8 @@ object StreamRelay {
     * and returns a lazy scan of it — the driver never holds the
     * emitted rows (same posture as [[Staged.run]]). */
   def frameIngest(spark: SparkSession, framesPath: String): org.apache.spark.sql.DataFrame = {
-    val schema = spark.read.parquet(framesPath).schema
+    val schema = graft.sources.Parquet.schema(spark, framesPath)
+      .getOrElse(spark.read.parquet(framesPath).schema)
     val throttled = parseAndThrottle(
       spark.readStream.schema(schema).parquet(framesPath))
     val outDir = graft.sources.Scratch.tempDir("graft_fingest_")

@@ -13,6 +13,7 @@ import org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent
 import org.scalatest.concurrent.Eventually
 
 import graft.operators.Telemetry
+import graft.sources.Parquet
 
 /** The staged gate's stateful shuffle width follows the staged input:
   * `ceil(rows of the largest staged batch / R)`, clamped to
@@ -40,13 +41,11 @@ class StreamWidthSpec extends graft.SparkSpec with Eventually {
           array(col("id")).as("a"), struct(col("id").as("x")).as("st"),
           lit(1).as("one"))
         .write.parquet(out)
-      val f = Staged.parquetFooter(spark, java.nio.file.Paths.get(out))
-      assert(f.rows == 1500L)
-      assert(f.schema.contains(spark.read.parquet(out).schema))
-      // a file from another writer carries no Spark schema: rows only
-      val ev = Staged.parquetFooter(spark, java.nio.file.Paths.get(s"$sf/events.parquet"))
-      assert(ev.rows == graft.sources.Tables.events(spark, sf).count())
-      assert(ev.schema.isEmpty)
+      assert(Parquet.rows(spark, java.nio.file.Paths.get(out)) == 1500L)
+      assert(Parquet.read(spark, out).schema == spark.read.parquet(out).schema)
+      // a file from another writer: rows from its footer too
+      assert(Parquet.rows(spark, java.nio.file.Paths.get(s"$sf/events.parquet")) ==
+        graft.sources.Tables.events(spark, sf).count())
     } finally graft.sources.Scratch.deleteTree(dir)
   }
 
