@@ -41,9 +41,9 @@ object SparkEntry {
     "q_quantiles_approx" -> ((s: SparkSession, d: String) => Relational.qQuantilesApprox(s, d)),
     "q_quantiles_cont" -> (Relational.qQuantilesCont _),
     "q_quantiles_hist" -> ((s: SparkSession, d: String) => Relational.qQuantilesHist(s, d)),
-    // C. streaming twin: the bucket census as order-free state (the
-    // mergeable-sketch property run live), snapshot-barrier flush,
-    // batch cumulative walk over the flushed census
+    // C. streaming twin: the batch bucket census as a complete-mode
+    // streaming aggregation (the mergeable-sketch property run live),
+    // batch cumulative walk over the final census
     "stream_quantiles_hist" -> ((s: SparkSession, d: String) =>
       graft.streaming.StreamQuantilesHist.streamedQuantilesHist(s, d)),
     "q_skewjoin" -> (Relational.qSkewJoin _),
@@ -73,21 +73,22 @@ object SparkEntry {
     // B. notes.org "658 mamps modem transmitting": per-device
     // transmit-energy rollup, data_budget's single-scan shape
     "power_budget" -> ((s: SparkSession, d: String) => Telemetry.powerBudget(s, d)),
-    // B. streaming twin: two order-free integers per device (count,
-    // byte cents), snapshot-barrier flush, batch float ladder
+    // B. streaming twin: the batch rollup (count, exact byte sum,
+    // float ladder) as a complete-mode streaming aggregation
     "stream_power" -> ((s: SparkSession, d: String) =>
       graft.streaming.StreamPower.streamedPower(s, d)),
     "session_windows" -> ((s: SparkSession, d: String) => Telemetry.sessionWindows(s, d)),
     "chunk_messages" -> ((s: SparkSession, d: String) => Telemetry.chunkMessages(s, d)),
     "chunk_reassemble" -> ((s: SparkSession, d: String) => Telemetry.chunkReassemble(s, d)),
-    // B. streaming twin: O(1) per-message (count, bytes) state across
-    // the chunk-parity cut; per-message sentinels flush zero rows for
-    // all-lost messages
+    // B. streaming twin: the batch per-message (count, bytes) receipt
+    // census as a complete-mode streaming aggregation across the
+    // chunk-parity cut; the expected-message left join keeps all-lost
+    // messages
     "stream_chunks" -> ((s: SparkSession, d: String) =>
       graft.streaming.StreamChunks.streamedChunks(s, d)),
     "queue_stats" -> (Telemetry.queueStats _),
-    // B. streaming twin: eight order-free counters per stream (the
-    // Lua proxy's own shape), flushed at the report barrier
+    // B. streaming twin: the batch per-stream counters (the Lua
+    // proxy's own shape) as a complete-mode streaming aggregation
     "stream_queue_stats" -> ((s: SparkSession, d: String) =>
       graft.streaming.StreamQueueStats.streamedQueueStats(s, d)),
     "queue_ttl" -> ((s: SparkSession, d: String) => Telemetry.queueTtl(s, d)),
@@ -101,9 +102,9 @@ object SparkEntry {
     "stream_attr_linear" -> ((s: SparkSession, d: String) =>
       graft.streaming.StreamAttrLinear.streamedAttrLinear(s, d)),
     "events_abtest" -> (Telemetry.abtest _),
-    // B. streaming twin: two arm rows of exact integer power sums
-    // (n, nv, Σcents, Σcents²), flushed at the analysis-cutoff
-    // barrier; DECIMAL reconstruction before the shared t assembly
+    // B. streaming twin: the batch global aggregate of exact DECIMAL
+    // power sums per arm and its Welch-t projection as a
+    // complete-mode streaming aggregation
     "stream_abtest" -> ((s: SparkSession, d: String) =>
       graft.streaming.StreamAbtest.streamedAbtest(s, d)),
     "queue_fairness" -> (Telemetry.queueFairness _),
@@ -125,9 +126,9 @@ object SparkEntry {
     "relay_gate" -> (Telemetry.relayGate _),
     "events_retention" -> (Telemetry.retention _),
     "events_anomaly" -> (Telemetry.anomaly _),
-    // B. streaming twin of the outlier gate: per-user (n, Σx, Σx²)
-    // moments in O(1) integer-cents state across micro-batches,
-    // flushed at a sentinel barrier, then the batch scoring join —
+    // B. streaming twin of the outlier gate: the batch per-user
+    // (n, Σx, Σx²) moments as a complete-mode streaming aggregation
+    // across micro-batches, then the batch scoring join —
     // shares events_anomaly's oracle, so the flags match only if
     // batch-2 arrivals folded into batch-1 moment state
     "stream_anomaly" -> ((s: SparkSession, d: String) =>
@@ -166,23 +167,25 @@ object SparkEntry {
     // B. Rényi-2 behavioral diversity per user (integer collision
     // pairs — the text_entropy recipe on the event-type census)
     "events_diversity" -> (Telemetry.diversity _),
-    // G. streaming twin: per-user type census (vocabulary-bounded),
-    // snapshot flush, batch Rényi-2 rollup over the cells
+    // G. streaming twin: the batch per-user type census
+    // (vocabulary-bounded) as a complete-mode streaming aggregation,
+    // batch Rényi-2 rollup over the cells
     "stream_diversity" -> ((s: SparkSession, d: String) =>
       graft.streaming.StreamDiversity.streamedDiversity(s, d)),
     // B. per-device 5-min-slot availability fraction over the
     // device's own active span (integer slot census, one division)
     "events_uptime" -> (Telemetry.uptime _),
-    // G. streaming twin: occupied-slot set per device (time-axis
-    // bounded) + event count; span/frac assembled at the flush
+    // G. streaming twin: the batch (device, slot) census (time-axis
+    // bounded) as a complete-mode streaming aggregation; batch
+    // span/frac rollup over it
     "stream_uptime" -> ((s: SparkSession, d: String) =>
       graft.streaming.StreamUptime.streamedUptime(s, d)),
     "events_ratecap" -> ((s: SparkSession, d: String) => Telemetry.rateCap(s, d)),
     "events_quarantine" -> (Quality.quarantine _),
     "dq_orphans" -> (Quality.orphans _),
     // G. streaming twin: stream-static FK probe per micro-batch
-    // (parents are static dims), sharded two-counter state, barrier
-    // flush, fk-dimension rollup
+    // (parents are static dims), per-edge counters as a complete-mode
+    // streaming aggregation, every edge reported
     "stream_orphans" -> ((s: SparkSession, d: String) =>
       graft.streaming.StreamOrphans.streamedOrphans(s, d)),
     "events_funnel3" -> (Telemetry.funnel3 _),
@@ -203,8 +206,8 @@ object SparkEntry {
     "stream_m4" -> ((s: SparkSession, d: String) =>
       graft.streaming.StreamM4.streamedM4(s, d)),
     "ts_forecast" -> (Telemetry.forecast _),
-    // G. streaming twin: the StreamVolume day-census state reused
-    // verbatim; barrier flush, batch day-7 self-join assembly
+    // G. streaming twin: the batch day census as a complete-mode
+    // streaming aggregation, batch day-7 self-join assembly
     "stream_forecast" -> ((s: SparkSession, d: String) =>
       graft.streaming.StreamForecast.streamedForecast(s, d)),
     "events_basket" -> (Telemetry.basket _),
@@ -260,8 +263,8 @@ object SparkEntry {
       graft.streaming.StreamMarkov.streamedMarkov(s, d)),
     "ts_changepoint" -> ((s: SparkSession, d: String) => Telemetry.changepoints(s, d)),
     "dq_benford" -> (Quality.benford _),
-    // G. streaming twin: nine digit counters, flushed at the audit
-    // barrier; nine-row Benford assembly over the sink
+    // G. streaming twin: the batch nine-digit census as a
+    // complete-mode streaming aggregation; nine-row Benford assembly
     "stream_benford" -> ((s: SparkSession, d: String) =>
       graft.streaming.StreamBenford.streamedBenford(s, d)),
     "dq_uniqueness" -> (Quality.uniqueness _),
@@ -273,25 +276,26 @@ object SparkEntry {
       graft.streaming.StreamUniqueness.streamedUniqueness(s, d)),
     "dq_drift" -> (Quality.drift _),
     "dq_volume" -> (Quality.volume _),
-    // G. streaming twin: per-type day census (time-axis bounded),
-    // flushed at the audit barrier; spike assembly over the sink
+    // G. streaming twin: the batch per-type day census (time-axis
+    // bounded) as a complete-mode streaming aggregation; spike
+    // assembly over it
     "stream_volume" -> ((s: SparkSession, d: String) =>
       graft.streaming.StreamVolume.streamedVolume(s, d)),
     "dq_completeness" -> (Quality.completeness _),
-    // G. streaming twin: sharded ten-counter state (the
-    // StreamQuarantine posture), snapshot flush, batch unpivot
+    // G. streaming twin: the batch eleven-counter global aggregate as
+    // a complete-mode streaming aggregation, batch unpivot
     "stream_completeness" -> ((s: SparkSession, d: String) =>
       graft.streaming.StreamCompleteness.streamedCompleteness(s, d)),
     // G. join-key skew pre-flight: bounded-heap hot-key election over
     // the key census, null mass as its own headline column
     "dq_keyskew" -> ((s: SparkSession, d: String) => Quality.keySkew(s, d)),
-    // G. streaming twin: one counter per key, barrier flush, batch
-    // stats + bounded-heap election over the flushed census
+    // G. streaming twin: the batch key census as a complete-mode
+    // streaming aggregation, batch stats + bounded-heap election
     "stream_keyskew" -> ((s: SparkSession, d: String) =>
       graft.streaming.StreamKeySkew.streamedKeySkew(s, d)),
     "events_rfm" -> (Telemetry.rfm _),
-    // G. streaming twin: three-integer per-user state, flushed once
-    // at the snapshot barrier; quartile assembly over the census
+    // G. streaming twin: the batch per-user census as a complete-mode
+    // streaming aggregation; quartile assembly over it
     "stream_rfm" -> ((s: SparkSession, d: String) =>
       graft.streaming.StreamRfm.streamedRfm(s, d)),
     "q_mode" -> (Relational.qMode _),
@@ -356,7 +360,8 @@ object SparkEntry {
     "ann_index_stats" -> ((s: SparkSession, d: String) =>
       Similarity.annIndexStats(s, d)),
     // E. streaming twin: scan-local broadcast-codebook assignment,
-    // O(K) per-list moment state, snapshot-barrier flush
+    // the batch O(K) list census as a complete-mode streaming
+    // aggregation
     "stream_ann_ingest" -> ((s: SparkSession, d: String) =>
       graft.streaming.StreamAnnIngest.streamedAnnIngest(s, d)),
     "embed_truncate_eval" -> ((s: SparkSession, d: String) => Similarity.truncateEval(s, d)),
@@ -405,9 +410,9 @@ object SparkEntry {
       TextAnalysis.decontaminateWinnow(s, d)),
     "text_topterms" -> ((s: SparkSession, d: String) => TextAnalysis.topTerms(s, d)),
     "q_cms_topterms" -> ((s: SparkSession, d: String) => TextAnalysis.cmsTopTerms(s, d)),
-    // F. streaming twin: hash-sharded per-term counters (vocabulary-
-    // bounded state), snapshot-barrier flush, CMS grid + top-k over
-    // the flushed census via the additivity identity
+    // F. streaming twin: the batch per-term census (vocabulary-
+    // bounded state) as a complete-mode streaming aggregation, CMS
+    // grid + top-k over it via the additivity identity
     "stream_topterms" -> ((s: SparkSession, d: String) =>
       graft.streaming.StreamTopTerms.streamedTopTerms(s, d)),
     "text_tfidf" -> (TextAnalysis.tfidf _),
@@ -472,8 +477,8 @@ object SparkEntry {
     "frame_extract" -> (Frames.extract _),
     "frame_stats" -> (Frames.stats _),
     // A. streaming twin: the live wire decoder — scan-local
-    // UnpackFrame before the stateful shuffle, four integers per
-    // device, snapshot flush
+    // UnpackFrame before the stateful shuffle, the batch four-integer
+    // device census as a complete-mode streaming aggregation
     "stream_frame_stats" -> ((s: SparkSession, d: String) =>
       graft.streaming.StreamFrameStats.streamedFrameStats(s, d)),
     "frame_delta" -> (Frames.delta _),
@@ -1044,7 +1049,7 @@ object SparkEntry {
       |FROM idx JOIN fs USING (gram) GROUP BY doc_id""".stripMargin
 
   /** Shared by `ts_seasonal` and its streaming twin `stream_seasonal`
-    * — per-(type, hod, day) census state flushed at the barrier must
+    * — the per-(type, hod, day) census state of the last trigger must
     * assemble to the batch profile, seasonal index included. */
   private val seasonalSql: String =
     """WITH cells AS (SELECT event_type,
@@ -1147,8 +1152,8 @@ object SparkEntry {
 
   /** Shared by `chunk_reassemble` and its streaming twin
     * `stream_chunks` — per-message received counts must accumulate
-    * across the chunk-parity cut, and a key whose chunks ALL dropped
-    * still flushes a zero row at its sentinel. */
+    * across the chunk-parity cut, and a message whose chunks ALL
+    * dropped still reports a zero row. */
   private val chunkReassembleSql: String =
     """WITH m AS (SELECT event_id, user_id, CAST(ROUND(value * 100) AS BIGINT) AS nbytes
       |  FROM events WHERE CAST(ROUND(value * 100) AS BIGINT) > 0),
@@ -1217,8 +1222,8 @@ object SparkEntry {
       |FROM l""".stripMargin
 
   /** Shared by `events_rfm` and its streaming twin `stream_rfm` —
-    * per-user (max, count, cents) state flushed at the snapshot
-    * barrier must reproduce the batch census exactly. */
+    * per-user (max, count, sum) state across the cut must reproduce
+    * the batch census exactly. */
   private val rfmSql: String =
     """WITH u AS (
       |  SELECT user_id, MAX(epoch_us(ts)) AS last_us, COUNT(*) AS frequency,
@@ -1236,8 +1241,8 @@ object SparkEntry {
       |FROM s""".stripMargin
 
   /** Shared by `events_abtest` and its streaming twin `stream_abtest`
-    * — the streamed integer power sums must reproduce the batch
-    * DECIMAL aggregation bit-for-bit. */
+    * — the streamed power sums must reproduce the batch DECIMAL
+    * aggregation bit-for-bit. */
   private val abtestSql: String =
     """WITH p AS (SELECT user_id % 2 = 0 AS in_a, CAST(value AS DECIMAL(18,2)) AS v
       |  FROM events WHERE event_type = 'purchase'),
@@ -1655,7 +1660,7 @@ object SparkEntry {
       |WHERE last_op <> 'D'""".stripMargin
 
   /** Shared by `events_anomaly` and its streaming twin
-    * `stream_anomaly` (O(1) per-user moment state + scoring join). */
+    * `stream_anomaly` (per-user moment aggregation + scoring join). */
   private lazy val anomalySql: String =
     """WITH ev AS (SELECT event_id, user_id, CAST(value AS DECIMAL(18,2)) AS x FROM events),
       |s AS (SELECT user_id, COUNT(*) AS n,

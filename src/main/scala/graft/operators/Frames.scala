@@ -310,10 +310,14 @@ object Frames {
   }
 
   /** Per-device stats over parsed sample payloads. */
-  def stats(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    statsAssembly(parsedFrames(spark, dir)
-      .select($"parsed.device".cast(LongType).as("device_id"),
+  def stats(spark: SparkSession, dir: String): DataFrame =
+    statsAssembly(statsCensus(parsedFrames(spark, dir)))
+
+  /** The per-device census of [[stats]] over rows with a `parsed`
+    * frame, shared with the streaming twin (StreamFrameStats). */
+  def statsCensus(frames: DataFrame): DataFrame = {
+    import frames.sparkSession.implicits._
+    frames.select($"parsed.device".cast(LongType).as("device_id"),
         aggregate(transform($"parsed.samples", s => s.cast(LongType)), lit(0L), _ + _)
           .as("frame_sum"),
         array_min($"parsed.samples").cast(LongType).as("frame_min"),
@@ -322,7 +326,7 @@ object Frames {
       .agg(count(lit(1)).as("n_frames"),
         sum($"frame_sum").as("sample_sum"),
         min($"frame_min").as("sample_min"),
-        max($"frame_max").as("sample_max")))
+        max($"frame_max").as("sample_max"))
   }
 
   /** The final per-device projection of [[stats]], shared with the

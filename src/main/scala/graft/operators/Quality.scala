@@ -26,9 +26,13 @@ object Quality {
     * (value ≥ 1 catches the near-zero readings present at every SF)
     * with ones that hold (known type, valid user, January window) —
     * both directions are informative and both are oracle-gated. */
-  def quarantine(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val ev = Tables.events(spark, dir)
+  def quarantine(spark: SparkSession, dir: String): DataFrame =
+    quarantineReport(quarantineCounts(Tables.events(spark, dir)))
+
+  /** The one-row flag sums of [[quarantine]] over events `ev`, shared
+    * with the streaming twin (StreamQuarantine). */
+  def quarantineCounts(ev: DataFrame): DataFrame = {
+    import ev.sparkSession.implicits._
     val c1 = $"value" < 1.0d
     val c2 = !$"event_type".isin("signup", "click", "view", "purchase", "error")
     val c3 = $"user_id" < 0L
@@ -37,10 +41,15 @@ object Quality {
     // the "any" flag is the OR of the conditions, not greatest(flags):
     // GREATEST propagates NULL in ANSI SQL while Spark's skips it — OR
     // three-valued logic behaves identically on both engines
-    val agg1 = ev.agg(
+    ev.agg(
       sum(c1.cast(LongType)).as("v1"), sum(c2.cast(LongType)).as("v2"),
       sum(c3.cast(LongType)).as("v3"), sum(c4.cast(LongType)).as("v4"),
       sum((c1 || c2 || c3 || c4).cast(LongType)).as("va"), count(lit(1)).as("n"))
+  }
+
+  /** The 5-row explode of [[quarantineCounts]]' one row. */
+  def quarantineReport(agg1: DataFrame): DataFrame = {
+    import agg1.sparkSession.implicits._
     val rows = Seq("low_value" -> "v1", "unknown_type" -> "v2",
       "invalid_user" -> "v3", "out_of_window" -> "v4", "any" -> "va")
       .map { case (name, c) =>
@@ -125,13 +134,17 @@ object Quality {
     * exact on both). One 9-row aggregate; shares divide exact longs;
     * the Benford expectations are 6-dp literals, so the deviation
     * subtraction is deterministic. */
-  def benford(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    benfordAssembly(Tables.lineitem(spark, dir)
-      .select(substring(dec($"l_extendedprice").cast("string"), 1, 1)
+  def benford(spark: SparkSession, dir: String): DataFrame =
+    benfordAssembly(benfordCensus(Tables.lineitem(spark, dir)))
+
+  /** The (digit, n_rows) census of [[benford]] over lineitem rows,
+    * shared with the streaming twin (StreamBenford). */
+  def benfordCensus(li: DataFrame): DataFrame = {
+    import li.sparkSession.implicits._
+    li.select(substring(dec($"l_extendedprice").cast("string"), 1, 1)
         .cast("int").as("digit"))
       .groupBy($"digit")
-      .agg(count(lit(1)).as("n_rows")))
+      .agg(count(lit(1)).as("n_rows"))
   }
 
   /** The post-census assembly of [[benford]], shared with the
@@ -247,12 +260,14 @@ object Quality {
     * in one partial-aggregated shuffle (≤ types·days rows); the
     * moment pass and the flag join run on that dimension-sized frame,
     * never the raw stream. */
-  def volume(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    volumeAssembly(Tables.events(spark, dir)
-      .groupBy($"event_type", date_trunc("day", $"ts").as("day"))
-      .agg(count(lit(1)).as("n_events")))
-  }
+  def volume(spark: SparkSession, dir: String): DataFrame =
+    volumeAssembly(volumeCensus(Tables.events(spark, dir)))
+
+  /** The (event_type, day, n_events) census of [[volume]], shared with
+    * the streaming twin (StreamVolume). */
+  def volumeCensus(ev: DataFrame): DataFrame =
+    ev.groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
+      .agg(count(lit(1)).as("n_events"))
 
   /** The post-census assembly of [[volume]], shared with the
     * streaming twin (StreamVolume): per-type day statistics and the
@@ -286,26 +301,29 @@ object Quality {
     * per-column unpivot happens on that single row (driver-sized
     * stack, never a row-explosion over the corpus). Fractions are
     * single divisions of exact longs. */
-  def completeness(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
+  def completeness(spark: SparkSession, dir: String): DataFrame =
+    completenessAssembly(completenessCounts(Tables.events(spark, dir)))
+
+  /** The single 11-counter row of [[completeness]] over events `ev`,
+    * shared with the streaming twin (StreamCompleteness). */
+  def completenessCounts(ev: DataFrame): DataFrame = {
+    import ev.sparkSession.implicits._
     def nNull(c: Column) = sum(when(c.isNull, 1L).otherwise(0L))
     def nBlank(c: Column) =
       sum(when(c.isNotNull && trim(c) === "", 1L).otherwise(0L))
-    val one = Tables.events(spark, dir)
-      .agg(count(lit(1)).as("n_rows"),
+    ev.agg(count(lit(1)).as("n_rows"),
         nNull($"ts").as("null_ts"), lit(0L).as("blank_ts"),
         nNull($"user_id").as("null_user_id"), lit(0L).as("blank_user_id"),
         nNull($"event_type").as("null_event_type"), nBlank($"event_type").as("blank_event_type"),
         nNull($"value").as("null_value"), lit(0L).as("blank_value"),
         nNull($"props").as("null_props"), nBlank($"props").as("blank_props"))
-    completenessAssembly(one)
   }
 
   /** The post-census unpivot of [[completeness]], shared with the
     * streaming twin (StreamCompleteness): `one` is the single
-    * 11-counter row (n_rows + null/blank per column) — the stack and
-    * the populated fraction run over 5 rows however large the
-    * corpus. */
+    * 11-counter row of [[completenessCounts]] (n_rows + null/blank
+    * per column) — the stack and the populated fraction run over 5
+    * rows however large the corpus. */
   def completenessAssembly(one: DataFrame): DataFrame = {
     import one.sparkSession.implicits._
     one.select($"n_rows", expr(
@@ -336,11 +354,13 @@ object Quality {
     * shuffle — the ROW_NUMBER formulation would sort every distinct
     * key), and the stats rollup rides the same checkpointed census.
     * Counts are exact in the heap's double (< 2⁵³). */
-  def keySkew(spark: SparkSession, dir: String, k: Int = 10): DataFrame = {
-    import spark.implicits._
-    keySkewAssembly(Tables.events(spark, dir)
-      .groupBy($"user_id").agg(count(lit(1)).as("n")), k)
-  }
+  def keySkew(spark: SparkSession, dir: String, k: Int = 10): DataFrame =
+    keySkewAssembly(keyCensus(Tables.events(spark, dir)), k)
+
+  /** The (user_id, n) key census of [[keySkew]], shared with the
+    * streaming twin (StreamKeySkew). */
+  def keyCensus(ev: DataFrame): DataFrame =
+    ev.groupBy(col("user_id")).agg(count(lit(1)).as("n"))
 
   /** The post-census assembly of [[keySkew]], shared with the
     * streaming twin (StreamKeySkew): stats + bounded-heap hot-key

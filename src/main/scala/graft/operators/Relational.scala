@@ -776,14 +776,16 @@ object Relational {
     * dashboards: per-partition histograms merge by vector addition,
     * which is exactly what partial aggregation does for free. */
   def qQuantilesHist(spark: SparkSession, dir: String,
-      width: Double = 500.0d): DataFrame = {
-    import spark.implicits._
-    val b = Tables.lineitem(spark, dir)
-      .groupBy($"l_returnflag",
-        floor($"l_extendedprice" / lit(width)).cast(LongType).as("bucket"))
+      width: Double = 500.0d): DataFrame =
+    quantilesHistAssembly(quantilesHistCensus(Tables.lineitem(spark, dir), width), width)
+
+  /** The (l_returnflag, bucket, c) histogram of [[qQuantilesHist]]
+    * over lineitem rows, shared with the streaming twin
+    * (StreamQuantilesHist). */
+  def quantilesHistCensus(li: DataFrame, width: Double): DataFrame =
+    li.groupBy(col("l_returnflag"),
+        floor(col("l_extendedprice") / lit(width)).cast(LongType).as("bucket"))
       .agg(count(lit(1)).as("c"))
-    quantilesHistAssembly(b, width)
-  }
 
   /** The post-census walk of [[qQuantilesHist]], shared with the
     * streaming twin (StreamQuantilesHist): everything here reduces

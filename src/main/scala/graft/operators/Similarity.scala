@@ -1914,14 +1914,18 @@ object Similarity {
     val wAssign = Window.partitionBy($"vec_id").orderBy($"ccos".desc, $"cid".asc)
     val assigned = scored.withColumn("rn", row_number().over(wAssign)).filter($"rn" === 1)
       .select($"cid", floor($"ccos" * lit(1000000.0d)).cast(LongType).as("cos_micro"))
-    annIndexStatsAssembly(
-      assigned.groupBy($"cid")
-        .agg(count(lit(1)).as("n_vectors"),
-          sum($"cos_micro").as("sum_cos_micro"),
-          min($"cos_micro").as("min_cos_micro"),
-          max($"cos_micro").as("max_cos_micro")),
-      nCentroids)
+    annIndexStatsAssembly(annListCensus(assigned), nCentroids)
   }
+
+  /** The per-list census of [[annIndexStats]] over assigned (cid,
+    * cos_micro) rows, shared with the streaming twin
+    * (StreamAnnIngest). */
+  def annListCensus(assigned: DataFrame): DataFrame =
+    assigned.groupBy(col("cid"))
+      .agg(count(lit(1)).as("n_vectors"),
+        sum(col("cos_micro")).as("sum_cos_micro"),
+        min(col("cos_micro")).as("min_cos_micro"),
+        max(col("cos_micro")).as("max_cos_micro"))
 
   /** The post-census assembly of [[annIndexStats]], shared with the
     * streaming twin (StreamAnnIngest): share + hot verdict over the

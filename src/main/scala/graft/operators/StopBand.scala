@@ -24,13 +24,6 @@ import org.apache.spark.util.LongAccumulator
 object StopBand {
   private val seq = new java.util.concurrent.atomic.AtomicLong()
 
-  /** Pure-bench escape hatch: GRAFT_AUDIT=off skips both audit
-    * channels (no accumulators, no CollectMetrics node) — the capped
-    * filter itself is untouched, only its observability. Read once at
-    * class load; a bench process sets it in its environment. */
-  private val enabled: Boolean =
-    !sys.env.get("GRAFT_AUDIT").exists(_.equalsIgnoreCase("off"))
-
   /** Soft bound on registered audits: past this, fully-reported
     * entries evict at each listener sweep (a long-lived session would
     * otherwise accumulate one Entry + two accumulators per audited
@@ -54,7 +47,6 @@ object StopBand {
     * audit-wrapped count: keep filtering on it (`bc <= cap`) so the
     * expression survives column pruning. */
   def audited(census: DataFrame, site: String, cap: Int): DataFrame = {
-    if (!enabled) return census
     val spark = census.sparkSession
     import spark.implicits._
     // suffix keeps names unique when two capped operators land in one

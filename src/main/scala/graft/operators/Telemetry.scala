@@ -113,10 +113,16 @@ object Telemetry {
     * double derives from exact sums by deterministic single ops. */
   def anomaly(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.types.DoubleType
     val ev = Tables.events(spark, dir)
       .select($"event_id", $"user_id", dec($"value").as("x"))
-    val stats = ev.groupBy($"user_id")
+    anomalyFlags(ev, anomalyStats(ev))
+  }
+
+  /** The per-user (n, mu, m2, variance) of [[anomaly]] over rows
+    * (user_id, x), shared with the streaming twin (StreamAnomaly). */
+  def anomalyStats(ev: DataFrame): DataFrame = {
+    import ev.sparkSession.implicits._
+    ev.groupBy($"user_id")
       .agg(count(lit(1)).as("n"),
         sum($"x").as("s1"),
         sum($"x" * $"x").as("s2"))
@@ -124,6 +130,12 @@ object Telemetry {
         (col("s1").cast(DoubleType) / col("n").cast(DoubleType)).as("mu"),
         (col("s2").cast(DoubleType) / col("n").cast(DoubleType)).as("m2"))
       .withColumn("variance", $"m2" - $"mu" * $"mu")
+  }
+
+  /** The 2σ flag of every row of `ev` (event_id, user_id, x) against
+    * its user's [[anomalyStats]]. */
+  def anomalyFlags(ev: DataFrame, stats: DataFrame): DataFrame = {
+    import ev.sparkSession.implicits._
     // no forced broadcast: per-user stats are one row per user, which
     // at fleet scale is itself large — the equi-join shuffles on the
     // same key the aggregation just used (AQE still broadcasts when
@@ -187,10 +199,14 @@ object Telemetry {
     * DECIMAL-exact through the sum, every float derives from the one
     * casted sum in a fixed expression order so the oracle
     * hash-matches bit-for-bit. */
-  def powerBudget(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Tables.events(spark, dir)
-      .groupBy($"user_id")
+  def powerBudget(spark: SparkSession, dir: String): DataFrame =
+    powerRollup(Tables.events(spark, dir))
+
+  /** [[powerBudget]] over events `ev`: one aggregate and its float
+    * ladder, shared with the streaming twin (StreamPower). */
+  def powerRollup(ev: DataFrame): DataFrame = {
+    import ev.sparkSession.implicits._
+    ev.groupBy($"user_id")
       .agg(count(lit(1)).as("n_msgs"),
         sum(dec($"value")).cast(DoubleType).as("kb_sent"))
       .withColumn("tx_seconds", $"kb_sent" * 1000.0d / 960.0d)
@@ -283,7 +299,26 @@ object Telemetry {
     * received counts/bytes against the expected chunk count derived
     * from the declared message size. One shuffle on the message key. */
   def chunkReassemble(spark: SparkSession, dir: String,
-      chunkBytes: Long = 6400L): DataFrame = {
+      chunkBytes: Long = 6400L): DataFrame =
+    chunkAssembly(spark, dir, chunkBytes, chunkReceipts(survivingChunks(spark, dir, chunkBytes)))
+
+  /** The chunks the simulated link delivers: (event_id + chunk_idx)
+    * % 97 drops. */
+  def survivingChunks(spark: SparkSession, dir: String, chunkBytes: Long): DataFrame =
+    chunkMessages(spark, dir, chunkBytes)
+      .filter((col("event_id") + col("chunk_idx")) % 97 =!= 0L)
+
+  /** The per-message (rcv, rbytes) receipt census of
+    * [[chunkReassemble]], shared with the streaming twin
+    * (StreamChunks). */
+  def chunkReceipts(chunks: DataFrame): DataFrame =
+    chunks.groupBy(col("event_id"))
+      .agg(count(lit(1)).as("rcv"), sum(col("chunk_bytes")).as("rbytes"))
+
+  /** The expected-message side of [[chunkReassemble]] joined with
+    * the `received` receipt census. */
+  def chunkAssembly(spark: SparkSession, dir: String, chunkBytes: Long,
+      received: DataFrame): DataFrame = {
     import spark.implicits._
     // anchor on the EXPECTED message set, not the received chunks: a
     // message whose every chunk was lost must still appear (with
@@ -293,10 +328,6 @@ object Telemetry {
       .select($"event_id", $"user_id",
         round($"value" * 100).cast(LongType).as("nbytes"))
       .filter($"nbytes" > 0L)
-    val received = chunkMessages(spark, dir, chunkBytes)
-      .filter(($"event_id" + $"chunk_idx") % 97 =!= 0L)
-      .groupBy($"event_id")
-      .agg(count(lit(1)).as("rcv"), sum($"chunk_bytes").as("rbytes"))
     msgs.join(received, Seq("event_id"), "left")
       .select($"event_id", $"user_id",
         coalesce($"rcv", lit(0L)).as("n_received"),
@@ -362,8 +393,15 @@ object Telemetry {
     val cohorts = ev.filter($"event_type" === "signup")
       .groupBy($"user_id").agg(min($"ts").as("first_signup"))
       .select($"user_id", date_trunc("week", $"first_signup").as("cohort_week"))
-    val activity = ev
-      .select($"user_id", date_trunc("week", $"ts").as("act_week")).distinct()
+    retentionMatrix(cohorts,
+      ev.select($"user_id", date_trunc("week", $"ts").as("act_week")).distinct())
+  }
+
+  /** The matrix of [[retention]] from per-user (user_id, cohort_week)
+    * `cohorts` and distinct (user_id, act_week) `activity`, shared
+    * with the streaming twin (StreamRetention). */
+  def retentionMatrix(cohorts: DataFrame, activity: DataFrame): DataFrame = {
+    import cohorts.sparkSession.implicits._
     cohorts.join(activity, Seq("user_id"))
       .filter($"act_week" >= $"cohort_week")
       .select($"cohort_week",
@@ -373,11 +411,15 @@ object Telemetry {
       .agg(countDistinct($"user_id").as("n_active"))
   }
 
-  def queueStats(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
+  def queueStats(spark: SparkSession, dir: String): DataFrame =
+    queueCensus(Tables.events(spark, dir))
+
+  /** [[queueStats]] over events `ev`, shared with the streaming twin
+    * (StreamQueueStats). */
+  def queueCensus(ev: DataFrame): DataFrame = {
+    import ev.sparkSession.implicits._
     val lost = $"k" > 50
-    Tables.events(spark, dir)
-      .withColumn("k", regexp_extract($"props", "([0-9]+)", 1).cast(IntegerType))
+    ev.withColumn("k", regexp_extract($"props", "([0-9]+)", 1).cast(IntegerType))
       .groupBy($"event_type")
       .agg(
         count(lit(1)).as("n_msgs"),
@@ -475,11 +517,15 @@ object Telemetry {
     * At 100 TB this is one conditional-sum aggregate however many
     * users exist — no per-variant scan, no shuffle of raw rows beyond
     * the single partial-agg exchange. */
-  def abtest(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val p = Tables.events(spark, dir)
-      .filter($"event_type" === "purchase")
-      .select((pmod($"user_id", lit(2L)) === 0L).as("in_a"), dec($"value").as("v"))
+  def abtest(spark: SparkSession, dir: String): DataFrame =
+    abtestReport(Tables.events(spark, dir).filter(col("event_type") === "purchase"))
+
+  /** [[abtest]] over purchase events: one global aggregate and the
+    * Welch-t projection, shared with the streaming twin
+    * (StreamAbtest). */
+  def abtestReport(purchases: DataFrame): DataFrame = {
+    import purchases.sparkSession.implicits._
+    val p = purchases.select((pmod($"user_id", lit(2L)) === 0L).as("in_a"), dec($"value").as("v"))
     abtestFromPowerSums(p.agg(
       sum(when($"in_a", 1L).otherwise(0L)).as("n_a"),
       sum(when(!$"in_a", 1L).otherwise(0L)).as("n_b"),
@@ -489,12 +535,11 @@ object Telemetry {
       sum(when(!$"in_a", $"v" * $"v")).cast(DoubleType).as("ss_b")))
   }
 
-  /** The Welch-t assembly of [[abtest]], shared with the streaming
-    * twin (StreamAbtest): means and sample variances from the
-    * already-deterministic double power sums — one fixed expression
-    * shape, so batch and streamed sums produce bit-identical t.
-    * `agg` = one row of (n_a, n_b, sum_a, sum_b, ss_a, ss_b). */
-  def abtestFromPowerSums(agg: DataFrame): DataFrame = {
+  /** The Welch-t assembly of [[abtest]]: means and sample variances
+    * from the already-deterministic double power sums — one fixed
+    * expression shape. `agg` = one row of (n_a, n_b, sum_a, sum_b,
+    * ss_a, ss_b). */
+  private def abtestFromPowerSums(agg: DataFrame): DataFrame = {
     import agg.sparkSession.implicits._
     val na = $"n_a".cast(DoubleType)
     val nb = $"n_b".cast(DoubleType)
@@ -1080,10 +1125,14 @@ object Telemetry {
     * dayofweek()/extract(dow) numbering differs across engines
     * (Spark counts 1 = Sunday, DuckDB 0 = Sunday); the integer form
     * is engine-exact by construction. */
-  def heatmap(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Tables.events(spark, dir)
-      .filter($"ts".isNotNull)
+  def heatmap(spark: SparkSession, dir: String): DataFrame =
+    heatmapCensus(Tables.events(spark, dir))
+
+  /** [[heatmap]] over events `ev`, shared with the streaming twin
+    * (StreamHeatmap). */
+  def heatmapCensus(ev: DataFrame): DataFrame = {
+    import ev.sparkSession.implicits._
+    ev.filter($"ts".isNotNull)
       .select(expr("unix_micros(ts) div 86400000000").as("days"),
         expr("(unix_micros(ts) % 86400000000) div 3600000000").as("hour"),
         $"value")
@@ -1287,12 +1336,14 @@ object Telemetry {
     * events — and the forecast join runs dimension-frame against
     * dimension-frame. At 100 TB the join input is still just the
     * calendar. */
-  def forecast(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    forecastAssembly(Tables.events(spark, dir)
-      .groupBy($"event_type", unix_micros(date_trunc("day", $"ts")).as("day_us"))
-      .agg(count(lit(1)).as("n_events")))
-  }
+  def forecast(spark: SparkSession, dir: String): DataFrame =
+    forecastAssembly(forecastCensus(Tables.events(spark, dir)))
+
+  /** The (event_type, day_us, n_events) census of [[forecast]] over
+    * events `ev`, shared with the streaming twin (StreamForecast). */
+  def forecastCensus(ev: DataFrame): DataFrame =
+    ev.groupBy(col("event_type"), unix_micros(date_trunc("day", col("ts"))).as("day_us"))
+      .agg(count(lit(1)).as("n_events"))
 
   /** The post-census assembly of [[forecast]], shared with the
     * streaming twin (StreamForecast): the calendar-aligned
@@ -1681,14 +1732,18 @@ object Telemetry {
     * All three quartile sorts are total orders (user_id tiebreak) so
     * scores are deterministic on any engine; recency is exact integer
     * µs→day arithmetic. */
-  def rfm(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    rfmAssembly(Tables.events(spark, dir)
-      .groupBy($"user_id")
+  def rfm(spark: SparkSession, dir: String): DataFrame =
+    rfmAssembly(rfmCensus(Tables.events(spark, dir)))
+
+  /** The per-user (last_us, frequency, monetary_dec) census of [[rfm]]
+    * over events `ev`, shared with the streaming twin (StreamRfm). */
+  def rfmCensus(ev: DataFrame): DataFrame = {
+    import ev.sparkSession.implicits._
+    ev.groupBy($"user_id")
       .agg(max(unix_micros($"ts")).as("last_us"),
         count(lit(1)).as("frequency"),
         coalesce(sum(when($"event_type" === "purchase", dec($"value"))), lit(0))
-          .cast(DecimalType(18, 2)).as("monetary_dec")))
+          .cast(DecimalType(18, 2)).as("monetary_dec"))
   }
 
   /** The post-census assembly of [[rfm]], shared with the streaming
@@ -1743,6 +1798,14 @@ object Telemetry {
       .groupBy($"cohort_week", $"week_offset")
       .agg(countDistinct($"user_id").as("n_buyers"),
         sum(dec($"value")).as("rev_dec"))
+    ltvCurve(cells)
+  }
+
+  /** The cumulative revenue curve of [[ltv]] over its (cohort_week,
+    * week_offset, n_buyers, rev_dec) cells, shared with the streaming
+    * twin (StreamLtv). */
+  def ltvCurve(cells: DataFrame): DataFrame = {
+    import cells.sparkSession.implicits._
     val w = Window.partitionBy($"cohort_week").orderBy($"week_offset")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     cells.withColumn("cum_dec", sum($"rev_dec").over(w))
@@ -1772,15 +1835,27 @@ object Telemetry {
     // the checkpoint Catalyst re-derives it per consumer, i.e. two
     // full corpus scans at 100 TB for a ≤ types×24-row frame;
     // transient so the harness drain frees the blocks (ADVICE r8)
-    val cells = graft.operators.Dedup.localCheckpointTransient(
-      Tables.events(spark, dir)
-        .filter($"ts".isNotNull && $"event_type".isNotNull)
-        .select($"event_type",
-          expr("pmod((unix_micros(ts) - pmod(unix_micros(ts), 3600000000)) DIV 3600000000, 24)").as("hod"),
-          expr("(unix_micros(ts) - pmod(unix_micros(ts), 86400000000)) DIV 86400000000").as("day"))
+    seasonalAssembly(graft.operators.Dedup.localCheckpointTransient(
+      hourDays(Tables.events(spark, dir))
         .groupBy($"event_type", $"hod")
         .agg(count(lit(1)).as("n_events"),
-          countDistinct($"day").as("n_days")))
+          countDistinct($"day").as("n_days"))))
+  }
+
+  /** The typed, timed events of `ev` as (event_type, hod, day), the
+    * rows [[seasonal]] counts; shared with the streaming twin
+    * (StreamSeasonal). */
+  def hourDays(ev: DataFrame): DataFrame =
+    ev.filter(col("ts").isNotNull && col("event_type").isNotNull)
+      .select(col("event_type"),
+        expr("pmod((unix_micros(ts) - pmod(unix_micros(ts), 3600000000)) DIV 3600000000, 24)").as("hod"),
+        expr("(unix_micros(ts) - pmod(unix_micros(ts), 86400000000)) DIV 86400000000").as("day"))
+
+  /** The post-census assembly of [[seasonal]], shared with the
+    * streaming twin: per-type totals and the seasonal index over the
+    * (event_type, hod, n_events, n_days) census. */
+  def seasonalAssembly(cells: DataFrame): DataFrame = {
+    import cells.sparkSession.implicits._
     val totals = cells.groupBy($"event_type")
       .agg(sum($"n_events").as("n_type"))
     cells.join(broadcast(totals), "event_type")
@@ -1850,16 +1925,17 @@ object Telemetry {
     *
     * Scale: one partial-aggregated (stream, hour) census is the only
     * corpus-sized pass; the per-stream rollup carries two sums. */
-  def trend(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
+  def trend(spark: SparkSession, dir: String): DataFrame =
+    trendAssembly(trendCensus(Tables.events(spark, dir)))
+
+  /** The (event_type, h, y) hour census of [[trend]] over events `ev`,
+    * shared with the streaming twin (StreamTrend). */
+  def trendCensus(ev: DataFrame): DataFrame =
     // pmod-floor hour bucket (DuckDB `//` floors, Spark DIV truncates)
-    val cells = Tables.events(spark, dir)
-      .filter($"ts".isNotNull)
-      .select($"event_type",
+    ev.filter(col("ts").isNotNull)
+      .select(col("event_type"),
         expr("(unix_micros(ts) - pmod(unix_micros(ts), 3600000000)) DIV 3600000000").as("h"))
-      .groupBy($"event_type", $"h").agg(count(lit(1)).as("y"))
-    trendAssembly(cells)
-  }
+      .groupBy(col("event_type"), col("h")).agg(count(lit(1)).as("y"))
 
   /** The post-census assembly of [[trend]], shared with the streaming
     * twin (StreamTrend): the h0/H driver reduction, closed-form
@@ -1885,6 +1961,45 @@ object Telemetry {
           lit((hN * st2 - st * st).toDouble)).as("slope_per_hour"))
   }
 
+  /** Fleet availability audit (`events_uptime`): per device, the
+    * fraction of 5-minute slots in its OWN active span (first event →
+    * last event) that saw at least one event — the "was the device
+    * actually reporting" health number beside [[sessionWindows]]'
+    * gap view: a device with 40% uptime and healthy sessions is a
+    * duty-cycled sensor; one with 99.9% and a single hole is an
+    * outage. All integers — slot ids by pmod-floor µs division
+    * (engine-exact pre-1970), active = distinct occupied slots, span
+    * = last − first + 1 — with ONE final double division.
+    *
+    * Scale: the (device, slot) census partial-aggregates map-side
+    * (shuffle ∝ occupied slots, never events); the per-device rollup
+    * rides the same key. NULL-ts rows carry no slot evidence and are
+    * filtered scan-side (spelled in the oracle identically). */
+  def uptime(spark: SparkSession, dir: String): DataFrame =
+    uptimeAssembly(uptimeCensus(Tables.events(spark, dir)))
+
+  /** The (user_id, slot, n) census of [[uptime]] over events `ev`,
+    * shared with the streaming twin (StreamUptime). */
+  def uptimeCensus(ev: DataFrame): DataFrame =
+    ev.filter(col("ts").isNotNull)
+      .select(col("user_id"),
+        expr("(unix_micros(ts) - pmod(unix_micros(ts), 300000000)) DIV 300000000").as("slot"))
+      .groupBy(col("user_id"), col("slot")).agg(count(lit(1)).as("n"))
+
+  /** The post-census rollup of [[uptime]], shared with the streaming
+    * twin (StreamUptime): per-device slot census → span/active/frac;
+    * ∝ occupied slots, never events. `cells` = (user_id, slot, n). */
+  def uptimeAssembly(cells: DataFrame): DataFrame = {
+    import cells.sparkSession.implicits._
+    cells
+      .groupBy($"user_id")
+      .agg(sum($"n").as("n_events"),
+        count(lit(1)).as("n_slots_active"),
+        (max($"slot") - min($"slot") + 1L).as("n_slots_span"))
+      .withColumn("uptime_frac",
+        $"n_slots_active".cast(DoubleType) / $"n_slots_span".cast(DoubleType))
+  }
+
   /** Behavioral diversity per user (`events_diversity`): the Rényi-2
     * collision index of each user's event-type distribution — the
     * bot/monoculture gate on the BEHAVIOR axis that
@@ -1901,48 +2016,13 @@ object Telemetry {
     * Scale: the (user, type) census partial-aggregates map-side
     * (shuffle ∝ occupied cells, never events); the per-user rollup
     * rides the same key so the exchange is paid once. */
-  /** Fleet availability audit (`events_uptime`): per device, the
-    * fraction of 5-minute slots in its OWN active span (first event →
-    * last event) that saw at least one event — the "was the device
-    * actually reporting" health number beside [[sessionWindows]]'
-    * gap view: a device with 40% uptime and healthy sessions is a
-    * duty-cycled sensor; one with 99.9% and a single hole is an
-    * outage. All integers — slot ids by pmod-floor µs division
-    * (engine-exact pre-1970), active = distinct occupied slots, span
-    * = last − first + 1 — with ONE final double division.
-    *
-    * Scale: the (device, slot) census partial-aggregates map-side
-    * (shuffle ∝ occupied slots, never events); the per-device rollup
-    * rides the same key. NULL-ts rows carry no slot evidence and are
-    * filtered scan-side (spelled in the oracle identically). */
-  def uptime(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    uptimeAssembly(Tables.events(spark, dir)
-      .filter($"ts".isNotNull)
-      .select($"user_id",
-        expr("(unix_micros(ts) - pmod(unix_micros(ts), 300000000)) DIV 300000000").as("slot"))
-      .groupBy($"user_id", $"slot").agg(count(lit(1)).as("n")))
-  }
+  def diversity(spark: SparkSession, dir: String): DataFrame =
+    diversityAssembly(diversityCensus(Tables.events(spark, dir)))
 
-  /** The post-census rollup of [[uptime]], shared with the streaming
-    * twin (StreamUptime): per-device slot census → span/active/frac;
-    * ∝ occupied slots, never events. `cells` = (user_id, slot, n). */
-  def uptimeAssembly(cells: DataFrame): DataFrame = {
-    import cells.sparkSession.implicits._
-    cells
-      .groupBy($"user_id")
-      .agg(sum($"n").as("n_events"),
-        count(lit(1)).as("n_slots_active"),
-        (max($"slot") - min($"slot") + 1L).as("n_slots_span"))
-      .withColumn("uptime_frac",
-        $"n_slots_active".cast(DoubleType) / $"n_slots_span".cast(DoubleType))
-  }
-
-  def diversity(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    diversityAssembly(Tables.events(spark, dir)
-      .groupBy($"user_id", $"event_type").agg(count(lit(1)).as("c")))
-  }
+  /** The (user_id, event_type, c) census of [[diversity]], shared with
+    * the streaming twin (StreamDiversity). */
+  def diversityCensus(ev: DataFrame): DataFrame =
+    ev.groupBy(col("user_id"), col("event_type")).agg(count(lit(1)).as("c"))
 
   /** The post-census rollup of [[diversity]], shared with the
     * streaming twin (StreamDiversity): the Rényi-2 collision index

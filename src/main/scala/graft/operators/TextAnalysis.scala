@@ -244,18 +244,19 @@ object TextAnalysis {
     * here as ground truth) joins against the broadcast grid; CMS
     * estimates only ever over-count (spec-asserted), with error
     * bounded by the bucket-collision mass. */
-  def cmsTopTerms(spark: SparkSession, dir: String, k: Int = 20, w: Int = 1024): DataFrame = {
-    import spark.implicits._
-    val terms = Tables.documents(spark, dir)
-      .select($"doc_id", explode(array_distinct(TextFns.tokens($"text"))).as("term"))
+  def cmsTopTerms(spark: SparkSession, dir: String, k: Int = 20, w: Int = 1024): DataFrame =
     // one corpus pass: the exact per-term counts feed BOTH the top-k
     // and the sketch (weighted updates are additive, so a grid built
     // from (term, doc_freq) equals one built per occurrence) — the
     // two branches share the groupBy exchange instead of each
     // re-scanning and re-exploding the corpus
-    val byTerm = terms.groupBy($"term").agg(count(lit(1)).as("doc_freq"))
-    cmsTopTermsAssembly(byTerm, k, w)
-  }
+    cmsTopTermsAssembly(termDocFreq(Tables.documents(spark, dir)), k, w)
+
+  /** The (term, doc_freq) census of [[cmsTopTerms]] over documents,
+    * shared with the streaming twin (StreamTopTerms). */
+  def termDocFreq(docs: DataFrame): DataFrame =
+    docs.select(explode(array_distinct(TextFns.tokens(col("text")))).as("term"))
+      .groupBy(col("term")).agg(count(lit(1)).as("doc_freq"))
 
   /** The post-census assembly of [[cmsTopTerms]], shared with the
     * streaming twin (StreamTopTerms): grid build + top-k + estimate

@@ -5,8 +5,8 @@ import java.nio.file.{FileSystems, Files}
 import java.nio.file.attribute.PosixFilePermission
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsConstants,
-  FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FSLinkResolver,
+  FsConstants, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 
@@ -19,8 +19,8 @@ import org.apache.hadoop.fs.permission.FsPermission
   * through `org.apache.hadoop.util.Shell`. This class changes only how
   * those two facts are set and read; data, checksums and rename
   * semantics are Hadoop's. A sticky bit (which `java.nio` cannot set)
-  * and a default filesystem without POSIX attributes defer to Hadoop,
-  * as do real symlinks. [[graft.GraftSession]] registers it for the
+  * and a default filesystem without POSIX attributes defer to Hadoop.
+  * [[graft.GraftSession]] registers it for the
   * `file:` scheme through [[LocalFs.settings]].
   */
 class LocalFs extends RawLocalFileSystem {
@@ -28,9 +28,32 @@ class LocalFs extends RawLocalFileSystem {
     if (permission.getStickyBit || !LocalFs.posix) super.setPermission(p, permission)
     else Files.setPosixFilePermissions(pathToFile(p).toPath, LocalFs.posixBits(permission))
 
-  override def getFileLinkStatus(f: Path): FileStatus =
-    if (Files.isSymbolicLink(pathToFile(f).toPath)) super.getFileLinkStatus(f)
-    else getFileStatus(f)
+  override def getFileLinkStatus(f: Path): FileStatus = {
+    val st = linkStatus(f)
+    if (st.isSymlink) st.setSymlink(FSLinkResolver.qualifySymlinkTarget(getUri, f, st.getSymlink))
+    st
+  }
+
+  /** The unqualified target; not a link is an `IOException`. */
+  override def getLinkTarget(f: Path): Path = linkStatus(f).getSymlink
+
+  /** Hadoop's status of a link, unqualified: the target's stat with
+    * `isdir` false, or an empty stat for a dangling link. Hadoop reads
+    * the target by forking `readlink` on `f.toString`, which for a
+    * qualified `file:/…` path names no file, so it would report a
+    * plain file there. */
+  private def linkStatus(f: Path): FileStatus = {
+    val p = pathToFile(f).toPath
+    if (!Files.isSymbolicLink(p)) return getFileStatus(f)
+    val target = new Path(Files.readSymbolicLink(p).toString)
+    if (!Files.exists(p))
+      new FileStatus(0L, false, 0, 0L, 0L, 0L, FsPermission.getDefault, "", "", target, f)
+    else {
+      val s = getFileStatus(f)
+      new FileStatus(s.getLen, false, s.getReplication, s.getBlockSize, s.getModificationTime,
+        s.getAccessTime, s.getPermission, s.getOwner, s.getGroup, target, f)
+    }
+  }
 }
 
 object LocalFs {

@@ -4,32 +4,35 @@ import java.nio.file.Files
 
 import scala.reflect.runtime.universe.TypeTag
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Row, SparkSession}
 import org.apache.spark.sql.catalyst.ScalaReflection
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** The staging protocol of the batch-gated streaming twins, written
   * once. A twin replays a bounded corpus as a stream: the corpus is
-  * cut into micro-batches ([[timeCut]]), barrier rows ride the last
-  * batch when the core emits at the end of the stream
-  * ([[withBarrier]]), and [[run]] streams the batches one per trigger
-  * through the twin's stateful core into a parquet sink, which the
-  * twin's batch assembly reads back. The cores are keyed folds over
-  * `GroupState`: [[atBarrier]] (order-free, emits once per key at its
-  * barrier row), [[onArrival]] (ordered, a step may emit at every
-  * arrival) and [[perBatch]] (the whole micro-batch of a key at once).
+  * cut into micro-batches ([[timeCut]]) and streamed one batch per
+  * trigger through the twin's core, which the twin's batch assembly
+  * reads back. An order-free core whose step is a built-in aggregate
+  * is Spark's own streaming aggregation, run by [[aggregate]] in
+  * complete mode: often the batch twin's own `groupBy.agg` list, so
+  * the twin is the batch plan run incrementally. Every other core is
+  * a keyed fold over `GroupState`, run by [[run]] in append mode:
+  * [[atBarrier]] (order-free, emits once per key at its barrier row,
+  * [[withBarrier]]), [[onArrival]] (ordered, a step may emit at
+  * every arrival) and [[perBatch]] (the whole micro-batch of a key at
+  * once).
   *
-  * Emission contract: [[run]] runs no trailing no-data micro-batch
-  * unless `noDataBatches = true`, so a core's final emission must be
-  * driven by data — a barrier row in the last staged batch, or an
-  * append per arrival. A watermark-closed window emits only in the
-  * batch AFTER the one that advanced the watermark, so watermark twins
-  * either stage a last far-future row in a batch of its own
-  * ([[closingWindows]]), or (the relay) keep no-data batches on. The
-  * oracle gate enforces it: a
-  * twin that loses its final emission fails its batch oracle on row
-  * count.
+  * Emission contract of [[run]]: it runs no trailing no-data
+  * micro-batch unless `noDataBatches = true`, so a core's final
+  * emission must be driven by data — a barrier row in the last staged
+  * batch, or an append per arrival. A watermark-closed window emits
+  * only in the batch AFTER the one that advanced the watermark, so
+  * watermark twins either stage a last far-future row in a batch of
+  * its own ([[closingWindows]]), or (the relay) keep no-data batches
+  * on. [[aggregate]] needs neither: its sink holds the last trigger's
+  * whole result table. The oracle gate enforces both: a twin that
+  * loses its final emission fails its batch oracle on row count.
   *
   * Nothing here is mutable static state: concurrent twins (the gate
   * runs several at once) share no staging directory, session or conf.
@@ -129,27 +132,51 @@ object Staged {
     }
 
   /** Stage `batches` as parquet and stream them through `transform`,
-    * one batch per micro-batch and in order, into a parquet sink;
-    * returns a lazy scan of the sink. An empty batch contributes no
-    * micro-batch; all-empty input runs none and returns an empty frame
-    * of the transformed schema.
+    * one batch per micro-batch and in order, into a parquet sink in
+    * append mode; returns a lazy scan of the sink. An empty batch
+    * contributes no micro-batch; all-empty input runs none and returns
+    * an empty frame of the transformed schema. No-data micro-batches
+    * run only if `noDataBatches` (see the emission contract above; a
+    * trailing no-data batch was ~13% of the heavy twins' wall time).
+    * A parquet sink rather than a memory sink keeps the driver out of
+    * the data plane (a memory sink collects the whole emitted log
+    * driver-side). */
+  def run(spark: SparkSession, batches: Seq[DataFrame], noDataBatches: Boolean = false)
+      (transform: DataFrame => DataFrame): DataFrame =
+    staged(spark, batches, noDataBatches, complete = false)(transform)
+
+  /** Stage `batches` like [[run]] and stream them through `core`, a
+    * streaming aggregation (`groupBy(keys).agg(...)` or a global
+    * `agg`), in complete output mode; returns a lazy scan of its
+    * result table.
+    *
+    * Emission contract: complete mode needs no barrier row and no
+    * trailing micro-batch. Each trigger overwrites one parquet
+    * directory with the aggregation's whole result table, so after
+    * the last staged batch the directory holds the table over every
+    * batch: the batch `core` over the union of `batches`. All-empty
+    * input runs no trigger; the result is then `core` over an empty
+    * batch frame, which is what a global aggregate returns on no
+    * rows. */
+  def aggregate(spark: SparkSession, batches: Seq[DataFrame])
+      (core: DataFrame => DataFrame): DataFrame =
+    staged(spark, batches, noDataBatches = false, complete = true)(core)
+
+  /** The staging body of [[run]] and [[aggregate]]; only the sink
+    * differs.
     *
     * The staged input and the checkpoint live only for this call (RAM
     * scratch, deleted on return); the sink lives until JVM exit,
-    * because the returned scan reads it lazily. A parquet sink rather
-    * than a memory sink keeps the driver out of the data plane (a
-    * memory sink collects the whole emitted log driver-side).
-    * Batch order is load-bearing for keeper-state cores (keeper =
-    * first arrival): the file source orders files by mtime, so the
-    * staged mtimes are pinned strictly increasing.
+    * because the returned scan reads it lazily. Batch order is
+    * load-bearing for keeper-state cores (keeper = first arrival):
+    * the file source orders files by mtime, so the staged mtimes are
+    * pinned strictly increasing.
     *
     * The query runs in a cloned session (shared context, its own
     * conf): the stateful width is [[stateWidth]] of the largest staged
-    * batch, fixed with the fresh checkpoint, and no-data micro-batches
-    * run only if `noDataBatches` (see the emission contract above; a
-    * trailing no-data batch was ~13% of the heavy twins' wall time). */
-  def run(spark: SparkSession, batches: Seq[DataFrame], noDataBatches: Boolean = false)
-      (transform: DataFrame => DataFrame): DataFrame = {
+    * batch, fixed with the fresh checkpoint. */
+  private def staged(spark: SparkSession, batches: Seq[DataFrame], noDataBatches: Boolean,
+      complete: Boolean)(transform: DataFrame => DataFrame): DataFrame = {
     require(batches.nonEmpty, "staged stream needs at least one batch")
     val tmp = graft.sources.Scratch.tempDir("graft_staged_")
     val ckpt = graft.sources.Scratch.tempDir("graft_ckpt_")
@@ -183,26 +210,33 @@ object Staged {
       val schema = batchDirs.headOption.flatMap(d => graft.sources.Parquet.schema(spark, d.toString))
         .getOrElse(batches.head.schema)
       val ss = spark.newSession()
+      if (complete && batchDirs.isEmpty)
+        return transform(ss.createDataFrame(java.util.List.of[Row](), schema))
       ss.conf.set("spark.sql.shuffle.partitions", stateWidth(
         rows.maxOption.getOrElse(0L), spark.sparkContext.defaultParallelism).toString)
       ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", noDataBatches.toString)
       val transformed = transform(ss.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(s"$tmp/${if (batchDirs.isEmpty) "in" else "in/*"}"))
-      // the sink's _spark_metadata log lists exactly the committed
-      // files, so the read-back is exactly-once even if stop() races
-      // an in-flight write
-      val outDir = graft.sources.Scratch.tempDir("graft_sdsink_")
-      graft.sources.Scratch.deleteOnExit(outDir)
-      val q = transformed.writeStream.outputMode("append").format("parquet")
-        .option("path", outDir.toString)
-        .option("checkpointLocation", ckpt.toString).start()
+      val out = graft.sources.Scratch.tempDir("graft_sdsink_")
+      graft.sources.Scratch.deleteOnExit(out)
+      // append: the sink's _spark_metadata log lists exactly the
+      // committed files, so the read-back is exactly-once even if
+      // stop() races an in-flight write. complete: every trigger
+      // rewrites the whole table, so a replayed trigger rewrites the
+      // same rows
+      val sink = transformed.writeStream.option("checkpointLocation", ckpt.toString)
+      val q = (if (complete) sink.outputMode("complete").foreachBatch(overwrite(out.toString))
+        else sink.outputMode("append").format("parquet").option("path", out.toString)).start()
       try q.processAllAvailable() finally q.stop()
       // explicit schema: a run that commits no data file still reads
       // back as a correctly shaped empty frame
-      ss.read.schema(transformed.schema).parquet(outDir.toString)
+      ss.read.schema(transformed.schema).parquet(out.toString)
     } finally graft.sources.Scratch.deleteTree(ckpt, tmp)
   }
+
+  private def overwrite(dir: String): (DataFrame, Long) => Unit =
+    (batch, _) => batch.write.mode("overwrite").parquet(dir)
 
   /** Staged rows per state partition: the gate's stateful shuffle
     * width is `ceil(rows of the largest staged batch / R)`, clamped to

@@ -1,9 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VecFns
+import graft.operators.Similarity
 
 /** Streaming twin of
   * [[graft.operators.Similarity.annIndexStats]] — the online
@@ -11,36 +12,21 @@ import graft.functions.VecFns
   * their inverted list SCAN-LOCAL against the broadcast codebook (a
   * trained artifact — 16 centroids as literals, the documented
   * dimension-sized codebook pattern), so the only thing that shards
-  * into the state store is (list id, fit score). Per-list state is
-  * FOUR integers (count + Σ/min/max of floor(cos·10⁶) — the
-  * embed_profile exact-micro discipline), folded order-free; lists
-  * flush at the snapshot barrier because load share is a population
-  * fraction. The share/hot assembly runs K-row-sized over the
-  * flushed census via the batch operator's own
-  * [[graft.operators.Similarity.annIndexStatsAssembly]].
-  * Shares ann_index_stats' oracle.
+  * into the state store is (list id, fit score). The batch list
+  * census ([[graft.operators.Similarity.annListCensus]]: count +
+  * Σ/min/max of floor(cos·10⁶), the embed_profile exact-micro
+  * discipline) runs as a streaming aggregation; load share is a
+  * population fraction, so the share/hot assembly runs K-row-sized
+  * over the final census via the batch operator's own
+  * [[graft.operators.Similarity.annIndexStatsAssembly]]. Shares
+  * ann_index_stats' oracle.
   *
   * This is the shape that absorbs any ingest rate: assignment is
-  * stateless map work, state is O(K), and the audit view is final
-  * exactly at the snapshot. Gated property: a list receiving vectors
-  * on both sides of the cut accumulates into one counter row.
+  * stateless map work, state is O(K). Gated property: a list
+  * receiving vectors on both sides of the cut accumulates into one
+  * counter row.
   */
 object StreamAnnIngest {
-
-  case class In(cid: Long, cosMicro: Option[Long], sentinel: Boolean)
-  case class St(n: Long, sum: Option[Long], mn: Option[Long], mx: Option[Long])
-  case class Out(cid: Long, n_vectors: Long, sum_cos_micro: Option[Long],
-    min_cos_micro: Option[Long], max_cos_micro: Option[Long])
-
-  /** The stateful core: O(1) per-list moment fold; sentinel flushes. */
-  def census(rows: Dataset[In]): Dataset[Out] =
-    Staged.atBarrier(rows)(_.cid, _.sentinel)(St(0L, None, None, None)) { (st, r) =>
-      def pick(a: Option[Long], f: (Long, Long) => Long) =
-        (for (x <- a; y <- r.cosMicro) yield f(x, y)).orElse(a).orElse(r.cosMicro)
-      St(st.n + 1L, pick(st.sum, _ + _), pick(st.mn, math.min), pick(st.mx, math.max))
-    } { (cid, st) =>
-      if (st.n > 0L) Some(Out(cid, st.n, st.sum, st.mn, st.mx)) else None
-    }
 
   def streamedAnnIngest(spark: SparkSession, dir: String,
       nCentroids: Int = 16): DataFrame = {
@@ -69,15 +55,9 @@ object StreamAnnIngest {
       .withColumn("best", best)
       .filter($"best".isNotNull)
       .select((-$"best.negcid").as("cid"),
-        floor($"best.ccos" * lit(1000000.0d)).cast("long").as("cosMicro"))
-    val flushed = Staged.run(spark, Staged.withBarrier[In](
-        Staged.timeCut(emb, $"vec_id").map(assign),
-        spark.range(nCentroids).select($"id".as("cid")))) { stream =>
-      census(stream.as[In]).toDF()
-    }
-    graft.operators.Similarity.annIndexStatsAssembly(
-      flushed.select($"cid", $"n_vectors", $"sum_cos_micro",
-        $"min_cos_micro", $"max_cos_micro"),
+        floor($"best.ccos" * lit(1000000.0d)).cast("long").as("cos_micro"))
+    Similarity.annIndexStatsAssembly(
+      Staged.aggregate(spark, Staged.timeCut(emb, $"vec_id").map(assign))(Similarity.annListCensus),
       nCentroids)
   }
 }

@@ -13,7 +13,7 @@ import org.apache.spark.sql.expressions.Window
   * percentile rollup is rank statistics over the FULL gap
   * distribution, so it runs batch-side over the emitted gap log (the
   * same two-phase discipline as [[StreamAnomaly]]: accumulate online,
-  * rank at the barrier); the ranks, thresholds, and tie-breaks are
+  * rank over the final log); the ranks, thresholds, and tie-breaks are
   * the batch operator's own, and the shared `events_interarrival`
   * oracle gates the equality.
   */

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Streaming twin of [[graft.operators.Quality.orphans]] — the
@@ -8,35 +8,19 @@ import org.apache.spark.sql.functions._
   * monitors actually deploy: child rows arrive as a stream, the
   * parent key sets are STATIC dimensions, and the orphan verdict is
   * a stream-static left join — evaluated per micro-batch by Spark
-  * itself, scan-local relative to the stateful shuffle. Verdicts
-  * then accumulate per (fk, shard) — the StreamQuarantine sharded-
-  * counter posture, two longs per shard — and flush once at the
-  * audit barrier; the rollup is fk-dimension-sized. All three FK
-  * edges (lineitem→orders, orders→customer, events→customer) ride
-  * ONE staged stream: child rows tag their edge, the parent union
-  * joins on (fk, key). Shares dq_orphans' oracle.
+  * itself, before the stateful shuffle. Verdicts then accumulate per
+  * FK edge in a streaming aggregation (two longs per edge). All
+  * three FK edges (lineitem→orders, orders→customer,
+  * events→customer) ride ONE staged stream: child rows tag their
+  * edge, the parent union joins on (fk, key). Every edge reports,
+  * child rows or not: the edge list left-joins the final table, and
+  * an edge without child rows reports a NULL n_child (the batch SUM
+  * over none) and 0 orphans. Shares dq_orphans' oracle.
   *
   * Gated property: child rows split across the micro-batch cut
-  * accumulate into the same shard counters.
+  * accumulate into the same edge counters.
   */
 object StreamOrphans {
-
-  private val NShards = 8
-
-  /** The staged child row: `shard` assigns at staging time
-    * (deterministic content hash), so barrier rows can address every
-    * (fk, shard) state cell exactly. */
-  case class Child(fk: String, k: Option[Long], shard: Long, sentinel: Boolean)
-  case class V(fk: String, shard: Long, orphan: Long, sentinel: Boolean)
-  case class St(n: Long, orph: Long)
-  case class Out(fk: String, shard: Long, n_child: Long, n_orphans: Long)
-
-  /** The stateful core: per-(fk, shard) row/orphan counters; sentinel
-    * flushes. */
-  def census(ev: Dataset[V]): Dataset[Out] =
-    Staged.atBarrier(ev)(e => (e.fk, e.shard), _.sentinel)(St(0L, 0L)) { (s, e) =>
-      St(s.n + 1L, s.orph + e.orphan)
-    } { case ((fk, shard), s) => Some(Out(fk, shard, s.n, s.orph)) }
 
   def streamedOrphans(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -49,7 +33,6 @@ object StreamOrphans {
           $"o_custkey".as("k"), xxhash64($"o_orderkey").as("ord")))
         .unionByName(t.events(spark, dir).select(lit("events->customer").as("fk"),
           $"user_id".as("k"), xxhash64($"event_id").as("ord")))
-        .withColumn("shard", pmod(xxhash64($"k"), lit(NShards.toLong)))
     // static parent key sets, unioned and tagged with their edge
     val parents =
       t.orders(spark, dir).select(lit("lineitem->orders").as("fk"), $"o_orderkey".as("pk"))
@@ -58,33 +41,21 @@ object StreamOrphans {
         .unionByName(t.customer(spark, dir).select(lit("events->customer").as("fk"),
           $"c_custkey".as("pk")))
         .distinct()
-    // every edge's cells flush, child rows or not: the batch audit
-    // reports each edge
-    val cells = spark.range(NShards.toLong)
-      .crossJoin(Seq("lineitem->orders", "orders->customer", "events->customer").toDF("fk"))
-      .select($"fk", $"id".as("shard"))
-    val flushed = Staged.run(spark,
-        Staged.withBarrier[Child](Staged.timeCut(children, $"ord"), cells)) { stream =>
+    val edges = Staged.aggregate(spark, Staged.timeCut(children, $"ord")) { stream =>
       // stream-static FK probe per micro-batch, BEFORE the stateful
-      // shuffle; sentinels skip the verdict via their flag. The
-      // parent key sets scale with the DIMENSION tables (orders keys
-      // at 100 TB are nobody's broadcast), so the hint is size-gated:
-      // broadcast under the session threshold, shuffled join above
-      val flagged = stream
-        .join(graft.operators.JoinGate.gatedBroadcast(parents,
-            "stream_orphans.parents"),
-          stream("fk") === parents("fk") &&
-          stream("k") === parents("pk"), "left")
-        .select(stream("fk"), stream("shard"),
-          when($"pk".isNull, 1L).otherwise(0L).as("orphan"),
-          stream("sentinel"))
-      census(flagged.as[V]).toDF()
+      // shuffle. The parent key sets scale with the DIMENSION tables
+      // (orders keys at 100 TB are nobody's broadcast), so the hint
+      // is size-gated: broadcast under the session threshold,
+      // shuffled join above
+      stream
+        .join(graft.operators.JoinGate.gatedBroadcast(parents, "stream_orphans.parents"),
+          stream("fk") === parents("fk") && stream("k") === parents("pk"), "left")
+        .groupBy(stream("fk"))
+        .agg(count(lit(1)).as("n_child"),
+          sum(when($"pk".isNull, 1L).otherwise(0L)).as("n_orphans"))
     }
-    // n_child is NULL for an edge without child rows: the batch SUM
-    // over no rows
-    flushed.groupBy($"fk")
-      .agg(sum(when($"n_child" > 0L, $"n_child")).as("n_child"),
-        sum($"n_orphans").as("n_orphans"))
-      .select($"fk", $"n_child", $"n_orphans")
+    Seq("lineitem->orders", "orders->customer", "events->customer").toDF("fk")
+      .join(edges, Seq("fk"), "left")
+      .select($"fk", $"n_child", coalesce($"n_orphans", lit(0L)).as("n_orphans"))
   }
 }

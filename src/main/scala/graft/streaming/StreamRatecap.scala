@@ -10,8 +10,8 @@ import org.apache.spark.sql.functions._
   * aggregate enforces in its buffers) plus one running total. The
   * ranked keeper rows with their final n_total emit once, at a
   * sentinel barrier, because "how much did the cap discard" is only
-  * known when the day's stream has drained — the same two-phase
-  * emission discipline as [[StreamAnomaly]].
+  * known when the day's stream has drained — accumulate, then read
+  * the final state, the two phases of [[StreamAnomaly]].
   *
   * The keeper fold is order-independent (a sorted bounded set, ties
   * on equal µs break by event_id — the batch oracle's

@@ -1,21 +1,19 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{HashFns, TextFns}
+import graft.operators.TextAnalysis
 
 /** Streaming twin of [[graft.operators.TextAnalysis.cmsTopTerms]] —
-  * the heavy-hitters feed run LIVE: per-term doc-frequency counters
-  * as streaming state, sharded by the term's own content hash so the
-  * census distributes exactly like the batch groupBy (state per
-  * shard is the shard's slice of the VOCABULARY — corpus-bounded,
-  * not stream-bounded: the stream_novelty rationale). Tokenize +
-  * per-doc distinct run scan-local BEFORE the stateful shuffle, so
-  * only (term) increments shard into the state store. Shards flush
-  * at the snapshot barrier (a top-k is a population rank); the CMS
-  * grid + top-k + estimate lookups run over the flushed census via
-  * the batch operator's own
+  * the heavy-hitters feed run LIVE: the batch per-term doc-frequency
+  * census ([[graft.operators.TextAnalysis.termDocFreq]]: tokenize +
+  * per-doc distinct scan-local, then one counter per term — state is
+  * the VOCABULARY, corpus-bounded, not stream-bounded: the
+  * stream_novelty rationale) runs as a streaming aggregation over the
+  * staged documents. A top-k is a population rank, so the CMS grid +
+  * top-k + estimate lookups run over the final census via the batch
+  * operator's own
   * [[graft.operators.TextAnalysis.cmsTopTermsAssembly]] — faithful
   * because CMS updates are ADDITIVE (a grid built from (term, df)
   * weights equals one built per occurrence, the identity the batch
@@ -26,30 +24,10 @@ import graft.functions.{HashFns, TextFns}
   */
 object StreamTopTerms {
 
-  val Shards = 8
-
-  case class Tok(shard: Long, term: Option[String], sentinel: Boolean)
-  case class Out(term: String, doc_freq: Long)
-
-  /** The stateful core: term→count folds per shard; the sentinel
-    * flushes the shard's census slice. */
-  def census(rows: Dataset[Tok]): Dataset[Out] =
-    Staged.atBarrier(rows)(_.shard, _.sentinel)(Map.empty[String, Long]) { (counts, r) =>
-      r.term.fold(counts)(t => counts.updated(t, counts.getOrElse(t, 0L) + 1L))
-    } { (_, counts) => counts.map { case (t, n) => Out(t, n) } }
-
   def streamedTopTerms(spark: SparkSession, dir: String,
       k: Int = 20, w: Int = 1024): DataFrame = {
-    import spark.implicits._
-    def terms(docs: DataFrame): DataFrame = docs
-      .select(explode(array_distinct(TextFns.tokens($"text"))).as("term"))
-      .select($"term", pmod(HashFns.polyHash($"term"), lit(Shards.toLong)).as("shard"))
-    val flushed = Staged.run(spark, Staged.withBarrier[Tok](
-        Staged.timeCut(graft.sources.Tables.documents(spark, dir), $"doc_id").map(terms),
-        spark.range(Shards).select($"id".as("shard")))) { stream =>
-      census(stream.as[Tok]).toDF()
-    }
-    graft.operators.TextAnalysis.cmsTopTermsAssembly(
-      flushed.select($"term", $"doc_freq"), k, w)
+    val docs = graft.sources.Tables.documents(spark, dir).select(col("doc_id"), col("text"))
+    TextAnalysis.cmsTopTermsAssembly(
+      Staged.aggregate(spark, Staged.timeCut(docs, col("doc_id")))(TextAnalysis.termDocFreq), k, w)
   }
 }

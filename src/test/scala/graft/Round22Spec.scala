@@ -255,30 +255,23 @@ class Round22Spec extends SparkSpec {
 
   test("stream_ltv: a late EARLIER signup re-assigns the cohort and pulls prior purchases in") {
     import graft.streaming.StreamLtv
-    import StreamLtv.{Cell, Ev}
-    implicit val sqlCtx = spark.sqlContext
-    val wk = 7L * 86400000000L
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Ev]
-    val q = StreamLtv.cells(mem.toDS())
-      .writeStream.outputMode("append").format("memory")
-      .queryName("sltv_out").start()
-    try {
-      // batch 1: signup in week 10, purchase in week 8 — OUTSIDE the
-      // triangle under this cohort
-      mem.addData(
-        Ev(1L, 10L * wk + 5L, 10L * wk, isSignup = true, None, sentinel = false),
-        Ev(1L, 8L * wk + 9L, 8L * wk, isSignup = false, Some(500L), sentinel = false))
-      q.processAllAvailable()
-      // batch 2: an EARLIER signup (week 7) arrives late — the week-8
-      // purchase must now be IN the triangle at offset 1
-      mem.addData(
-        Ev(1L, 7L * wk + 2L, 7L * wk, isSignup = true, None, sentinel = false))
-      q.processAllAvailable()
-      mem.addData(Ev(1L, 0L, 0L, isSignup = false, None, sentinel = true))
-      q.processAllAvailable()
-      val out = spark.table("sltv_out").as[Cell].collect().toSeq
-      assert(out == Seq(Cell(1L, 7L * wk, 8L * wk, Some(500L))))
-    } finally q.stop()
+    def at(t: String) = Some(java.sql.Timestamp.from(java.time.Instant.parse(t)))
+    // batch 1: signup in the week of Jan 22, purchase in the week of
+    // Jan 8 — OUTSIDE the triangle under this cohort; batch 2: an
+    // EARLIER signup (week of Jan 1) arrives late — the purchase must
+    // now be IN the triangle at offset 1
+    val cells = twoTriggers[(Long, String, Option[java.sql.Timestamp], Option[Double])](
+        Seq((1L, "signup", at("2024-01-23T12:00:00Z"), None),
+          (1L, "purchase", at("2024-01-09T12:00:00Z"), Some(5.0d))),
+        Seq((1L, "signup", at("2024-01-02T12:00:00Z"), None))) {
+      ev => StreamLtv.cells(ev.toDF("user_id", "event_type", "ts", "value"))
+    }
+    // a local copy: the memory sink's plan cannot be self-joined
+    val local = spark.createDataFrame(cells.collectAsList(), cells.schema)
+    val out = StreamLtv.triangle(local).collect().map(r =>
+      (r.getAs[java.sql.Timestamp]("cohort_week").toInstant.toString, r.getAs[Long]("week_offset"),
+        r.getAs[Long]("n_buyers"), r.getAs[Double]("revenue"))).toSeq
+    assert(out == Seq(("2024-01-01T00:00:00Z", 1L, 1L, 5.0d)))
   }
 
   test("stream_benford equals the batch dq_benford") {

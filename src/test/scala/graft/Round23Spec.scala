@@ -121,25 +121,10 @@ class Round23Spec extends SparkSpec {
   }
 
   test("stream_quantiles_hist: a bucket split across the cut accumulates into one counter") {
-    import graft.streaming.StreamQuantilesHist
-    import StreamQuantilesHist.{Li, Out}
-    implicit val sqlCtx = spark.sqlContext
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Li]
-    val q = StreamQuantilesHist.census(mem.toDS())
-      .writeStream.outputMode("append").format("memory")
-      .queryName("sqh_out").start()
-    try {
-      mem.addData(Li(Some("A"), Some(3L), sentinel = false),
-        Li(Some("A"), Some(3L), sentinel = false))
-      q.processAllAvailable()
-      assert(spark.table("sqh_out").count() == 0L, "no flush before the barrier")
-      mem.addData(Li(Some("A"), Some(3L), sentinel = false),
-        Li(Some("A"), Some(7L), sentinel = false))
-      mem.addData(Li(Some("A"), None, sentinel = true))
-      q.processAllAvailable()
-      val out = spark.table("sqh_out").as[Out].collect().toSet
-      assert(out == Set(Out(Some("A"), Some(3L), 3L), Out(Some("A"), Some(7L), 1L)))
-    } finally q.stop()
+    val out = twoTriggers(Seq(("A", 1600.0d), ("A", 1700.0d)), Seq(("A", 1800.0d), ("A", 3600.0d))) {
+      rows => Relational.quantilesHistCensus(rows.toDF("l_returnflag", "l_extendedprice"), 500.0d)
+    }
+    assert(out.as[(String, Long, Long)].collect().toSet == Set(("A", 3L, 3L), ("A", 7L, 1L)))
   }
 
   test("stream_topterms equals the batch q_cms_topterms") {
@@ -198,45 +183,18 @@ class Round23Spec extends SparkSpec {
   }
 
   test("stream_ann_ingest: a list fed on both sides of the cut folds into one row") {
-    import graft.streaming.StreamAnnIngest
-    import StreamAnnIngest.{In, Out}
-    implicit val sqlCtx = spark.sqlContext
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[In]
-    val q = StreamAnnIngest.census(mem.toDS())
-      .writeStream.outputMode("append").format("memory")
-      .queryName("sai_out").start()
-    try {
-      mem.addData(In(3L, Some(900000L), sentinel = false),
-        In(3L, Some(950000L), sentinel = false))
-      q.processAllAvailable()
-      assert(spark.table("sai_out").count() == 0L, "no flush before the barrier")
-      mem.addData(In(3L, Some(800000L), sentinel = false))
-      mem.addData(In(3L, None, sentinel = true), In(7L, None, sentinel = true))
-      q.processAllAvailable()
-      val out = spark.table("sai_out").as[Out].collect().toSet
-      // list 7 saw no vectors: the sentinel alone must not mint a row
-      assert(out == Set(Out(3L, 3L, Some(2650000L), Some(800000L), Some(950000L))))
-    } finally q.stop()
+    val out = twoTriggers(Seq((3L, 900000L), (3L, 950000L)), Seq((3L, 800000L))) {
+      rows => graft.operators.Similarity.annListCensus(rows.toDF("cid", "cos_micro"))
+    }
+    assert(out.as[(Long, Long, Long, Long, Long)].collect().toSeq ==
+      Seq((3L, 3L, 2650000L, 800000L, 950000L)))
   }
 
   test("stream_topterms: a term split across the cut accumulates into one counter") {
-    import graft.streaming.StreamTopTerms
-    import StreamTopTerms.{Out, Tok}
-    implicit val sqlCtx = spark.sqlContext
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Tok]
-    val q = StreamTopTerms.census(mem.toDS())
-      .writeStream.outputMode("append").format("memory")
-      .queryName("stt_out").start()
-    try {
-      mem.addData(Tok(0L, Some("alpha"), sentinel = false),
-        Tok(0L, Some("beta"), sentinel = false))
-      q.processAllAvailable()
-      assert(spark.table("stt_out").count() == 0L, "no flush before the barrier")
-      mem.addData(Tok(0L, Some("alpha"), sentinel = false))
-      mem.addData(Tok(0L, None, sentinel = true))
-      q.processAllAvailable()
-      val out = spark.table("stt_out").as[Out].collect().toSet
-      assert(out == Set(Out("alpha", 2L), Out("beta", 1L)))
-    } finally q.stop()
+    // a document counts a term once, however often it repeats it
+    val out = twoTriggers(Seq((1L, "alpha beta")), Seq((2L, "alpha alpha"))) {
+      docs => TextAnalysis.termDocFreq(docs.toDF("doc_id", "text"))
+    }
+    assert(out.as[(String, Long)].collect().toSet == Set(("alpha", 2L), ("beta", 1L)))
   }
 }

@@ -118,23 +118,17 @@ class Round24Spec extends SparkSpec {
     assert(batch.nonEmpty && batch == streamed)
   }
 
-  test("stream_completeness: shard counters accumulate across the cut") {
-    import graft.streaming.StreamCompleteness
-    import StreamCompleteness.{Flags, Out}
-    implicit val sqlCtx = spark.sqlContext
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Flags]
-    val q = StreamCompleteness.census(mem.toDS())
-      .writeStream.outputMode("append").format("memory")
-      .queryName("compl_out").start()
-    try {
-      mem.addData(Flags(0L, 1L, 0L, 0L, 0L, 0L, 0L, 0L, sentinel = false))
-      q.processAllAvailable()
-      mem.addData(Flags(0L, 0L, 1L, 0L, 1L, 0L, 0L, 0L, sentinel = false))
-      mem.addData(Flags(0L, 0L, 0L, 0L, 0L, 0L, 0L, 0L, sentinel = true))
-      q.processAllAvailable()
-      val out = spark.table("compl_out").as[Out].collect().toSeq
-      assert(out == Seq(Out(0L, 2L, 1L, 1L, 0L, 1L, 0L, 0L, 0L)))
-    } finally q.stop()
+  test("stream_completeness: counters accumulate across the cut") {
+    val ts = Some(java.sql.Timestamp.valueOf("2024-01-02 03:04:05"))
+    val out = twoTriggers[(Option[java.sql.Timestamp], Option[Long], Option[String], Option[Double],
+        Option[String])](
+        Seq((None, Some(1L), Some("click"), Some(1.0d), Some("{}"))),
+        Seq((ts, None, Some(" "), Some(2.0d), Some("{}")))) {
+      ev => Quality.completenessCounts(ev.toDF("ts", "user_id", "event_type", "value", "props"))
+    }.collect().toSeq
+    // n_rows, then (null, blank) per column: ts, user_id, event_type,
+    // value, props
+    assert(out.map(_.toSeq) == Seq(Seq(2L, 1L, 0L, 1L, 0L, 0L, 1L, 0L, 0L, 0L, 0L)))
   }
 
   test("stream_frame_stats equals the batch frame_stats") {
@@ -203,23 +197,10 @@ class Round24Spec extends SparkSpec {
   }
 
   test("stream_diversity: a census cell split across the cut folds into one counter") {
-    import graft.streaming.StreamDiversity
-    import StreamDiversity.{Ev, Out}
-    implicit val sqlCtx = spark.sqlContext
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Ev]
-    val q = StreamDiversity.census(mem.toDS())
-      .writeStream.outputMode("append").format("memory")
-      .queryName("div_out").start()
-    try {
-      mem.addData(Ev(Some(1L), Some("a"), sentinel = false))
-      q.processAllAvailable()
-      mem.addData(Ev(Some(1L), Some("a"), sentinel = false),
-        Ev(Some(1L), Some("b"), sentinel = false))
-      mem.addData(Ev(Some(1L), None, sentinel = true))
-      q.processAllAvailable()
-      val out = spark.table("div_out").as[Out].collect().toSet
-      assert(out == Set(Out(Some(1L), Some("a"), 2L), Out(Some(1L), Some("b"), 1L)))
-    } finally q.stop()
+    val out = twoTriggers(Seq((1L, "a")), Seq((1L, "a"), (1L, "b"))) {
+      ev => Telemetry.diversityCensus(ev.toDF("user_id", "event_type"))
+    }
+    assert(out.as[(Long, String, Long)].collect().toSet == Set((1L, "a", 2L), (1L, "b", 1L)))
   }
 
   test("stream_trend equals the batch ts_trend") {

@@ -70,18 +70,19 @@ class LocalFsSpec extends graft.SparkSpec {
   }
 
   test("a real symlink keeps its link status and target; a missing path is not found") {
-    // Hadoop's own link lookup runs `readlink` on the path's string, so
-    // it sees a link only under a scheme-less path
-    def hpath(p: java.nio.file.Path) = new Path(p.toString)
     withDir { dir =>
       val target = Files.writeString(dir.resolve("target"), "x")
       val link = Files.createSymbolicLink(dir.resolve("link"), target)
-      val qualified = fs.makeQualified(hpath(target))
-      val viaFc = fc.getFileLinkStatus(hpath(link))
-      assert(viaFc.isSymlink && viaFc.getSymlink == qualified)
-      val viaFs = fs.getFileLinkStatus(hpath(link))
-      assert(viaFs.isSymlink && viaFs.getSymlink == qualified)
+      val qualified = fs.makeQualified(new Path(target.toString))
+      // Hadoop's own lookup saw the link only under the scheme-less path
+      Seq(new Path(link.toString), hpath(link)).foreach { p =>
+        Seq("fc" -> fc.getFileLinkStatus(p), "fs" -> fs.getFileLinkStatus(p)).foreach { case (via, st) =>
+          assert(st.isSymlink && st.getSymlink == qualified && st.getLen == 1L, s"$via $p")
+        }
+      }
       assert(!fs.getFileLinkStatus(hpath(target)).isSymlink)
+      Files.delete(target)
+      assert(fs.getFileLinkStatus(hpath(link)).getSymlink == qualified, "dangling link")
       val missing = hpath(dir.resolve("missing"))
       intercept[FileNotFoundException](fc.getFileLinkStatus(missing))
       intercept[FileNotFoundException](fs.getFileLinkStatus(missing))

@@ -64,8 +64,16 @@ class StagedSpec extends graft.SparkSpec {
     val nullTs = corpus("graft_staged_nullts_") { (t, df) =>
       if (t == "events") df.withColumn("ts", lit(null).cast(df.schema("ts").dataType)) else df
     }
-    Seq("stream_basket", "stream_diversity", "stream_downsample", "stream_keyskew",
-        "stream_ratecap").foreach { k =>
+    // the keyed folds that stage NULL-time rows, and every twin run as
+    // a complete-mode aggregation (Staged.aggregate)
+    val aggregated = Seq("stream_abtest", "stream_ann_ingest", "stream_anomaly",
+      "stream_benford", "stream_chunks", "stream_completeness", "stream_forecast",
+      "stream_frame_stats", "stream_heatmap", "stream_ltv", "stream_orphans", "stream_power",
+      "stream_quantiles_hist", "stream_quarantine", "stream_queue_stats", "stream_retention",
+      "stream_rfm", "stream_seasonal", "stream_topterms", "stream_trend", "stream_uptime",
+      "stream_volume")
+    (Seq("stream_basket", "stream_diversity", "stream_downsample", "stream_keyskew",
+        "stream_ratecap") ++ aggregated).foreach { k =>
       val b = batchTwin(k)
       assert(b.nonEmpty, s"$k shares no batch oracle entry")
       val want = SparkEntry.queries(b.get)(spark, nullTs)
