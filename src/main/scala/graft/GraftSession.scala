@@ -71,8 +71,9 @@ object GraftSession {
       // tags its jobs with its own JobArtifactState(sessionUUID), and
       // the executor builds a new IsolatedSessionState, class loader
       // included, per new UUID. Every staged stream makes two sessions
-      // per call (Staged.run's newSession and StreamExecution's
-      // cloneSession), so each task-side compile inside a twin missed
+      // per call (Staged.stream's newSession and StreamExecution's
+      // cloneSession), and its batches' plans run in a third, the
+      // caller's, so each task-side compile inside a twin missed
       // however large the cache (stream_twins: 535 compiles of 79
       // sources, 360 task-side repeats). graft adds no jar or artifact
       // to any session, so isolation guarded nothing; off, every
@@ -114,7 +115,8 @@ object GraftSession {
       // driver-side tripwire that turns a corpus-sized collect into a
       // loud error instead of an OOM. The one path that used to need
       // 8g (the streaming gate's memory sink, r11) now writes a
-      // durable parquet sink (streaming.Staged.run) — no
+      // parquet sink (streaming.Staged.stream: every append-mode
+      // trigger, or the last complete-mode table) — no
       // operator or gate path ships corpus-sized results driver-side.
       .config("spark.ui.enabled", "false")
 

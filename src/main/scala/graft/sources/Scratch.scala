@@ -4,9 +4,9 @@ import java.nio.file.{Files, Path, Paths}
 
 /** RAM-backed scratch space for engine-internal staging.
   *
-  * The streaming twins and the wire-format operators stage small
-  * intermediate files (per-micro-batch parquet, stream checkpoints,
-  * rolled frame blobs) whose lifetime is one operator call. On this
+  * The streaming twins and the wire-format operators write small
+  * intermediate files (stream checkpoints and sinks, rolled frame
+  * blobs) whose lifetime is one operator call. On this
   * box `/tmp` sits on the root disk, so every micro-batch pays real
   * fsyncs for offsets/commits/state deltas that are deleted seconds
   * later — measured at ~2× the whole staged-stream cost. `/dev/shm`

@@ -1,13 +1,14 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import scala.reflect.runtime.universe.TypeTag
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.catalyst.ScalaReflection
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
+
+import graft.sources.{Parquet, Scratch}
 
 /** The staging protocol of the batch-gated streaming twins, written
   * once. A twin replays a bounded corpus as a stream: the corpus is
@@ -23,6 +24,15 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * every arrival) and [[perBatch]] (the whole micro-batch of a key at
   * once).
   *
+  * Staging protocol: nothing is written before the stream starts. A
+  * [[PlanSource]] serves batch i at offset i, one offset per trigger,
+  * and each trigger runs its batch's own plan; batch order is offset
+  * order. The stream's schema is the batches' union schema with every
+  * field nullable, as a file stream's is. Because a trigger re-runs its
+  * batch's plan on a retry or a restart instead of reading a copy, a
+  * batch plan must be deterministic; a `rand()` or `uuid()` batch fails
+  * loudly, naming its index.
+  *
   * Emission contract of [[run]]: it runs no trailing no-data
   * micro-batch unless `noDataBatches = true`, so a core's final
   * emission must be driven by data — a barrier row in the last staged
@@ -30,12 +40,13 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * only in the batch AFTER the one that advanced the watermark, so
   * watermark twins either stage a last far-future row in a batch of
   * its own ([[closingWindows]]), or (the relay) keep no-data batches
-  * on. [[aggregate]] needs neither: its sink holds the last trigger's
+  * on. An empty batch still runs its trigger, with no rows.
+  * [[aggregate]] needs neither: its sink holds the last trigger's
   * whole result table. The oracle gate enforces both: a twin that
   * loses its final emission fails its batch oracle on row count.
   *
   * Nothing here is mutable static state: concurrent twins (the gate
-  * runs several at once) share no staging directory, session or conf.
+  * runs several at once) share no checkpoint, sink, session or conf.
   */
 object Staged {
 
@@ -46,12 +57,16 @@ object Staged {
   /** Two micro-batches split at the midpoint of `key`'s [min, max]
     * (or at `at`), NULL keys in batch 1. An empty or all-NULL `ev` is
     * staged as one batch, so every twin returns a correctly shaped
-    * frame on a degenerate corpus. */
+    * frame on a degenerate corpus. The bounds come from parquet footer
+    * statistics when they can tell them ([[graft.sources.Parquet.keyBounds]]),
+    * else from one min/max job; a cut is only a staging choice, and
+    * both give the same cut. */
   def timeCut(ev: DataFrame, key: Column, at: Option[Long] = None): Seq[DataFrame] =
-    at.orElse {
+    at.orElse(Parquet.keyBounds(ev, key).getOrElse {
       val b = ev.agg(min(key), max(key)).head()
-      if (b.isNullAt(0)) None else Some((b.getLong(0) + b.getLong(1)) / 2)
-    }.fold(Seq(ev))(cut => Seq(ev.filter(key.isNull || key <= cut), ev.filter(key > cut)))
+      Option.when(!b.isNullAt(0))((b.getLong(0), b.getLong(1)))
+    }.map { case (lo, hi) => (lo + hi) / 2 })
+      .fold(Seq(ev))(cut => Seq(ev.filter(key.isNull || key <= cut), ev.filter(key > cut)))
 
   /** One barrier row per row of `keys`, shaped as `E`: fields present
     * in `keys` come from it, `sentinel` is true, any other field is
@@ -131,112 +146,78 @@ object Staged {
       (s, out.result().iterator)
     }
 
-  /** Stage `batches` as parquet and stream them through `transform`,
-    * one batch per micro-batch and in order, into a parquet sink in
-    * append mode; returns a lazy scan of the sink. An empty batch
-    * contributes no micro-batch; all-empty input runs none and returns
-    * an empty frame of the transformed schema. No-data micro-batches
-    * run only if `noDataBatches` (see the emission contract above; a
-    * trailing no-data batch was ~13% of the heavy twins' wall time).
-    * A parquet sink rather than a memory sink keeps the driver out of
-    * the data plane (a memory sink collects the whole emitted log
-    * driver-side). */
+  /** Stream `batches` through `transform`, one batch per micro-batch
+    * and in order, into a parquet sink in append mode; returns a lazy
+    * scan of the sink. No-data micro-batches run only if
+    * `noDataBatches` (see the emission contract above; a trailing
+    * no-data batch was ~13% of the heavy twins' wall time). A parquet
+    * sink rather than a memory sink keeps the driver out of the data
+    * plane (a memory sink collects the whole emitted log driver-side). */
   def run(spark: SparkSession, batches: Seq[DataFrame], noDataBatches: Boolean = false)
       (transform: DataFrame => DataFrame): DataFrame =
     staged(spark, batches, noDataBatches, complete = false)(transform)
 
-  /** Stage `batches` like [[run]] and stream them through `core`, a
-    * streaming aggregation (`groupBy(keys).agg(...)` or a global
-    * `agg`), in complete output mode; returns a lazy scan of its
-    * result table.
+  /** Stream `batches` like [[run]] through `core`, a streaming
+    * aggregation (`groupBy(keys).agg(...)` or a global `agg`), in
+    * complete output mode; returns a lazy scan of its result table.
     *
     * Emission contract: complete mode needs no barrier row and no
-    * trailing micro-batch. Each trigger overwrites one parquet
-    * directory with the aggregation's whole result table, so after
-    * the last staged batch the directory holds the table over every
-    * batch: the batch `core` over the union of `batches`. All-empty
-    * input runs no trigger; the result is then `core` over an empty
-    * batch frame, which is what a global aggregate returns on no
-    * rows. */
+    * trailing micro-batch. The sink writes one parquet table, the
+    * aggregation's whole result table after the last batch: the batch
+    * `core` over the union of `batches`. Earlier triggers run their
+    * batch into a `noop` write, so the state they fold still commits.
+    * On all-empty input every trigger reads no rows, and the table is
+    * what a streaming aggregation returns on no rows: one row for a
+    * global aggregate, none for a grouped one. */
   def aggregate(spark: SparkSession, batches: Seq[DataFrame])
       (core: DataFrame => DataFrame): DataFrame =
     staged(spark, batches, noDataBatches = false, complete = true)(core)
 
-  /** The staging body of [[run]] and [[aggregate]]; only the sink
-    * differs.
-    *
-    * The staged input and the checkpoint live only for this call (RAM
-    * scratch, deleted on return); the sink lives until JVM exit,
-    * because the returned scan reads it lazily. Batch order is
-    * load-bearing for keeper-state cores (keeper = first arrival):
-    * the file source orders files by mtime, so the staged mtimes are
-    * pinned strictly increasing.
-    *
-    * The query runs in a cloned session (shared context, its own
-    * conf): the stateful width is [[stateWidth]] of the largest staged
-    * batch, fixed with the fresh checkpoint. */
+  /** The body of [[run]] and [[aggregate]]: the checkpoint lives only
+    * for this call (RAM scratch, deleted on return); the sink lives
+    * until JVM exit, because the returned scan reads it lazily. */
   private def staged(spark: SparkSession, batches: Seq[DataFrame], noDataBatches: Boolean,
       complete: Boolean)(transform: DataFrame => DataFrame): DataFrame = {
-    require(batches.nonEmpty, "staged stream needs at least one batch")
-    val tmp = graft.sources.Scratch.tempDir("graft_staged_")
-    val ckpt = graft.sources.Scratch.tempDir("graft_ckpt_")
-    try {
-      // one write job stages every batch: a literal gbatch column
-      // (no leading underscore: `_`-prefixed paths are hidden from
-      // file listing), partitioned into per-batch dirs
-      batches.zipWithIndex
-        .map { case (b, i) => b.withColumn("gbatch", lit(f"b_$i%03d")) }
-        .reduce(_ unionByName _)
-        .repartition(batches.length, col("gbatch"))
-        .write.partitionBy("gbatch").parquet(s"$tmp/in")
-      val batchDirs = batches.indices
-        .map(i => tmp.resolve(f"in/gbatch=b_$i%03d"))
-        .filter(Files.isDirectory(_))
-      locally {
-        import java.nio.file.attribute.FileTime
-        import scala.jdk.CollectionConverters._
-        var t = 1000000L
-        batchDirs.foreach { dir =>
-          val walk = Files.walk(dir)
-          try walk.iterator().asScala.foreach(p => Files.setLastModifiedTime(p, FileTime.fromMillis(t)))
-          finally walk.close()
-          t += 60000L
-        }
-      }
-      // rows and schema from the staged footers, read on the driver;
-      // all-empty input wrote no batch dir, so the source points at
-      // the (empty) staging root with the input's own schema
-      val rows = batchDirs.map(d => graft.sources.Parquet.rows(spark, d))
-      val schema = batchDirs.headOption.flatMap(d => graft.sources.Parquet.schema(spark, d.toString))
-        .getOrElse(batches.head.schema)
-      val ss = spark.newSession()
-      if (complete && batchDirs.isEmpty)
-        return transform(ss.createDataFrame(java.util.List.of[Row](), schema))
-      ss.conf.set("spark.sql.shuffle.partitions", stateWidth(
-        rows.maxOption.getOrElse(0L), spark.sparkContext.defaultParallelism).toString)
-      ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", noDataBatches.toString)
-      val transformed = transform(ss.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$tmp/${if (batchDirs.isEmpty) "in" else "in/*"}"))
-      val out = graft.sources.Scratch.tempDir("graft_sdsink_")
-      graft.sources.Scratch.deleteOnExit(out)
-      // append: the sink's _spark_metadata log lists exactly the
-      // committed files, so the read-back is exactly-once even if
-      // stop() races an in-flight write. complete: every trigger
-      // rewrites the whole table, so a replayed trigger rewrites the
-      // same rows
-      val sink = transformed.writeStream.option("checkpointLocation", ckpt.toString)
-      val q = (if (complete) sink.outputMode("complete").foreachBatch(overwrite(out.toString))
-        else sink.outputMode("append").format("parquet").option("path", out.toString)).start()
-      try q.processAllAvailable() finally q.stop()
-      // explicit schema: a run that commits no data file still reads
-      // back as a correctly shaped empty frame
-      ss.read.schema(transformed.schema).parquet(out.toString)
-    } finally graft.sources.Scratch.deleteTree(ckpt, tmp)
+    val ckpt = Scratch.tempDir("graft_ckpt_")
+    val out = Scratch.tempDir("graft_sdsink_")
+    Scratch.deleteOnExit(out)
+    try stream(spark, batches, ckpt.toString, out.toString, noDataBatches, complete)(transform)
+    finally Scratch.deleteTree(ckpt)
   }
 
-  private def overwrite(dir: String): (DataFrame, Long) => Unit =
-    (batch, _) => batch.write.mode("overwrite").parquet(dir)
+  /** [[staged]] on a given checkpoint and sink, so a stream can be
+    * stopped and restarted on the same ones.
+    *
+    * The query runs in a cloned session (shared context, its own
+    * conf): the stateful width is [[stateWidth]] of the largest batch,
+    * fixed with a fresh checkpoint. Its rows come from a job-free upper
+    * bound when that bound is at most [[RowsPerStatePartition]] (width
+    * 1); otherwise one job counts the rows of every batch
+    * ([[PlanSource.largestBatch]]). */
+  private[streaming] def stream(spark: SparkSession, batches: Seq[DataFrame], ckpt: String,
+      out: String, noDataBatches: Boolean, complete: Boolean)
+      (transform: DataFrame => DataFrame): DataFrame = {
+    val source = PlanSource(batches)
+    val ss = spark.newSession()
+    ss.conf.set("spark.sql.shuffle.partitions", stateWidth(source.largestBatch(RowsPerStatePartition),
+      spark.sparkContext.defaultParallelism).toString)
+    ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", noDataBatches.toString)
+    val transformed = transform(ColumnBridge.stream(ss, source))
+    // append: the sink's _spark_metadata log lists exactly the
+    // committed files, so the read-back is exactly-once even if stop()
+    // races an in-flight write. complete: trigger i reads batch i (one
+    // offset per trigger), so only the last batch's trigger writes
+    val sink = transformed.writeStream.option("checkpointLocation", ckpt)
+    val last = batches.length - 1L
+    val q = (if (complete) sink.outputMode("complete").foreachBatch { (batch: DataFrame, id: Long) =>
+      if (id == last) batch.write.mode("overwrite").parquet(out)
+      else batch.write.format("noop").mode("overwrite").save()
+    } else sink.outputMode("append").format("parquet").option("path", out)).start()
+    try q.processAllAvailable() finally q.stop()
+    // explicit schema: a run that commits no data file still reads
+    // back as a correctly shaped empty frame
+    ss.read.schema(transformed.schema).parquet(out)
+  }
 
   /** Staged rows per state partition: the gate's stateful shuffle
     * width is `ceil(rows of the largest staged batch / R)`, clamped to

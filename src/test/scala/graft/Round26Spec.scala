@@ -11,7 +11,7 @@ class Round26Spec extends SparkSpec {
     * (event_id, user_id, event_type, ts-µs-or-null). */
   private def eventsDir(name: String, rows: Seq[(Long, Long, String, Option[Long])]): String = {
     import spark.implicits._
-    val dir = graft.sources.Scratch.tempDir(s"graft_t26_$name").toString
+    val dir = scratchDir(s"graft_t26_$name")
     rows.toDF("event_id", "user_id", "event_type", "ts_us")
       .select($"event_id", $"user_id", $"event_type",
         timestamp_micros($"ts_us").as("ts"), lit(1.0d).as("value"))
@@ -48,7 +48,7 @@ class Round26Spec extends SparkSpec {
       try {
         import scala.jdk.CollectionConverters._
         ls.iterator().asScala.map(_.getFileName.toString)
-          .filter(_.startsWith("graft_sdedup_")).toSet
+          .filter(_.startsWith("graft_ckpt_")).toSet
       } finally ls.close()
     }
     val before = stagedDirs()
@@ -58,7 +58,7 @@ class Round26Spec extends SparkSpec {
     val a = graft.streaming.StreamUniqueness.streamedUniqueness(spark, dir).collect()
     val b = graft.streaming.StreamUniqueness.streamedUniqueness(spark, dir).collect()
     assert(a.toSet == b.toSet)
-    // each run deletes its staged input once the query stops: the
+    // each run deletes its checkpoint once the query stops: the
     // returned frame reads only the sink
     assert((stagedDirs() -- before).isEmpty, "staged input outlived its run")
     // a DIFFERENT corpus must not see the first corpus's staging
@@ -102,7 +102,7 @@ class Round26Spec extends SparkSpec {
     assert(row.isNullAt(0), "cosine with a zero vector must be NULL")
     assert(math.abs(row.getDouble(1) - 1.0) < 1e-12)
     // degenerate corpus: the zero vector must not seat in the graph
-    val dir = graft.sources.Scratch.tempDir("graft_t26_zv").toString
+    val dir = scratchDir("graft_t26_zv")
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
     val zero = Seq((9999L, Array.fill(64)(0.0f), 0)).toDF("vec_id", "embedding", "label")
     emb.unionByName(zero).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
@@ -116,7 +116,7 @@ class Round26Spec extends SparkSpec {
     import spark.implicits._
     // 250 identical documents share every band key -> one bucket of
     // 250 > the 200 cap -> the prune must drop it AND say so
-    val dir = graft.sources.Scratch.tempDir("graft_t26_hot").toString
+    val dir = scratchDir("graft_t26_hot")
     val hot = (1L to 250L).map(i => (i, "the same duplicated crawl page body " * 3))
     // two near-identical cold docs keep the FINAL pair set non-empty:
     // AQE's empty-relation propagation would otherwise collapse the

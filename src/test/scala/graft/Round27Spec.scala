@@ -13,7 +13,7 @@ class Round27Spec extends SparkSpec {
     * where a heap election could diverge from the window formulation. */
   private lazy val edgeDir: String = {
     import spark.implicits._
-    val dir = graft.sources.Scratch.tempDir("graft_t27_edges").toString
+    val dir = scratchDir("graft_t27_edges")
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
     val v0 = emb.filter($"vec_id" === 0L).head()
     val extra = Seq(
@@ -80,7 +80,7 @@ class Round27Spec extends SparkSpec {
 
   test("bm25: engine-exact micros, self-exclusion, deterministic ties") {
     import spark.implicits._
-    val dir = graft.sources.Scratch.tempDir("graft_t27_bm25").toString
+    val dir = scratchDir("graft_t27_bm25")
     val docs = Seq(
       (0L, "apple banana cherry"),   // query doc (0 % 50 == 0)
       (1L, "apple apple date"),
@@ -127,7 +127,7 @@ class Round27Spec extends SparkSpec {
     // rare side empty -> AQE collapses the whole query to an empty
     // relation, discarding the CollectMetrics node — the exact case
     // where the observed audit used to vanish (ADVICE r9)
-    val dir = graft.sources.Scratch.tempDir("graft_t27_hotall").toString
+    val dir = scratchDir("graft_t27_hotall")
     val v = Array.tabulate(64)(i => (i + 1).toFloat)
     (1L to 900L).map(id => (id, v, 0)).toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")

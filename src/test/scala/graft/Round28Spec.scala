@@ -80,7 +80,7 @@ class Round28Spec extends SparkSpec {
   test("NULL-document semantics: hash-permutation ops exclude, pack keeps at zero") {
     import spark.implicits._
     // a corpus with one NULL-text and one NULL-source doc
-    val dir = graft.sources.Scratch.tempDir("graft_t28_nulls").toString
+    val dir = scratchDir("graft_t28_nulls")
     spark.read.parquet(s"$sf/documents.parquet")
       .unionByName(Seq(
         (900001L, null.asInstanceOf[String], "es", "src0", 0L),

@@ -38,7 +38,7 @@ class Round29Spec extends SparkSpec {
       (t, fam) <- texts.zipWithIndex
       r <- 0 until 3
     } yield ((fam * 3 + r).toLong, t)
-    val dir = graft.sources.Scratch.tempDir("graft_t29_ngram").toString
+    val dir = scratchDir("graft_t29_ngram")
     docs.toDF("doc_id", "text").write.mode("overwrite")
       .parquet(s"$dir/documents.parquet")
     val rows = graft.operators.Dedup.ngram(spark, dir, maxBucket = 2).collect()
@@ -68,7 +68,7 @@ class Round29Spec extends SparkSpec {
     // ZERO contamination; the distinct-text cap (1 text) keeps them
     val evalText = "this benchmark passage is long enough to winnow into fingerprints"
     val docs = (0L, evalText) +: (1 to 120).map(i => (49L + i, evalText))
-    val dir = graft.sources.Scratch.tempDir("graft_t29_winnow").toString
+    val dir = scratchDir("graft_t29_winnow")
     docs.toDF("doc_id", "text").write.mode("overwrite")
       .parquet(s"$dir/documents.parquet")
     val got = graft.operators.TextAnalysis.decontaminateWinnow(spark, dir)
@@ -87,7 +87,7 @@ class Round29Spec extends SparkSpec {
       (2L, "alpha beta gamma epsilon"),
       (3L, "zeta eta theta iota"),
       (4L, "alpha kappa lambda mu"))
-    val dir = graft.sources.Scratch.tempDir("graft_t29_bm25").toString
+    val dir = scratchDir("graft_t29_bm25")
     docs.toDF("doc_id", "text").write.mode("overwrite")
       .parquet(s"$dir/documents.parquet")
     val got = graft.operators.TextAnalysis.bm25(spark, dir)

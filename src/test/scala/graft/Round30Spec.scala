@@ -31,7 +31,7 @@ class Round30Spec extends SparkSpec {
     val docs = ((1L to 210L).map(i => (i, "clone family text body shared verbatim"))
       ++ Seq((500L, "rare text one of two"), (501L, "rare text one of two")))
       .toDF("doc_id", "text")
-    val dir = graft.sources.Scratch.tempDir("graft_t30_hot").toString
+    val dir = scratchDir("graft_t30_hot")
     docs.write.parquet(s"$dir/documents.parquet")
     val loaded = graft.sources.Tables.documents(spark, dir).select($"doc_id", $"text")
     val hot = StreamDedup.hotBucketProfile(loaded)
@@ -53,7 +53,7 @@ class Round30Spec extends SparkSpec {
     // output; the parquet sink commits no data files, and the
     // explicit-schema read-back must still give the transformed shape
     val docs = Seq((1L, null: String), (2L, null: String)).toDF("doc_id", "text")
-    val dir = graft.sources.Scratch.tempDir("graft_t30_null").toString
+    val dir = scratchDir("graft_t30_null")
     docs.write.parquet(s"$dir/documents.parquet")
     val out = graft.streaming.StreamDedup.streamedDedup(spark, dir)
     assert(out.columns.toSeq == Seq("doc_a", "doc_b", "est_jaccard"))

@@ -9,6 +9,14 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   val sf: String = "/root/testdata/sf0.001"
 
+  /** A fresh scratch directory, deleted at JVM exit also when the test
+    * fails (a lazy frame the test returns may still read it). */
+  def scratchDir(prefix: String): String = {
+    val dir = graft.sources.Scratch.tempDir(prefix)
+    graft.sources.Scratch.deleteOnExit(dir)
+    dir.toString
+  }
+
   /** `core` run in complete mode over a memory stream into a memory
     * sink: `first` is added and processed, then `second`; returns the
     * sink's table after the second trigger. */

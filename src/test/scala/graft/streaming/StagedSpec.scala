@@ -1,15 +1,23 @@
 package graft.streaming
 
+import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.Eventually
 
 import graft.SparkEntry
 
 /** Degenerate corpora behave the same way in every streaming twin:
   * [[Staged.timeCut]] stages an empty or all-NULL-time corpus as one
   * batch, so a twin neither bails out with a column-less frame nor
-  * drops the rows its batch twin keeps. */
-class StagedSpec extends graft.SparkSpec {
+  * drops the rows its batch twin keeps. A staged stream re-runs its
+  * batch plans, so it refuses a nondeterministic one, and it starts
+  * no job beyond its triggers where the footers can tell the cut and
+  * the width. */
+class StagedSpec extends graft.SparkSpec with Eventually {
 
   private val tables = Seq("region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
@@ -81,5 +89,47 @@ class StagedSpec extends graft.SparkSpec {
       assert(got.columns.sorted.toSeq == want.columns.sorted.toSeq, s"$k columns")
       assert(rows(got) == rows(want), s"$k rows differ from ${b.get}")
     }
+  }
+
+  test("a nondeterministic batch plan fails loudly, naming its index") {
+    val ok = spark.range(10).toDF("x")
+    val e = intercept[IllegalArgumentException] {
+      Staged.run(spark, Seq(ok, spark.range(10).select((rand() * 10).cast("long").as("x"))))(identity)
+    }
+    assert(e.getMessage.contains("staged batch 1 is not deterministic"), e.getMessage)
+  }
+
+  /** The Spark jobs `body` starts, on any thread: the job ids between
+    * two marker jobs of this thread (ids are handed out in order). */
+  private def jobsOf(body: => Unit): Int = {
+    val marks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == "staged-spec-mark"))
+          marks.add(e.jobId)
+    }
+    def mark(): Unit = {
+      spark.sparkContext.setJobDescription("staged-spec-mark")
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setJobDescription(null)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      mark()
+      body
+      mark()
+      eventually(timeout(30.seconds)) { assert(marks.size == 2) }
+      val Seq(a, b) = marks.asScala.toSeq.sorted
+      b - a - 1
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("the three benchmark twins start a pinned number of jobs at sf0.001") {
+    // one job per trigger (two batches each); stream_chunks' batches
+    // come through a Generate, so it also counts its batches' rows. A
+    // staging write or a min/max cut job would add to each count.
+    val want = Map("stream_queue_stats" -> 2, "stream_downsample" -> 2, "stream_chunks" -> 3)
+    val got = want.keys.map(k => k -> jobsOf(SparkEntry.queries(k)(spark, sf))).toMap
+    assert(got == want)
   }
 }

@@ -9,6 +9,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent
 import org.scalatest.concurrent.Eventually
 
@@ -17,8 +18,9 @@ import graft.sources.Parquet
 
 /** The staged gate's stateful shuffle width follows the staged input:
   * `ceil(rows of the largest staged batch / R)`, clamped to
-  * [1, defaultParallelism], with rows and schema read off the parquet
-  * footers. */
+  * [1, defaultParallelism], with the rows bounded from the batch plans
+  * and the parquet footers they scan, or counted where no bound is
+  * known. */
 class StreamWidthSpec extends graft.SparkSpec with Eventually {
   import Staged.{RowsPerStatePartition => R, stateWidth}
 
@@ -30,6 +32,23 @@ class StreamWidthSpec extends graft.SparkSpec with Eventually {
     assert(stateWidth(3 * R, 4) == 3)
     assert(stateWidth(100 * R, 4) == 4)
     assert(stateWidth(100 * R, 1) == 1)
+  }
+
+  test("row bound: at least the true rows of each plan shape it accepts, None through a Generate or a Join") {
+    import spark.implicits._
+    val ev = graft.sources.Tables.events(spark, sf)
+    def bound(df: DataFrame) = PlanSource.rowBound(spark, ColumnBridge.optimized(df))
+    Seq(ev, ev.select(col("user_id")), ev.filter(col("value") > 50.0), ev.limit(7),
+        ev.sample(0.5, 7L), ev.groupBy(col("user_id")).count(), ev.limit(0).agg(count(lit(1))),
+        ev.union(ev.filter(col("user_id") === 1L)), ev.limit(0), spark.range(5).toDF(),
+        Seq(1, 2, 3).toDF("x"), spark.range(1).select(lit(1).as("one")))
+      .foreach { df =>
+        val (b, n) = (bound(df), df.count())
+        assert(b.exists(_ >= n), s"bound $b < $n rows of ${ColumnBridge.optimized(df)}")
+      }
+    assert(bound(ev) == Some(ev.count()))
+    assert(bound(ev.select(explode(array(col("user_id"), col("user_id"))))).isEmpty)
+    assert(bound(ev.join(ev.select(col("event_id")), "event_id")).isEmpty)
   }
 
   test("footer rows and schema match what Spark reads") {
