@@ -189,9 +189,10 @@ object SparkEntry {
     "stream_orphans" -> ((s: SparkSession, d: String) =>
       graft.streaming.StreamOrphans.streamedOrphans(s, d)),
     "events_funnel3" -> (Telemetry.funnel3 _),
-    // B. streaming twin: the 3-step retroactive-qualifier chain —
-    // a late earlier signup promotes pending views AND re-qualifies
-    // pending purchases through the moved view_ts
+    // B. streaming twin: the 3-step retroactive-qualifier chain as a
+    // typed Aggregator per user, run as a complete-mode streaming
+    // aggregation — a late earlier signup promotes pending views AND
+    // re-qualifies pending purchases through the moved view_ts
     "stream_funnel3" -> ((s: SparkSession, d: String) =>
       graft.streaming.StreamFunnel3.streamedFunnel3(s, d)),
     "ts_interp" -> (Telemetry.interp _),
@@ -225,10 +226,11 @@ object SparkEntry {
       graft.streaming.StreamFreshness.streamedFreshness(s, d)),
     "q_cdc_apply" -> (Changelog.cdcApply _),
     // G. streaming changelog materialization: the CDC topic as two
-    // micro-batches through per-key latest-op election state —
-    // shares q_cdc_apply's oracle, so batch-2 ops must fold into
-    // batch-1 state (tombstones stay IN state: a late earlier upsert
-    // must still lose to them)
+    // micro-batches through q_cdc_apply's own per-key latest-op
+    // election (Changelog.cdcCensus) as a complete-mode streaming
+    // aggregation — batch-2 ops must fold into batch-1 state
+    // (tombstones stay IN state: a late earlier upsert must still
+    // lose to them)
     "stream_cdc" -> ((s: SparkSession, d: String) =>
       graft.streaming.StreamCdc.streamedCdc(s, d)),
     "q_scd2" -> (Changelog.scd2 _),
@@ -325,12 +327,16 @@ object SparkEntry {
       graft.streaming.StreamHeatmap.streamedHeatmap(s, d)),
     "stream_quarantine" -> ((s: SparkSession, d: String) =>
       graft.streaming.StreamQuarantine.streamedQuarantine(s, d)),
+    // the q_sketch_* KMV aggregate per event type as a complete-mode
+    // streaming aggregation
     "stream_distinct" -> ((s: SparkSession, d: String) =>
       graft.streaming.StreamDistinct.streamedDistinct(s, d)),
     "corpus_fill_budget" -> ((s: SparkSession, d: String) =>
       Curation.fillBudget(s, d)),
     "stream_downsample" -> ((s: SparkSession, d: String) =>
       graft.streaming.StreamDownsample.streamedDownsample(s, d)),
+    // events_ratecap's own TopKPairs census (Telemetry.rateCapCensus)
+    // as a complete-mode streaming aggregation, then its assembly
     "stream_ratecap" -> ((s: SparkSession, d: String) =>
       graft.streaming.StreamRatecap.streamedRatecap(s, d)),
     "stream_paths" -> ((s: SparkSession, d: String) =>
@@ -462,8 +468,9 @@ object SparkEntry {
     "corpus_prune" -> ((s: SparkSession, d: String) => Curation.pruneDemo(s, d)),
     "corpus_mv_refresh" -> (Curation.mvRefresh _),
     // F. streaming twin: the MV maintained live from the delta feed —
-    // two order-free longs per language, snapshot flush, the batch
-    // null-safe full-outer merge against the standing view
+    // the batch delta sums per (snapshot, language) as a complete-mode
+    // streaming aggregation, then the batch null-safe full-outer merge
+    // against the standing view
     "stream_mv_refresh" -> ((s: SparkSession, d: String) =>
       graft.streaming.StreamMvRefresh.streamedMvRefresh(s, d)),
     // F. streaming twin: MIN/MAX maintained under deletes — bounded
@@ -511,6 +518,9 @@ object SparkEntry {
     // arrival log aggregates to the batch dedup_exact result only if
     // batch-2 copies hit batch-1 state
     "dedup_exact_stream" -> (graft.streaming.StreamDedup.streamedExactDedup _),
+    // D. streaming URL dedup: (canonical, raw URL) cells as a
+    // complete-mode streaming aggregation; the census row per
+    // canonical URL assembles from the final cells
     "dedup_url_stream" -> (graft.streaming.StreamUrlDedup.streamedUrlDedup _),
     // B. streaming sessionization: the events table as two median-
     // time micro-batches + a sentinel barrier through per-user open-
@@ -557,7 +567,9 @@ object SparkEntry {
     // batch-2 purchases must credit batch-1 touches from state
     "stream_attribution" -> ((s: SparkSession, d: String) =>
       graft.streaming.StreamAttribution.streamedAttribution(s, d)),
-    // batch-2 signups must retroactively legitimize batch-1 purchases
+    // streaming funnel: a typed Aggregator per user as a complete-mode
+    // streaming aggregation — batch-2 signups must retroactively
+    // legitimize batch-1 purchases
     "stream_funnel" -> ((s: SparkSession, d: String) =>
       graft.streaming.StreamFunnel.streamedFunnel(s, d)),
     // a batch-2 alert must see batch-1 state to suppress correctly
@@ -968,7 +980,7 @@ object SparkEntry {
       |FROM l""".stripMargin
 
   /** Shared by `events_funnel` and its streaming twin `stream_funnel`
-    * — the per-user state fold (with retroactive promotion when an
+    * — the per-user election (with retroactive promotion when an
     * earlier signup lowers the qualifier) must equal the batch
     * two-aggregation join bit-for-bit. */
   private val funnelSql: String =
@@ -1093,8 +1105,8 @@ object SparkEntry {
       |  FROM events) t WHERE rn = 1""".stripMargin
 
   /** Shared by `events_ratecap` and its streaming twin
-    * `stream_ratecap` — the bounded keeper set folded across
-    * micro-batches must equal the batch TopKPairs election. */
+    * `stream_ratecap` — the batch TopKPairs census, run incrementally
+    * across micro-batches. */
   private val ratecapSql: String =
     """SELECT user_id, day, rnk, event_id, n_total FROM (
       |  SELECT user_id, date_trunc('day', ts) AS day, event_id,
@@ -1647,7 +1659,7 @@ object SparkEntry {
       |GROUP BY s.doc_id""".stripMargin
 
   /** Shared by `q_cdc_apply` and its streaming twin `stream_cdc`
-    * (per-key latest-op election state). */
+    * (the same per-key latest-op election, run incrementally). */
   private lazy val cdcSql: String =
     """SELECT user_id, value, updated_at, n_ops, n_deletes FROM (
       |  SELECT user_id,
@@ -1679,7 +1691,7 @@ object SparkEntry {
        |FROM documents GROUP BY 1""".stripMargin
 
   /** Shared by `dedup_url` and its streaming twin `dedup_url_stream`
-    * (keeper/count/variant-set state per canonical URL). */
+    * (keeper/count cells per (canonical URL, raw URL)). */
   private lazy val urlDedupSql: String =
     """WITH u AS (SELECT doc_id,
       |  (CASE WHEN doc_id % 2 = 0 THEN 'http://' ELSE 'https://' END) ||
@@ -2202,9 +2214,9 @@ object SparkEntry {
     // by construction when cross-batch keeper state works
     "dedup_exact_stream" -> exactDedupSql,
     "dedup_url" -> urlDedupSql,
-    // streaming twin: order-free per-key (min, count, variant-set)
-    // folds flushed at the snapshot barrier — identical census by
-    // construction when cross-batch state works
+    // streaming twin: order-free (min, count) cells per (canonical,
+    // raw URL) assembled into the census — identical by construction
+    // when cross-batch state works
     "dedup_url_stream" -> urlDedupSql,
     "dedup_minhash" ->
       s"""WITH $minhashPairsCtes

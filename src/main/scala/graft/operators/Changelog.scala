@@ -33,17 +33,28 @@ object Changelog {
     * a 100 TB topic and sorting one. The order key is exact integer
     * µs (`unix_micros`); (user_id, ts) is unique in this corpus, so
     * the election is tie-free and oracle-replayable. */
-  def cdcApply(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val log = Tables.events(spark, dir)
-      .select($"user_id", $"ts", $"value",
+  def cdcApply(spark: SparkSession, dir: String): DataFrame =
+    cdcAssembly(cdcCensus(Tables.events(spark, dir)))
+
+  /** The per-key election of [[cdcApply]] over events `ev` (user_id,
+    * ts, value, event_type): op counts and the latest op, shared with
+    * the streaming twin (StreamCdc). */
+  def cdcCensus(ev: DataFrame): DataFrame = {
+    import ev.sparkSession.implicits._
+    ev.select($"user_id", $"ts", $"value",
         when($"event_type" === "error", lit("D")).otherwise(lit("U")).as("op"))
-    log.groupBy($"user_id")
+      .groupBy($"user_id")
       .agg(
         count(lit(1)).as("n_ops"),
         sum(when($"op" === "D", 1L).otherwise(0L)).as("n_deletes"),
         max_by(struct($"op", $"value", $"ts"), unix_micros($"ts")).as("last"))
-      .filter($"last.op" =!= "D")
+  }
+
+  /** The post-census assembly of [[cdcApply]], shared with the
+    * streaming twin: a key whose latest op is a tombstone drops. */
+  def cdcAssembly(census: DataFrame): DataFrame = {
+    import census.sparkSession.implicits._
+    census.filter($"last.op" =!= "D")
       .select($"user_id", $"last.value".as("value"),
         $"last.ts".as("updated_at"), $"n_ops", $"n_deletes")
   }

@@ -852,31 +852,55 @@ object Curation {
     * DIRECTLY over the merged corpus — the incremental path must be
     * indistinguishable from the full recompute. */
   def mvRefresh(spark: SparkSession, dir: String): DataFrame = {
+    val docs = mvDocs(spark, dir)
+    mvMerge(docs, mvDeltaSums(mvDelta(docs)))
+  }
+
+  /** The (doc_id, lang, n_bytes) documents [[mvRefresh]] reads. */
+  private[graft] def mvDocs(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val docs = Tables.documents(spark, dir)
+    Tables.documents(spark, dir)
       .select($"doc_id", $"lang", octet_length($"text").cast(LongType).as("n_bytes"))
-    val baseMv = docs.groupBy($"lang")
-      .agg(count(lit(1)).as("n_docs"), sum($"n_bytes").as("total_bytes"))
+  }
+
+  /** The re-crawl delta of [[mvRefresh]] over [[mvDocs]]: one
+    * (doc_id, lang, d_docs, d_bytes) row per contribution. */
+  private[graft] def mvDelta(docs: DataFrame): DataFrame = {
+    import docs.sparkSession.implicits._
     val removed = docs.filter($"doc_id" % 11 === 0)
-      .select($"lang", lit(-1L).as("d_docs"), (-$"n_bytes").as("d_bytes"))
+      .select($"doc_id", $"lang", lit(-1L).as("d_docs"), (-$"n_bytes").as("d_bytes"))
     // a NULL-text doc's revision contributes NOTHING to total_bytes:
     // the oracle computes `n_bytes + 7` which is NULL (skipped by its
     // SUM), and the base view never counted the doc's bytes either —
     // an unconditional +7 here would diverge the moment a NULL-text
     // doc lands on doc_id % 7 == 0 (r12 ADVICE)
     val revised = docs.filter($"doc_id" % 7 === 0 && $"doc_id" % 11 =!= 0)
-      .select($"lang", lit(0L).as("d_docs"),
+      .select($"doc_id", $"lang", lit(0L).as("d_docs"),
         when($"n_bytes".isNotNull, lit(7L)).otherwise(lit(0L)).as("d_bytes"))
     val added = docs.filter($"doc_id" % 13 === 0)
-      .select($"lang", lit(1L).as("d_docs"), $"n_bytes".as("d_bytes"))
-    val deltaAgg = removed.unionByName(revised).unionByName(added)
-      .groupBy($"lang")
-      .agg(sum($"d_docs").as("d_docs"), sum($"d_bytes").as("d_bytes"))
+      .select($"doc_id", $"lang", lit(1L).as("d_docs"), $"n_bytes".as("d_bytes"))
+    removed.unionByName(revised).unionByName(added)
+  }
+
+  /** The delta fold of [[mvRefresh]]: (d_docs, d_bytes) sums per
+    * `by` and lang, shared with the streaming twin (StreamMvRefresh),
+    * which adds its snapshot to `by`. */
+  def mvDeltaSums(delta: DataFrame, by: Column*): DataFrame =
+    delta.groupBy(by :+ col("lang"): _*)
+      .agg(sum(col("d_docs")).as("d_docs"), sum(col("d_bytes")).as("d_bytes"))
+
+  /** The standing per-language view over [[mvDocs]] merged with the
+    * (lang, d_docs, d_bytes) delta sums, shared with the streaming
+    * twin. */
+  def mvMerge(docs: DataFrame, deltaSums: DataFrame): DataFrame = {
+    import docs.sparkSession.implicits._
+    val baseMv = docs.groupBy($"lang")
+      .agg(count(lit(1)).as("n_docs"), sum($"n_bytes").as("total_bytes"))
     // NULL-SAFE merge key: lang is a GROUPING value, so the NULL-lang
     // group must reconcile like any other — a plain equi full-outer
     // would emit the base and delta NULL groups as TWO rows (SQL NULL
     // never equals NULL; r10 documents-adversarial finding)
-    baseMv.as("b").join(deltaAgg.as("d"), $"b.lang" <=> $"d.lang", "full_outer")
+    baseMv.as("b").join(deltaSums.as("d"), $"b.lang" <=> $"d.lang", "full_outer")
       .select(coalesce($"b.lang", $"d.lang").as("lang"),
         (coalesce($"n_docs", lit(0L)) + coalesce($"d_docs", lit(0L))).as("n_docs"),
         (coalesce($"total_bytes", lit(0L)) + coalesce($"d_bytes", lit(0L)))

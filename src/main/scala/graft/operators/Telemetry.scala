@@ -1197,15 +1197,26 @@ object Telemetry {
     * (< 2^53) and event_id breaks equal-timestamp ties ascending,
     * matching the oracle's ORDER BY ts, event_id. n_total rides the
     * same aggregation to show how much the cap discarded. */
-  def rateCap(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
-    import spark.implicits._
-    Tables.events(spark, dir)
-      .withColumn("day", date_trunc("day", $"ts"))
+  def rateCap(spark: SparkSession, dir: String, k: Int = 5): DataFrame =
+    rateCapAssembly(rateCapCensus(Tables.events(spark, dir), k))
+
+  /** The per-(user, day) census of [[rateCap]] over events `ev`: the
+    * bounded keeper election and the day's total, shared with the
+    * streaming twin (StreamRatecap). */
+  def rateCapCensus(ev: DataFrame, k: Int): DataFrame = {
+    import ev.sparkSession.implicits._
+    ev.withColumn("day", date_trunc("day", $"ts"))
       .groupBy($"user_id", $"day")
       .agg(graft.plans.Sketch.topKPairs(
           (-unix_micros($"ts")).cast(DoubleType), $"event_id", k).as("top"),
         count(lit(1)).as("n_total"))
-      .select($"user_id", $"day", $"n_total", posexplode($"top"))
+  }
+
+  /** The post-census assembly of [[rateCap]], shared with the
+    * streaming twin: one ranked row per keeper. */
+  def rateCapAssembly(census: DataFrame): DataFrame = {
+    import census.sparkSession.implicits._
+    census.select($"user_id", $"day", $"n_total", posexplode($"top"))
       .select($"user_id", $"day", ($"pos" + 1).cast(LongType).as("rnk"),
         $"col.key".as("event_id"), $"n_total")
   }

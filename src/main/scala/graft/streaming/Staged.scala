@@ -14,15 +14,16 @@ import graft.sources.{Parquet, Scratch}
   * once. A twin replays a bounded corpus as a stream: the corpus is
   * cut into micro-batches ([[timeCut]]) and streamed one batch per
   * trigger through the twin's core, which the twin's batch assembly
-  * reads back. An order-free core whose step is a built-in aggregate
-  * is Spark's own streaming aggregation, run by [[aggregate]] in
-  * complete mode: often the batch twin's own `groupBy.agg` list, so
-  * the twin is the batch plan run incrementally. Every other core is
-  * a keyed fold over `GroupState`, run by [[run]] in append mode:
-  * [[atBarrier]] (order-free, emits once per key at its barrier row,
-  * [[withBarrier]]), [[onArrival]] (ordered, a step may emit at
-  * every arrival) and [[perBatch]] (the whole micro-batch of a key at
-  * once).
+  * reads back. An order-free core is Spark's own streaming
+  * aggregation, run by [[aggregate]] in complete mode: often the batch
+  * twin's own `groupBy.agg` list, so the twin is the batch plan run
+  * incrementally, and otherwise per-key cells or a typed
+  * `Aggregator` that a batch assembly reads. Every ordered core is a
+  * keyed fold over `GroupState`, run by [[run]] in append mode:
+  * [[onArrival]] (a step may emit at every arrival) and [[perBatch]]
+  * (the whole micro-batch of a key at once). Barrier rows
+  * ([[withBarrier]]) serve only these ordered folds: a key's barrier
+  * row in the last batch closes the state it holds open.
   *
   * Staging protocol: nothing is written before the stream starts. A
   * [[PlanSource]] serves batch i at offset i, one offset per trigger,
@@ -117,19 +118,6 @@ object Staged {
       out
     }
   }
-
-  /** Order-free fold per key: `step` folds every data row; once the
-    * key's barrier row has been folded, the key emits `flush(key,
-    * state)` and its state restarts at `zero`. */
-  def atBarrier[E, K: TypeTag, S: TypeTag, O: TypeTag](ev: Dataset[E])
-      (key: E => K, isBarrier: E => Boolean)(zero: S)(step: (S, E) => S)
-      (flush: (K, S) => IterableOnce[O]): Dataset[O] =
-    perBatch(ev)(key)(zero) { (k, s0, rows) =>
-      var s = s0
-      var barrier = false
-      rows.foreach(e => if (isBarrier(e)) barrier = true else s = step(s, e))
-      if (barrier) (zero, flush(k, s).iterator) else (s, Iterator.empty)
-    }
 
   /** Per-arrival fold per key: a micro-batch's rows fold in `order`,
     * and each step returns the new state and the rows it emits. */

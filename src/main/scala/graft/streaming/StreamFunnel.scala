@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
 /** Streaming conversion funnel — [[graft.operators.Telemetry.funnel]]
@@ -22,76 +23,92 @@ import org.apache.spark.sql.functions._
   * watermark-final min signup are droppable); signup/qualifying state
   * is O(1) per user forever.
   *
-  * A per-user barrier flushes the funnel row — shares
-  * `events_funnel`'s oracle, so batch-2 purchases must fold into
-  * batch-1 signup state (and vice-versa promotions must fire) for the
-  * hash to match.
+  * The fold is order-free and mergeable, so it is an [[Aggregator]]
+  * ([[Election]]) run by a streaming aggregation per user; the funnel
+  * row comes from the final state. Shares `events_funnel`'s oracle,
+  * so batch-2 purchases must fold into batch-1 signup state (and
+  * vice-versa promotions must fire) for the hash to match. A user
+  * whose every signup has a NULL ts keeps a row with a NULL
+  * signup_ts, as the batch `min(ts)` does; NULL-ts purchases never
+  * qualify.
   *
   * Scale posture: the stream filters to the two funnel event types
   * BEFORE the stateful shuffle (at 100 TB that is the difference
   * between sharding the full firehose and the funnel-relevant slice),
-  * state shards on user_id — the same key the batch groupBy shuffles
-  * on — and emission is append-mode.
+  * and state shards on user_id — the same key the batch groupBy
+  * shuffles on.
   */
 object StreamFunnel {
 
-  case class Ev(user_id: Option[Long], ts_us: Long, typ: String, sentinel: Boolean)
-  case class FunnelState(minSignup: Long, qualMin: Long, pend: Seq[Long])
-  case class FunnelOut(user_id: Option[Long], signup_us: Long, purchase_us: Option[Long])
+  case class Ev(ts_us: Option[Long], typ: String)
+  /** `signed`: some signup arrived, even one with a NULL ts. */
+  case class FunnelState(signed: Boolean, minSignup: Long, qualMin: Long, pend: Seq[Long])
+  case class FunnelOut(signed: Boolean, signup_us: Option[Long], purchase_us: Option[Long])
 
   private val None_ = Long.MaxValue
 
-  /** The stateful core: fold signups/purchases into the per-user
-    * funnel election; emit exactly once, at the sentinel. */
-  def funnelStream(evs: Dataset[Ev]): Dataset[FunnelOut] =
-    Staged.atBarrier(evs)(_.user_id, _.sentinel)(FunnelState(None_, None_, Nil)) { (s, e) =>
-      // a NULL user never equi-joins in the batch shape: its
-      // purchases can't qualify against its signups
-      if (e.user_id.isEmpty && e.typ != "signup") s
-      else if (e.typ == "signup") {
-        if (e.ts_us >= s.minSignup) s
-        else {
-          // a lower min signup legitimizes pending purchases at
-          // or after it — promote them into the qualifying min
-          val (promoted, keep) = s.pend.partition(_ >= e.ts_us)
-          val q = if (promoted.isEmpty) s.qualMin
-                  else math.min(s.qualMin, promoted.min)
-          // entries >= the new qualMin can never lower it again
-          // (any future promotion takes min against q), so drop
-          // them — pend stays bounded by distinct ts below q
-          FunnelState(e.ts_us, q, keep.filter(_ < q))
-        }
-      } else if (e.typ == "purchase") {
-        if (e.ts_us >= s.minSignup) s.copy(qualMin = math.min(s.qualMin, e.ts_us))
-        else if (e.ts_us < s.qualMin && !s.pend.contains(e.ts_us))
-          s.copy(pend = s.pend :+ e.ts_us)
-        else s
-      } else s
-    } { (uid, s) =>
-      if (s.minSignup == None_) None
-      else Some(FunnelOut(uid, s.minSignup,
-        if (s.qualMin != None_) Some(s.qualMin) else None))
+  private def opt(t: Long): Option[Long] = Option.when(t != None_)(t)
+
+  /** The per-user funnel election. `merge` folds b's summary into a:
+    * its min signup as a signup, its qualifying min and pending
+    * entries as purchases — every purchase b dropped is at or above
+    * its qualifying min, which stays the better candidate. */
+  object Election extends Aggregator[Ev, FunnelState, FunnelOut] {
+    def zero: FunnelState = FunnelState(signed = false, None_, None_, Nil)
+
+    def reduce(s: FunnelState, e: Ev): FunnelState = e.typ match {
+      case "signup" => e.ts_us.fold(s.copy(signed = true))(signup(s, _))
+      case "purchase" => e.ts_us.fold(s)(purchase(s, _))
+      case _ => s
     }
+
+    private def signup(s: FunnelState, t: Long): FunnelState =
+      if (t >= s.minSignup) s.copy(signed = true)
+      else {
+        // a lower min signup legitimizes pending purchases at or
+        // after it — promote them into the qualifying min
+        val (promoted, keep) = s.pend.partition(_ >= t)
+        val q = if (promoted.isEmpty) s.qualMin else math.min(s.qualMin, promoted.min)
+        // entries >= the new qualMin can never lower it again (any
+        // future promotion takes min against q), so drop them — pend
+        // stays bounded by distinct ts below q
+        FunnelState(signed = true, t, q, keep.filter(_ < q))
+      }
+
+    private def purchase(s: FunnelState, t: Long): FunnelState =
+      if (t >= s.minSignup) s.copy(qualMin = math.min(s.qualMin, t))
+      else if (t < s.qualMin && !s.pend.contains(t)) s.copy(pend = s.pend :+ t)
+      else s
+
+    def merge(a: FunnelState, b: FunnelState): FunnelState = {
+      val signed = if (b.signed) signup(a, b.minSignup) else a
+      (b.qualMin +: b.pend).filter(_ != None_).foldLeft(signed)(purchase)
+    }
+
+    def finish(s: FunnelState): FunnelOut = FunnelOut(s.signed, opt(s.minSignup), opt(s.qualMin))
+    def bufferEncoder: Encoder[FunnelState] = Encoders.product[FunnelState]
+    def outputEncoder: Encoder[FunnelOut] = Encoders.product[FunnelOut]
+  }
+
+  /** The stateful core over (user_id, ts_us, typ): the [[Election]]
+    * `f` per user. A NULL user never equi-joins in the batch shape,
+    * so only its signups count. */
+  def funnelStream(ev: DataFrame): DataFrame =
+    ev.filter(col("user_id").isNotNull || col("typ") === "signup")
+      .groupBy(col("user_id"))
+      .agg(udaf(Election, Encoders.product[Ev])(col("ts_us"), col("typ")).as("f"))
 
   /** The batch-gated run: shares events_funnel's oracle. */
   def streamedFunnel(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val log = graft.sources.Tables.events(spark, dir)
-      .filter($"event_type".isin("signup", "purchase") && $"ts".isNotNull)
-      .select($"user_id", unix_micros($"ts").as("ts_us"),
-        $"event_type".as("typ"))
-    val out = Staged.run(spark, Staged.withBarrier[Ev](Staged.timeCut(log, $"ts_us"),
-        log.select($"user_id").distinct())) { stream =>
-      funnelStream(stream.as[Ev]).toDF()
-    }
-    val dupUsers = out.groupBy($"user_id").count().filter($"count" =!= 1L).count()
-    if (dupUsers > 0)
-      throw new IllegalStateException(
-        s"streamed funnel: $dupUsers users emitted != 1 row " +
-          "(cross-batch funnel state lost or replayed)")
-    out.select($"user_id",
-      timestamp_micros($"signup_us").as("signup_ts"),
-      timestamp_micros($"purchase_us").as("purchase_ts"),
-      ($"purchase_us" - $"signup_us").as("delay_us"))
+      .filter($"event_type".isin("signup", "purchase"))
+      .select($"user_id", unix_micros($"ts").as("ts_us"), $"event_type".as("typ"))
+    Staged.aggregate(spark, Staged.timeCut(log, $"ts_us"))(funnelStream)
+      .filter($"f.signed")
+      .select($"user_id",
+        timestamp_micros($"f.signup_us").as("signup_ts"),
+        timestamp_micros($"f.purchase_us").as("purchase_ts"),
+        ($"f.purchase_us" - $"f.signup_us").as("delay_us"))
   }
 }

@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
 /** Streaming twin of [[graft.operators.Telemetry.funnel3]] — the
@@ -19,11 +20,14 @@ import org.apache.spark.sql.functions._
   * below the qualifying min — bounded by pre-signup (resp. pre-view)
   * arrivals, watermark-droppable in production.
   *
-  * Emission at the snapshot barrier only (reached_step can upgrade
-  * retroactively; append mode forbids retraction). Shares
-  * events_funnel3's oracle, so a batch-2 EARLIER signup must promote
-  * batch-1 pending views AND re-qualify batch-1 pending purchases
-  * through the moved view_ts for the hash to match.
+  * The fold is order-free and mergeable, so it is an [[Aggregator]]
+  * ([[Election]]) run by a streaming aggregation per user; the funnel
+  * row comes from the final state, since reached_step can upgrade
+  * retroactively. Shares events_funnel3's oracle, so a batch-2
+  * EARLIER signup must promote batch-1 pending views AND re-qualify
+  * batch-1 pending purchases through the moved view_ts for the hash
+  * to match. A user whose every signup has a NULL ts keeps a
+  * step-1 row, as the batch `min(ts)` does.
   *
   * Scale posture: the stream filters to the three funnel types before
   * the stateful shuffle; state shards on user_id (the batch groupBy
@@ -31,14 +35,17 @@ import org.apache.spark.sql.functions._
   */
 object StreamFunnel3 {
 
-  case class Ev(user_id: Option[Long], ts_us: Long, typ: String, sentinel: Boolean)
-  case class F3State(minSignup: Long,
+  case class Ev(ts_us: Option[Long], typ: String)
+  /** `signed`: some signup arrived, even one with a NULL ts. */
+  case class F3State(signed: Boolean, minSignup: Long,
     viewQual: Long, viewPend: Seq[Long],
     purchQual: Long, purchPend: Seq[Long])
-  case class F3Out(user_id: Option[Long], signup_us: Long,
+  case class F3Out(signed: Boolean, signup_us: Option[Long],
     view_us: Option[Long], purchase_us: Option[Long])
 
   private val None_ = Long.MaxValue
+
+  private def opt(t: Long): Option[Long] = Option.when(t != None_)(t)
 
   /** Lower `qual` with every pend entry ≥ `threshold`, re-prune pend
     * to distinct values strictly below the new qual. Returns
@@ -56,65 +63,76 @@ object StreamFunnel3 {
     s.copy(purchQual = pq, purchPend = pp)
   }
 
-  /** The stateful core: fold the three event types into the chained
-    * election; emit exactly once, at the sentinel. */
-  def funnel3Stream(evs: Dataset[Ev]): Dataset[F3Out] =
-    Staged.atBarrier(evs)(_.user_id, _.sentinel)(F3State(None_, None_, Nil, None_, Nil)) {
-      (s, e) =>
-        // a NULL user never equi-joins in the batch shape: its
-        // views/purchases can't qualify against its signups —
-        // only the signup election itself survives (s1 groups
-        // nulls; s2/s3 joins drop them)
-        if (e.user_id.isEmpty && e.typ != "signup") s
-        else e.typ match {
-          case "signup" if e.ts_us < s.minSignup =>
-            val (vq, vp) = promote(s.viewQual, s.viewPend, e.ts_us)
-            val s2 = s.copy(minSignup = e.ts_us, viewQual = vq, viewPend = vp)
-            if (vq < s.viewQual) requalifyPurchases(s2) else s2
-          case "view" =>
-            if (e.ts_us >= s.minSignup) {
-              if (e.ts_us < s.viewQual) requalifyPurchases(s.copy(viewQual = e.ts_us))
-              else s
-            } else if (e.ts_us < s.viewQual && !s.viewPend.contains(e.ts_us))
-              s.copy(viewPend = s.viewPend :+ e.ts_us)
-            else s
-          case "purchase" =>
-            if (e.ts_us >= s.viewQual) s.copy(purchQual = math.min(s.purchQual, e.ts_us))
-            else if (e.ts_us < s.purchQual && !s.purchPend.contains(e.ts_us))
-              s.copy(purchPend = s.purchPend :+ e.ts_us)
-            else s
-          case _ => s
-        }
-    } { (uid, s) =>
-      if (s.minSignup == None_) None
-      else Some(F3Out(uid, s.minSignup,
-        if (s.viewQual != None_) Some(s.viewQual) else None,
-        if (s.purchQual != None_) Some(s.purchQual) else None))
+  /** The per-user chained election. `merge` folds b's summary into a:
+    * its min signup as a signup, its qualifying min and pending
+    * entries as views and as purchases — every view (purchase) b
+    * dropped is at or above its qualifying min, which stays the
+    * better candidate. */
+  object Election extends Aggregator[Ev, F3State, F3Out] {
+    def zero: F3State = F3State(signed = false, None_, None_, Nil, None_, Nil)
+
+    def reduce(s: F3State, e: Ev): F3State = e.typ match {
+      case "signup" => e.ts_us.fold(s.copy(signed = true))(signup(s, _))
+      case "view" => e.ts_us.fold(s)(view(s, _))
+      case "purchase" => e.ts_us.fold(s)(purchase(s, _))
+      case _ => s
     }
+
+    private def signup(s: F3State, t: Long): F3State =
+      if (t >= s.minSignup) s.copy(signed = true)
+      else {
+        val (vq, vp) = promote(s.viewQual, s.viewPend, t)
+        val s2 = s.copy(signed = true, minSignup = t, viewQual = vq, viewPend = vp)
+        if (vq < s.viewQual) requalifyPurchases(s2) else s2
+      }
+
+    private def view(s: F3State, t: Long): F3State =
+      if (t >= s.minSignup) {
+        if (t < s.viewQual) requalifyPurchases(s.copy(viewQual = t)) else s
+      } else if (t < s.viewQual && !s.viewPend.contains(t)) s.copy(viewPend = s.viewPend :+ t)
+      else s
+
+    private def purchase(s: F3State, t: Long): F3State =
+      if (t >= s.viewQual) s.copy(purchQual = math.min(s.purchQual, t))
+      else if (t < s.purchQual && !s.purchPend.contains(t)) s.copy(purchPend = s.purchPend :+ t)
+      else s
+
+    def merge(a: F3State, b: F3State): F3State = {
+      val signed = if (b.signed) signup(a, b.minSignup) else a
+      val viewed = (b.viewQual +: b.viewPend).filter(_ != None_).foldLeft(signed)(view)
+      (b.purchQual +: b.purchPend).filter(_ != None_).foldLeft(viewed)(purchase)
+    }
+
+    def finish(s: F3State): F3Out =
+      F3Out(s.signed, opt(s.minSignup), opt(s.viewQual), opt(s.purchQual))
+    def bufferEncoder: Encoder[F3State] = Encoders.product[F3State]
+    def outputEncoder: Encoder[F3Out] = Encoders.product[F3Out]
+  }
+
+  /** The stateful core over (user_id, ts_us, typ): the [[Election]]
+    * `f` per user. A NULL user never equi-joins in the batch shape,
+    * so only its signups count (s1 groups nulls; the s2/s3 joins drop
+    * them). */
+  def funnel3Stream(ev: DataFrame): DataFrame =
+    ev.filter(col("user_id").isNotNull || col("typ") === "signup")
+      .groupBy(col("user_id"))
+      .agg(udaf(Election, Encoders.product[Ev])(col("ts_us"), col("typ")).as("f"))
 
   /** The batch-gated run: shares events_funnel3's oracle. */
   def streamedFunnel3(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val log = graft.sources.Tables.events(spark, dir)
-      .filter($"event_type".isin("signup", "view", "purchase") && $"ts".isNotNull)
-      .select($"user_id", unix_micros($"ts").as("ts_us"),
-        $"event_type".as("typ"))
-    val out = Staged.run(spark, Staged.withBarrier[Ev](Staged.timeCut(log, $"ts_us"),
-        log.select($"user_id").distinct())) { stream =>
-      funnel3Stream(stream.as[Ev]).toDF()
-    }
-    val dupUsers = out.groupBy($"user_id").count().filter($"count" =!= 1L).count()
-    if (dupUsers > 0)
-      throw new IllegalStateException(
-        s"streamed funnel3: $dupUsers users emitted != 1 row " +
-          "(cross-batch funnel state lost or replayed)")
-    out.select($"user_id",
-      timestamp_micros($"signup_us").as("signup_ts"),
-      timestamp_micros($"view_us").as("view_ts"),
-      timestamp_micros($"purchase_us").as("purchase_ts"),
-      when($"purchase_us".isNotNull, 3L)
-        .when($"view_us".isNotNull, 2L)
-        .otherwise(1L).as("reached_step"),
-      ($"purchase_us" - $"signup_us").as("total_delay_us"))
+      .filter($"event_type".isin("signup", "view", "purchase"))
+      .select($"user_id", unix_micros($"ts").as("ts_us"), $"event_type".as("typ"))
+    Staged.aggregate(spark, Staged.timeCut(log, $"ts_us"))(funnel3Stream)
+      .filter($"f.signed")
+      .select($"user_id",
+        timestamp_micros($"f.signup_us").as("signup_ts"),
+        timestamp_micros($"f.view_us").as("view_ts"),
+        timestamp_micros($"f.purchase_us").as("purchase_ts"),
+        when($"f.purchase_us".isNotNull, 3L)
+          .when($"f.view_us".isNotNull, 2L)
+          .otherwise(1L).as("reached_step"),
+        ($"f.purchase_us" - $"f.signup_us").as("total_delay_us"))
   }
 }

@@ -179,27 +179,37 @@ class Round17Spec extends SparkSpec {
 
   test("stream_funnel: a later-arriving earlier signup retroactively qualifies a purchase") {
     import graft.streaming.StreamFunnel
-    import StreamFunnel.Ev
-    implicit val sqlCtx = spark.sqlContext
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Ev]
-    val q = StreamFunnel.funnelStream(mem.toDS())
-      .writeStream.outputMode("append").format("memory").queryName("sfun_out").start()
-    try {
-      // batch 1: a purchase with NO signup yet — it must pend, not drop
-      mem.addData(Ev(Some(1L), 100L, "purchase", sentinel = false))
-      q.processAllAvailable()
-      assert(spark.table("sfun_out").count() == 0L)
-      // batch 2: an EARLIER signup arrives; the pended purchase now qualifies
-      mem.addData(Ev(Some(1L), 50L, "signup", sentinel = false))
-      q.processAllAvailable()
-      // sentinel: flush
-      mem.addData(Ev(Some(1L), 0L, "S", sentinel = true))
-      q.processAllAvailable()
-      val out = spark.table("sfun_out").collect()
-      assert(out.length == 1)
-      assert(out(0).getLong(1) == 50L, "min signup")
-      assert(out(0).getLong(2) == 100L, "promoted pending purchase must qualify")
-    } finally q.stop()
+    // trigger 1: a purchase with NO signup yet — it must pend, not
+    // drop; trigger 2: an EARLIER signup arrives, and merging it into
+    // the stored election promotes the pended purchase
+    val out = twoTriggers(Seq((Option(1L), Option(100L), "purchase")),
+        Seq((Option(1L), Option(50L), "signup"))) { ev =>
+      StreamFunnel.funnelStream(ev.toDF("user_id", "ts_us", "typ"))
+    }.select($"f.*").as[StreamFunnel.FunnelOut].collect().toSeq
+    assert(out == Seq(StreamFunnel.FunnelOut(signed = true, Some(50L), Some(100L))))
+  }
+
+  test("stream_funnel: merging the folds of any split equals the one-pass fold and the batch rule") {
+    import graft.streaming.StreamFunnel.{Election, Ev}
+    val rnd = new scala.util.Random(17)
+    def fold(es: Seq[Ev]) = es.foldLeft(Election.zero)(Election.reduce)
+    (0 until 2000).foreach { i =>
+      // small ts domain: ties, duplicates and NULL ts are common
+      val evs = Seq.fill(rnd.nextInt(10))(Ev(Option.when(rnd.nextInt(6) > 0)(rnd.nextInt(12).toLong),
+        if (rnd.nextBoolean()) "signup" else "purchase"))
+      // the batch rule: min signup, then the min purchase at or after it
+      val signups = evs.filter(_.typ == "signup")
+      val m = signups.flatMap(_.ts_us).minOption
+      val p = m.flatMap(s => evs.filter(_.typ == "purchase").flatMap(_.ts_us).filter(_ >= s).minOption)
+      val want = Option.when(signups.nonEmpty)((m, p))
+      val Seq(x, y) = Seq(rnd.nextInt(evs.size + 1), rnd.nextInt(evs.size + 1)).sorted
+      val (a, b, c) = (fold(evs.take(x)), fold(evs.slice(x, y)), fold(evs.drop(y)))
+      Seq(fold(rnd.shuffle(evs)), Election.merge(Election.merge(a, b), c),
+          Election.merge(c, Election.merge(b, a)), Election.merge(Election.zero, fold(evs)))
+        .map(Election.finish).foreach { o =>
+          assert(Option.when(o.signed)((o.signup_us, o.purchase_us)) == want, s"case $i: $evs")
+        }
+    }
   }
 
   test("events_abtest: power sums reassemble the sequential Welch t exactly") {

@@ -136,15 +136,18 @@ class Round21Spec extends SparkSpec {
 
   test("stream_distinct: matches the batch KMV recompute; fold is order-free") {
     val k = graft.streaming.StreamDistinct.K
-    // order independence of the k-min fold: any permutation of the
-    // same hash multiset lands on the same sketch
+    // order independence of the k-min core: any permutation of the
+    // same hash multiset, split across two triggers anywhere, lands
+    // on the same sketch
     val hashes = (1 to 200).map(i => polyHash(s"u$i")) ++ (1 to 50).map(i => polyHash(s"u$i"))
     val expected0 = hashes.distinct.sorted.take(k)
-    (0 until 5).foreach { s =>
-      val perm = new scala.util.Random(s).shuffle(hashes)
-      val folded = perm.foldLeft(Vector.empty[Long]: Seq[Long])(
-        (acc, h) => graft.streaming.StreamDistinct.insert(acc, h, k))
-      assert(folded == expected0, s"fold order $s changed the sketch")
+    (0 until 4).foreach { s =>
+      val rnd = new scala.util.Random(s)
+      val (first, second) = rnd.shuffle(hashes).map(h => ("t", h)).splitAt(rnd.nextInt(hashes.size))
+      val folded = twoTriggers(first, second) { ev =>
+        graft.streaming.StreamDistinct.census(ev.toDF("event_type", "h"))
+      }.select($"hs").as[Seq[Long]].collect().toSeq
+      assert(folded == Seq(expected0), s"fold order $s changed the sketch")
     }
     // the streamed operator vs a direct recompute on the corpus
     val byType = graft.sources.Tables.events(spark, sf)

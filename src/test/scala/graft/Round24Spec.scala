@@ -45,32 +45,46 @@ class Round24Spec extends SparkSpec {
 
   test("stream_funnel3: a batch-2 earlier signup promotes views AND re-qualifies purchases") {
     import graft.streaming.StreamFunnel3
-    import StreamFunnel3.{Ev, F3Out}
-    implicit val sqlCtx = spark.sqlContext
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Ev]
-    val q = StreamFunnel3.funnel3Stream(mem.toDS())
-      .writeStream.outputMode("append").format("memory")
-      .queryName("f3_out").start()
-    try {
+    import StreamFunnel3.F3Out
+    val out = twoTriggers(
       // user 1: purchase and view land BEFORE any signup is known
-      mem.addData(Ev(Some(1L), 100L, "purchase", sentinel = false),
-        Ev(Some(1L), 50L, "view", sentinel = false),
+      Seq((Option(1L), Option(100L), "purchase"), (Option(1L), Option(50L), "view"),
         // user 2: view precedes its signup forever — never qualifies
-        Ev(Some(2L), 30L, "view", sentinel = false),
-        Ev(Some(2L), 40L, "signup", sentinel = false),
-        Ev(Some(2L), 35L, "purchase", sentinel = false))
-      q.processAllAvailable()
-      assert(spark.table("f3_out").count() == 0L, "no flush before the barrier")
+        (Option(2L), Option(30L), "view"), (Option(2L), Option(40L), "signup"),
+        (Option(2L), Option(35L), "purchase")),
       // the retroactive chain: an EARLIER signup lands in batch 2
-      mem.addData(Ev(Some(1L), 40L, "signup", sentinel = false))
-      mem.addData(Ev(Some(1L), 0L, "S", sentinel = true),
-        Ev(Some(2L), 0L, "S", sentinel = true))
-      q.processAllAvailable()
-      val out = spark.table("f3_out").as[F3Out].collect().toSet
-      assert(out == Set(
-        F3Out(Some(1L), 40L, Some(50L), Some(100L)),
-        F3Out(Some(2L), 40L, None, None)))
-    } finally q.stop()
+      Seq((Option(1L), Option(40L), "signup"))) { ev =>
+      StreamFunnel3.funnel3Stream(ev.toDF("user_id", "ts_us", "typ"))
+    }.select($"user_id", $"f").as[(Option[Long], F3Out)].collect().toSet
+    assert(out == Set(
+      Some(1L) -> F3Out(signed = true, Some(40L), Some(50L), Some(100L)),
+      Some(2L) -> F3Out(signed = true, Some(40L), None, None)))
+  }
+
+  test("stream_funnel3: merging the folds of any split equals the one-pass fold and the batch rule") {
+    import graft.streaming.StreamFunnel3.{Election, Ev}
+    val rnd = new scala.util.Random(24)
+    def fold(es: Seq[Ev]) = es.foldLeft(Election.zero)(Election.reduce)
+    val types = Seq("signup", "view", "purchase")
+    (0 until 2000).foreach { i =>
+      val evs = Seq.fill(rnd.nextInt(12))(Ev(Option.when(rnd.nextInt(6) > 0)(rnd.nextInt(12).toLong),
+        types(rnd.nextInt(3))))
+      def ts(typ: String) = evs.filter(_.typ == typ).flatMap(_.ts_us)
+      // the batch chain: min signup, min view at or after it, min
+      // purchase at or after that view
+      val m = ts("signup").minOption
+      val v = m.flatMap(s => ts("view").filter(_ >= s).minOption)
+      val p = v.flatMap(s => ts("purchase").filter(_ >= s).minOption)
+      val want = Option.when(evs.exists(_.typ == "signup"))((m, v, p))
+      val Seq(x, y) = Seq(rnd.nextInt(evs.size + 1), rnd.nextInt(evs.size + 1)).sorted
+      val (a, b, c) = (fold(evs.take(x)), fold(evs.slice(x, y)), fold(evs.drop(y)))
+      Seq(fold(rnd.shuffle(evs)), Election.merge(Election.merge(a, b), c),
+          Election.merge(c, Election.merge(b, a)), Election.merge(Election.zero, fold(evs)))
+        .map(Election.finish).foreach { o =>
+          assert(Option.when(o.signed)((o.signup_us, o.view_us, o.purchase_us)) == want,
+            s"case $i: $evs")
+        }
+    }
   }
 
   test("stream_freshness equals the batch dq_freshness") {

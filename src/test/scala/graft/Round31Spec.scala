@@ -8,36 +8,19 @@ class Round31Spec extends SparkSpec {
 
   test("stream_mv_refresh: deltas straddling the cut fold into ONE cell per language") {
     import graft.streaming.StreamMvRefresh
-    import StreamMvRefresh.{Delta, Out}
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Delta]
-    val q = StreamMvRefresh.fold(mem.toDS())
-      .writeStream.outputMode("append").format("memory")
-      .queryName("smv_out").start()
-    try {
-      // batch 1: en gets a removal (-1, -40) and a revision (0, +7);
-      // nothing may emit before the snapshot barrier
-      mem.addData(
-        Delta(Some("en"), Some(-1L), Some(-40L), sentinel = false),
-        Delta(Some("en"), Some(0L), Some(7L), sentinel = false),
-        Delta(None, Some(1L), Some(12L), sentinel = false))
-      q.processAllAvailable()
-      assert(spark.table("smv_out").count() == 0L,
-        "the view cell must not flush before the snapshot barrier")
-      // batch 2: en's insert (+1, +90) lands across the cut, a NULL
-      // d_bytes removal contributes 0 bytes (batch SUM skip-null),
-      // then sentinels flush — en must be ONE cell (0, +57)
-      mem.addData(
-        Delta(Some("en"), Some(1L), Some(90L), sentinel = false),
-        Delta(Some("en"), Some(-1L), None, sentinel = false),
-        Delta(Some("en"), None, None, sentinel = true),
-        Delta(None, None, None, sentinel = true))
-      q.processAllAvailable()
-      val out = spark.table("smv_out").as[Out].collect().toSet
-      assert(out == Set(Out(Some("en"), -1L, 57L), Out(None, 1L, 12L)),
-        s"cross-batch fold must accumulate one cell per language, got $out")
-    } finally q.stop()
+    // trigger 1: en gets a removal (-1, -40) and a revision (0, +7);
+    // trigger 2: en's insert (+1, +90) lands across the cut, and a
+    // NULL d_bytes removal contributes 0 bytes (batch SUM skip-null)
+    // — en must be ONE cell (-1, +57)
+    val out = twoTriggers(
+      Seq((0L, Option("en"), -1L, Option(-40L)), (0L, Option("en"), 0L, Option(7L)),
+        (0L, None, 1L, Option(12L))),
+      Seq((0L, Option("en"), 1L, Option(90L)), (0L, Option("en"), -1L, None))) { ev =>
+      StreamMvRefresh.fold(ev.toDF("snapshot", "lang", "d_docs", "d_bytes"))
+    }.as[(Long, Option[String], Long, Long)].collect().toSet
+    assert(out == Set((0L, Some("en"), -1L, 57L), (0L, None, 1L, 12L)),
+      s"cross-batch fold must accumulate one cell per language, got $out")
   }
 
   test("ObjectHashAggregate fallback threshold is raised (small-buffer aggregates stay hash-based)") {

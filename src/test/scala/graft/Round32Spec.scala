@@ -35,30 +35,16 @@ class Round32Spec extends SparkSpec {
     assert(gotPairs.size == 2)
   }
 
-  test("stream_mv_refresh: a second snapshot barrier emits the per-interval delta, not cumulative totals") {
+  test("stream_mv_refresh: a second snapshot keeps its own per-interval delta, not cumulative totals") {
     import graft.streaming.StreamMvRefresh
-    import StreamMvRefresh.{Delta, Out}
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Delta]
-    val q = StreamMvRefresh.fold(mem.toDS())
-      .writeStream.outputMode("append").format("memory")
-      .queryName("smv_reset").start()
-    try {
-      mem.addData(
-        Delta(Some("en"), Some(1L), Some(10L), sentinel = false),
-        Delta(Some("en"), None, None, sentinel = true))
-      q.processAllAvailable()
-      // interval 2 for the same key: the flushed cell must have reset
-      mem.addData(
-        Delta(Some("en"), Some(1L), Some(5L), sentinel = false),
-        Delta(Some("en"), None, None, sentinel = true))
-      q.processAllAvailable()
-      val out = spark.table("smv_reset").as[Out].collect().toSeq
-        .map(o => (o.d_docs, o.d_bytes)).sorted
-      assert(out == Seq((1L, 5L), (1L, 10L)),
-        s"second barrier must ship the interval delta (1,5), got $out")
-    } finally q.stop()
+    // interval 2 for the same language is a cell of its own
+    val out = twoTriggers(Seq((1L, Option("en"), 1L, Option(10L))),
+        Seq((2L, Option("en"), 1L, Option(5L)))) { ev =>
+      StreamMvRefresh.fold(ev.toDF("snapshot", "lang", "d_docs", "d_bytes"))
+    }.as[(Long, Option[String], Long, Long)].collect().toSeq.sorted
+    assert(out == Seq((1L, Some("en"), 1L, 10L), (2L, Some("en"), 1L, 5L)),
+      s"the second snapshot must ship the interval delta (1,5), got $out")
   }
 
   test("dedup_stream under census drift: stale profile completes and still equals the batch pair set") {

@@ -19,7 +19,8 @@ import graft.sources.{Scratch, Tables}
   * from the same checkpoint and sink, reads only its second batch (the
   * source's offsets come back from the checkpoint serialized) and ends
   * with the output of an uninterrupted run: for a complete-mode
-  * aggregation ([[Staged.aggregate]]) and for an append-mode keyed fold
+  * aggregation ([[Staged.aggregate]]), one of them over a
+  * `TypedImperativeAggregate` buffer, and for an append-mode keyed fold
   * ([[Staged.run]]). */
 class AggregateRestartSpec extends graft.SparkSpec with Eventually {
 
@@ -27,15 +28,17 @@ class AggregateRestartSpec extends graft.SparkSpec with Eventually {
     df.collect().map(_.toSeq.map(String.valueOf).mkString("|")).toSeq.sorted
 
   /** `core` streamed over `batches.take(1)`, then restarted on the same
-    * checkpoint and sink over both batches: the sink's rows after each
-    * run, and (start offset, end offset, input rows) of every trigger
-    * of the restarted run that read an offset. */
-  private def restarted(batches: Seq[DataFrame], complete: Boolean)(core: DataFrame => DataFrame)
+    * checkpoint and sink over both batches: the rows of `assembly`
+    * over the sink after each run, and (start offset, end offset,
+    * input rows) of every trigger of the restarted run that read an
+    * offset. */
+  private def restarted(batches: Seq[DataFrame], complete: Boolean,
+      assembly: DataFrame => DataFrame = identity)(core: DataFrame => DataFrame)
       : (Seq[String], Seq[String], Seq[(String, String, Long)]) = {
     val dir = Scratch.tempDir("graft_restart_")
     val reads = new java.util.concurrent.ConcurrentLinkedQueue[(String, String, Long)]()
-    def run(bs: Seq[DataFrame]) = rows(Staged.stream(spark, bs, s"$dir/ckpt", s"$dir/out",
-      noDataBatches = false, complete)(core))
+    def run(bs: Seq[DataFrame]) = rows(assembly(Staged.stream(spark, bs, s"$dir/ckpt", s"$dir/out",
+      noDataBatches = false, complete)(core)))
     try {
       val first = run(batches.take(1))
       val start = Instant.now().truncatedTo(ChronoUnit.MILLIS)
@@ -70,6 +73,21 @@ class AggregateRestartSpec extends graft.SparkSpec with Eventually {
     assert(second.nonEmpty)
     assert(second == rows(Staged.aggregate(spark, batches)(Telemetry.queueCensus)))
     assert(second == rows(Telemetry.queueStats(spark, sf)))
+  }
+
+  test("stream_ratecap's topKPairs census restarted between its two staged batches equals an uninterrupted run and the batch") {
+    // the state is a serialized TypedImperativeAggregate buffer
+    // (TopKPairs), which the restart must read back from the checkpoint
+    val ev = Tables.events(spark, sf).select(col("user_id"), col("ts"), col("event_id"))
+    val batches @ Seq(b1, b2) = Staged.timeCut(ev, unix_micros(col("ts")))
+    val census = Telemetry.rateCapCensus(_: DataFrame, 5)
+    val (first, second, reads) =
+      restarted(batches, complete = true, Telemetry.rateCapAssembly)(census)
+    assert(first == rows(Telemetry.rateCapAssembly(census(b1))))
+    assert(reads == Seq(("0", "1", b2.count())))
+    assert(second.size > first.size)
+    assert(second == rows(Telemetry.rateCapAssembly(Staged.aggregate(spark, batches)(census))))
+    assert(second == rows(Telemetry.rateCap(spark, sf)))
   }
 
   test("stream_downsample's gate restarted between its two staged batches equals an uninterrupted run") {

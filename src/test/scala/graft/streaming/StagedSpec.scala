@@ -73,15 +73,17 @@ class StagedSpec extends graft.SparkSpec with Eventually {
       if (t == "events") df.withColumn("ts", lit(null).cast(df.schema("ts").dataType)) else df
     }
     // the keyed folds that stage NULL-time rows, and every twin run as
-    // a complete-mode aggregation (Staged.aggregate)
-    val aggregated = Seq("stream_abtest", "stream_ann_ingest", "stream_anomaly",
-      "stream_benford", "stream_chunks", "stream_completeness", "stream_forecast",
-      "stream_frame_stats", "stream_heatmap", "stream_ltv", "stream_orphans", "stream_power",
-      "stream_quantiles_hist", "stream_quarantine", "stream_queue_stats", "stream_retention",
-      "stream_rfm", "stream_seasonal", "stream_topterms", "stream_trend", "stream_uptime",
-      "stream_volume")
-    (Seq("stream_basket", "stream_diversity", "stream_downsample", "stream_keyskew",
-        "stream_ratecap") ++ aggregated).foreach { k =>
+    // a complete-mode aggregation (Staged.aggregate) that shares a
+    // batch key's oracle
+    val aggregated = Seq("dedup_url_stream", "stream_abtest", "stream_ann_ingest",
+      "stream_anomaly", "stream_benford", "stream_cdc", "stream_chunks", "stream_completeness",
+      "stream_forecast", "stream_frame_stats", "stream_funnel", "stream_funnel3",
+      "stream_heatmap", "stream_ltv", "stream_mv_refresh", "stream_orphans", "stream_power",
+      "stream_quantiles_hist", "stream_quarantine", "stream_queue_stats", "stream_ratecap",
+      "stream_retention", "stream_rfm", "stream_seasonal", "stream_topterms", "stream_trend",
+      "stream_uptime", "stream_volume")
+    (Seq("stream_basket", "stream_diversity", "stream_downsample", "stream_keyskew")
+        ++ aggregated).foreach { k =>
       val b = batchTwin(k)
       assert(b.nonEmpty, s"$k shares no batch oracle entry")
       val want = SparkEntry.queries(b.get)(spark, nullTs)
@@ -129,6 +131,19 @@ class StagedSpec extends graft.SparkSpec with Eventually {
     // come through a Generate, so it also counts its batches' rows. A
     // staging write or a min/max cut job would add to each count.
     val want = Map("stream_queue_stats" -> 2, "stream_downsample" -> 2, "stream_chunks" -> 3)
+    val got = want.keys.map(k => k -> jobsOf(SparkEntry.queries(k)(spark, sf))).toMap
+    assert(got == want)
+  }
+
+  test("the seven twins on their batch keys' aggregates start a pinned number of jobs at sf0.001") {
+    // one job per trigger (two batches each), plus the min/max cut
+    // where the footers cannot tell it (a filtered or unioned corpus),
+    // which adaptive execution runs as two jobs. A barrier-keys
+    // distinct() or an "emitted exactly once" guard job would add to
+    // each count.
+    val want = Map("stream_ratecap" -> 2, "stream_distinct" -> 4, "stream_cdc" -> 2,
+      "dedup_url_stream" -> 2, "stream_mv_refresh" -> 4, "stream_funnel" -> 4,
+      "stream_funnel3" -> 4)
     val got = want.keys.map(k => k -> jobsOf(SparkEntry.queries(k)(spark, sf))).toMap
     assert(got == want)
   }
