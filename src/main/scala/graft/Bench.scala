@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 /** Benchmark main: runs every SparkEntry query on SPARK_GRAFT_SF_DIR
   * and prints one JSON line of per-query seconds.
   *
@@ -17,10 +19,43 @@ package graft
   * operator cost, not a cache hit.
   */
 object Bench {
+  /** Timed reps per key; the reported number is their median. */
+  val reps: Int = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
+
+  /** The timed action (guide §1.4, the r14 re-baseline): the noop sink
+    * computes EVERY column of every row and discards it, where count()
+    * lets the optimizer prune columns and sometimes whole subtrees. */
+  def act(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
+
+  /** One timed rep of `fn`: the label cache is cleared and the heap
+    * collected outside the clock, then the noop action runs. A
+    * crashing query must NOT show up as a normal-looking timing — it
+    * returns None, so a bench with a broken query is visibly broken,
+    * not quietly fast/slow. */
+  def timeOnce(spark: SparkSession, sfDir: String, fn: (SparkSession, String) => DataFrame): Option[Double] = {
+    graft.operators.Dedup.clearLabelCache()
+    // measurement hygiene, outside the timed region: the streaming
+    // twins leave memory-sink rows behind until GC, and that heap
+    // pressure was billed to whichever queries ran next (r7:
+    // text_boilerplate timed 5.2s in-bench vs 1.0s isolated)
+    System.gc()
+    val t0 = System.nanoTime()
+    try { act(fn(spark, sfDir)); Some((System.nanoTime() - t0) / 1e9) }
+    catch {
+      case t: Throwable =>
+        System.err.println(s"bench query failed: ${t.getClass.getName}: ${t.getMessage}")
+        None
+    }
+  }
+
+  def median(xs: Seq[Double]): Double = {
+    val s = xs.sorted
+    s(s.length / 2)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
     val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     GraftSession.registerObservationLog(spark)
     spark.sparkContext.setLogLevel("WARN")
@@ -28,39 +63,6 @@ object Bench {
     // absorb JVM startup; deterministic name order for stable rounds
     try spark.read.parquet(s"$sfDir/lineitem.parquet").count()
     catch { case _: Throwable => () }
-    // Timed action (guide §1.4, the r14 re-baseline): the noop sink
-    // computes EVERY column of every row and discards it, where
-    // count() lets the optimizer prune columns and sometimes whole
-    // subtrees — the old numbers under-measured queries whose wide
-    // columns count() never computed. GRAFT_BENCH_ACTION=count keeps
-    // the old action so the transition round records BOTH payloads
-    // (committed side by side); the JSON contract is unchanged.
-    val action = sys.env.getOrElse("GRAFT_BENCH_ACTION", "noop")
-    def act(df: org.apache.spark.sql.DataFrame): Unit =
-      if (action == "count") { df.count(); () }
-      else df.write.format("noop").mode("overwrite").save()
-    // a crashing query must NOT show up as a normal-looking timing —
-    // record it as -1 and list it under "failed" so a bench with a
-    // broken query is visibly broken, not quietly fast/slow
-    def timeOnce(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] = {
-      graft.operators.Dedup.clearLabelCache()
-      // measurement hygiene, outside the timed region: the streaming
-      // twins leave memory-sink rows behind until GC, and that heap
-      // pressure was billed to whichever queries ran next (r7:
-      // text_boilerplate timed 5.2s in-bench vs 1.0s isolated)
-      System.gc()
-      val t0 = System.nanoTime()
-      try { act(fn(spark, sfDir)); Some((System.nanoTime() - t0) / 1e9) }
-      catch {
-        case t: Throwable =>
-          System.err.println(s"bench query failed: ${t.getClass.getName}: ${t.getMessage}")
-          None
-      }
-    }
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      s(s.length / 2)
-    }
     // optional positional args restrict the run to the named queries —
     // the single-operator iteration loop (run `Bench q1_agg dedup_exact`)
     val wanted = args.toSet
@@ -69,20 +71,18 @@ object Bench {
       else SparkEntry.queries.filter { case (k, _) => wanted(k) }
     // The streaming twins' cost is ~80% fixed Structured-Streaming
     // lifecycle (per-trigger planning + state-store commits — latency,
-    // not CPU), so K of them run CONCURRENTLY per rep (VERDICT r10
-    // task 4; safe since the r10 thread-scoped checkpoint drains —
-    // each twin runs in its own cloned session with per-call scratch
-    // dirs and unique sink names). Accounting stays honest: each
-    // twin's per-query number is its OWN wall time under concurrency
-    // (a latency, possibly above its isolated median — verify movers
-    // with tools/TimeOne), and the TOTAL charges the streaming family
-    // its measured WAVE wall (what the gate actually pays), not the
-    // sum of overlapped latencies. GRAFT_BENCH_STREAM_CONCURRENCY=1
-    // restores the fully-serial accounting.
-    val conc = math.max(1,
-      sys.env.getOrElse("GRAFT_BENCH_STREAM_CONCURRENCY", "4").toInt)
+    // not CPU), so Verify.StreamConcurrency of them run CONCURRENTLY
+    // per rep (VERDICT r10 task 4; safe since the r10 thread-scoped
+    // checkpoint drains — each twin runs in its own cloned session
+    // with per-call scratch dirs and unique sink names). Accounting
+    // stays honest: each twin's per-query number is its OWN wall time
+    // under concurrency (a latency, possibly above its isolated median
+    // — verify movers with `tools.Run time`), and the TOTAL charges
+    // the streaming family its measured WAVE wall (what the gate
+    // actually pays), not the sum of overlapped latencies.
+    val conc = Verify.StreamConcurrency
     val (streamSel, batchSel) = selected.toSeq.sortBy(_._1)
-      .partition { case (k, _) => k.startsWith("stream_") || k.endsWith("_stream") }
+      .partition { case (k, _) => SparkEntry.byName(k).twin }
     // Trustworthy head keys (VERDICT r12 task 3): every round the
     // post-close payload inflated the alphabetical-head keys
     // (corpus_pipeline 7.65 s driver vs 2.27 s isolated in r12) —
@@ -104,7 +104,7 @@ object Bench {
       val off = if (batchSel.isEmpty) 0 else batchSel.length * rep / reps
       val rotated = batchSel.drop(off) ++ batchSel.take(off)
       rotated.foreach { case (name, fn) =>
-        timeOnce(fn).foreach { dt =>
+        timeOnce(spark, sfDir, fn).foreach { dt =>
           batchTimes.merge(name, List(dt), (a, b) => b ::: a)
         }
       }
@@ -116,12 +116,7 @@ object Bench {
     }
     val (streamResults, streamWall): (Seq[(String, Option[Double])], Option[Double]) =
       if (streamSel.isEmpty) (Seq.empty, None)
-      else if (conc <= 1) {
-        (streamSel.map { case (name, fn) =>
-          val runs = (0 until reps).flatMap(_ => timeOnce(fn))
-          name -> (if (runs.length == reps) Some(median(runs)) else None)
-        }, None)
-      } else {
+      else {
         val perKey = new java.util.concurrent.ConcurrentHashMap[String, List[Double]]()
         val walls = (0 until reps).map { _ =>
           graft.operators.Dedup.clearLabelCache()
@@ -167,13 +162,10 @@ object Bench {
     val failed = results.collect { case (k, None) => s"\"" + k + "\"" }
       .mkString("[", ",", "]")
     // total = serial batch medians + the streaming wave's measured
-    // wall (when concurrent) — the wall time one serial-equivalent
-    // pass of the suite actually costs; overlapped per-query
-    // latencies must not double-count
-    val total = streamWall match {
-      case Some(w) => batchResults.flatMap(_._2).sum + w
-      case None => results.flatMap(_._2).sum
-    }
+    // wall — the wall time one serial-equivalent pass of the suite
+    // actually costs; overlapped per-query latencies must not
+    // double-count
+    val total = batchResults.flatMap(_._2).sum + streamWall.getOrElse(0.0)
     val streamMeta = streamWall
       .map(w => s""","stream_wall":${fmt(w)},"stream_concurrency":$conc""")
       .getOrElse("")

@@ -15,8 +15,8 @@ import java.nio.file.{Files, Paths}
   *     assert nothing was dropped.
   */
 object Verify {
-  /** Streaming twins dumped at once. */
-  private val StreamConcurrency = 4
+  /** Streaming twins dumped (and benched, [[Bench]]) at once. */
+  val StreamConcurrency = 4
 
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
@@ -65,7 +65,7 @@ object Verify {
     // Batch queries stay serial — they are cheap and share caches
     // whose first-population is better paid once.
     val (streamKeys, batchKeys) = selected(SparkEntry.queries).toSeq.sortBy(_._1)
-      .partition { case (k, _) => k.startsWith("stream_") || k.endsWith("_stream") }
+      .partition { case (k, _) => SparkEntry.byName(k).twin }
     batchKeys.foreach { case (name, fn) => dumpOne(name, fn) }
     val pool = java.util.concurrent.Executors.newFixedThreadPool(StreamConcurrency)
     try {

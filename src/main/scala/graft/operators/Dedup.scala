@@ -327,63 +327,54 @@ object Dedup {
     releaseAllTransientBlocks()
   }
 
-  /** Registry of TRANSIENT checkpoint blocks: blocks a returned
-    * DataFrame still references, so they cannot be unpersisted inside
-    * the operator, but that are dead once the caller has consumed the
-    * result. Bench (per rep, via clearLabelCache) and Verify (per
-    * query) drain it — without the registry every kcore round /
-    * kmeans seed pass leaked its blocks for the JVM's lifetime
-    * (ADVICE r8), and the 294-query gate runs in one SparkSession. */
+  /** Registry of TRANSIENT resources: checkpoint blocks and broadcast
+    * variables a returned DataFrame still references, and the sink
+    * directories a returned lazy scan still reads, so the call that
+    * made them cannot free them, but that are dead once the caller has
+    * consumed the result. Bench (per rep, via clearLabelCache), Verify
+    * (per query) and perfbench (per call) drain it — without the
+    * registry every kcore round / kmeans seed pass leaked its blocks
+    * for the JVM's lifetime (ADVICE r8), and the 294-query gate runs
+    * in one SparkSession. Broadcasts (the packed LSH tables, the packed
+    * triangle/kcore adjacencies) are destroyed BLOCKING: before r14
+    * they lived until GC, and the 100x census OOM'd the triangles
+    * sweep at the default 8g when it ran AFTER the packed ANN keys in
+    * one JVM, because their ~0.5 GB of spent broadcasts had not been
+    * collected yet. A staged twin's sink directory otherwise lived in
+    * RAM scratch until JVM exit (58 were live half-way through one
+    * tier-1 run). */
   // keyed on the Thread OBJECT, not Thread.getId (ADVICE r10): JVM
   // thread ids are reused, so an id key could hand a dead thread's
   // queue to an unrelated new thread. Keys are strong on purpose — a
-  // queue abandoned by a dead thread stays drainable by the full
-  // reset (releaseAllTransientBlocks) instead of leaking its blocks
-  // when a weak entry is collected. Contract: the thread that BUILDS
-  // a transient-checkpointed DataFrame must be the one that drains it
-  // (build-on-A/consume-on-B patterns must drain via clearLabelCache).
-  private val transientBlocks = new java.util.concurrent.ConcurrentHashMap[
-    Thread,
-    java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.rdd.RDD[_]]]()
+  // queue abandoned by a dead thread (the packed-LSH pack pool builds
+  // on short-lived threads) stays drainable by the full reset
+  // (releaseAllTransientBlocks) instead of leaking when a weak entry
+  // is collected. Contract: the thread that BUILDS a transient-backed
+  // DataFrame must be the one that drains it (build-on-A/consume-on-B
+  // patterns must drain via clearLabelCache).
+  private val transients = new java.util.concurrent.ConcurrentHashMap[
+    Thread, java.util.concurrent.ConcurrentLinkedQueue[() => Unit]]()
 
-  private[graft] def trackTransient(rdds: Seq[org.apache.spark.rdd.RDD[_]]): Unit = {
-    val q = transientBlocks.computeIfAbsent(Thread.currentThread(),
-      _ => new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.rdd.RDD[_]]())
-    rdds.foreach(q.add)
-  }
+  private def trackRelease(release: () => Unit): Unit =
+    transients.computeIfAbsent(Thread.currentThread(),
+      _ => new java.util.concurrent.ConcurrentLinkedQueue[() => Unit]()).add(release)
 
-  /** Registry of TRANSIENT broadcast variables (the packed LSH
-    * tables, the packed triangle/kcore adjacencies): like the
-    * checkpoint blocks above, the returned plan still references them
-    * so the operator cannot destroy them itself, but once the caller
-    * has consumed the result they are dead weight. Before r14 they
-    * lived until GC — measured: the 100x census OOM'd the triangles
-    * sweep at the default 8g when it ran AFTER the packed ANN keys in
-    * one JVM, because their ~0.5 GB of spent broadcasts had not been
-    * collected yet. The drains destroy them BLOCKING, so the next
-    * key's heap budget is real, not hostage to the GC's schedule.
-    * Destroys are keyed per thread like the block registry, and the
-    * full reset covers queues abandoned by dead pool threads (the
-    * packed-LSH pack pool builds on short-lived threads). */
-  private val transientBcs = new java.util.concurrent.ConcurrentHashMap[
-    Thread,
-    java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.broadcast.Broadcast[_]]]()
+  private[graft] def trackTransient(rdds: Seq[org.apache.spark.rdd.RDD[_]]): Unit =
+    rdds.foreach(r => trackRelease(() => r.unpersist(blocking = false)))
 
   private[graft] def trackTransientBroadcast(
-      bc: org.apache.spark.broadcast.Broadcast[_]): Unit = {
-    val q = transientBcs.computeIfAbsent(Thread.currentThread(),
-      _ => new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.broadcast.Broadcast[_]]())
-    q.add(bc)
-  }
-
-  private def destroyAll(
-      q: java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.broadcast.Broadcast[_]]): Unit = {
-    var b = q.poll()
-    while (b != null) {
-      try b.destroy()
+      bc: org.apache.spark.broadcast.Broadcast[_]): Unit =
+    trackRelease { () =>
+      try bc.destroy()
       catch { case _: Throwable => () } // already destroyed / stopped context
-      b = q.poll()
     }
+
+  private[graft] def trackTransientDir(dir: java.nio.file.Path): Unit =
+    trackRelease(() => graft.sources.Scratch.deleteTree(dir))
+
+  private def drain(q: java.util.concurrent.ConcurrentLinkedQueue[() => Unit]): Unit = {
+    var release = q.poll()
+    while (release != null) { release(); release = q.poll() }
   }
 
   /** localCheckpoint whose blocks are freed at the next
@@ -395,8 +386,8 @@ object Dedup {
     ck
   }
 
-  /** Unpersist the transient checkpoint blocks registered by the
-    * CALLING thread. The registry is thread-scoped (ADVICE r9): a
+  /** Release the transients registered by the CALLING thread. The
+    * registry is thread-scoped (ADVICE r9): a
     * Verify/Bench drain after each query can no longer truncate a
     * not-yet-consumed DataFrame held by a concurrent consumer
     * (parallel tests, interactive use) on the shared session — each
@@ -404,30 +395,17 @@ object Dedup {
     * have consumed (or abandoned) every DataFrame THIS thread was
     * returned since its previous drain — lineage is truncated, so a
     * late action on one would fail rather than silently recompute. */
-  def releaseTransientBlocks(): Unit = {
-    val q = transientBlocks.remove(Thread.currentThread())
-    if (q != null) {
-      var r = q.poll()
-      while (r != null) { r.unpersist(blocking = false); r = q.poll() }
-    }
-    val bq = transientBcs.remove(Thread.currentThread())
-    if (bq != null) destroyAll(bq)
-  }
+  def releaseTransientBlocks(): Unit =
+    Option(transients.remove(Thread.currentThread())).foreach(drain)
 
-  /** Unpersist EVERY thread's transient blocks — only safe when no
-    * returned DataFrame anywhere is still awaiting consumption
+  /** Release EVERY thread's transients — only safe when no returned
+    * DataFrame anywhere is still awaiting consumption
     * (clearLabelCache's full-reset contract). */
   private def releaseAllTransientBlocks(): Unit = {
-    val it = transientBlocks.values().iterator()
+    val it = transients.values().iterator()
     while (it.hasNext) {
       val q = it.next(); it.remove()
-      var r = q.poll()
-      while (r != null) { r.unpersist(blocking = false); r = q.poll() }
-    }
-    val bit = transientBcs.values().iterator()
-    while (bit.hasNext) {
-      val q = bit.next(); bit.remove()
-      destroyAll(q)
+      drain(q)
     }
   }
 

@@ -162,13 +162,16 @@ object Staged {
     staged(spark, batches, noDataBatches = false, complete = true)(core)
 
   /** The body of [[run]] and [[aggregate]]: the checkpoint lives only
-    * for this call (RAM scratch, deleted on return); the sink lives
-    * until JVM exit, because the returned scan reads it lazily. */
+    * for this call (RAM scratch, deleted on return). The returned scan
+    * reads the sink lazily, so the sink lives until the calling
+    * thread's next transient drain ([[graft.operators.Dedup.releaseTransientBlocks]]),
+    * or until JVM exit for a caller that never drains. */
   private def staged(spark: SparkSession, batches: Seq[DataFrame], noDataBatches: Boolean,
       complete: Boolean)(transform: DataFrame => DataFrame): DataFrame = {
     val ckpt = Scratch.tempDir("graft_ckpt_")
     val out = Scratch.tempDir("graft_sdsink_")
     Scratch.deleteOnExit(out)
+    graft.operators.Dedup.trackTransientDir(out)
     try stream(spark, batches, ckpt.toString, out.toString, noDataBatches, complete)(transform)
     finally Scratch.deleteTree(ckpt)
   }
@@ -212,7 +215,7 @@ object Staged {
     * [1, defaultParallelism]. Each stateful operator loads and commits
     * one state store per shuffle partition per micro-batch, so width
     * beyond what the input volume fills buys only commit overhead.
-    * Calibration (sf0.1, 4 cores, TimeOne medians in seconds; rows =
+    * Calibration (sf0.1, 4 cores, `tools.Run time` medians in seconds; rows =
     * the largest staged batch):
     * {{{
     *   twin                 rows   w=8        w=4   w=2   w=1

@@ -50,19 +50,13 @@ object ScaleCensus {
           // noop sink like the bench (guide §1.4): count() prunes
           // columns/subtrees, so a census could under-exercise exactly
           // the expensive column a key would compute in production.
-          // GRAFT_BENCH_ACTION=count restores the old action.
+          // The row count rides the noop write as an observed metric:
+          // a df.count() after it would run the key a second time.
           try {
-            val df = graft.SparkEntry.queries(name)(spark, dir)
-            if (sys.env.getOrElse("GRAFT_BENCH_ACTION", "noop") == "count") df.count()
-            else {
-              // the row count rides the noop write as an observed
-              // metric: a df.count() after it ran the key a second time
-              val obs = org.apache.spark.sql.Observation()
-              df.observe(obs, org.apache.spark.sql.functions.count(
-                  org.apache.spark.sql.functions.lit(1)).as("rows"))
-                .write.format("noop").mode("overwrite").save()
-              obs.get("rows").asInstanceOf[Long]
-            }
+            val obs = org.apache.spark.sql.Observation()
+            graft.Bench.act(graft.SparkEntry.queries(name)(spark, dir).observe(obs,
+              org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1)).as("rows")))
+            obs.get("rows").asInstanceOf[Long]
           } finally spark.sparkContext.clearJobGroup()
         }
       })

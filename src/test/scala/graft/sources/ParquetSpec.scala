@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -9,7 +9,7 @@ import graft.SparkEntry
 
 /** Table reads take the schema Spark's own inference picks from the
   * parquet footer, read on the driver, so building a query starts no
-  * Spark job. */
+  * Spark job unless its key table entry names the reason it does. */
 class ParquetSpec extends graft.SparkSpec {
   private val tables = Seq("region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
@@ -43,24 +43,46 @@ class ParquetSpec extends graft.SparkSpec {
     } finally Scratch.deleteTree(dir)
   }
 
-  test("building each telemetry_olap key at sf0.001 starts no job before its action") {
-    val keys = Seq("frame_roundtrip", "frame_stats", "downsample_1hz", "beacon_5min",
-      "session_windows", "data_budget", "chunk_messages", "queue_stats", "relay_gate",
-      "q1_agg", "q5_multijoin")
-    val jobs = new AtomicInteger()
+  test("building a batch key at sf0.001 starts a job only if its entry says why") {
+    val keys = SparkEntry.table.filterNot(_.twin)
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(e.stageInfos.sortBy(_.stageId).lastOption.fold("?")(_.name))
     }
+    // a private copy of sf0.001: the per-directory memos (the bucketed
+    // and partitioned staging copies) would hit for a key an earlier
+    // suite ran on sf0.001 and hide its jobs
+    val dir = Scratch.tempDir("graft_parquet_eager_")
+    val src = java.nio.file.Paths.get(sf)
+    val walk = java.nio.file.Files.walk(src)
+    try walk.iterator().asScala.foreach(p => java.nio.file.Files.copy(p, dir.resolve(src.relativize(p).toString),
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING))
+    finally walk.close()
     spark.sparkContext.addSparkListener(listener)
     try {
-      val eager = keys.map { k =>
+      val wrong = keys.flatMap { k =>
+        // a label-cache hit must not hide a job
+        graft.operators.Dedup.clearLabelCache()
         ListenerBusDrain.drain(spark.sparkContext)
-        val before = jobs.get()
-        SparkEntry.queries(k)(spark, sf)
+        jobs.clear()
+        k.run(spark, dir.toString)
         ListenerBusDrain.drain(spark.sparkContext)
-        k -> (jobs.get() - before)
+        val started = jobs.asScala.toSeq
+        if (k.eager.isEmpty && started.nonEmpty)
+          Some(s"${k.name} started ${started.size} jobs (${started.distinct.mkString(", ")}) and gives no reason")
+        else if (k.eager.nonEmpty && started.isEmpty)
+          Some(s"${k.name} started no job but gives: ${k.eager.get}")
+        else None
       }
-      assert(eager.forall(_._2 == 0), eager.filter(_._2 != 0).mkString(", "))
-    } finally spark.sparkContext.removeSparkListener(listener)
+      graft.operators.Dedup.clearLabelCache()
+      keys.flatMap(_.eager).groupBy(identity).toSeq.sortBy(-_._2.size).foreach { case (r, ks) =>
+        info(s"${ks.size} keys: $r")
+      }
+      assert(wrong.isEmpty, wrong.mkString("\n"))
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      Scratch.deleteTree(dir)
+    }
   }
 }

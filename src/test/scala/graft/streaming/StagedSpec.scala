@@ -23,8 +23,7 @@ class StagedSpec extends graft.SparkSpec with Eventually {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   /** The keys graft.Verify dumps as streaming twins. */
-  private val streamKeys = SparkEntry.queries.keys.toSeq.sorted
-    .filter(k => k.startsWith("stream_") || k.endsWith("_stream"))
+  private val streamKeys = SparkEntry.table.filter(_.twin).map(_.name).sorted
 
   /** A copy of the sf0.001 tables, each passed through `f`. */
   private def corpus(prefix: String)(f: (String, DataFrame) => DataFrame): String = {
@@ -35,12 +34,6 @@ class StagedSpec extends graft.SparkSpec with Eventually {
     }
     dir.toString
   }
-
-  /** The batch key that shares `twin`'s oracle entry. */
-  private def batchTwin(twin: String): Option[String] =
-    SparkEntry.oracleSql.get(twin).flatMap(sql => SparkEntry.oracleSql.collectFirst {
-      case (k, s) if s == sql && !streamKeys.contains(k) => k
-    })
 
   private def fields(df: DataFrame) = df.schema.fields.map(f => f.name -> f.dataType).toSeq
 
@@ -58,7 +51,7 @@ class StagedSpec extends graft.SparkSpec with Eventually {
         val want = q(spark, sf)
         // a twin that shares a batch key's oracle returns what that key
         // returns on the same corpus (a global aggregate keeps its rows)
-        val wantRows = batchTwin(k).fold(0L)(b => SparkEntry.queries(b)(spark, empty).count())
+        val wantRows = SparkEntry.byName(k).batchTwin.fold(0L)(b => SparkEntry.queries(b)(spark, empty).count())
         val n = got.count()
         Seq(
           Option.when(fields(got) != fields(want))(s"$k columns ${fields(got)} != ${fields(want)}"),
@@ -84,13 +77,25 @@ class StagedSpec extends graft.SparkSpec with Eventually {
       "stream_uptime", "stream_volume")
     (Seq("stream_basket", "stream_diversity", "stream_downsample", "stream_keyskew")
         ++ aggregated).foreach { k =>
-      val b = batchTwin(k)
+      val b = SparkEntry.byName(k).batchTwin
       assert(b.nonEmpty, s"$k shares no batch oracle entry")
       val want = SparkEntry.queries(b.get)(spark, nullTs)
       val got = SparkEntry.queries(k)(spark, nullTs)
       assert(got.columns.sorted.toSeq == want.columns.sorted.toSeq, s"$k columns")
       assert(rows(got) == rows(want), s"$k rows differ from ${b.get}")
     }
+  }
+
+  test("a drained thread deletes the sink directory of the twin it consumed") {
+    val df = SparkEntry.queries("stream_downsample")(spark, sf)
+    val sinks = df.inputFiles.map(f => java.nio.file.Paths.get(java.net.URI.create(f)).getParent)
+      .distinct.toSeq
+    assert(sinks.nonEmpty && sinks.forall(_.getFileName.toString.startsWith("graft_sdsink_")),
+      sinks.mkString(", "))
+    assert(df.count() > 0)
+    assert(sinks.forall(java.nio.file.Files.isDirectory(_)))
+    graft.operators.Dedup.releaseTransientBlocks()
+    assert(sinks.forall(!java.nio.file.Files.exists(_)), sinks.mkString(", "))
   }
 
   test("a nondeterministic batch plan fails loudly, naming its index") {

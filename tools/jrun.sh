@@ -1,6 +1,6 @@
 #!/bin/bash
 # Run a graft main straight from compiled classes (no sbt lock):
-#   tools/jrun.sh [-Xmx16g] graft.tools.RecallOne ann_recall /tmp/scale10j
+#   tools/jrun.sh [-Xmx16g] graft.tools.Run recall ann_recall /tmp/scale10j
 # Mirrors build.sbt's jdk17AddOpens + UTC defaults. Compile first
 # (sbt compile) — this runs whatever is in the checkout's
 # target/scala-2.13/classes, found relative to this script.
