@@ -14,9 +14,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Each query runs SPARK_GRAFT_BENCH_REPS times (default 3) and
   * reports the MEDIAN — single-shot timings on a shared box swing
   * ±20% and have produced phantom regressions; the median of 3 is
-  * stable to a few percent. Cross-query state (the dedup label cache)
-  * is cleared before every rep so each measurement is the full
-  * operator cost, not a cache hit.
+  * stable to a few percent. Every rep pays the full operator cost:
+  * nothing an operator derives outlives its call, and the transient
+  * registry of all threads is drained before every rep.
   */
 object Bench {
   /** Timed reps per key; the reported number is their median. */
@@ -27,8 +27,8 @@ object Bench {
     * lets the optimizer prune columns and sometimes whole subtrees. */
   def act(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
 
-  /** One timed rep of `fn`: the label cache is cleared and the heap
-    * collected outside the clock, then the noop action runs. A
+  /** One timed rep of `fn`: every thread's transients are released
+    * and the heap collected outside the clock, then the noop action runs. A
     * crashing query must NOT show up as a normal-looking timing — it
     * returns None, so a bench with a broken query is visibly broken,
     * not quietly fast/slow. */

@@ -303,7 +303,7 @@ object SparkEntry {
         |SELECT e.event_type, COUNT(*) AS n_events,
         |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
         |FROM events e JOIN dim USING (event_type)
-        |GROUP BY e.event_type""".stripMargin)),
+        |GROUP BY e.event_type""".stripMargin), eager = Some(Staging)),
     // the Expand-based unpivot equals the UNION ALL formulation
     Key("q_unpivot", (s, d) => Relational.qUnpivot(s, d), Sql(
       """SELECT l_returnflag, metric,

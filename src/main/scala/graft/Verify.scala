@@ -36,14 +36,11 @@ object Verify {
     def dumpOne(name: String,
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit = {
       // the dump is this query's consuming action — transient
-      // checkpoint blocks (kcore rounds, kmeans seed passes) are dead
-      // once it finishes; drain them so the 294-query gate session
-      // doesn't accumulate blocks (the label cache is NOT cleared —
-      // dedup_clusters/dedup_apply share it deliberately; the drain is
-      // THREAD-scoped, so concurrent dumps release only their own)
-      try { fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-        graft.operators.Dedup.releaseTransientBlocks() }
+      // checkpoints, broadcasts and scratch copies (kcore rounds,
+      // staged copies, sinks) are dead once it finishes; drain them so
+      // the 305-query gate session doesn't accumulate them (the drain
+      // is THREAD-scoped, so concurrent dumps release only their own)
+      try fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
         failures.put(name, msg)
@@ -53,7 +50,7 @@ object Verify {
           Seq((name, msg.take(500))).toDF("__VERIFY_FAILED__", "error")
             .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
         } catch { case _: Throwable => () }
-      }
+      } finally graft.operators.Dedup.releaseTransientBlocks()
     }
     // the streaming twins are independent queries on per-call staged
     // sources whose cost is ~80% fixed Structured-Streaming lifecycle
@@ -62,8 +59,8 @@ object Verify {
     // (VERDICT r10 task 4 — safe since the r10 thread-scoped
     // checkpoint drains: every twin runs in its own cloned session
     // with per-call scratch dirs and globally-unique sink names).
-    // Batch queries stay serial — they are cheap and share caches
-    // whose first-population is better paid once.
+    // Batch queries stay serial: their cost is executor work, which
+    // the cores already share within each query.
     val (streamKeys, batchKeys) = selected(SparkEntry.queries).toSeq.sortBy(_._1)
       .partition { case (k, _) => SparkEntry.byName(k).twin }
     batchKeys.foreach { case (name, fn) => dumpOne(name, fn) }

@@ -299,40 +299,21 @@ object Dedup {
     */
   def clusters(spark: SparkSession, dir: String, maxIters: Int = 50): DataFrame = {
     import spark.implicits._
-    val labels = componentLabels(spark, dir, maxIters)
+    val labels = componentLabels(spark, verifiedPairs(spark, dir), maxIters)
     val sizes = labels.groupBy($"label").agg(count(lit(1)).as("cluster_size"))
     labels.join(sizes, "label")
       .select($"node".as("doc_id"), $"label".as("cluster_id"),
         ($"node" === $"label").as("is_keeper"), $"cluster_size")
   }
 
-  /** Per-session cache of converged labels: `dedup_clusters` and
-    * `dedup_apply` share the whole MinHash + iteration pipeline, so
-    * within one session the second caller reuses the first's
-    * converged (checkpointed) label set instead of recomputing it.
-    * The cached DataFrame's checkpoint blocks are the ONLY persisted
-    * state the operator leaves behind; [[clearLabelCache]] frees them.
-    */
-  private val labelCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String), (DataFrame, Seq[org.apache.spark.rdd.RDD[_]])]
-
-  /** Unpersist every cached converged label set (used by tests and
-    * the bench harness to measure full operator cost). */
-  def clearLabelCache(): Unit = {
-    labelCache.values.foreach { case (_, rdds) =>
-      rdds.foreach(_.unpersist(blocking = false))
-    }
-    labelCache.clear()
-    releaseAllTransientBlocks()
-  }
-
   /** Registry of TRANSIENT resources: checkpoint blocks and broadcast
     * variables a returned DataFrame still references, and the sink
     * directories a returned lazy scan still reads, so the call that
     * made them cannot free them, but that are dead once the caller has
-    * consumed the result. Bench (per rep, via clearLabelCache), Verify
-    * (per query) and perfbench (per call) drain it — without the
+    * consumed the result. Every derived copy, count and checkpoint an
+    * operator makes lives here and nowhere longer: no per-directory
+    * memo outlives the call. Bench (per rep, via clearLabelCache),
+    * Verify (per query) and perfbench (per call) drain it — without the
     * registry every kcore round / kmeans seed pass leaked its blocks
     * for the JVM's lifetime (ADVICE r8), and the 294-query gate runs
     * in one SparkSession. Broadcasts (the packed LSH tables, the packed
@@ -348,16 +329,12 @@ object Dedup {
   // queue to an unrelated new thread. Keys are strong on purpose — a
   // queue abandoned by a dead thread (the packed-LSH pack pool builds
   // on short-lived threads) stays drainable by the full reset
-  // (releaseAllTransientBlocks) instead of leaking when a weak entry
+  // (clearLabelCache) instead of leaking when a weak entry
   // is collected. Contract: the thread that BUILDS a transient-backed
   // DataFrame must be the one that drains it (build-on-A/consume-on-B
   // patterns must drain via clearLabelCache).
   private val transients = new java.util.concurrent.ConcurrentHashMap[
     Thread, java.util.concurrent.ConcurrentLinkedQueue[() => Unit]]()
-
-  private def trackRelease(release: () => Unit): Unit =
-    transients.computeIfAbsent(Thread.currentThread(),
-      _ => new java.util.concurrent.ConcurrentLinkedQueue[() => Unit]()).add(release)
 
   private[graft] def trackTransient(rdds: Seq[org.apache.spark.rdd.RDD[_]]): Unit =
     rdds.foreach(r => trackRelease(() => r.unpersist(blocking = false)))
@@ -369,8 +346,17 @@ object Dedup {
       catch { case _: Throwable => () } // already destroyed / stopped context
     }
 
-  private[graft] def trackTransientDir(dir: java.nio.file.Path): Unit =
+  /** Release action run at the calling thread's next drain. */
+  private[graft] def trackRelease(release: () => Unit): Unit =
+    transients.computeIfAbsent(Thread.currentThread(),
+      _ => new java.util.concurrent.ConcurrentLinkedQueue[() => Unit]()).add(release)
+
+  /** `dir` is deleted at the calling thread's next drain, or at JVM
+    * exit if no drain comes. */
+  private[graft] def trackTransientDir(dir: java.nio.file.Path): Unit = {
+    graft.sources.Scratch.deleteOnExit(dir)
     trackRelease(() => graft.sources.Scratch.deleteTree(dir))
+  }
 
   private def drain(q: java.util.concurrent.ConcurrentLinkedQueue[() => Unit]): Unit = {
     var release = q.poll()
@@ -398,10 +384,10 @@ object Dedup {
   def releaseTransientBlocks(): Unit =
     Option(transients.remove(Thread.currentThread())).foreach(drain)
 
-  /** Release EVERY thread's transients — only safe when no returned
-    * DataFrame anywhere is still awaiting consumption
-    * (clearLabelCache's full-reset contract). */
-  private def releaseAllTransientBlocks(): Unit = {
+  /** Release EVERY thread's transients (tests and the bench harness,
+    * between measured calls): only safe when no returned DataFrame
+    * anywhere is still awaiting consumption. */
+  def clearLabelCache(): Unit = {
     val it = transients.values().iterator()
     while (it.hasNext) {
       val q = it.next(); it.remove()
@@ -431,72 +417,24 @@ object Dedup {
     (ck, rdds)
   }
 
-  /** Converged (node, label) component assignment — the shared core
-    * of [[clusters]] and [[applyDedup]]; cached per (session, dir).
-    *
-    * The cache assumes the data under `dir` is immutable for the
-    * session's lifetime (the norm for a parquet snapshot dir); if a
-    * caller rewrites `dir` mid-session it must [[clearLabelCache]]
-    * first or stale labels are served. Concurrent first callers may
-    * both compute; `putIfAbsent` picks one winner and the loser's
-    * checkpoint blocks are unpersisted immediately (TrieMap's
-    * `getOrElseUpdate` would leak the losing computation's blocks —
-    * its RDD handles are discarded when the winning entry is kept).
-    * `maxIters` is part of the key (like pagerank's `iters`), so a
-    * later call with a different iteration budget recomputes instead
-    * of silently serving labels converged under the old setting. */
-  private def componentLabels(spark: SparkSession, dir: String, maxIters: Int): DataFrame =
-    cachedTracked(spark, dir + s"#labels$maxIters")(computeComponentLabels(spark, dir, maxIters))
-
-  /** The verified MinHash candidate pair set, checkpointed ONCE per
-    * (session, dir) and shared by every consumer (clustering, apply,
-    * the composed pipeline, PageRank) — the shingle+MinHash+LSH+
-    * verify sub-pipeline is the expensive half of all of them. Owned
-    * by the cache: blocks live until [[clearLabelCache]], so a
-    * consumer failing mid-computation can never orphan them. */
-  private def cachedPairs(spark: SparkSession, dir: String): DataFrame = {
+  /** The verified MinHash candidate pair set, checkpointed once per
+    * call: the shingle+MinHash+LSH+verify sub-pipeline is the
+    * expensive half of every graph and cluster key, and each of them
+    * reads the pairs more than once. A call that needs the pairs twice
+    * (pairs and labels, say) takes them once and passes them on. */
+  private def verifiedPairs(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    cachedTracked(spark, dir + "#pairs")(
-      localCheckpointTracked(minhash(spark, dir).select($"doc_a", $"doc_b")))
+    localCheckpointTransient(minhash(spark, dir).select($"doc_a", $"doc_b"))
   }
 
-  /** Shared cache protocol for expensive derived results whose only
-    * persisted state is their tracked checkpoint blocks (converged
-    * component labels, PageRank scores): winner-takes-all insertion,
-    * the losing concurrent computation's blocks unpersist
-    * immediately, [[clearLabelCache]] frees everything. */
-  private def cachedTracked(spark: SparkSession, key: String)(
-      compute: => (DataFrame, Seq[org.apache.spark.rdd.RDD[_]])): DataFrame = {
-    val k = (spark, key)
-    labelCache.get(k) match {
-      case Some((df, _)) => df
-      case None =>
-        val computed = compute
-        labelCache.putIfAbsent(k, computed) match {
-          case Some(existing) =>
-            computed._2.foreach(_.unpersist(blocking = false))
-            existing._1
-          case None => computed._1
-        }
-    }
-  }
-
-  private def computeComponentLabels(spark: SparkSession, dir: String, maxIters: Int)
-      : (DataFrame, Seq[org.apache.spark.rdd.RDD[_]]) =
-    // the cached pair checkpoint: computed once per (session, dir),
-    // shared with pagerank/apply/pipeline — the symmetric union's two
-    // branches read its blocks instead of recomputing the MinHash join
-    propagateMinLabels(spark, cachedPairs(spark, dir), maxIters)
-
-  /** Min-label propagation to convergence over ANY (doc_a, doc_b)
-    * candidate-pair frame — the connected-components core shared by
-    * the text cluster family (via [[componentLabels]]'s cache) and
-    * the image near-dup clusters ([[Multimodal.phashClusters]]).
-    * Returns converged (node, label) plus the checkpoint RDD handles
-    * the caller owns. */
-  private[operators] def propagateMinLabels(spark: SparkSession,
-      pairs: DataFrame, maxIters: Int)
-      : (DataFrame, Seq[org.apache.spark.rdd.RDD[_]]) = {
+  /** Converged (node, label) component assignment by min-label
+    * propagation over ANY (doc_a, doc_b) candidate-pair frame — the
+    * connected-components core shared by the text cluster family (over
+    * [[verifiedPairs]]) and the image near-dup clusters
+    * ([[Multimodal.phashClusters]]). Only the converged labels stay
+    * persisted, until the caller's next transient drain. */
+  private[operators] def componentLabels(spark: SparkSession,
+      pairs: DataFrame, maxIters: Int): DataFrame = {
     import spark.implicits._
     // materialize the symmetric edge set ONCE: every propagation round
     // joins against it, and for callers whose pair frame is a live
@@ -544,7 +482,8 @@ object Dedup {
         s"connected components did not converge in $maxIters rounds " +
           "(component diameter exceeds maxIters); raise maxIters")
     }
-    (labels, labelRdds)
+    trackTransient(labelRdds)
+    labels
   }
 
   /** PageRank over the duplicate-similarity graph (fixed `iters`
@@ -561,16 +500,12 @@ object Dedup {
     * 15/100 + 85·Σ/100 in integer arithmetic — so partial-aggregation
     * order cannot perturb results (double-sum PageRank is famously
     * nondeterministic on Spark) and the oracle replays the identical
-    * integers. The candidate pair set is localCheckpointed once
-    * (same lifecycle as the clustering loop; cached per (session,
-    * dir), freed by [[clearLabelCache]]). */
-  def pagerank(spark: SparkSession, dir: String, iters: Int = 2): DataFrame =
-    cachedTracked(spark, dir + s"#pagerank$iters")(computePagerank(spark, dir, iters))
-
-  private def computePagerank(spark: SparkSession, dir: String, iters: Int)
-      : (DataFrame, Seq[org.apache.spark.rdd.RDD[_]]) = {
+    * integers. The candidate pair set and the final scores are
+    * localCheckpointed once per call, freed at the caller's next
+    * transient drain. */
+  def pagerank(spark: SparkSession, dir: String, iters: Int = 2): DataFrame = {
     import spark.implicits._
-    val pairs = cachedPairs(spark, dir)
+    val pairs = verifiedPairs(spark, dir)
     val edges = pairs.select($"doc_a".as("u"), $"doc_b".as("v"))
       .union(pairs.select($"doc_b".as("u"), $"doc_a".as("v")))
     val deg = edges.groupBy($"u").agg(count(lit(1)).as("d"))
@@ -592,10 +527,9 @@ object Dedup {
           "(CAST(15000000 AS BIGINT) div (100 * cnt)) + ((85 * coalesce(s, CAST(0 AS BIGINT))) div 100) AS r")
       it += 1
     }
-    val (fin, finRdds) = localCheckpointTracked(
+    localCheckpointTransient(
       r.join(deg.select($"u".as("node"), $"d"), "node")
         .select($"node".as("doc_id"), $"r".as("pr_micro"), $"d".as("degree")))
-    (fin, finRdds)
   }
 
   /** Triangle counting over the duplicate-similarity graph (the
@@ -615,7 +549,7 @@ object Dedup {
     * vertex). Output: per-node triangle participation counts. */
   def triangles(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val pairs = cachedPairs(spark, dir)
+    val pairs = verifiedPairs(spark, dir)
     val und = pairs.select($"doc_a".as("u"), $"doc_b".as("v"))
     val deg = und.select($"u".as("node")).union(und.select($"v".as("node")))
       .groupBy($"node").agg(count(lit(1)).as("d"))
@@ -736,7 +670,7 @@ object Dedup {
     * twin of [[Relational.qHistogram]] on graph data. */
   def degreeDist(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val pairs = cachedPairs(spark, dir)
+    val pairs = verifiedPairs(spark, dir)
     pairs.select($"doc_a".as("node")).union(pairs.select($"doc_b".as("node")))
       .groupBy($"node").agg(count(lit(1)).as("d"))
       .groupBy($"d".as("degree")).agg(count(lit(1)).as("n_nodes"))
@@ -759,7 +693,7 @@ object Dedup {
     * [[degreeDist]] profile is exactly the pre-flight check). */
   def commonNeighbors(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val vp = cachedPairs(spark, dir).select($"doc_a", $"doc_b")
+    val vp = verifiedPairs(spark, dir)
     val e = vp.select($"doc_a".as("u"), $"doc_b".as("v"))
       .union(vp.select($"doc_b".as("u"), $"doc_a".as("v")))
     val deg = e.groupBy($"u").agg(count(lit(1)).as("d"))
@@ -797,7 +731,7 @@ object Dedup {
     * between k passes and an unbounded iteration. */
   def reach(spark: SparkSession, dir: String, maxHops: Int = 3): DataFrame = {
     import spark.implicits._
-    val vp = cachedPairs(spark, dir).select($"doc_a", $"doc_b")
+    val vp = verifiedPairs(spark, dir)
     val e = vp.select($"doc_a".as("u"), $"doc_b".as("v"))
       .union(vp.select($"doc_b".as("u"), $"doc_a".as("v")))
     val seeds = e.select($"u".as("node")).distinct()
@@ -831,12 +765,12 @@ object Dedup {
     * driver reduction; nothing touches raw documents. */
   def modularity(spark: SparkSession, dir: String, maxIters: Int = 50): DataFrame = {
     import spark.implicits._
-    val vp = cachedPairs(spark, dir).select($"doc_a", $"doc_b")
+    val vp = verifiedPairs(spark, dir)
     val e = vp.select($"doc_a".as("u"), $"doc_b".as("v"))
       .union(vp.select($"doc_b".as("u"), $"doc_a".as("v")))
     val deg = e.groupBy($"u".as("node")).agg(count(lit(1)).as("d"))
     val m = vp.count()
-    deg.join(componentLabels(spark, dir, maxIters), "node")
+    deg.join(componentLabels(spark, vp, maxIters), "node")
       .groupBy($"label".as("cluster_id"))
       .agg(count(lit(1)).as("n_nodes"), sum($"d").as("deg_sum"))
       .select($"cluster_id", $"n_nodes", $"deg_sum",
@@ -854,7 +788,7 @@ object Dedup {
   def applyDedup(spark: SparkSession, dir: String, maxIters: Int = 50): DataFrame = {
     import spark.implicits._
     // only the loser ids are needed — skip clusters()'s size join
-    val losers = componentLabels(spark, dir, maxIters)
+    val losers = componentLabels(spark, verifiedPairs(spark, dir), maxIters)
       .filter($"node" =!= $"label").select($"node".as("doc_id"))
     Tables.documents(spark, dir)
       .join(losers, Seq("doc_id"), "left_anti")
@@ -868,15 +802,15 @@ object Dedup {
     * keeper is arbitrary while the longest member usually subsumes
     * its truncated near-duplicates.
     *
-    * Shape: the converged component labels (shared/checkpointed with
-    * the whole cluster family) join the corpus's (doc_id, n_chars)
+    * Shape: the converged component labels (checkpointed per call,
+    * like the whole cluster family's) join the corpus's (doc_id, n_chars)
     * projection — a column-pruned scan, never the text — and the
     * election is the q_argmax `min(struct)` trick, partial-aggregated
     * so one candidate struct per cluster crosses the shuffle. Output
     * is cluster-sized, not corpus-sized. */
   def keepBest(spark: SparkSession, dir: String, maxIters: Int = 50): DataFrame = {
     import spark.implicits._
-    val labeled = componentLabels(spark, dir, maxIters)
+    val labeled = componentLabels(spark, verifiedPairs(spark, dir), maxIters)
       .join(Tables.documents(spark, dir)
         .select($"doc_id".as("node"), $"n_chars"), "node")
     labeled.groupBy($"label".as("cluster_id"))
@@ -986,7 +920,7 @@ object Dedup {
     * clusters → distinct sizes). Never touches text. */
   def dedupReport(spark: SparkSession, dir: String, maxIters: Int = 50): DataFrame = {
     import spark.implicits._
-    val labeled = componentLabels(spark, dir, maxIters)
+    val labeled = componentLabels(spark, verifiedPairs(spark, dir), maxIters)
       .join(Tables.documents(spark, dir)
         .select($"doc_id".as("node"), $"n_chars"), "node")
     val perCluster = labeled.groupBy($"label")
@@ -1033,7 +967,7 @@ object Dedup {
     * bit-identical — Round34Spec pins packed == relational. */
   def kcore(spark: SparkSession, dir: String, k: Int = 2, rounds: Int = 3): DataFrame = {
     import spark.implicits._
-    val vp = cachedPairs(spark, dir).select($"doc_a", $"doc_b")
+    val vp = verifiedPairs(spark, dir)
     val sym = vp.select($"doc_a".as("u"), $"doc_b".as("v"))
       .union(vp.select($"doc_b".as("u"), $"doc_a".as("v")))
     // one shuffle builds the per-node neighbor arrays; checkpointed

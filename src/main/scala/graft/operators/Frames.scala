@@ -276,7 +276,7 @@ object Frames {
         Frame.binJoin(transform($"fs", f => f.getField("frame")), 0x3a).as("wire"),
         $"min_ts_secs", $"max_ts_secs")
     val tmp = graft.sources.Scratch.tempDir("graft_fidx_")
-    graft.sources.Scratch.deleteOnExit(tmp)
+    graft.operators.Dedup.trackTransientDir(tmp)
     rolled.write.mode("overwrite").parquet(s"$tmp/blobs")
     graft.sources.Parquet.read(spark, s"$tmp/blobs")
       .select($"device_id", $"blob_seq", $"min_ts_secs", $"max_ts_secs")

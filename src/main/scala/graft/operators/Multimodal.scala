@@ -242,14 +242,14 @@ object Multimodal {
     * visual modality's last dedup mile — [[phash]]'s banded Hamming
     * candidate pairs become connected components with one keeper per
     * component, through the SAME min-label propagation core as the
-    * text cluster family ([[Dedup.propagateMinLabels]] — joins-only,
+    * text cluster family ([[Dedup.componentLabels]] — joins-only,
     * checkpoint-per-round, run to convergence). A re-encoded or
     * slightly-cropped image family collapses to one kept exemplar,
     * which pairwise Hamming scores alone cannot decide. Output is
     * [[Dedup.clusters]]' shape on image ids. */
   def phashClusters(spark: SparkSession, dir: String, maxIters: Int = 50): DataFrame = {
     import spark.implicits._
-    val (labels, _) = Dedup.propagateMinLabels(spark,
+    val labels = Dedup.componentLabels(spark,
       phash(spark, dir).select($"doc_a", $"doc_b"), maxIters)
     val sizes = labels.groupBy($"label").agg(count(lit(1)).as("cluster_size"))
     labels.join(sizes, "label")

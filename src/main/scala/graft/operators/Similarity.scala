@@ -759,9 +759,10 @@ object Similarity {
     * with 2^p · targetBucket ≥ N, so expected bucket width stays
     * ~targetBucket as the corpus grows (4 bits at the test SFs,
     * ~23 bits at 10^9 vectors) instead of N/16 with a fixed-width
-    * signature. The count is a parquet-metadata aggregate, run once
-    * at plan time; the DuckDB oracle computes the identical integer
-    * predicate (nplanes CTE), so both engines pick the same width. */
+    * signature. The count is read from the parquet footers at plan
+    * time, with no job ([[corpusN]]); the DuckDB oracle computes the
+    * identical integer predicate (nplanes CTE), so both engines pick
+    * the same width. */
   def adaptivePlanes(spark: SparkSession, dir: String,
       targetBucket: Int = 200): Int = {
     val n = corpusN(spark, dir)
@@ -812,34 +813,12 @@ object Similarity {
   private[graft] def ivfProbes(nc: Int): Int =
     math.max(4, 32 - Integer.numberOfLeadingZeros(nc - 1))
 
-  /** Embedding-corpus row count, memoized per (session, dir):
-    * ann_lsh, dedup_embed, lsh_recall and every other adaptive-width
-    * consumer were each paying this full count scan at plan time
-    * (VERDICT r8 #5). Same immutable-corpus assumption as
-    * Dedup.labelCache. */
-  private[graft] def corpusN(spark: SparkSession, dir: String): Long = {
-    val perDir = corpusCount.synchronized {
-      var m = corpusCount.get(spark)
-      if (m == null) {
-        m = scala.collection.concurrent.TrieMap.empty[String, Long]
-        corpusCount.put(spark, m)
-      }
-      m
-    }
-    perDir.getOrElseUpdate(dir, Tables.embeddings(spark, dir).count())
-  }
-
-  /** Sessions weakly referenced (the GraftSession.observed idiom,
-    * ADVICE r9): a stopped/abandoned SparkSession must not be pinned
-    * forever by its count memo in a long-lived multi-session JVM. */
-  private val corpusCount =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, Long]]()
-
-  /** Drop the embedding-corpus count memo (test hook for a dir
-    * rewritten in place mid-session). */
-  private[graft] def clearCorpusCountCache(): Unit =
-    corpusCount.synchronized { corpusCount.clear() }
+  /** Embedding-corpus row count, from the parquet footers of the
+    * table's data files: exact for the unfiltered scan every
+    * adaptive-width consumer sizes itself by (ann_lsh, dedup_embed,
+    * lsh_recall, …), and it starts no Spark job. */
+  private[graft] def corpusN(spark: SparkSession, dir: String): Long =
+    graft.sources.Parquet.rows(spark, java.nio.file.Paths.get(s"$dir/embeddings.parquet"))
 
   /** Bucketed hyperplane signatures with a hard per-bucket cap
     * (stop-band removal, the SimHash rule): buckets wider than

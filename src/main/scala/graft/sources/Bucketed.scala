@@ -1,9 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.col
 
@@ -22,15 +18,13 @@ import org.apache.spark.sql.functions.col
   *
   * Bucketed data must live in a catalog table (the bucketing spec is
   * table metadata, not something parquet files self-describe), so
-  * this is the one graft component that registers catalog state. The
-  * names are per-(dir, buckets) and the backing files live in a temp
-  * root that a single static JVM-exit hook removes — same lifecycle
-  * discipline as the streaming relay's sink dirs.
+  * this is the one graft component that registers catalog state. Each
+  * call writes its two tables under names of its own, in a scratch
+  * directory of its own; the calling thread's next transient drain
+  * ([[graft.operators.Dedup.releaseTransientBlocks]]) drops the tables
+  * and deletes the directory.
   */
 object Bucketed {
-  /** (session, dir, nBuckets) -> (customer table, orders table). */
-  private val created = TrieMap[(SparkSession, String, Int), (String, String)]()
-
   /** One bucket file per bucket: pre-partition the write by the
     * bucket expression (same Murmur3 hash the bucketed write uses),
     * so each task owns exactly one bucket and writes exactly one
@@ -45,23 +39,18 @@ object Bucketed {
       .sortBy(bucketCol)
       .saveAsTable(table)
 
-  /** Ensure customer and orders exist as co-bucketed tables (both on
-    * custkey, same bucket count) for `dir`; idempotent per session.
-    * Synchronized: a concurrent first call must not double-write the
-    * same table name. */
-  def custOrders(spark: SparkSession, dir: String, nBuckets: Int = 8): (String, String) =
-    created.synchronized {
-      created.getOrElseUpdate((spark, dir, nBuckets), {
-        val suffix = f"${dir.hashCode & 0x7fffffff}%x_$nBuckets"
-        val root = Scratch.tempDir("graft_bkt_")
-        Scratch.deleteOnExit(root)
-        val ct = s"graft_bkt_customer_$suffix"
-        val ot = s"graft_bkt_orders_$suffix"
-        writeBucketed(Tables.customer(spark, dir).select("c_custkey", "c_mktsegment"),
-          ct, s"$root/customer", "c_custkey", nBuckets)
-        writeBucketed(Tables.orders(spark, dir).select("o_custkey", "o_totalprice"),
-          ot, s"$root/orders", "o_custkey", nBuckets)
-        (ct, ot)
-      })
-    }
+  /** Write customer and orders of `dir` as co-bucketed tables (both on
+    * custkey, same bucket count) and return their names. */
+  def custOrders(spark: SparkSession, dir: String, nBuckets: Int = 8): (String, String) = {
+    val root = Scratch.tempDir("graft_bkt_")
+    // the directory's unique name makes the table names unique too
+    val (ct, ot) = (s"${root.getFileName}_customer", s"${root.getFileName}_orders")
+    graft.operators.Dedup.trackRelease(() => Seq(ct, ot).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t")))
+    graft.operators.Dedup.trackTransientDir(root)
+    writeBucketed(Tables.customer(spark, dir).select("c_custkey", "c_mktsegment"),
+      ct, s"$root/customer", "c_custkey", nBuckets)
+    writeBucketed(Tables.orders(spark, dir).select("o_custkey", "o_totalprice"),
+      ot, s"$root/orders", "o_custkey", nBuckets)
+    (ct, ot)
+  }
 }

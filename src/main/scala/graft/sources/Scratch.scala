@@ -55,7 +55,8 @@ object Scratch {
     Files.createTempDirectory(base, prefix)
   }
 
-  /** Delete each root's whole tree (missing roots are skipped). */
+  /** Delete each root's whole tree (missing roots are skipped), and
+    * drop it from the roots awaiting deletion at JVM exit. */
   private[graft] def deleteTree(roots: Path*): Unit = {
     import scala.jdk.CollectionConverters._
     roots.filter(Files.exists(_)).foreach { d =>
@@ -63,12 +64,14 @@ object Scratch {
       try walk.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
       finally walk.close()
     }
+    roots.foreach(exitCleanup.remove)
   }
 
   /** Roots awaiting deletion at JVM exit; ONE hook drains them all (a
     * hook per call would leave a thread per call in a long-lived
-    * application). */
-  private val exitCleanup = java.util.concurrent.ConcurrentHashMap.newKeySet[Path]()
+    * application). [[deleteTree]] removes what it deletes, so the set
+    * holds only roots that still exist. */
+  private[sources] val exitCleanup = java.util.concurrent.ConcurrentHashMap.newKeySet[Path]()
   private lazy val exitHookInstalled: Boolean = {
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
       import scala.jdk.CollectionConverters._

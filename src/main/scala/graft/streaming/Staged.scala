@@ -170,7 +170,6 @@ object Staged {
       complete: Boolean)(transform: DataFrame => DataFrame): DataFrame = {
     val ckpt = Scratch.tempDir("graft_ckpt_")
     val out = Scratch.tempDir("graft_sdsink_")
-    Scratch.deleteOnExit(out)
     graft.operators.Dedup.trackTransientDir(out)
     try stream(spark, batches, ckpt.toString, out.toString, noDataBatches, complete)(transform)
     finally Scratch.deleteTree(ckpt)

@@ -100,7 +100,7 @@ object StreamRelay {
     val throttled = parseAndThrottle(
       spark.readStream.schema(schema).parquet(framesPath))
     val outDir = graft.sources.Scratch.tempDir("graft_fingest_")
-    graft.sources.Scratch.deleteOnExit(outDir)
+    graft.operators.Dedup.trackTransientDir(outDir)
     val ck = graft.sources.Scratch.tempDir("graft_fingest_ck_")
     val q = throttled.writeStream.outputMode("append").format("parquet")
       .option("path", outDir.toString)

@@ -14,7 +14,7 @@ import graft.{Bench, GraftSession, SparkEntry}
   * comma is not a lookup miss. Modes:
   *  - `run`: each key's row count.
   *  - `time`: each key timed by [[Bench.timeOnce]] (the noop action,
-  *    the label-cache clear and a GC per rep), SPARK_GRAFT_BENCH_REPS
+  *    the transient drain and a GC per rep), SPARK_GRAFT_BENCH_REPS
   *    reps, and their median.
   *  - `recall`: an eval-harness key's micro recall (sum found / sum
   *    true) and per-query mean.

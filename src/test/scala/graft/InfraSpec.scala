@@ -65,6 +65,13 @@ class InfraSpec extends SparkSpec {
     val batchKeys = graft.operators.Telemetry.downsample1Hz(spark, sf)
       .select($"user_id", unix_seconds($"sec")).distinct().count()
     assert(ingested.count() == batchKeys)
+    // the sink lives until the calling thread's drain
+    val sinks = ingested.inputFiles.map(f => java.nio.file.Paths.get(java.net.URI.create(f)).getParent)
+      .distinct.toSeq
+    assert(sinks.nonEmpty && sinks.forall(_.getFileName.toString.startsWith("graft_fingest_")),
+      sinks.mkString(", "))
+    graft.operators.Dedup.releaseTransientBlocks()
+    assert(sinks.forall(!Files.exists(_)), sinks.mkString(", "))
   }
 
   test("event-time state timeout closes inactive sessions across batches") {

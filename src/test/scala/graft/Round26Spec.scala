@@ -162,8 +162,8 @@ class Round26Spec extends SparkSpec {
     graft.operators.Dedup.kcore(spark, sf).count()
     assert(sc.getPersistentRDDs.size > before,
       "kcore rounds should have live checkpoint blocks before the drain")
-    graft.operators.Dedup.clearLabelCache()
-    assert(sc.getPersistentRDDs.size <= before,
-      "drain must free kcore's round checkpoints")
+    graft.operators.Dedup.releaseTransientBlocks()
+    assert(sc.getPersistentRDDs.size == before,
+      "drain must free kcore's round checkpoints and its pairs")
   }
 }

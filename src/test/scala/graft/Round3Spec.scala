@@ -15,28 +15,23 @@ class Round3Spec extends SparkSpec {
 
   // --- dedup clustering: checkpoint lifecycle -------------------------------
 
-  test("componentLabels persists only the converged labels; apply reuses them") {
+  test("componentLabels persists only the converged labels and the pairs until the drain") {
     Dedup.clearLabelCache()
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.size
     val clusters = Dedup.clusters(spark, sf).collect()
     assert(clusters.nonEmpty)
-    val afterClusters = sc.getPersistentRDDs.size
-    // every superseded round is unpersisted; what stays is the cached
-    // converged label set plus the shared pair checkpoint (reused by
-    // apply/pipeline/pagerank within the session)
-    assert(afterClusters == before + 2,
-      s"expected two persisted RDDs (labels + shared pairs), " +
-        s"got ${afterClusters - before}")
-    // dedup_apply must reuse the converged labels, not re-run the
-    // MinHash + iteration pipeline (and so add zero persisted blocks)
-    val applied = Dedup.applyDedup(spark, sf).collect()
-    assert(applied.nonEmpty)
-    assert(sc.getPersistentRDDs.size == afterClusters,
-      "applyDedup must reuse cached labels without new checkpoints")
-    Dedup.clearLabelCache()
+    // every superseded round is unpersisted; what stays until the
+    // drain is the converged label set plus the call's pair checkpoint
+    assert(sc.getPersistentRDDs.size == before + 2,
+      s"expected two persisted RDDs (labels + pairs), " +
+        s"got ${sc.getPersistentRDDs.size - before}")
+    // a second call makes its own, and leaves no superseded round either
+    assert(Dedup.applyDedup(spark, sf).collect().nonEmpty)
+    assert(sc.getPersistentRDDs.size == before + 4)
+    Dedup.releaseTransientBlocks()
     assert(sc.getPersistentRDDs.size == before,
-      "clearLabelCache must free the cached label blocks")
+      "the drain must free the label and pair blocks")
   }
 
   // --- frame_wire: rolled blobs ---------------------------------------------

@@ -6,7 +6,7 @@ import graft.operators.Dedup
 import graft.streaming.StreamDedup
 
 /** Round-4 hardening from the round-3 advisory: checkpoint tracking
-  * that cannot capture foreign RDDs, label-cache race semantics, and
+  * that cannot capture foreign RDDs, per-call checkpoint lifetimes, and
   * streamed-dedup edge cases (empty corpus, loud hot-bucket cap). */
 class Round4Spec extends SparkSpec {
   import spark.implicits._
@@ -14,18 +14,19 @@ class Round4Spec extends SparkSpec {
   test("dedup checkpoint tracking never unpersists a foreign RDD") {
     Dedup.clearLabelCache()
     // an unrelated query's persisted data, alive across the whole
-    // clustering run — the old getPersistentRDDs diff would capture
-    // concurrent persists like this one and clearLabelCache would
-    // then unpersist someone else's (lineage-truncated) blocks
+    // clustering run — a getPersistentRDDs diff would capture
+    // concurrent persists like this one and the drain would then
+    // unpersist someone else's (lineage-truncated) blocks
     val foreign = Seq((1L, "a"), (2L, "b")).toDF("id", "v").persist()
     assert(foreign.count() == 2)
     val foreignIds = spark.sparkContext.getPersistentRDDs.keySet
     val clusters = Dedup.clusters(spark, sf).collect()
     assert(clusters.nonEmpty)
+    Dedup.releaseTransientBlocks()
     Dedup.clearLabelCache()
     val after = spark.sparkContext.getPersistentRDDs.keySet
     assert(foreignIds.subsetOf(after),
-      "clearing the dedup label cache must leave foreign persisted RDDs alone")
+      "draining the transient blocks must leave foreign persisted RDDs alone")
     assert(foreign.count() == 2, "foreign data must remain readable")
     foreign.unpersist()
   }
@@ -53,15 +54,16 @@ class Round4Spec extends SparkSpec {
     out.foreach { case (id, pr, d) =>
       assert(pr >= 150000L / (10L * n) && d >= 1, s"doc $id pr=$pr deg=$d")
     }
-    // deterministic across invocations (cache cleared in between)
-    Dedup.clearLabelCache()
+    // the call's persisted residue is its pair checkpoint and its
+    // final scores, until the drain frees both
+    assert(spark.sparkContext.getPersistentRDDs.size == before + 2)
+    Dedup.releaseTransientBlocks()
+    assert(spark.sparkContext.getPersistentRDDs.size == before)
+    // deterministic across calls
     val again = Dedup.pagerank(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(again.toSet == out.toSet)
-    // the persisted residue is the cached final scores plus the
-    // shared pair checkpoint; clearing frees everything
-    assert(spark.sparkContext.getPersistentRDDs.size == before + 2)
-    Dedup.clearLabelCache()
+    Dedup.releaseTransientBlocks()
     assert(spark.sparkContext.getPersistentRDDs.size == before)
   }
 

@@ -50,39 +50,33 @@ class ParquetSpec extends graft.SparkSpec {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         jobs.add(e.stageInfos.sortBy(_.stageId).lastOption.fold("?")(_.name))
     }
-    // a private copy of sf0.001: the per-directory memos (the bucketed
-    // and partitioned staging copies) would hit for a key an earlier
-    // suite ran on sf0.001 and hide its jobs
-    val dir = Scratch.tempDir("graft_parquet_eager_")
-    val src = java.nio.file.Paths.get(sf)
-    val walk = java.nio.file.Files.walk(src)
-    try walk.iterator().asScala.foreach(p => java.nio.file.Files.copy(p, dir.resolve(src.relativize(p).toString),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING))
-    finally walk.close()
+    def build(k: SparkEntry.Key): Seq[String] = {
+      ListenerBusDrain.drain(spark.sparkContext)
+      jobs.clear()
+      k.run(spark, sf)
+      ListenerBusDrain.drain(spark.sparkContext)
+      jobs.asScala.toSeq
+    }
     spark.sparkContext.addSparkListener(listener)
     try {
       val wrong = keys.flatMap { k =>
-        // a label-cache hit must not hide a job
+        val started = build(k)
+        // nothing a build derives outlives its call: a second build on
+        // the same directory starts the same jobs as the first
+        val again = if (k.eager.nonEmpty) build(k) else started
         graft.operators.Dedup.clearLabelCache()
-        ListenerBusDrain.drain(spark.sparkContext)
-        jobs.clear()
-        k.run(spark, dir.toString)
-        ListenerBusDrain.drain(spark.sparkContext)
-        val started = jobs.asScala.toSeq
         if (k.eager.isEmpty && started.nonEmpty)
           Some(s"${k.name} started ${started.size} jobs (${started.distinct.mkString(", ")}) and gives no reason")
         else if (k.eager.nonEmpty && started.isEmpty)
           Some(s"${k.name} started no job but gives: ${k.eager.get}")
+        else if (again.size != started.size)
+          Some(s"${k.name} started ${started.size} jobs, then ${again.size} on the same directory")
         else None
       }
-      graft.operators.Dedup.clearLabelCache()
       keys.flatMap(_.eager).groupBy(identity).toSeq.sortBy(-_._2.size).foreach { case (r, ks) =>
         info(s"${ks.size} keys: $r")
       }
       assert(wrong.isEmpty, wrong.mkString("\n"))
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      Scratch.deleteTree(dir)
-    }
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 }

@@ -87,15 +87,20 @@ class StagedSpec extends graft.SparkSpec with Eventually {
   }
 
   test("a drained thread deletes the sink directory of the twin it consumed") {
-    val df = SparkEntry.queries("stream_downsample")(spark, sf)
-    val sinks = df.inputFiles.map(f => java.nio.file.Paths.get(java.net.URI.create(f)).getParent)
-      .distinct.toSeq
-    assert(sinks.nonEmpty && sinks.forall(_.getFileName.toString.startsWith("graft_sdsink_")),
-      sinks.mkString(", "))
-    assert(df.count() > 0)
-    assert(sinks.forall(java.nio.file.Files.isDirectory(_)))
-    graft.operators.Dedup.releaseTransientBlocks()
-    assert(sinks.forall(!java.nio.file.Files.exists(_)), sinks.mkString(", "))
+    // and the blob and index directory of a frame_lookup call
+    Seq("stream_downsample" -> "graft_sdsink_", "frame_lookup" -> "graft_fidx_").foreach {
+      case (k, prefix) =>
+        val df = SparkEntry.queries(k)(spark, sf)
+        val dirs = df.inputFiles.map { f =>
+          Iterator.iterate(java.nio.file.Paths.get(java.net.URI.create(f)))(_.getParent)
+            .takeWhile(_ != null).find(_.getFileName.toString.startsWith(prefix))
+        }.distinct.toSeq
+        assert(dirs.nonEmpty && dirs.forall(_.nonEmpty), s"$k reads ${df.inputFiles.mkString(", ")}")
+        assert(df.count() > 0)
+        assert(dirs.flatten.forall(java.nio.file.Files.isDirectory(_)))
+        graft.operators.Dedup.releaseTransientBlocks()
+        assert(dirs.flatten.forall(!java.nio.file.Files.exists(_)), dirs.flatten.mkString(", "))
+    }
   }
 
   test("a nondeterministic batch plan fails loudly, naming its index") {
